@@ -267,7 +267,6 @@ def trie_within_parent(
         if out_col != "bucket_id":
             assignments = assignments.withColumnRenamed("bucket_id", out_col)
         out = BucketizeResult(assignments, res.relations, res.seals)
-        out.persisted = getattr(res, "persisted", [])
         if emit_counter_updates:
             out.counter_updates = res.counter_updates
         return out

@@ -49,8 +49,12 @@ Scale notes:
   hot node can be handled with a per-node threshold aggregate instead of
   row_number; the window form is kept here for clarity and exactness and is
   fine while per-node row counts ≪ partition memory.
-- Per-level frames are persisted and lineage-truncated so the loop's cost
-  is linear in levels, not quadratic.
+- Each level's frame is lineage-cut (eager checkpoint) so the loop's cost
+  is linear in levels, not quadratic; the cut's own job also observes the
+  count of still-unplaced rows, so no level runs a separate count().
+- Streaming counter updates are carried as a ``_cnt`` column of each
+  level's cut frame and read off one row per node — a narrow select, no
+  per-level aggregate.
 """
 
 from __future__ import annotations
@@ -67,7 +71,7 @@ from bucketizers_spark.operators.core import (
     relation_row,
 )
 from bucketizers_spark.functions.normalize import normalize_substring_col
-from bucketizers_spark.plans.materialize import cut_lineage
+from bucketizers_spark.plans.materialize import cut_lineage, cut_lineage_counted
 
 # Separator for per-parent streaming counter keys: parent<US>node. Parent
 # bucket ids may contain '/' (geo tiles, subject pages), so 'parent/node'
@@ -554,13 +558,15 @@ def _run_cascade(
     # and the final assignment union — consumes `work`, and without a
     # cut each action re-evaluates the whole normalize+chain prep over
     # the corpus (measured 3-4 evaluations ≈ 3-4× the prep cost per
-    # query at sf1.0). One eager cut pays the prep exactly once.
-    work = chain.slim(chain.prepare(slim_in)).transform(cut_lineage)
+    # query at sf1.0). One eager cut pays the prep exactly once, and it
+    # observes the non-empty member count the root level needs.
+    work, total_work = cut_lineage_counted(
+        chain.slim(chain.prepare(slim_in)), F.col("_m") > 0
+    )
 
     assignment_parts: list[DataFrame] = []
     relation_parts: list[DataFrame] = []
     counter_parts: list[DataFrame] = []
-    persisted: list[DataFrame] = []
 
     state = node_state
     if state is not None:
@@ -601,10 +607,12 @@ def _run_cascade(
         ).agg(
             F.slice(
                 F.array_sort(F.collect_list(F.col(seq_col))), 1, page_size
-            ).alias("_cand")
+            ).alias("_cand"),
+            F.count(F.lit(1)).alias("_n"),
         )
         merged = cand.groupBy(parent_col).agg(
-            F.array_sort(F.flatten(F.collect_list("_cand"))).alias("_merged")
+            F.array_sort(F.flatten(F.collect_list("_cand"))).alias("_merged"),
+            F.sum("_n").alias("_ptotal"),
         )
         # carried parent-root counters (streaming): keyed by the bare
         # parent id; an absent row means a fresh (seeded) child root with
@@ -635,13 +643,20 @@ def _run_cascade(
             .when(rcap > F.size("_merged"), F.lit(None).cast("long"))
             .otherwise(F.element_at("_merged", rcap.cast("int")))
             .alias("_rthr"),
+            # seq is unique, so the parent root places exactly
+            # min(rcap, members) rows; its first member (the merged
+            # list's head) carries the post-batch counter
+            F.least(rcap, F.col("_ptotal")).alias("_rplaced"),
+            F.element_at("_merged", 1).alias("_rmin"),
+        )
+        placed0_cond = (F.col("_rcap") > 0) & (
+            F.col("_rthr").isNull() | (F.col(seq_col) <= F.col("_rthr"))
         )
         # thr_df is one row per distinct parent — broadcast (the cascade
         # path targets few giant parents; high-cardinality parents belong
         # on the per-group walk, where groups are small)
-        work = work.join(F.broadcast(thr_df), parent_col, "left").transform(cut_lineage)
-        placed0_cond = (F.col("_rcap") > 0) & (
-            F.col("_rthr").isNull() | (F.col(seq_col) <= F.col("_rthr"))
+        work, remaining_cnt = cut_lineage_counted(
+            work.join(F.broadcast(thr_df), parent_col, "left"), ~placed0_cond
         )
         placed0 = work.where(placed0_cond)
         assignment_parts.append(
@@ -649,15 +664,16 @@ def _run_cascade(
         )
         if emit_counter_updates:
             counter_parts.append(
-                placed0.groupBy(parent_col, "_rcnt")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .select(
+                work.where(
+                    (F.col(seq_col) == F.col("_rmin")) & (F.col("_rplaced") > 0)
+                ).select(
                     F.col(parent_col).alias("node"),
-                    (F.col("_rcnt") + F.col("_n")).alias("cnt"),
+                    (F.col("_rcnt") + F.col("_rplaced")).alias("cnt"),
                 )
             )
-        remaining = work.where(~placed0_cond).drop("_rthr", "_rcap", "_rcnt")
-        remaining_cnt = remaining.count()
+        remaining = work.where(~placed0_cond).drop(
+            "_rthr", "_rcap", "_rcnt", "_rplaced", "_rmin"
+        )
         level = 0
     else:
         # ---- level 0: the root. Global top-(remaining capacity) by seq — a
@@ -669,7 +685,6 @@ def _run_cascade(
             row = state.where(F.col("_st_node") == root).collect()
             root_cnt = row[0]["_st_cnt"] if row else 0
         root_cap = max(page_size - root_cnt, 0)
-        total_work = work.count()
         thr = None
         if root_cap > 0 and total_work > 0:
             head = (
@@ -683,26 +698,21 @@ def _run_cascade(
             assignment_parts.append(
                 placed0.select(seq_col, F.lit(root).alias("bucket_id"))
             )
-            if emit_counter_updates:
-                counter_parts.append(
-                    placed0.agg(
-                        (F.count(F.lit(1)) + F.lit(root_cnt)).alias("cnt")
-                    ).select(F.lit(root).alias("node"), "cnt")
-                )
             remaining = work.where(F.col(seq_col) > F.lit(thr))
         else:
             remaining = work
-            if emit_counter_updates and root_cnt:
-                counter_parts.append(
-                    spark.createDataFrame([(root, root_cnt)], "node string, cnt long")
-                )
-
-        level = 0
         # no job needed: seq is unique, so the root places exactly
-        # min(root_cap, total_work) rows
-        remaining_cnt = (
-            max(total_work - root_cap, 0) if thr is not None else total_work
-        )
+        # min(root_cap, total_work) rows (none when thr is None: then
+        # root_cap or total_work is 0)
+        root_placed = min(root_cap, total_work)
+        if emit_counter_updates and root_cnt + root_placed:
+            counter_parts.append(
+                spark.createDataFrame(
+                    [(root, root_cnt + root_placed)], "node string, cnt long"
+                )
+            )
+        level = 0
+        remaining_cnt = total_work - root_placed
     while True:
         level += 1
         if remaining_cnt == 0:
@@ -789,15 +799,12 @@ def _run_cascade(
                     ),
                 )
             )
-            # localCheckpoint (eager) truncates the per-level lineage —
-            # without it the level-over-level plan (esp. the salted path's
-            # self-join) grows exponentially and OOMs the planner
             step = step.withColumn(
                 "_first_nt",
                 F.max(
                     F.when(F.col("_rn") == 1, (~F.col("_terminal")).cast("int"))
                 ).over(wfull),
-            ).transform(cut_lineage)
+            )
 
             exists = F.col("_st_cnt").isNotNull()
             # capacity available to non-terminal arrivals this batch:
@@ -814,6 +821,15 @@ def _run_cascade(
             )
             placed_nt = ~F.col("_terminal") & (F.col("_ntrank") <= cap_nt)
             is_first = F.col("_rn") == 1
+            if emit_counter_updates:
+                # post-batch node count: a second window over the same
+                # partitioning (no new exchange)
+                counted = placed_nt | (~exists & is_first & F.col("_terminal"))
+                step = step.withColumn(
+                    "_cnt",
+                    F.coalesce(F.col("_st_cnt"), F.lit(0))
+                    + F.sum(counted.cast("long")).over(wfull),
+                )
             if parent_col:
                 relation_parent = (
                     F.col(parent_col)
@@ -866,9 +882,9 @@ def _run_cascade(
                 phase_b = phase_b.withColumn(
                     "_st_cnt", F.lit(None).cast("long")
                 )
-            node_exists = F.col("_st_cnt").isNotNull()
+            exists = F.col("_st_cnt").isNotNull()
             agg_cap = F.when(
-                node_exists,
+                exists,
                 F.greatest(F.lit(page_size) - F.col("_st_cnt"), F.lit(0)),
             ).otherwise(
                 F.when(~F.col("_first_term"), F.lit(page_size)).otherwise(
@@ -895,9 +911,20 @@ def _run_cascade(
                 .otherwise(F.element_at("_merged", agg_cap.cast("int")))
                 .alias("_nt_thr"),
             )
+            if emit_counter_updates:
+                # post-batch node count: carried + placed non-terminals
+                # (seq is unique, so exactly min(total, cap) of them) + the
+                # creating first arrival when it is terminal
+                node_aggs = node_aggs.withColumn(
+                    "_cnt",
+                    F.coalesce(F.col("_st_cnt"), F.lit(0))
+                    + F.least(
+                        F.col("_nt_total"), F.greatest(F.col("_cap_nt"), F.lit(0))
+                    )
+                    + (~exists & F.col("_first_term")).cast("long"),
+                )
 
-            step = lvl.join(node_aggs, [*pcols, "_node"]).transform(cut_lineage)
-            exists = F.col("_st_cnt").isNotNull()
+            step = lvl.join(node_aggs, [*pcols, "_node"])
             placed_nt = ~F.col("_terminal") & (
                 F.col("_nt_thr").isNull()
                 | (F.col(seq_col) <= F.col("_nt_thr"))
@@ -915,6 +942,13 @@ def _run_cascade(
                     raw_parent == "", F.lit(root)
                 ).otherwise(raw_parent)
 
+        # the eager cut truncates the per-level lineage — without it the
+        # level-over-level plan (esp. the salted path's self-join) grows
+        # exponentially and OOMs the planner — and its job observes how
+        # many rows cascade to the next level
+        step, remaining_cnt = cut_lineage_counted(
+            step, ~F.col("_terminal") & ~placed_nt
+        )
         # terminal arrivals: on a fresh node the first one creates+counts;
         # all later single-word terminals are assigned uncounted
         # (SubstringBucketizer.ts:88-93) and later multi-word terminals get
@@ -951,30 +985,21 @@ def _run_cascade(
             )
         )
         if emit_counter_updates:
-            counted = placed_nt | (~exists & is_first & F.col("_terminal"))
             counter_key = (
                 F.concat(F.col(parent_col), F.lit(_PSEP), F.col("_node"))
                 if parent_col
                 else F.col("_node")
             )
             counter_parts.append(
-                step.groupBy(*pcols, "_node")
-                .agg(
-                    (
-                        F.coalesce(F.max("_st_cnt"), F.lit(0))
-                        + F.sum(counted.cast("long"))
-                    ).alias("cnt")
+                step.where(is_first).select(
+                    counter_key.alias("node"), F.col("_cnt").alias("cnt")
                 )
-                .select(counter_key.alias("node"), "cnt")
             )
-        drop_cols = [
-            c
-            for c in step.columns
-            if c.startswith("_")
-            and c not in ("_v", "_npos", "_m", "_multi")
-        ]
+        # drop this level's helper columns; the chain columns and the
+        # parent column (which may itself start with '_') ride on
+        keep = ("_v", "_npos", "_m", "_multi", *pcols, *chain.input_cols)
+        drop_cols = [c for c in step.columns if c.startswith("_") and c not in keep]
         remaining = step.where(~F.col("_terminal") & ~placed_nt).drop(*drop_cols)
-        remaining_cnt = remaining.count()
 
     bucket_map = assignment_parts[0]
     for part in assignment_parts[1:]:
@@ -991,7 +1016,6 @@ def _run_cascade(
         relations = relations.unionByName(part)
 
     result = BucketizeResult(assignments, relations, empty_seals(spark))
-    result.persisted = persisted  # caller may unpersist after materializing
     if emit_counter_updates:
         updates = counter_parts[0] if counter_parts else spark.createDataFrame(
             [], "node string, cnt long"

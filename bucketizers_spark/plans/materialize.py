@@ -19,7 +19,8 @@ the dir unset and gets the fast local path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def cut_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
@@ -30,3 +31,15 @@ def cut_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def cut_lineage_counted(
+    df: DataFrame, where: Column | None = None
+) -> tuple[DataFrame, int]:
+    """Eager ``cut_lineage`` that also returns the number of rows (those
+    matching ``where``, when given) observed by the cut's own job — the
+    count costs no second execution of ``df``'s plan."""
+    obs = Observation()
+    n = F.count(F.lit(1)) if where is None else F.count(F.when(where, 1))
+    cut = cut_lineage(df.observe(obs, n.alias("n")))
+    return cut, obs.get["n"]

@@ -29,7 +29,8 @@ import glob as _glob
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 class LocalFsLister:
@@ -79,10 +80,20 @@ class IdempotentParquetSink:
 
     def write_batch(self, df: DataFrame, batch_id: int, lineage: dict | None = None):
         """Idempotent batch write: overwrite the batch's own directory, then
-        commit the manifest marker."""
+        commit the manifest marker. The marker records the row count (and
+        the ``seq`` range, when the frame has one) observed by the write
+        job itself, so lineage costs no extra execution; ``lineage`` adds
+        caller-supplied keys."""
         path = os.path.join(self.root, f"batch_id={batch_id}")
-        df.write.mode("overwrite").parquet(path)
-        meta = {"batch_id": batch_id, **(lineage or {})}
+        obs = Observation()
+        metrics = [F.count(F.lit(1)).alias("rows")]
+        if "seq" in df.columns:
+            metrics += [F.min("seq").alias("seq_min"), F.max("seq").alias("seq_max")]
+        df.observe(obs, *metrics).write.mode("overwrite").parquet(path)
+        observed = obs.get
+        if not observed["rows"]:
+            observed = {"rows": 0}
+        meta = {"batch_id": batch_id, **observed, **(lineage or {})}
         self.lister.publish_json(
             os.path.join(self.manifest_dir, f"{batch_id}.json"), meta
         )
@@ -99,17 +110,7 @@ class IdempotentParquetSink:
         def fn(batch_df: DataFrame, batch_id: int):
             if batch_id in self.committed_batches():
                 return
-            out = transform(batch_df) if transform else batch_df
-            from pyspark.sql import functions as F
-
-            cnt = out.count()
-            lineage = {"rows": cnt}
-            if "seq" in out.columns and cnt:
-                rng = out.agg(
-                    F.min("seq").alias("lo"), F.max("seq").alias("hi")
-                ).collect()[0]
-                lineage.update(seq_min=rng["lo"], seq_max=rng["hi"])
-            self.write_batch(out, batch_id, lineage)
+            self.write_batch(transform(batch_df) if transform else batch_df, batch_id)
 
         return fn
 
@@ -191,8 +192,6 @@ class IcebergMergeSink:
             if batch_id in self.committed_batches():
                 return
             out = transform(batch_df) if transform else batch_df
-            from pyspark.sql import functions as F
-
             cnt = out.count()
             lineage = {"rows": cnt}
             if "seq" in out.columns and cnt:

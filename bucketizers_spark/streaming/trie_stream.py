@@ -10,16 +10,22 @@ persist the (small) counters table together with the sink's batch manifest
 exactly-once replay (a replayed batch recomputes from the *pre-batch*
 counter snapshot, versioned per batch id).
 
-Counter-table layout: ``<state_dir>/counters/v=<batch_id>/`` parquet of
-(node, cnt). Batch k reads the latest committed version < k, runs the
-state-aware cascade (operators/substring.py), writes version k. Replay of
-batch k rereads version k-1 → identical output. Chunked seq-ordered input
-(sources/stream.py) makes the result byte-equal to the batch cascade over
-the concatenated stream — pytest-pinned.
+Counter-table layout: ``<state_dir>/counters/v=<batch_id>/`` holds one
+parquet file of (node, cnt). Batch k reads the latest committed version
+< k, runs the state-aware cascade (operators/substring.py), writes version
+k. Replay of batch k rereads version k-1 → identical output. Chunked
+seq-ordered input (sources/stream.py) makes the result byte-equal to the
+batch cascade over the concatenated stream — pytest-pinned.
+
+Per-batch cost: the cascade emits each touched node's post-batch count
+as a narrow select over its level's lineage-cut frame, untouched nodes
+carry over through a broadcast anti-join, and the new version is written
+as one file straight from that plan — no persist, no count job.
 
 Scale: the counters table holds one row per trie node ever created —
-O(members/page_size) worst case, read+broadcast per batch; at production
-scale it pages into a keyed join instead of a broadcast (knob below).
+O(members/page_size) worst case, read+broadcast whole per batch (hence
+one file per version); at production scale it would page into a keyed
+join instead of a broadcast.
 """
 
 from __future__ import annotations
@@ -28,6 +34,7 @@ import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from bucketizers_spark.operators.substring import substring_trie, token_prefix_trie
 from bucketizers_spark.sinks.idempotent import IdempotentParquetSink
@@ -82,7 +89,7 @@ class TrieStreamJob:
 
     def _write_counters(self, updates: DataFrame, batch_id: int):
         path = os.path.join(self.state_dir, "counters", f"v={batch_id}")
-        updates.write.mode("overwrite").parquet(path)
+        updates.coalesce(1).write.mode("overwrite").parquet(path)
 
     # -- the micro-batch handler --------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int):
@@ -130,10 +137,10 @@ class TrieStreamJob:
         # untouched nodes carry over)
         updates = res.counter_updates
         if state is not None:
-            carried = state.join(updates.select("node"), "node", "left_anti")
+            carried = state.join(
+                F.broadcast(updates.select("node")), "node", "left_anti"
+            )
             updates = updates.unionByName(carried)
-        updates = updates.persist()
-        updates.count()
 
         # Counters are written BEFORE the main sink's manifest commit: a
         # crash after the sink commit but before a v=batch_id counter write
@@ -145,11 +152,8 @@ class TrieStreamJob:
         # overwrites v=batch_id idempotently.
         self._write_counters(updates, batch_id)
         self.rel_sink.write_batch(res.relations, batch_id)
-        self.sink.foreach_batch()(res.assignments, batch_id)
-        updates.unpersist()
+        self.sink.write_batch(res.assignments, batch_id)
         batch_df.unpersist()
-        for p in res.persisted:
-            p.unpersist()
 
     def start(self, stream_df, checkpoint_dir: str):
         return (

@@ -16,13 +16,17 @@ from pyspark.sql import functions as F
 
 from bucketizers_spark.sources.stream import stage_chunks
 
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
 SF_DIR = "/root/testdata/sf0.001"
 _QSCHEMA = "query_id long, qe array<double>"
 
 
 @pytest.fixture()
 def workdir():
-    d = f"/root/repo/.scratch/ann_stream_{uuid.uuid4().hex[:8]}"
+    d = os.path.join(SCRATCH, f"ann_stream_{uuid.uuid4().hex[:8]}")
     os.makedirs(d, exist_ok=True)
     yield d
     shutil.rmtree(d, ignore_errors=True)

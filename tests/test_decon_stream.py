@@ -16,6 +16,10 @@ from pyspark.sql import functions as F
 
 from bucketizers_spark.sources.stream import stage_chunks
 
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
 _WORDS = [
     "spark", "join", "filter", "window", "batch", "stream", "merge",
     "sort", "hash", "scan", "group", "row", "data", "key", "table",
@@ -24,7 +28,7 @@ _WORDS = [
 
 @pytest.fixture()
 def workdir():
-    d = f"/root/repo/.scratch/decon_stream_{uuid.uuid4().hex[:8]}"
+    d = os.path.join(SCRATCH, f"decon_stream_{uuid.uuid4().hex[:8]}")
     os.makedirs(d, exist_ok=True)
     yield d
     shutil.rmtree(d, ignore_errors=True)

@@ -153,8 +153,6 @@ class TestSubstringEquivalence:
         got = collect_assignments(res.assignments)
         assert got == exp
         assert rel_set(res.relations) == oracle_rel_set(orels)
-        for p in res.persisted:
-            p.unpersist()
 
     def test_identical_values_deep_cascade(self, spark):
         # 40 copies of the same two-word value at page_size 3: exercises
@@ -165,8 +163,6 @@ class TestSubstringEquivalence:
         exp, orels, _ = oracle_assignments(SubstringOracle(page_size=3), values)
         assert collect_assignments(res.assignments) == exp
         assert rel_set(res.relations) == oracle_rel_set(orels)
-        for p in res.persisted:
-            p.unpersist()
 
     def test_unicode_nfkd_via_pandas_udf(self, spark):
         values = ["John Doe", "ñ", "̃ȷ", "ñ"]
@@ -174,8 +170,6 @@ class TestSubstringEquivalence:
         res = substring_trie(df, "value", page_size=1, ascii_fast=False)
         exp, orels, _ = oracle_assignments(SubstringOracle(page_size=1), values)
         assert collect_assignments(res.assignments) == exp
-        for p in res.persisted:
-            p.unpersist()
 
 
 class TestTokenTrieEquivalence:
@@ -206,8 +200,6 @@ class TestTokenTrieEquivalence:
 
         exp_tok = {m: sorted(chars_to_key(b) for b in bs) for m, bs in exp.items()}
         assert collect_assignments(res.assignments) == exp_tok
-        for p in res.persisted:
-            p.unpersist()
 
 
 class TestSaltedCascade:
@@ -221,9 +213,6 @@ class TestSaltedCascade:
             b.assignments
         )
         assert rel_set(a.relations) == rel_set(b.relations)
-        for r in (a, b):
-            for p in r.persisted:
-                p.unpersist()
 
     def test_salted_token_trie_matches_oracle_fixture(self, spark):
         import numpy as np
@@ -247,9 +236,6 @@ class TestSaltedCascade:
         assert collect_assignments(a.assignments) == collect_assignments(
             b.assignments
         )
-        for r in (a, b):
-            for p in r.persisted:
-                p.unpersist()
 
 
 class TestGeospatialEquivalence:
@@ -754,7 +740,8 @@ class TestPmiBigrams:
 
         from bucketizers_spark.entry_queries import q_pmi_bigrams
 
-        d = "/root/repo/.scratch/pmi_micro"
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        d = os.path.join(root, ".scratch", "pmi_micro")
         os.makedirs(d, exist_ok=True)
         # 24 docs: "new york" always adjacent; fillers vary per doc
         rows = []

@@ -10,12 +10,16 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture()
 def idx_dir():
-    d = f"/root/repo/.scratch/ivf_index_{uuid.uuid4().hex[:8]}"
+    d = os.path.join(SCRATCH, f"ivf_index_{uuid.uuid4().hex[:8]}")
     yield d
     shutil.rmtree(d, ignore_errors=True)
 

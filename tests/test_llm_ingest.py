@@ -16,6 +16,10 @@ from pyspark.sql.window import Window
 
 from bucketizers_spark.sources.stream import stage_chunks
 
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
 CHUNK_LEN = 32
 
 _GOOD = "the cat sat on the mat and looked at the dog"  # en, stopword-rich
@@ -23,7 +27,7 @@ _GOOD = "the cat sat on the mat and looked at the dog"  # en, stopword-rich
 
 @pytest.fixture()
 def workdir():
-    d = f"/root/repo/.scratch/llm_ingest_{uuid.uuid4().hex[:8]}"
+    d = os.path.join(SCRATCH, f"llm_ingest_{uuid.uuid4().hex[:8]}")
     os.makedirs(d, exist_ok=True)
     yield d
     shutil.rmtree(d, ignore_errors=True)

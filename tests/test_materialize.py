@@ -44,27 +44,43 @@ def test_local_when_no_dir():
     assert df2.calls == [("localCheckpoint", False)]
 
 
-def test_reliable_checkpoint_path_runs_for_real(tmp_path):
-    """The checkpoint() branch executes against a real SparkContext —
-    in a SUBPROCESS session, because setCheckpointDir is sticky and
-    would otherwise leak into the shared fixture. Runs an actual
-    iterative operator (connected_components) under a configured
-    checkpoint dir and asserts both the result and that reliable
-    checkpoint data landed in the dir."""
+def _run_with_checkpoint_dir(ckpt, body: str) -> str:
+    """Run ``body`` in a SUBPROCESS Spark session whose context has the
+    reliable checkpoint dir ``ckpt`` — setCheckpointDir is sticky and
+    would otherwise leak into the shared fixture. Returns the output."""
+    import os
     import subprocess
     import sys
     import textwrap
 
-    ckpt = tmp_path / "ckpt"
-    script = textwrap.dedent(
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    prelude = textwrap.dedent(
         f"""
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, {root!r})
         from pyspark.sql import SparkSession
         spark = (SparkSession.builder.master("local[2]")
                  .config("spark.sql.shuffle.partitions", "2")
                  .config("spark.ui.enabled", "false").getOrCreate())
         spark.sparkContext.setCheckpointDir({str(ckpt)!r})
+        """
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", prelude + textwrap.dedent(body)],
+        capture_output=True, text=True, timeout=300,
+    )
+    return r.stdout + r.stderr
+
+
+def test_reliable_checkpoint_path_runs_for_real(tmp_path):
+    """The checkpoint() branch executes against a real SparkContext.
+    Runs an actual iterative operator (connected_components) under a
+    configured checkpoint dir and asserts both the result and that
+    reliable checkpoint data landed in the dir."""
+    ckpt = tmp_path / "ckpt"
+    out = _run_with_checkpoint_dir(
+        ckpt,
+        f"""
         from bucketizers_spark.operators.graph import connected_components
         edges = spark.createDataFrame(
             [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string"
@@ -77,10 +93,45 @@ def test_reliable_checkpoint_path_runs_for_real(tmp_path):
         files = glob.glob({str(ckpt)!r} + "/*/rdd-*")
         assert files, "no reliable checkpoint data written"
         print("SUBPROCESS_OK", len(files))
+        """,
+    )
+    assert "SUBPROCESS_OK" in out, out
+
+
+def test_counted_cut_observes_under_reliable_checkpoint(tmp_path):
+    """The reliable checkpoint() writes the frame in a second job; the
+    observed count must still be the frame's row count, once."""
+    out = _run_with_checkpoint_dir(
+        tmp_path / "ckpt",
         """
+        from pyspark.sql import functions as F
+        from bucketizers_spark.plans.materialize import cut_lineage_counted
+        df = spark.range(100).groupBy((F.col("id") % 7).alias("g")).count()
+        cut, n = cut_lineage_counted(df)
+        assert (n, cut.count()) == (7, 7), n
+        _, n = cut_lineage_counted(df, F.col("g") > 2)
+        assert n == 4, n
+        _, n = cut_lineage_counted(df.where("g < 0"))
+        assert n == 0, n
+        print("SUBPROCESS_OK")
+        """,
     )
-    r = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True, text=True, timeout=300,
-    )
-    assert "SUBPROCESS_OK" in r.stdout, r.stdout + r.stderr
+    assert "SUBPROCESS_OK" in out, out
+
+
+def test_counted_cut_matches_count(spark):
+    """localCheckpoint path: the count observed by the cut's own job
+    equals count() — filtered, unfiltered, empty and zero-partition."""
+    from pyspark.sql import functions as F
+
+    from bucketizers_spark.plans.materialize import cut_lineage_counted
+
+    df = spark.range(500).groupBy((F.col("id") % 37).alias("g")).count()
+    cut, n = cut_lineage_counted(df)
+    assert n == cut.count() == 37
+    _, n = cut_lineage_counted(df, F.col("g") >= 30)
+    assert n == 7
+    _, n = cut_lineage_counted(df.where("g < 0"))
+    assert n == 0
+    _, n = cut_lineage_counted(spark.createDataFrame([], "a long"))
+    assert n == 0

@@ -14,12 +14,16 @@ import pytest
 
 from bucketizers_spark.sources.stream import stage_chunks
 
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
 _SCHEMA = "media_id string, payload binary"
 
 
 @pytest.fixture()
 def workdir():
-    d = f"/root/repo/.scratch/media_stream_{uuid.uuid4().hex[:8]}"
+    d = os.path.join(SCRATCH, f"media_stream_{uuid.uuid4().hex[:8]}")
     os.makedirs(d, exist_ok=True)
     yield d
     shutil.rmtree(d, ignore_errors=True)

@@ -17,12 +17,16 @@ from pyspark.sql.window import Window
 
 from bucketizers_spark.sources.stream import stage_chunks
 
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
 CHUNK_LEN = 64
 
 
 @pytest.fixture()
 def workdir():
-    d = f"/root/repo/.scratch/pack_stream_{uuid.uuid4().hex[:8]}"
+    d = os.path.join(SCRATCH, f"pack_stream_{uuid.uuid4().hex[:8]}")
     os.makedirs(d, exist_ok=True)
     yield d
     shutil.rmtree(d, ignore_errors=True)

@@ -15,6 +15,10 @@ from pyspark.sql import functions as F
 
 from bucketizers_spark.sources.stream import stage_chunks
 
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
 _WORDS = [
     "alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta",
     "theta", "iota", "kappa", "lam", "mu",
@@ -23,7 +27,7 @@ _WORDS = [
 
 @pytest.fixture()
 def workdir():
-    d = f"/root/repo/.scratch/seg_stream_{uuid.uuid4().hex[:8]}"
+    d = os.path.join(SCRATCH, f"seg_stream_{uuid.uuid4().hex[:8]}")
     os.makedirs(d, exist_ok=True)
     yield d
     shutil.rmtree(d, ignore_errors=True)

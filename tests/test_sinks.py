@@ -17,7 +17,9 @@ from bucketizers_spark.sinks.idempotent import (
     LocalFsLister,
 )
 
-SCRATCH = "/root/repo/.scratch"
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 
 
 class RecordingLister(LocalFsLister):
@@ -111,6 +113,26 @@ class TestReplaySkip:
         fn(df, 1)  # a new batch still writes
         assert len(calls) == 2
         assert sink.committed_batches() == {0, 1}
+
+
+class TestManifestLineage:
+    def test_write_observes_rows_and_seq_range(self, spark, workdir):
+        """write_batch records the row count and seq range observed by
+        the write job itself; an empty batch still commits, with rows 0
+        and no range."""
+        lister = RecordingLister()
+        sink = IdempotentParquetSink(os.path.join(workdir, "m"), lister=lister)
+        df = spark.range(3, 13).withColumnRenamed("id", "seq")
+        fn = sink.foreach_batch()
+        fn(df, 0)
+        fn(df.where("seq < 0"), 1)
+        sink.write_batch(spark.range(4), 2, {"source": "x"})
+        assert lister.manifests == {
+            "0.json": {"batch_id": 0, "rows": 10, "seq_min": 3, "seq_max": 12},
+            "1.json": {"batch_id": 1, "rows": 0},
+            "2.json": {"batch_id": 2, "rows": 4, "source": "x"},
+        }
+        assert sink.committed_batches() == {0, 1, 2}
 
 
 class TestIcebergMergeSink:

@@ -8,6 +8,7 @@ stream (itself oracle-pinned in test_engine_batch.py).
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
@@ -26,7 +27,15 @@ from bucketizers_spark.streaming.stateful import (
 )
 from bucketizers_spark.streaming.windows import tumbling_seal_stream
 
-SCRATCH = "/root/repo/.scratch"
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
+# jobs a steady TrieStreamJob micro-batch may start on the budget fixture
+# (TestTrieStreamJobBudget): one cut per cascade level with its count
+# observed, counters read off the cut frames, one write per output — a
+# per-level counter aggregate or count() job would break it
+STEADY_BATCH_JOBS = 31
 
 
 @pytest.fixture()
@@ -68,8 +77,6 @@ class TestTrieStream:
         res = token_prefix_trie(batch_df, "tokens", page_size=20, max_depth=6)
         want = assignments_map(res.assignments)
         assert got == want
-        for p in res.persisted:
-            p.unpersist()
 
     def test_batch_replay_is_idempotent(self, spark, workdir, stream_pdf):
         chunk_dir = os.path.join(workdir, "chunks")
@@ -122,8 +129,154 @@ class TestTrieStream:
         res = token_prefix_trie(batch_df, "tokens", page_size=20, max_depth=6)
         want = assignments_map(res.assignments)
         assert got == want
-        for p in res.persisted:
-            p.unpersist()
+
+
+def _counter_version(state_dir: str, batch_id: int) -> dict:
+    import pandas as pd
+
+    path = os.path.join(state_dir, "counters", f"v={batch_id}")
+    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1
+    pdf = pd.read_parquet(path)
+    return dict(zip(pdf["node"], pdf["cnt"].astype(int)))
+
+
+def _oracle_counters(records, chain, page_size, max_depth, parent_col):
+    """The reference counter table after placing ``records`` (chain-
+    prepared, seq-sorted) member by member: per trie (one per parent with
+    ``parent_col``), the seeded root takes the first page_size non-empty
+    arrivals and ``_walk`` places the rest."""
+    from bucketizers_spark.operators.substring import _PSEP, _walk
+
+    tries: dict = {}
+    for r in records:
+        if r["_m"] > 0:
+            tries.setdefault(r[parent_col] if parent_col else None, []).append(r)
+    out = {}
+    for parent, rows in tries.items():
+        counters: dict[str, int] = {}
+        _walk(rows[page_size:], chain.py_nodes, chain.sep, 1, page_size, "root",
+              "seq", max_depth, counters)
+        if parent_col is None:
+            out["root"] = min(len(rows), page_size)
+            out.update(counters)
+        else:
+            out[parent] = min(len(rows), page_size)
+            out.update({f"{parent}{_PSEP}{n}": c for n, c in counters.items()})
+    return out
+
+
+class TestTrieStreamCounters:
+    """Each committed counter version is the exact reference counter
+    table over the stream prefix it covers — the narrow per-node count
+    read off each cascade level, the literal root row and the carried
+    anti-join together, on fresh and carried state."""
+
+    @pytest.mark.parametrize(
+        "mode,salt,parent",
+        [
+            ("token", 0, None),
+            ("token", 4, None),
+            ("token", 0, "_parent"),
+            ("token", 4, "_parent"),
+            ("char", 0, None),
+            ("char", 4, "_parent"),
+        ],
+    )
+    def test_versions_equal_walk_oracle(self, spark, workdir, mode, salt, parent):
+        import numpy as np
+
+        from bucketizers_spark.operators.substring import _char_chain, _token_chain
+
+        # a 2-row first batch and a rare parent leave roots part-filled
+        # across batches, so fresh and carried partial counts both occur
+        page_size, max_depth, n, bounds = 3, 5, 240, [0, 2, 120, 240]
+        rng = np.random.default_rng(7 + salt)
+        toks = [
+            np.minimum(rng.zipf(1.4, size=int(k)), 6).tolist()
+            for k in rng.integers(0, 7, size=n)
+        ]
+        values = [
+            " ".join("".join("abc"[t % 3] * (1 + t // 3) for t in ts[i:i + 2])
+                     for i in range(0, len(ts), 2))
+            for ts in toks
+        ]
+        parents = [f"p{int(x)}" for x in rng.choice(3, size=n, p=[0.6, 0.38, 0.02])]
+        df = spark.createDataFrame(
+            list(zip(range(n), parents, toks, values)),
+            "seq long, _parent string, tokens array<int>, value string",
+        )
+        value_col = "tokens" if mode == "token" else "value"
+        chain = (
+            _token_chain(value_col, max_depth)
+            if mode == "token"
+            else _char_chain(value_col, True, max_depth)
+        )
+        pcols = [parent] if parent else []
+        records = [
+            r.asDict()
+            for r in chain.slim(chain.prepare(df.select("seq", *pcols, value_col)))
+            .orderBy("seq")
+            .collect()
+        ]
+        state_dir = os.path.join(workdir, "state")
+        job = TrieStreamJob(
+            os.path.join(workdir, "sink"),
+            state_dir,
+            mode=mode,
+            value_col=value_col,
+            page_size=page_size,
+            max_depth=max_depth,
+            parent_col=parent,
+            salt_buckets=salt,
+            tail_threshold=0,
+        )
+        for b, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+            job.process_batch(df.where(f"seq >= {lo} AND seq < {hi}"), b)
+            want = _oracle_counters(records[:hi], chain, page_size, max_depth, parent)
+            assert _counter_version(state_dir, b) == want, b
+
+
+class TestTrieStreamJobBudget:
+    def test_steady_batch_job_budget(self, spark, workdir, stream_pdf):
+        """A steady micro-batch (carried counters, bench-shaped salted
+        cascade) starts a pinned number of Spark jobs — counted over the
+        query's runId job group — and writes one file per counter
+        version; an empty batch then commits rows 0 and carries the
+        counters unchanged."""
+        import json
+
+        chunk_dir = os.path.join(workdir, "chunks")
+        state_dir = os.path.join(workdir, "state")
+        stage_chunks(stream_pdf.iloc[:1200], chunk_dir, n_chunks=3)
+        job = TrieStreamJob(
+            os.path.join(workdir, "sink"),
+            state_dir,
+            mode="token",
+            page_size=20,
+            max_depth=6,
+            salt_buckets=8,
+            tail_threshold=0,
+        )
+        stream = read_token_stream(spark, chunk_dir, max_files_per_trigger=1)
+        q = job.start(stream, os.path.join(workdir, "ckpt"))
+        try:
+            q.processAllAvailable()
+            tracker = spark.sparkContext.statusTracker()
+            before = set(tracker.getJobIdsForGroup(str(q.runId)))
+            stage_chunks(stream_pdf.iloc[1200:1600], chunk_dir, n_chunks=1, start_index=3)
+            q.processAllAvailable()
+            steady = set(tracker.getJobIdsForGroup(str(q.runId))) - before
+        finally:
+            q.stop()
+        assert job.sink.committed_batches() == {0, 1, 2, 3}
+        assert len(steady) <= STEADY_BATCH_JOBS, len(steady)
+
+        counters = _counter_version(state_dir, 3)
+        empty = spark.createDataFrame([], TOKEN_STREAM_SCHEMA)
+        job.process_batch(empty, 4)
+        with open(os.path.join(job.sink.manifest_dir, "4.json")) as fh:
+            assert json.load(fh) == {"batch_id": 4, "rows": 0}
+        assert _counter_version(state_dir, 4) == counters
 
 
 class TestComposeStreams:

@@ -6,10 +6,12 @@ AQE nodes. Usage: python tools/explain_plans.py [query ...]"""
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)  # this checkout's engine, wherever it lives
 
 SF_DIR = "/root/testdata/sf0.01"
 

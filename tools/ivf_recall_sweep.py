@@ -23,12 +23,14 @@ planted structure and lowest-id centroids shouldn't. Deterministic
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)  # this checkout's engine, wherever it lives
 
 CONFIGS = [
     (k, p) for k in (8, 16, 32, 64) for p in (1, 2, 4, 8) if p <= k

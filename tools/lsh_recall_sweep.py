@@ -9,12 +9,14 @@ trade: sum(bucket^2) drives the band self-join).
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)  # this checkout's engine, wherever it lives
 
 from bucketizers_spark.operators.lsh import hyperplanes  # noqa: E402
 

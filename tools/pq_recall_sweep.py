@@ -22,6 +22,7 @@ ivf_recall_sweep.py (the regime IVF pruning targets).
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -144,7 +145,7 @@ def main() -> None:
     clustered = "--clustered" in args
     args = [a for a in args if not a.startswith("--")]
     if clustered:
-        sys.path.insert(0, "/root/repo/tools")
+        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
         from ivf_recall_sweep import planted_clusters
 
         ids, mat = planted_clusters()

@@ -13,9 +13,10 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)  # this checkout's engine, wherever it lives
 
-SCRATCH = "/root/repo/.scratch/stream_demo"
+SCRATCH = os.path.join(ROOT, ".scratch", "stream_demo")
 
 
 def main() -> None:

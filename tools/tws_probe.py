@@ -40,7 +40,8 @@ import shutil
 import sys
 import uuid
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)  # this checkout's engine, wherever it lives
 
 
 def main() -> int:
@@ -60,7 +61,7 @@ def main() -> int:
 
     spark = get_spark("twsprobe", cores=4, shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
-    wd = f"/root/repo/.scratch/tws_{uuid.uuid4().hex[:8]}"
+    wd = os.path.join(ROOT, ".scratch", f"tws_{uuid.uuid4().hex[:8]}")
     os.makedirs(f"{wd}/in", exist_ok=True)
     pdf = pd.DataFrame({"seq": range(20), "k": [f"k{j % 3}" for j in range(20)]})
     pdf.iloc[:10].to_parquet(f"{wd}/in/c0.parquet")
