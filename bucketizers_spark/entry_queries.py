@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import math
 import os
+import warnings
 
 import pandas as pd  # noqa: F401 — pandas_udf type hints resolve here
 
@@ -89,8 +90,15 @@ def _t(
             import pyarrow.parquet as _pq
 
             eff = min(eff, _pq.ParquetFile(path).metadata.num_row_groups)
-        except Exception:
-            pass
+        except Exception as exc:  # the probe is an optimization: keep going
+            # the default warning filter shows each (path, exception) once
+            warnings.warn(
+                f"_t: parquet footer probe failed for {path} ({exc!r}); "
+                "falling back to the split count, so a single-row-group "
+                "file may scan on one core",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     if eff < min(p, 8):
         df = df.repartition(p)
         if barrier:
@@ -640,6 +648,11 @@ FROM documents
 
 _N_MINHASH = 8
 _BAND_SIZE = 4
+assert _N_MINHASH == 8 and _N_MINHASH % _BAND_SIZE == 0, (
+    "_minhash_bands_docs reads each shingle's 16-byte md5 digest as 8 "
+    "uint16 minhash values and cuts them into bands of _BAND_SIZE: "
+    "_N_MINHASH must be 8 and a multiple of _BAND_SIZE"
+)
 
 
 def _with_shingles(docs):

@@ -1,4 +1,4 @@
-"""Shared corpus-quality gate expressions.
+r"""Shared corpus-quality gate expressions.
 
 One definition serves every consumer of the gate — the batch driver
 queries (q_text_quality, q_lang_guess, q_corpus_filter), the batch

@@ -82,12 +82,36 @@ class BucketizeResult:
         self._seals = value
 
 
+def const_frame(spark, schema: T.StructType, row: tuple | None = None) -> DataFrame:
+    """A constant frame of ``schema``: zero rows when ``row`` is None, else
+    the one row ``row``, planned as ``Range`` + a literal ``Project`` — a
+    pure JVM plan.
+
+    ``spark.createDataFrame(<list>)`` is avoided on purpose: a Python list
+    plans as ``Scan ExistingRDD`` over a ``PythonRDD``
+    (``applySchemaToPythonRDD`` → ``SerDeUtil``), with Arrow on or off, so
+    executing it forks the PySpark daemon and its workers just to unpickle
+    the rows. Operators build these frames on every streaming micro-batch,
+    whose plans are otherwise all-JVM.
+
+    A column given a non-None value is a literal and so non-nullable; a
+    zero-row frame matches ``schema`` exactly (every field nullable). File
+    sinks write every column as nullable either way."""
+    values = (None,) * len(schema.fields) if row is None else row
+    return spark.range(0 if row is None else 1, numPartitions=1).select(
+        *[
+            F.lit(v).cast(f.dataType).alias(f.name)
+            for v, f in zip(values, schema.fields, strict=True)
+        ]
+    )
+
+
 def empty_relations(spark) -> DataFrame:
-    return spark.createDataFrame([], RELATIONS_SCHEMA)
+    return const_frame(spark, RELATIONS_SCHEMA)
 
 
 def empty_seals(spark) -> DataFrame:
-    return spark.createDataFrame([], SEALS_SCHEMA)
+    return const_frame(spark, SEALS_SCHEMA)
 
 
 def relation_row(from_b, rel_type: str, to_b, values=None, path=None, seq=None):

@@ -63,9 +63,11 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bucketizers_spark.operators.core import (
     BucketizeResult,
+    const_frame,
     empty_relations,
     empty_seals,
     relation_row,
@@ -80,6 +82,11 @@ from bucketizers_spark.plans.materialize import cut_lineage, cut_lineage_counted
 # names are alnum/dash/slash) AND survives the Arrow pandas transfer —
 # NUL does not (applyInPandas silently drops \x00 from returned strings).
 _PSEP = "\x1f"
+
+# the streaming node-counter table (``node_state`` / ``counter_updates``)
+COUNTER_SCHEMA = T.StructType(
+    [T.StructField("node", T.StringType()), T.StructField("cnt", T.LongType())]
+)
 
 
 class _Chain:
@@ -707,9 +714,7 @@ def _run_cascade(
         root_placed = min(root_cap, total_work)
         if emit_counter_updates and root_cnt + root_placed:
             counter_parts.append(
-                spark.createDataFrame(
-                    [(root, root_cnt + root_placed)], "node string, cnt long"
-                )
+                const_frame(spark, COUNTER_SCHEMA, (root, root_cnt + root_placed))
             )
         level = 0
         remaining_cnt = total_work - root_placed
@@ -1017,8 +1022,8 @@ def _run_cascade(
 
     result = BucketizeResult(assignments, relations, empty_seals(spark))
     if emit_counter_updates:
-        updates = counter_parts[0] if counter_parts else spark.createDataFrame(
-            [], "node string, cnt long"
+        updates = (
+            counter_parts[0] if counter_parts else const_frame(spark, COUNTER_SCHEMA)
         )
         for part in counter_parts[1:]:
             updates = updates.unionByName(part)

@@ -31,7 +31,11 @@ from bucketizers_spark.operators import (
     substring_trie,
     tumbling_bucketizer,
 )
-from bucketizers_spark.operators.core import BucketizeResult
+from bucketizers_spark.operators.core import (
+    BucketizeResult,
+    empty_relations,
+    empty_seals,
+)
 from bucketizers_spark.operators.multi import paged_within_parent
 from bucketizers_spark.operators.substring import token_prefix_trie
 
@@ -82,14 +86,8 @@ def _build_time(df: DataFrame, spec: JobSpec) -> BucketizeResult:
     agg = session_bucketizer(df, col, win.gap)
     res = BucketizeResult(
         agg.withColumn("bucket_id", F.col("session_start")),
-        df.sparkSession.createDataFrame(
-            [],
-            "from_bucket string, relation_type string, to_bucket string, "
-            "values array<string>, path string, created_at_seq long",
-        ),
-        df.sparkSession.createDataFrame(
-            [], "bucket_id string, sealed_at_seq long"
-        ),
+        empty_relations(df.sparkSession),
+        empty_seals(df.sparkSession),
     )
     return res
 

@@ -20,7 +20,9 @@ batch cascade over the concatenated stream — pytest-pinned.
 Per-batch cost: the cascade emits each touched node's post-batch count
 as a narrow select over its level's lineage-cut frame, untouched nodes
 carry over through a broadcast anti-join, and the new version is written
-as one file straight from that plan — no persist, no count job.
+as one file straight from that plan — no persist, no count job. The
+literal root counter row and every empty frame are JVM constant frames
+(operators/core.const_frame), so a batch starts no Python process.
 
 Scale: the counters table holds one row per trie node ever created —
 O(members/page_size) worst case, read+broadcast whole per batch (hence

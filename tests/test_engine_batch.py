@@ -835,3 +835,33 @@ class TestSampleFixedPlan:
         # keys, so every member's key < every non-member's key
         keys = sorted(r.sample_key for r in rows)
         assert keys == sorted(set(keys))  # unique
+
+
+class TestScanProbe:
+    def test_footer_probe_failure_warns_and_falls_back(self, spark, monkeypatch):
+        """A failed ``_t`` row-group probe names the path and the
+        exception in a warning and keeps the split-count fallback."""
+        import os
+        import shutil
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from bucketizers_spark.entry_queries import _t
+
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        d = os.path.join(root, ".scratch", "t_probe")
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        # a single parquet FILE: directory inputs skip the probe
+        path = f"{d}/tbl.parquet"
+        pq.write_table(pa.table({"id": list(range(5))}), path)
+
+        def broken(*args, **kwargs):
+            raise OSError("footer unreadable")
+
+        monkeypatch.setattr(pq, "ParquetFile", broken)
+        with pytest.warns(RuntimeWarning, match="footer unreadable") as rec:
+            df = _t(spark, d, "tbl")
+        assert path in str(rec[0].message)
+        assert sorted(r.id for r in df.collect()) == list(range(5))

@@ -16,6 +16,14 @@ distributions observed in /root/testdata/sf0.1 (TESTDATA.md):
 
 Output is NEVER read by bench.py, queries() or tests — profiling only.
 
+Caveat — memo hit rates: the 31-word vocabulary gives a tiny distinct-
+shingle space (about 30k word trigrams at any scale), so the per-task
+shingle-digest memo of the fused minhash kernel (_minhash_bands_docs in
+entry_queries.py) hits almost every lookup here. Kernel speedups
+measured on this replica (e.g. dedup_minhash in OPTIMIZATION_r07.md) are
+therefore optimistic: on real corpora shingle cardinality grows with the
+data and the memo hit rate falls.
+
 Usage: python tools/make_prof_replica.py [out_dir] [scale]
   scale=10 (default) -> 50k docs / 8k embeddings / 1M events,
   matching the driver's observed per-decade scaling (embeddings 4x).
