@@ -75,8 +75,9 @@ class JobSpec:
     token_mode: bool = False
     max_depth: int = 64  # cascade safety cap (token mode: n-gram depth cap)
     # substring-trie skew defusal (north_rule "salted repartitioning to
-    # defuse skew on hot prefixes"): > 0 switches the cascade to the
-    # per-(node, salt) aggregation path — set on skewed production inputs
+    # defuse skew on hot prefixes"): salts per distributed cascade level;
+    # 0 takes operators/substring.DEFAULT_SALT_BUCKETS. The count spreads
+    # a hot node over tasks and never changes the placement.
     salt_buckets: int = 0
     # basic pager: a dense source-stamped seq makes paging a stateless
     # narrow map (THE production default at 10^12 rows — a global rank,

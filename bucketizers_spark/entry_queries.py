@@ -45,7 +45,7 @@ from bucketizers_spark.operators.multi import (
     paged_within_parent,
     trie_within_parent,
 )
-from bucketizers_spark.operators.ivf import pair_cos_r4
+from bucketizers_spark.operators.ivf import _cosine, pair_cos_r4
 from bucketizers_spark.operators.substring import token_prefix_trie
 from bucketizers_spark.plans.materialize import cut_lineage
 
@@ -670,11 +670,12 @@ def _with_shingles(docs):
 
 
 def _minhash_stacked(docs, extra_cols=()):
-    """(doc_id, band, band_key[, *extra_cols]) rows: the LSH band
-    machinery shared by dedup_minhash, the band-pruned ngram_jaccard,
-    and the streaming candidate generator (extra_cols passes `seq`
-    through for arrival ordering). Entirely JVM-side (md5 + array
-    fns)."""
+    """(doc_id[, *extra_cols], band, band_key) rows over _with_shingles
+    output: the REFERENCE form of the LSH band signature, entirely
+    JVM-side (md5 + array fns) and written like the DuckDB oracle. No
+    query or stream runs it — they all call the vectorized
+    _minhash_bands_docs kernel — but tests and the benchmark's dedup
+    check pin that kernel equal to it."""
 
     # ONE md5 per shingle; the 8 minhash "permutations" are its 8 disjoint
     # 4-hex-char slices (16 independent bits each — plenty for banding, and
@@ -747,6 +748,18 @@ def _minhash_stacked(docs, extra_cols=()):
 # exploded (doc_id, _shv) rows the co-count join needed anyway.
 
 
+# Per-TASK byte budget of the minhash kernel's shingle-digest memo. An
+# entry costs sys.getsizeof(shingle) for the key it keeps alive plus
+# _MEMO_ENTRY_BYTES for the rest: the (8,) '>u2' ndarray (112 B), the
+# 16-byte digest bytes object it views (49 B) and the dict slot.
+# tracemalloc over 10k-349k fresh 3-word-shingle entries (CPython 3.11,
+# numpy, 64-bit Linux) measured 278-301 B per entry beyond the key,
+# varying with the dict's growth point. 64 MiB holds ~180k typical
+# shingles per task.
+_MINHASH_MEMO_BYTES = 64 << 20
+_MEMO_ENTRY_BYTES = 304
+
+
 def _minhash_bands_docs(docs, extra_cols=(), with_nsh=False):
     """(doc_id[, *extra], band, band_key) rows straight from document
     TEXT in one fused Arrow pass — value-identical to _minhash_stacked
@@ -762,25 +775,30 @@ def _minhash_bands_docs(docs, extra_cols=(), with_nsh=False):
     numeric min (the hex charset is ordered), so the 8 slice-mins
     collapse to one numpy uint16 min over np.frombuffer(digest, '>u2')
     rows, and '%04x' re-emits exactly the winning slice. A per-TASK
-    memo caches digest rows for repeated shingles (md5 is pure; bounded
-    at 2^20 entries so executor memory stays flat on adversarial
-    corpora). Pinned bitwise vs the slice-min fold in
-    tests/test_minhash_kernel.py.
+    memo caches digest rows for repeated shingles (md5 is pure). It
+    stops growing once its charged size reaches _MINHASH_MEMO_BYTES
+    (read here, at plan time, into the kernel's closure); the size is
+    charged on insert only, so a memo hit costs one dict lookup. Pinned
+    bitwise vs the slice-min fold in tests/test_minhash_kernel.py.
 
     ``with_nsh`` additionally emits the doc's DISTINCT-shingle count on
     every band row (== F.size of the old shingle column), so a consumer
     needing per-doc shingle metadata can derive it from the band frame
     (rows where band == 0) instead of paying a second corpus pass."""
     import hashlib
+    import sys
 
     import numpy as np
 
     cols = ["doc_id", *extra_cols]
     t = dict(docs.select(*cols).dtypes)
     nb = _N_MINHASH // _BAND_SIZE
+    budget = _MINHASH_MEMO_BYTES
 
     def kernel(batches):
         memo: dict = {}
+        used = 0
+        getsizeof = sys.getsizeof
         fmt = ("%04x" * _N_MINHASH).__mod__
         md5 = hashlib.md5
         hw = 4 * _BAND_SIZE  # hex chars per band key input
@@ -802,8 +820,10 @@ def _minhash_bands_docs(docs, extra_cols=(), with_nsh=False):
                         v = np.frombuffer(
                             md5(s.encode("utf-8")).digest(), dtype=">u2"
                         )
-                        if len(memo) < (1 << 20):
+                        cost = getsizeof(s) + _MEMO_ENTRY_BYTES
+                        if used + cost <= budget:
                             memo[s] = v
+                            used += cost
                     rows[k] = v
                 hx = fmt(tuple(rows.min(axis=0)))
                 for b in range(nb):
@@ -1105,27 +1125,6 @@ FROM pairs WHERE round(CAST(inter AS DOUBLE) / un, 4) >= 0.2
 # --------------------------------------------------------------------------
 # similarity search over embeddings
 # --------------------------------------------------------------------------
-def _cosine(a, b):
-    """Bit-identical fold on both engines: elementwise float→double products
-    summed left-to-right, then dot / (sqrt(na) * sqrt(nb))."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    nb = F.aggregate(
-        F.transform(b, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return dot / (F.sqrt(na) * F.sqrt(nb))
-
-
 def q_ann_topk(spark, sf_dir):
     """Brute-force cosine top-10 for query vectors vec_id < 5 (the exact
     baseline an IVF/LSH path is validated against)."""
@@ -3099,7 +3098,7 @@ def q_ngram_diversity(spark, sf_dir):
     immediately into a two-stage distinct count — groupBy (source,
     gram) then per-source agg — both map-side combinable, never
     countDistinct over a corpus-wide shuffle of raw text; trigrams are
-    md5'd at the map stage (word_ngram_hashes) so the wide op moves
+    md5'd at the map stage (word_ngram_hashes_frame) so the wide op moves
     32-char hashes. Sources whose documents are all shorter than 3
     words drop out (inner join; both engines agree)."""
     from bucketizers_spark.functions.ngrams import word_ngram_hashes_frame
@@ -3119,7 +3118,7 @@ def q_ngram_diversity(spark, sf_dir):
     )
     # r7: vectorized gram-hash kernel (identical hashes; single consumer
     # so no materialization needed)
-    gr = word_ngram_hashes_frame(docs, "source", "text", 3).withColumnRenamed(
+    gr = word_ngram_hashes_frame(docs, ["source"], "text", 3).withColumnRenamed(
         "gram_h", "g"
     )
     gs = (
@@ -3198,9 +3197,9 @@ def q_decontaminate(spark, sf_dir):
     ``doc_id % 23`` slice here is only the fixture's stand-in for that
     external table; a benchmark side that actually scaled WITH the
     corpus would need the hint dropped so AQE picks the join. Grams are md5'd
-    before any wide op so shuffle rows stay 32 bytes + key, never the
-    n-gram text. All expressions are JVM codegen (split / transform /
-    slice / concat_ws / md5); no Python in the path."""
+    in one vectorized map kernel (functions/ngrams.word_ngram_hashes_frame)
+    before any wide op, so shuffle rows carry a hash + key, never the
+    n-gram text."""
     from bucketizers_spark.functions.ngrams import word_ngram_hashes_frame
 
     docs = _t(spark, sf_dir, "documents")
@@ -3215,7 +3214,7 @@ def q_decontaminate(spark, sf_dir):
     # so distinct counts and join matches are identical and the output
     # is unchanged.
     g = (
-        word_ngram_hashes_frame(docs, "doc_id", "text", _DECON_N)
+        word_ngram_hashes_frame(docs, ["doc_id"], "text", _DECON_N)
         .select("doc_id", F.unhex("gram_h").alias("gram_h"))
         .transform(cut_lineage)
     )
@@ -3281,7 +3280,7 @@ def q_segment_dedup(spark, sf_dir):
     # hashes (bijective with the hex form — identical groups, joins
     # and counts; see q_decontaminate).
     seg = (
-        segment_hashes_frame(docs, "doc_id", "text", _SEG_LEN)
+        segment_hashes_frame(docs, ["doc_id"], "text", _SEG_LEN)
         .select("doc_id", F.unhex("seg_h").alias("seg_h"))
         .transform(cut_lineage)
     )
@@ -3348,8 +3347,8 @@ def q_segment_dedup_cdc(spark, sf_dir):
     in pytest). Same report as segment_dedup: per affected document,
     segment counts and duplicated share.
 
-    Scale shape: chunking is a pure JVM HOF narrow map
-    (functions/ngrams.cdc_segment_hashes) emitting md5 hashes at the
+    Scale shape: chunking is a vectorized narrow map
+    (functions/ngrams.cdc_segment_hashes_frame) emitting md5 hashes at the
     map stage; downstream is identical to segment_dedup — dup set via
     countDistinct on seg_h (NOT broadcast; scales with the corpus),
     membership join reusing the seg_h exchange, one final doc_id
@@ -3362,7 +3361,9 @@ def q_segment_dedup_cdc(spark, sf_dir):
     # unhex before the cut: binary segment hashes through every wide op
     # (bijective with hex; see q_decontaminate)
     seg = (
-        cdc_segment_hashes_frame(docs, "doc_id", "text", window=_CDC_WINDOW)
+        cdc_segment_hashes_frame(
+            docs, ["doc_id"], "text", window=_CDC_WINDOW
+        )
         .select("doc_id", F.unhex("seg_h").alias("seg_h"))
         .transform(cut_lineage)
     )

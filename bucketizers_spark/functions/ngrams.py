@@ -1,69 +1,30 @@
-"""Shared word-n-gram / fixed-segment hash expressions.
+"""Shared word-n-gram / segment hash kernels.
 
 One definition serves the batch driver queries (entry_queries
-q_decontaminate / q_segment_dedup) and the streaming decontamination
-job (streaming/decon_stream.py), so the gram derivation cannot drift
-between the two paths. Everything here is a pure JVM column expression
-(split / sequence / transform / slice / concat_ws / md5) — no Python in
-the hot path; hashing happens at the map stage so any downstream wide
-op moves 32-char hashes, never the gram text.
+q_decontaminate / q_segment_dedup / q_segment_dedup_cdc /
+q_ngram_diversity) and the streaming jobs (streaming/decon_stream.py,
+streaming/dedup_stream.segment_count_stream), so the gram derivation
+cannot drift between the two paths. Each function is one vectorized
+Arrow ``mapInPandas`` pass from (ids, text) to one row per gram or
+segment; ``mapInPandas`` is stateless, so it runs unchanged on a
+streaming DataFrame. Hashing happens in that map stage, so any
+downstream wide op moves md5 hashes, never the gram text. Hashes are
+md5 hex of the UTF-8 text, the same digest DuckDB's and Spark's
+``md5`` give.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-
-def word_ngrams(text_col: Column, n: int) -> Column:
-    """Array of the space-joined word n-grams of ``text_col`` as TEXT.
-    Rows with fewer than ``n`` words yield an EMPTY array (explode
-    drops them), guarding Spark's descending-sequence surprise when
-    size - (n-1) < 1. Prefer :func:`word_ngram_hashes` before any wide
-    op — gram text belongs in shuffles only when the downstream op
-    needs the words themselves (e.g. PMI collocations split the gram
-    back into its member words)."""
-    words = F.split(text_col, " ")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(words) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-    )
-    return F.when(F.size(words) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def word_ngram_hashes(text_col: Column, n: int) -> Column:
-    """Array of md5 hashes of the space-joined word n-grams of
-    ``text_col`` (md5 applied gram-wise over :func:`word_ngrams`, so
-    wide ops downstream move 32-char hashes, never gram text)."""
-    return F.transform(word_ngrams(text_col, n), F.md5)
-
-
-def segment_hashes(text_col: Column, seg_len: int) -> Column:
-    """Array of md5 hashes of the NON-overlapping ``seg_len``-word
-    chunks of ``text_col`` (last chunk may be shorter). Always at least
-    one segment: split('') yields [''] so nseg >= 1."""
-    words = F.split(text_col, " ")
-    nseg = F.ceil(F.size(words) / F.lit(float(seg_len))).cast("int")
-    return F.transform(
-        F.sequence(F.lit(0), nseg - 1),
-        lambda c: F.md5(
-            F.concat_ws(" ", F.slice(words, c * seg_len + 1, seg_len))
-        ),
-    )
-
-
-def _hash_explode_frame(df, id_col: str, text_col: str, fn, out_col: str):
-    """(id, hash) rows from a per-text hash-list function, as ONE
-    vectorized Arrow pass — the r7 batch engine for the expression
-    forms below (value-identical; the JVM md5-per-gram HOFs are
-    CodegenFallback: interpreted per position, they dominated the
-    segment/decon queries at sf1.0). Emits one row per hash INCLUDING
-    duplicates, exactly like explode() over the column form; rows whose
-    text yields no hashes produce no output, exactly like explode of an
-    empty/null array."""
-    t = dict(df.select(id_col).dtypes)
+def _hash_explode_frame(df, id_cols, text_col: str, fn, out_col: str):
+    """(``*id_cols``, ``out_col``) rows from a per-text function returning
+    a list of strings (grams or their hashes), as ONE vectorized Arrow
+    pass (an interpreted JVM md5-per-gram higher-order function is
+    CodegenFallback and dominated the segment/decon queries at sf1.0).
+    Emits one row per list element INCLUDING duplicates; null texts and
+    texts whose ``fn`` yields an empty list produce no output."""
+    id_cols = list(id_cols)
+    t = dict(df.select(*id_cols).dtypes) if id_cols else {}
 
     def kernel(batches):
         for pdf in batches:
@@ -77,40 +38,6 @@ def _hash_explode_frame(df, id_col: str, text_col: str, fn, out_col: str):
                 if hs:
                     idx.extend([i] * len(hs))
                     vals.extend(hs)
-            out = pdf.iloc[idx][[id_col]].reset_index(drop=True).copy()
-            out[out_col] = vals
-            yield out
-
-    return df.select(id_col, text_col).mapInPandas(
-        kernel, f"{id_col} {t[id_col]}, {out_col} string"
-    )
-
-
-def word_ngrams_frame(df, id_cols, text_col: str, n: int, out_col="gram"):
-    """Vectorized (``*id_cols``, gram TEXT) equivalent of
-    ``explode(word_ngrams(text, n))`` — same space-joined grams, same
-    < n-words drop, duplicates kept. For consumers that need the words
-    themselves (PMI, top-k reporting); hash-only consumers should use
-    :func:`word_ngram_hashes_frame`."""
-    id_cols = list(id_cols)
-    t = dict(df.select(*id_cols).dtypes) if id_cols else {}
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            idx, vals = [], []
-            for i, txt in enumerate(pdf[text_col]):
-                if txt is None:
-                    continue
-                w = txt.split(" ")
-                if len(w) < n:
-                    continue
-                grams = [
-                    " ".join(w[j : j + n]) for j in range(len(w) - n + 1)
-                ]
-                idx.extend([i] * len(grams))
-                vals.extend(grams)
             out = pdf.iloc[idx][id_cols].reset_index(drop=True).copy()
             out[out_col] = vals
             yield out
@@ -119,29 +46,42 @@ def word_ngrams_frame(df, id_cols, text_col: str, n: int, out_col="gram"):
     return df.select(*id_cols, text_col).mapInPandas(kernel, schema)
 
 
-def word_ngram_hashes_frame(df, id_col: str, text_col: str, n: int):
-    """Vectorized (id, gram_h) equivalent of
-    ``explode(word_ngram_hashes(text, n))`` — same md5-of-UTF8 hex,
-    same < n-words drop, duplicates kept."""
+def _word_ngrams(txt: str, n: int) -> list[str]:
+    """Space-joined word n-grams of ``txt`` (split on single spaces, so
+    empty words count); none when it has fewer than ``n`` words."""
+    w = txt.split(" ")
+    return [" ".join(w[j : j + n]) for j in range(len(w) - n + 1)]
+
+
+def word_ngrams_frame(df, id_cols, text_col: str, n: int, out_col="gram"):
+    """(``*id_cols``, gram TEXT) rows: :func:`_word_ngrams` of each text,
+    duplicates kept. For consumers that need the words themselves (PMI,
+    top-k reporting); hash-only consumers should use
+    :func:`word_ngram_hashes_frame`."""
+    return _hash_explode_frame(
+        df, id_cols, text_col, lambda txt: _word_ngrams(txt, n), out_col
+    )
+
+
+def word_ngram_hashes_frame(df, id_cols, text_col: str, n: int):
+    """(``*id_cols``, gram_h) rows: md5 hex of each of the text's
+    :func:`_word_ngrams`, duplicates kept."""
     import hashlib
 
     def fn(txt: str):
-        w = txt.split(" ")
-        if len(w) < n:
-            return []
         return [
-            hashlib.md5(" ".join(w[i : i + n]).encode("utf-8")).hexdigest()
-            for i in range(len(w) - n + 1)
+            hashlib.md5(g.encode("utf-8")).hexdigest()
+            for g in _word_ngrams(txt, n)
         ]
 
-    return _hash_explode_frame(df, id_col, text_col, fn, "gram_h")
+    return _hash_explode_frame(df, id_cols, text_col, fn, "gram_h")
 
 
-def segment_hashes_frame(df, id_col: str, text_col: str, seg_len: int):
-    """Vectorized (id, seg_h) equivalent of
-    ``explode(segment_hashes(text, seg_len))`` — same non-overlapping
-    chunks, last chunk short, always >= 1 segment (''.split(' ') is
-    [''] on both engines)."""
+def segment_hashes_frame(df, id_cols, text_col: str, seg_len: int):
+    """(``*id_cols``, seg_h) rows: md5 hex of the NON-overlapping
+    ``seg_len``-word chunks of the text, the last chunk possibly short.
+    Every non-null text has at least one segment (``''.split(' ')`` is
+    ``['']``)."""
     import hashlib
     import math
 
@@ -155,16 +95,20 @@ def segment_hashes_frame(df, id_col: str, text_col: str, seg_len: int):
             for c in range(nseg)
         ]
 
-    return _hash_explode_frame(df, id_col, text_col, fn, "seg_h")
+    return _hash_explode_frame(df, id_cols, text_col, fn, "seg_h")
 
 
-def cdc_segment_hashes_frame(
-    df, id_col: str, text_col: str, window: int = 4
-):
-    """Vectorized (id, seg_h) equivalent of
-    ``explode(cdc_segment_hashes(text, window))`` — same boundary rule
-    (trailing-window md5 first hex char '0', or end of document), same
-    segment md5s, >= 1 segment per doc."""
+def cdc_segment_hashes_frame(df, id_cols, text_col: str, window: int = 4):
+    """(``*id_cols``, seg_h) rows over CONTENT-DEFINED segments of the
+    text (Rabin-style chunking at the word level): a segment boundary
+    falls after word i wherever the md5 hex of the trailing ``window``
+    words starts with '0' — rate 1/16, ~16-word expected segments — or
+    at end of document. Unlike fixed-length segments
+    (:func:`segment_hashes_frame`), a single inserted or deleted word
+    only perturbs the boundaries within one window of the edit, so
+    shared content re-aligns and still deduplicates — the property CDC
+    exists for (LBFS/rsync lineage). Every non-null text has at least
+    one segment (the end-of-document boundary)."""
     import hashlib
 
     def fn(txt: str):
@@ -185,56 +129,4 @@ def cdc_segment_hashes_frame(
                 prev = i
         return out
 
-    return _hash_explode_frame(df, id_col, text_col, fn, "seg_h")
-
-
-def cdc_segment_hashes(text_col: Column, window: int = 4) -> Column:
-    """Array of md5 hashes of CONTENT-DEFINED segments of ``text_col``
-    (Rabin-style chunking at the word level): a segment boundary falls
-    after word i wherever the fingerprint of the trailing ``window``
-    words — here substr(md5(window text), 1, 1) == '0', firing at rate
-    1/16 for ~16-word expected segments — or at end-of-document. Unlike
-    fixed-length segments (:func:`segment_hashes`), a single inserted
-    or deleted word only perturbs the boundaries within one window of
-    the edit, so shared content re-aligns and still deduplicates —
-    the property CDC exists for (LBFS/rsync lineage).
-
-    Pure JVM column expressions (sequence / filter / slice / md5 /
-    aggregate) — no Python, no shuffle; the downstream dedup moves only
-    32-char hashes. Always at least one segment (end-of-doc boundary).
-
-    Expression-shape constraint: the boundary array is an md5 PER WORD
-    POSITION — the expensive part — and Catalyst does NOT eliminate
-    common subexpressions referenced from different higher-order-
-    function lambdas (measured 4.3x at sf0.1). The segment build is
-    therefore ONE ``aggregate`` over the boundary array (bnd evaluated
-    exactly once per row), carrying (prev_boundary, segments) as the
-    fold state, instead of a transform indexing back into bnd."""
-    words = F.split(text_col, " ")
-    n = F.size(words)
-
-    def _is_boundary(i):
-        start = F.greatest(i - (window - 1), F.lit(1))
-        win = F.slice(words, start, i - start + 1)
-        return (i == n) | (
-            F.substring(F.md5(F.concat_ws(" ", win)), 1, 1) == "0"
-        )
-
-    bnd = F.filter(F.sequence(F.lit(1), n), _is_boundary)
-    init = F.struct(
-        F.lit(0).alias("prev"),
-        F.array().cast("array<string>").alias("segs"),
-    )
-
-    def _fold(acc, b):
-        seg = F.md5(
-            F.concat_ws(
-                " ", F.slice(words, acc["prev"] + 1, b - acc["prev"])
-            )
-        )
-        return F.struct(
-            b.alias("prev"),
-            F.concat(acc["segs"], F.array(seg)).alias("segs"),
-        )
-
-    return F.aggregate(bnd, init, _fold, lambda acc: acc["segs"])
+    return _hash_explode_frame(df, id_cols, text_col, fn, "seg_h")

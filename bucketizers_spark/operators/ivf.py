@@ -33,9 +33,11 @@ from pyspark.sql.window import Window
 
 
 def _cosine(a, b):
-    """Bit-identical to entry_queries._cosine (elementwise double
-    products folded left-to-right) so operator-built results hash-match
-    the pinned driver form."""
+    """Cosine as a JVM higher-order fold, bit-identical on Spark and
+    DuckDB: elementwise float→double products summed left-to-right, then
+    dot / (sqrt(na) * sqrt(nb)). The one interpreted cosine; the entry
+    queries and the IVF operators share it, and pair_cos_r4 is its
+    vectorized kernel."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),

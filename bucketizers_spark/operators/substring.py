@@ -44,11 +44,12 @@ Scale notes:
   whole residual trie finishes in ONE applyInPandas shuffle (grouped
   subtrie walk — no driver-side collect anywhere in the hot path);
   streaming counters are cogrouped into their subtrie groups.
-- Hot-node skew: rows for one node land in one window partition. Capacity
-  placement only needs the node's (cap)-th smallest seq, so a pathological
-  hot node can be handled with a per-node threshold aggregate instead of
-  row_number; the window form is kept here for clarity and exactness and is
-  fine while per-node row counts ≪ partition memory.
+- Hot-node skew: capacity placement only needs each node's (cap)-th
+  smallest seq, so every distributed level is a salted two-phase
+  threshold aggregate — per-(node, salt) top-cap candidate lists merged
+  per node — and no task ever sorts a whole hot node. The merge is an
+  exact partial top-k merge for any salt count (``salt_buckets``, or
+  ``DEFAULT_SALT_BUCKETS`` when 0).
 - Each level's frame is lineage-cut (eager checkpoint) so the loop's cost
   is linear in levels, not quadratic; the cut's own job also observes the
   count of still-unplaced rows, so no level runs a separate count().
@@ -61,7 +62,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -82,6 +83,10 @@ from bucketizers_spark.plans.materialize import cut_lineage, cut_lineage_counted
 # names are alnum/dash/slash) AND survives the Arrow pandas transfer —
 # NUL does not (applyInPandas silently drops \x00 from returned strings).
 _PSEP = "\x1f"
+
+# salts per distributed trie level (and per-parent root) when the caller
+# passes salt_buckets=0
+DEFAULT_SALT_BUCKETS = 32
 
 # the streaming node-counter table (``node_state`` / ``counter_updates``)
 COUNTER_SCHEMA = T.StructType(
@@ -351,8 +356,8 @@ def _grouped_walk(
     The per-group walk is the reference's inherently sequential semantics;
     the heavy lifting (normalize, chain prep, payload movement) stays
     JVM-side on the slim working set. The hottest level-L prefix is one
-    task — raise the walk level (one more distributed cascade level) to
-    split hot groups, or fall back to the full cascade."""
+    task — lower ``tail_threshold`` so more levels run distributed and
+    salted before the handoff."""
     import pandas as pd
 
     sep = chain.sep
@@ -531,7 +536,6 @@ def _run_cascade(
     emit_counter_updates: bool = False,
     salt_buckets: int = 0,
     tail_threshold: int = 100_000,
-    grouped_walk_level: int | None = None,
     parent_col: str | None = None,
 ) -> BucketizeResult:
     """Run the cascade; ``node_state`` (node string, cnt long) carries trie
@@ -541,6 +545,14 @@ def _run_cascade(
     no bucket even as first in-batch arrivals). With
     ``emit_counter_updates`` the result carries a ``counter_updates``
     DataFrame (node, cnt) of post-batch totals for all touched nodes.
+
+    Each distributed level places members with the salted two-phase
+    threshold (``salt_buckets`` salts, ``DEFAULT_SALT_BUCKETS`` when 0 —
+    the count only changes how a hot node's rows spread over tasks, never
+    the placement). Once at most ``tail_threshold`` rows remain, one
+    grouped walk shuffle finishes the trie (``tail_threshold=0`` keeps
+    every level distributed; the default hands small inputs to the walk
+    from level 1).
 
     With ``parent_col`` every level is keyed by (parent, node): a dedicated
     child-trie instance per parent bucket (MultiBucketizer.ts:94-96) whose
@@ -556,6 +568,7 @@ def _run_cascade(
     parent id."""
     spark = df.sparkSession
     pcols = [parent_col] if parent_col else []
+    nsalt = salt_buckets or DEFAULT_SALT_BUCKETS
     # the cascade runs on a SLIM working set — seq + capped chain columns —
     # so per-level shuffles and hot-node sorts never carry the payload;
     # the payload is joined back onto the (seq, bucket_id) map at the end
@@ -607,7 +620,6 @@ def _run_cascade(
         # contributes at most page_size candidate seqs; the merge handles
         # ≤ nsalt·page_size values per parent) — a giant parent is never
         # sorted in one task.
-        nsalt = salt_buckets if salt_buckets > 0 else 32
         cand = work.groupBy(
             parent_col,
             F.pmod(F.hash(F.col(seq_col)), F.lit(nsalt)).alias("_salt"),
@@ -733,16 +745,13 @@ def _run_cascade(
                 .select(seq_col, "bucket_id")
             )
             break
-        if (
-            grouped_walk_level is not None and level >= grouped_walk_level
-        ) or remaining_cnt <= tail_threshold:
+        if remaining_cnt <= tail_threshold:
             # ---- grouped subtrie finisher: the still-contended rows shrink
             # fast (each level places page_size rows per node); once they
-            # fit a per-group pandas walk — or the configured walk level is
-            # reached — finish the WHOLE remaining trie with ONE
-            # applyInPandas shuffle instead of one Spark job per remaining
-            # level. All deeper nodes are touched ONLY by these rows, so the
-            # handoff from the distributed levels is exact.
+            # fit a per-group pandas walk, finish the WHOLE remaining trie
+            # with ONE applyInPandas shuffle instead of one Spark job per
+            # remaining level. All deeper nodes are touched ONLY by these
+            # rows, so the handoff from the distributed levels is exact.
             walked = _grouped_walk(
                 remaining,
                 chain,
@@ -778,177 +787,110 @@ def _run_cascade(
         lvl = remaining.withColumn("_node", chain.node(level)).withColumn(
             "_terminal", F.col("_m") == level
         )
-        if salt_buckets <= 0:
-            # ---- window path: per-node seq sort. Exact, single shuffle per
-            # level; a pathologically hot node lands in one task — use the
-            # salted path when that bites.
-            if state is not None:
-                lvl_key = (
-                    F.concat(F.col(parent_col), F.lit(_PSEP), F.col("_node"))
-                    if parent_col
-                    else lvl["_node"]
-                )
-                lvl = lvl.join(
-                    F.broadcast(state), lvl_key == state["_st_node"], "left"
-                ).drop("_st_node")
-            else:
-                lvl = lvl.withColumn("_st_cnt", F.lit(None).cast("long"))
-            w = Window.partitionBy(*pcols, "_node").orderBy(seq_col)
-            wfull = Window.partitionBy(*pcols, "_node")
-            step = (
-                lvl.withColumn("_rn", F.row_number().over(w))
-                .withColumn(
-                    "_ntrank",
-                    F.sum(F.when(~F.col("_terminal"), 1).otherwise(0)).over(
-                        w.rowsBetween(Window.unboundedPreceding, 0)
-                    ),
-                )
+        # ---- salted placement (north_rule skew defusal): capacity
+        # placement only needs each node's cap-th smallest NT seq. Phase A
+        # sorts within (node, salt) groups — a hot node's rows are split
+        # over nsalt tasks, each contributing at most page_size candidate
+        # seqs; phase B merges ≤ nsalt·page_size values per node. No
+        # per-node total sort anywhere, and the merge is exact for any
+        # salt count (a partial top-k merge).
+        salted = lvl.withColumn(
+            "_salt", F.pmod(F.hash(F.col(seq_col)), F.lit(nsalt))
+        )
+        nt_seq = F.when(~F.col("_terminal"), F.col(seq_col))
+        phase_a = salted.groupBy(*pcols, "_node", "_salt").agg(
+            F.slice(
+                F.array_sort(
+                    F.collect_list(nt_seq)
+                ),
+                1,
+                page_size,
+            ).alias("_cand"),
+            F.min(seq_col).alias("_lmin"),
+            F.min_by("_terminal", F.col(seq_col)).alias("_lterm"),
+            F.sum((~F.col("_terminal")).cast("long")).alias("_lnt"),
+        )
+        phase_b = phase_a.groupBy(*pcols, "_node").agg(
+            F.array_sort(F.flatten(F.collect_list("_cand"))).alias("_merged"),
+            F.min("_lmin").alias("_min_seq"),
+            F.min_by("_lterm", F.col("_lmin")).alias("_first_term"),
+            F.sum("_lnt").alias("_nt_total"),
+        )
+        if state is not None:
+            pb_key = (
+                F.concat(F.col(parent_col), F.lit(_PSEP), F.col("_node"))
+                if parent_col
+                else phase_b["_node"]
             )
-            step = step.withColumn(
-                "_first_nt",
-                F.max(
-                    F.when(F.col("_rn") == 1, (~F.col("_terminal")).cast("int"))
-                ).over(wfull),
-            )
-
-            exists = F.col("_st_cnt").isNotNull()
-            # capacity available to non-terminal arrivals this batch:
-            # - existing node: page_size - carried count (no creation slot)
-            # - fresh node: creation takes 1 slot — by the first arrival,
-            #   whether it is non-terminal (counts toward page_size) or
-            #   terminal (leaves page_size - 1 for non-terminals)
-            cap_nt = F.when(
-                exists, F.greatest(F.lit(page_size) - F.col("_st_cnt"), F.lit(0))
-            ).otherwise(
-                F.when(F.col("_first_nt") == 1, F.lit(page_size)).otherwise(
-                    F.lit(page_size - 1)
-                )
-            )
-            placed_nt = ~F.col("_terminal") & (F.col("_ntrank") <= cap_nt)
-            is_first = F.col("_rn") == 1
-            if emit_counter_updates:
-                # post-batch node count: a second window over the same
-                # partitioning (no new exchange)
-                counted = placed_nt | (~exists & is_first & F.col("_terminal"))
-                step = step.withColumn(
-                    "_cnt",
-                    F.coalesce(F.col("_st_cnt"), F.lit(0))
-                    + F.sum(counted.cast("long")).over(wfull),
-                )
-            if parent_col:
-                relation_parent = (
-                    F.col(parent_col)
-                    if level == 1
-                    else F.concat_ws("/", F.col(parent_col), chain.parent(level))
-                )
-            else:
-                relation_parent = (
-                    F.lit(root) if level == 1 else chain.parent(level)
-                )
+            phase_b = phase_b.join(
+                state, pb_key == state["_st_node"], "left"
+            ).drop("_st_node")
         else:
-            # ---- salted path (north_rule skew defusal): capacity placement
-            # only needs each node's cap-th smallest NT seq. Phase A sorts
-            # within (node, salt) groups — a hot node's rows are split over
-            # salt_buckets tasks, each contributing at most page_size
-            # candidate seqs; phase B merges ≤ salt_buckets·page_size values
-            # per node. No per-node total sort anywhere.
-            salted = lvl.withColumn(
-                "_salt", F.pmod(F.hash(F.col(seq_col)), F.lit(salt_buckets))
+            phase_b = phase_b.withColumn(
+                "_st_cnt", F.lit(None).cast("long")
             )
-            nt_seq = F.when(~F.col("_terminal"), F.col(seq_col))
-            phase_a = salted.groupBy(*pcols, "_node", "_salt").agg(
-                F.slice(
-                    F.array_sort(
-                        F.collect_list(nt_seq)
-                    ),
-                    1,
-                    page_size,
-                ).alias("_cand"),
-                F.min(seq_col).alias("_lmin"),
-                F.min_by("_terminal", F.col(seq_col)).alias("_lterm"),
-                F.sum((~F.col("_terminal")).cast("long")).alias("_lnt"),
+        exists = F.col("_st_cnt").isNotNull()
+        agg_cap = F.when(
+            exists,
+            F.greatest(F.lit(page_size) - F.col("_st_cnt"), F.lit(0)),
+        ).otherwise(
+            F.when(~F.col("_first_term"), F.lit(page_size)).otherwise(
+                F.lit(page_size - 1)
             )
-            phase_b = phase_a.groupBy(*pcols, "_node").agg(
-                F.array_sort(F.flatten(F.collect_list("_cand"))).alias("_merged"),
-                F.min("_lmin").alias("_min_seq"),
-                F.min_by("_lterm", F.col("_lmin")).alias("_first_term"),
-                F.sum("_lnt").alias("_nt_total"),
+        )
+        node_aggs = phase_b.select(
+            *pcols,
+            "_node",
+            "_min_seq",
+            "_first_term",
+            "_nt_total",
+            "_st_cnt",
+            agg_cap.alias("_cap_nt"),
+            F.when(
+                agg_cap <= 0, F.lit(-1)
             )
-            if state is not None:
-                pb_key = (
-                    F.concat(F.col(parent_col), F.lit(_PSEP), F.col("_node"))
-                    if parent_col
-                    else phase_b["_node"]
-                )
-                phase_b = phase_b.join(
-                    state, pb_key == state["_st_node"], "left"
-                ).drop("_st_node")
-            else:
-                phase_b = phase_b.withColumn(
-                    "_st_cnt", F.lit(None).cast("long")
-                )
-            exists = F.col("_st_cnt").isNotNull()
-            agg_cap = F.when(
-                exists,
-                F.greatest(F.lit(page_size) - F.col("_st_cnt"), F.lit(0)),
-            ).otherwise(
-                F.when(~F.col("_first_term"), F.lit(page_size)).otherwise(
-                    F.lit(page_size - 1)
-                )
+            .when(
+                # strict: size == cap may mean every salt bucket was
+                # capped; element_at(cap) is still the right threshold
+                agg_cap > F.size("_merged"),
+                F.lit(None).cast("long"),  # all NTs fit
             )
-            node_aggs = phase_b.select(
-                *pcols,
-                "_node",
-                "_min_seq",
-                "_first_term",
-                "_nt_total",
-                "_st_cnt",
-                agg_cap.alias("_cap_nt"),
-                F.when(
-                    agg_cap <= 0, F.lit(-1)
+            .otherwise(F.element_at("_merged", agg_cap.cast("int")))
+            .alias("_nt_thr"),
+        )
+        if emit_counter_updates:
+            # post-batch node count: carried + placed non-terminals
+            # (seq is unique, so exactly min(total, cap) of them) + the
+            # creating first arrival when it is terminal
+            node_aggs = node_aggs.withColumn(
+                "_cnt",
+                F.coalesce(F.col("_st_cnt"), F.lit(0))
+                + F.least(
+                    F.col("_nt_total"), F.greatest(F.col("_cap_nt"), F.lit(0))
                 )
-                .when(
-                    # strict: size == cap may mean every salt bucket was
-                    # capped; element_at(cap) is still the right threshold
-                    agg_cap > F.size("_merged"),
-                    F.lit(None).cast("long"),  # all NTs fit
-                )
-                .otherwise(F.element_at("_merged", agg_cap.cast("int")))
-                .alias("_nt_thr"),
+                + (~exists & F.col("_first_term")).cast("long"),
             )
-            if emit_counter_updates:
-                # post-batch node count: carried + placed non-terminals
-                # (seq is unique, so exactly min(total, cap) of them) + the
-                # creating first arrival when it is terminal
-                node_aggs = node_aggs.withColumn(
-                    "_cnt",
-                    F.coalesce(F.col("_st_cnt"), F.lit(0))
-                    + F.least(
-                        F.col("_nt_total"), F.greatest(F.col("_cap_nt"), F.lit(0))
-                    )
-                    + (~exists & F.col("_first_term")).cast("long"),
-                )
 
-            step = lvl.join(node_aggs, [*pcols, "_node"])
-            placed_nt = ~F.col("_terminal") & (
-                F.col("_nt_thr").isNull()
-                | (F.col(seq_col) <= F.col("_nt_thr"))
+        step = lvl.join(node_aggs, [*pcols, "_node"])
+        placed_nt = ~F.col("_terminal") & (
+            F.col("_nt_thr").isNull()
+            | (F.col(seq_col) <= F.col("_nt_thr"))
+        )
+        is_first = F.col(seq_col) == F.col("_min_seq")
+        raw_parent = chain.parent_of(F.col("_node"))
+        if parent_col:
+            relation_parent = F.when(
+                raw_parent == "", F.col(parent_col)
+            ).otherwise(
+                F.concat_ws("/", F.col(parent_col), raw_parent)
             )
-            is_first = F.col(seq_col) == F.col("_min_seq")
-            raw_parent = chain.parent_of(F.col("_node"))
-            if parent_col:
-                relation_parent = F.when(
-                    raw_parent == "", F.col(parent_col)
-                ).otherwise(
-                    F.concat_ws("/", F.col(parent_col), raw_parent)
-                )
-            else:
-                relation_parent = F.when(
-                    raw_parent == "", F.lit(root)
-                ).otherwise(raw_parent)
+        else:
+            relation_parent = F.when(
+                raw_parent == "", F.lit(root)
+            ).otherwise(raw_parent)
 
         # the eager cut truncates the per-level lineage — without it the
-        # level-over-level plan (esp. the salted path's self-join) grows
+        # level-over-level plan (esp. the salted level's self-join) grows
         # exponentially and OOMs the planner — and its job observes how
         # many rows cascade to the next level
         step, remaining_cnt = cut_lineage_counted(
@@ -1044,25 +986,14 @@ def substring_trie(
     emit_counter_updates: bool = False,
     salt_buckets: int = 0,
     tail_threshold: int = 100_000,
-    algo: str = "cascade",
-    walk_level: int = 1,
 ) -> BucketizeResult:
-    """Character-mode substring trie (reference-exact). ``algo='subtrie'``
-    runs ``walk_level - 1`` distributed cascade levels then finishes the
-    whole trie with one grouped walk shuffle; with ``node_state`` the walk
-    cogroups the carried counters into their subtrie groups (streaming)."""
-    chain = _char_chain(value_col, ascii_fast, max_depth)
-    if algo == "subtrie":
-        return _run_cascade(
-            df, chain, page_size=page_size, root=root, seq_col=seq_col,
-            max_depth=max_depth, node_state=node_state,
-            emit_counter_updates=emit_counter_updates,
-            salt_buckets=salt_buckets, tail_threshold=0,
-            grouped_walk_level=walk_level,
-        )
+    """Character-mode substring trie (reference-exact). Salted levels run
+    until at most ``tail_threshold`` rows remain, then one grouped walk
+    shuffle finishes the trie; with ``node_state`` the walk cogroups the
+    carried counters into their subtrie groups (streaming)."""
     return _run_cascade(
         df,
-        chain,
+        _char_chain(value_col, ascii_fast, max_depth),
         page_size=page_size,
         root=root,
         seq_col=seq_col,
@@ -1086,27 +1017,13 @@ def token_prefix_trie(
     emit_counter_updates: bool = False,
     salt_buckets: int = 0,
     tail_threshold: int = 100_000,
-    algo: str = "cascade",
-    walk_level: int = 1,
 ) -> BucketizeResult:
     """Token-mode radix trie over leading n-grams (the north-star payload:
     pre-tokenized sequences). Same cascade, chain keys are dash-joined
-    token prefixes, capped at ``max_depth`` n-grams. ``algo='subtrie'``
-    runs ``walk_level - 1`` distributed cascade levels then finishes the
-    whole trie with one grouped walk shuffle; with ``node_state`` the walk
-    cogroups the carried counters into their subtrie groups (streaming)."""
-    chain = _token_chain(tokens_col, max_depth)
-    if algo == "subtrie":
-        return _run_cascade(
-            df, chain, page_size=page_size, root=root, seq_col=seq_col,
-            max_depth=max_depth, node_state=node_state,
-            emit_counter_updates=emit_counter_updates,
-            salt_buckets=salt_buckets, tail_threshold=0,
-            grouped_walk_level=walk_level,
-        )
+    token prefixes, capped at ``max_depth`` n-grams."""
     return _run_cascade(
         df,
-        chain,
+        _token_chain(tokens_col, max_depth),
         page_size=page_size,
         root=root,
         seq_col=seq_col,

@@ -20,9 +20,11 @@ a stream-static broadcast join:
   cross-batch state exists to lose, so kill/resume correctness rides
   entirely on source offsets + the idempotent sink.
 
-Scale shape: per micro-batch one explode (narrow), one broadcast-hash
-probe (no shuffle of the corpus side), one groupBy on doc_id over only
-the SURVIVING (doc_id, gram_h) pairs. State: none.
+Scale shape: per micro-batch one vectorized gram-hash map (the batch
+query's kernel, functions/ngrams.word_ngram_hashes_frame — narrow,
+stateless), one broadcast-hash probe (no shuffle of the corpus side),
+one groupBy on doc_id over only the SURVIVING (doc_id, gram_h) pairs.
+State: none.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bucketizers_spark.functions.ngrams import word_ngram_hashes
+from bucketizers_spark.functions.ngrams import word_ngram_hashes_frame
 from bucketizers_spark.sinks.idempotent import IdempotentParquetSink
 
 
@@ -39,14 +41,7 @@ def benchmark_grams(
 ) -> DataFrame:
     """Distinct md5'd word-n-gram set of the benchmark frame — compute
     once, reuse across the whole ingest (callers may persist it)."""
-    return (
-        bench_df.select(
-            F.explode(word_ngram_hashes(F.col(text_col), n)).alias(
-                "gram_h"
-            )
-        )
-        .distinct()
-    )
+    return word_ngram_hashes_frame(bench_df, [], text_col, n).distinct()
 
 
 def decontaminate_hits_stream(
@@ -60,10 +55,7 @@ def decontaminate_hits_stream(
     """Stateless stream-static form: hit rows (id, gram_h) for every
     benchmark n-gram occurring in an arriving document. ``bench`` must
     be a STATIC frame (from ``benchmark_grams``)."""
-    g = stream_df.select(
-        id_col,
-        F.explode(word_ngram_hashes(F.col(text_col), n)).alias("gram_h"),
-    )
+    g = word_ngram_hashes_frame(stream_df, [id_col], text_col, n)
     return g.join(F.broadcast(bench), "gram_h")
 
 

@@ -112,10 +112,10 @@ def minhash_candidates_stream(
     self-join (q_dedup_minhash buckets → ngram_jaccard candidates).
     Emitted when the LATER doc arrives: (a_id earlier, b_id later).
 
-    Band machinery is the exact batch expressions (entry_queries
-    _with_shingles + _minhash_stacked — one md5 per shingle, 8
-    slice-permutations, 2 bands), all JVM-side before the keyed state
-    op, so streaming candidate sets equal batch bucket pairs.
+    Band machinery is the batch query's own kernel (entry_queries
+    _minhash_bands_docs — one vectorized Arrow pass from text to band
+    keys, a stateless map before the keyed state op), so streaming
+    candidate sets equal batch bucket pairs.
 
     Where rescoring lives: exact-Jaccard verification needs the
     documents' shingle sets, which per-bucket state should NOT hold (it
@@ -130,15 +130,13 @@ def minhash_candidates_stream(
     O(n·max_reps) cumulative candidates instead of O(n) state / O(n^2)
     candidates, and component closure still recovers the full cluster
     through representative #1 (see _make_bucket_pairs_fn)."""
-    from bucketizers_spark.entry_queries import (
-        _minhash_stacked,
-        _with_shingles,
-    )
+    from bucketizers_spark.entry_queries import _minhash_bands_docs
 
     if "seq" not in stream_df.columns:
         raise ValueError("minhash_candidates_stream needs a seq column")
-    stacked = _minhash_stacked(
-        _with_shingles(stream_df), extra_cols=("seq",)
+    stacked = _minhash_bands_docs(
+        stream_df.select("doc_id", "seq", F.col(text_col).alias("text")),
+        extra_cols=("seq",),
     )
     return stacked.groupBy("band", "band_key").applyInPandasWithState(
         _make_bucket_pairs_fn(max_reps),
@@ -270,7 +268,13 @@ def _make_segment_count_fn(min_docs: int):
         n = int(state.get[0]) if state.exists else 0
         pdf = pd.concat(list(pdfs), ignore_index=True)
         if len(pdf):
-            pdf = pdf.sort_values(["seq", "doc_id"]).reset_index(drop=True)
+            # a segment repeated within one document counts that document
+            # once: its rows share (seq, doc_id)
+            pdf = (
+                pdf.drop_duplicates(["seq", "doc_id"])
+                .sort_values(["seq", "doc_id"])
+                .reset_index(drop=True)
+            )
             seg_h = str(pdf["seg_h"].iloc[0])
             rows = []
             for doc_id in pdf["doc_id"]:
@@ -309,29 +313,27 @@ def segment_count_stream(
     the ever-boilerplate segment set equal the batch computation, which
     the pytest pins.
 
-    Scale shape: segments are md5'd and row-level DISTINCT'd (one
-    (doc, segment) pair per row, so state is a plain count — no doc-id
-    lists) before the explode; the keyed state op shuffles once per
-    micro-batch on seg_h; state = one long per distinct segment hash.
-    Gram derivation is shared with batch via functions/ngrams.py."""
+    Scale shape: segments are md5'd by the batch queries' own kernels
+    (functions/ngrams.segment_hashes_frame / cdc_segment_hashes_frame —
+    one stateless vectorized map); the keyed state op shuffles once per
+    micro-batch on seg_h and counts each (doc, segment) pair once, so
+    state = one long per distinct segment hash — no doc-id lists."""
     from bucketizers_spark.functions.ngrams import (
-        cdc_segment_hashes,
-        segment_hashes,
+        cdc_segment_hashes_frame,
+        segment_hashes_frame,
     )
 
     if "seq" not in stream_df.columns:
         raise ValueError("segment_count_stream needs a seq column")
+    docs = stream_df.select(F.col(id_col).alias("doc_id"), "seq", text_col)
     if chunker == "cdc":
-        hashes = cdc_segment_hashes(F.col(text_col), window=cdc_window)
+        seg = cdc_segment_hashes_frame(
+            docs, ["doc_id", "seq"], text_col, window=cdc_window
+        )
     elif chunker == "fixed":
-        hashes = segment_hashes(F.col(text_col), seg_len)
+        seg = segment_hashes_frame(docs, ["doc_id", "seq"], text_col, seg_len)
     else:
         raise ValueError(f"unknown chunker {chunker!r}")
-    seg = stream_df.select(
-        F.col(id_col).alias("doc_id"),
-        "seq",
-        F.explode(F.array_distinct(hashes)).alias("seg_h"),
-    )
     return seg.groupBy("seg_h").applyInPandasWithState(
         _make_segment_count_fn(min_docs),
         outputStructType=_SEG_SCHEMA,

@@ -69,9 +69,10 @@ class TrieStreamJob:
         # streaming): one dedicated trie instance per parent bucket,
         # counters keyed parent\x1fnode (operators/substring._PSEP)
         self.parent_col = parent_col
-        # salted-cascade knobs (operators/substring._run_cascade): a
-        # zipf-hot leading token otherwise serializes each micro-batch's
-        # level on one window task — same defusal as batch
+        # cascade knobs (operators/substring._run_cascade): salts per
+        # distributed level (0 = DEFAULT_SALT_BUCKETS), so a zipf-hot
+        # leading token spreads over that many tasks, and the row count
+        # at which the grouped walk finishes the batch — same as batch
         self.salt_buckets = salt_buckets
         self.tail_threshold = tail_threshold
         os.makedirs(os.path.join(state_dir, "counters"), exist_ok=True)

@@ -67,14 +67,13 @@ def _read_stream(spark, chunk_dir):
 def _expect(spark, pdf):
     """Batch decontamination over the full corpus with the same helpers:
     per-corpus-doc distinct overlap count vs the benchmark slice."""
-    from bucketizers_spark.functions.ngrams import word_ngram_hashes
+    from bucketizers_spark.functions.ngrams import word_ngram_hashes_frame
     from bucketizers_spark.streaming.decon_stream import benchmark_grams
 
     df = spark.createDataFrame(pdf, _SCHEMA)
     bench = benchmark_grams(df.where(F.col("doc_id") % 23 == 0), n=4)
-    g = df.where(F.col("doc_id") % 23 != 0).select(
-        "doc_id",
-        F.explode(word_ngram_hashes(F.col("text"), 4)).alias("gram_h"),
+    g = word_ngram_hashes_frame(
+        df.where(F.col("doc_id") % 23 != 0), ["doc_id"], "text", 4
     )
     return (
         g.join(bench, "gram_h")

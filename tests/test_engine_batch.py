@@ -203,7 +203,8 @@ class TestTokenTrieEquivalence:
 
 
 class TestSaltedCascade:
-    def test_salted_equals_window_path(self, spark, name_values):
+    def test_salt_count_invariance(self, spark, name_values):
+        # salt_buckets=0 (DEFAULT_SALT_BUCKETS) and 4 place identically
         df = members_df(spark, name_values)
         a = substring_trie(df, "value", page_size=2, tail_threshold=0)
         b = substring_trie(
@@ -291,13 +292,29 @@ class TestGeospatialEquivalence:
 
 class TestSubtrieWalk:
     @pytest.mark.parametrize("page_size", [1, 2, 5])
-    def test_subtrie_algo_matches_oracle(self, spark, name_values, page_size):
+    def test_subtrie_algo_matches_oracle(
+        self, spark, name_values, page_size, monkeypatch
+    ):
+        """With the default tail_threshold the fixture fits the grouped
+        walk right after the root, so the walk finishes the whole trie
+        from level 1."""
+        from bucketizers_spark.operators import substring as sub_mod
+
+        levels = []
+        walk = sub_mod._grouped_walk
+
+        def spy(remaining, chain, **kw):
+            levels.append(kw["level"])
+            return walk(remaining, chain, **kw)
+
+        monkeypatch.setattr(sub_mod, "_grouped_walk", spy)
         df = members_df(spark, name_values)
-        res = substring_trie(df, "value", page_size=page_size, algo="subtrie")
+        res = substring_trie(df, "value", page_size=page_size)
         oracle = SubstringOracle(page_size=page_size)
         exp, orels, _ = oracle_assignments(oracle, name_values)
         assert collect_assignments(res.assignments) == exp
         assert rel_set(res.relations) == oracle_rel_set(orels)
+        assert levels == [1]
 
     def test_subtrie_token_matches_cascade(self, spark):
         rng = np.random.default_rng(21)
@@ -309,20 +326,37 @@ class TestSubtrieWalk:
         df = spark.createDataFrame(
             rows, "seq long, member_id string, tokens array<int>"
         )
-        a = token_prefix_trie(df, "tokens", page_size=7, max_depth=5)
-        b = token_prefix_trie(
-            df, "tokens", page_size=7, max_depth=5, algo="subtrie"
+        # every level distributed vs the walk from level 1
+        a = token_prefix_trie(
+            df, "tokens", page_size=7, max_depth=5, tail_threshold=0
         )
+        b = token_prefix_trie(df, "tokens", page_size=7, max_depth=5)
         assert collect_assignments(a.assignments) == collect_assignments(
             b.assignments
         )
         assert rel_set(a.relations) == rel_set(b.relations)
 
-    def test_walk_level_2_matches_oracle(self, spark, name_values):
+    def test_level_2_handoff_matches_oracle(
+        self, spark, name_values, monkeypatch
+    ):
+        """A tail_threshold between the fixture's level-1 and level-2 row
+        counts runs level 1 salted and hands the rest to the walk at
+        level 2."""
+        from bucketizers_spark.operators import substring as sub_mod
+
+        calls = []
+        walk = sub_mod._grouped_walk
+
+        def spy(remaining, chain, **kw):
+            calls.append((kw["level"], remaining.count()))
+            return walk(remaining, chain, **kw)
+
+        monkeypatch.setattr(sub_mod, "_grouped_walk", spy)
         df = members_df(spark, name_values)
-        res = substring_trie(
-            df, "value", page_size=2, algo="subtrie", walk_level=2
-        )
+        # 264 non-empty members: the root places 2, 262 reach level 1 and
+        # 227 of them level 2
+        res = substring_trie(df, "value", page_size=2, tail_threshold=250)
+        assert calls == [(2, 227)]
         exp, orels, _ = oracle_assignments(
             SubstringOracle(page_size=2), name_values
         )

@@ -1190,33 +1190,34 @@ class TestCdcSegments:
     segment, but only boundaries within ~a window of the edit move
     under CDC — the LBFS/rsync property the operator exists for."""
 
-    def _hashes(self, spark, texts, fn):
-        from pyspark.sql import functions as F
-
+    def _hashes(self, spark, texts, kernel):
+        """{i: [seg_h, ...]} from a (df, id_cols, text_col) hash kernel."""
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "i long, text string"
         )
-        rows = df.select("i", fn(F.col("text")).alias("h")).collect()
-        return {r.i: list(r.h) for r in rows}
+        out: dict = {}
+        for r in kernel(df, ["i"], "text").collect():
+            out.setdefault(r.i, []).append(r.seg_h)
+        return out
 
     def test_realigns_after_insertion_where_fixed_does_not(self, spark):
         from bucketizers_spark.functions.ngrams import (
-            cdc_segment_hashes,
-            segment_hashes,
+            cdc_segment_hashes_frame,
+            segment_hashes_frame,
         )
 
         base = " ".join(f"w{(i * 37) % 101}x{i % 13}" for i in range(400))
         words = base.split(" ")
         edited = " ".join(words[:3] + ["INSERTED"] + words[3:])
 
-        cdc = self._hashes(spark, [base, edited], cdc_segment_hashes)
+        cdc = self._hashes(spark, [base, edited], cdc_segment_hashes_frame)
         common_cdc = len(set(cdc[0]) & set(cdc[1]))
         # nearly all segments survive the edit (only the chunk carrying
         # the insertion, and at most its window-perturbed neighbour, change)
         assert common_cdc >= len(cdc[0]) - 3 > 0
 
         fixed = self._hashes(
-            spark, [base, edited], lambda c: segment_hashes(c, 8)
+            spark, [base, edited], lambda *a: segment_hashes_frame(*a, 8)
         )
         common_fixed = len(set(fixed[0]) & set(fixed[1]))
         # every fixed segment after the insertion point is shifted
@@ -1228,13 +1229,13 @@ class TestCdcSegments:
         via an independent Python replay of the same rule."""
         import hashlib
 
-        from bucketizers_spark.functions.ngrams import cdc_segment_hashes
+        from bucketizers_spark.functions.ngrams import cdc_segment_hashes_frame
 
         texts = [
             " ".join(f"t{(i * 7) % 29}" for i in range(n))
             for n in (1, 3, 17, 100, 257)
         ]
-        got = self._hashes(spark, texts, cdc_segment_hashes)
+        got = self._hashes(spark, texts, cdc_segment_hashes_frame)
         for i, text in enumerate(texts):
             ws = text.split(" ")
             bnd = [

@@ -101,3 +101,29 @@ def test_shingle_zip_form_matches_slice_form():
             )
         )
         assert zip_form == slice_form
+
+
+def test_memo_budget_does_not_change_bands(spark, monkeypatch):
+    """The per-task shingle-digest memo stops growing at its byte budget;
+    a budget of 0 (no entry fits) or ~3 entries gives the same bands as
+    the default, on texts that repeat shingles across documents."""
+    from bucketizers_spark import entry_queries
+
+    rng = random.Random(43)
+    texts = _random_texts(rng, 60)
+    texts += [texts[i] for i in range(0, 60, 3)]  # cross-doc repeats
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+
+    def bands():
+        return sorted(
+            (r["doc_id"], r["band"], r["band_key"])
+            for r in _minhash_bands_docs(df).collect()
+        )
+
+    default = bands()
+    assert default
+    for budget in (0, 3 * (entry_queries._MEMO_ENTRY_BYTES + 64)):
+        monkeypatch.setattr(entry_queries, "_MINHASH_MEMO_BYTES", budget)
+        assert bands() == default

@@ -137,8 +137,8 @@ class TestTrieWithinParent:
     @pytest.mark.parametrize("salt_buckets,tail", [(0, 100_000), (4, 0), (4, 30)])
     def test_cascade_equals_walk(self, spark, parented, salt_buckets, tail):
         """The distributed (parent, node)-keyed cascade is semantically
-        identical to the per-parent reference walk — window path, salted
-        path, and the grouped finisher handoff all covered."""
+        identical to the per-parent reference walk — default and explicit
+        salt counts, and the grouped finisher handoff all covered."""
         walk = trie_within_parent(
             parented, "parent", "name", page_size=2, max_depth=16,
             seq_col="seq", strategy="walk",
@@ -154,7 +154,7 @@ class TestTrieWithinParent:
         self, spark, parented, monkeypatch
     ):
         """Giant-parent scale pin: with the finisher disabled the cascade
-        must place every row through JVM window/agg levels — no pandas
+        must place every row through JVM salted-aggregate levels — no pandas
         group ever receives a parent's subtree (the walk path's failure
         mode for a low-cardinality parent column over 10^12 rows)."""
         from bucketizers_spark.operators import substring as sub_mod

@@ -551,9 +551,11 @@ class TestSubjectProperty:
 
 
 class TestNgramHelpersProperty:
-    """functions/ngrams.py vs a direct Python recomputation over random
-    word lists — the helpers feed decontaminate/segment_dedup AND the
-    streaming jobs, so gram identity is load-bearing."""
+    """functions/ngrams.py kernels vs a direct Python recomputation over
+    random word lists — the kernels feed decontaminate/segment_dedup AND
+    the streaming jobs, so gram identity is load-bearing. Null text, the
+    empty string and texts shorter than n ride along on every example,
+    and each kernel also runs with no id column."""
 
     @settings(
         max_examples=15,
@@ -578,31 +580,49 @@ class TestNgramHelpersProperty:
         import hashlib
 
         from bucketizers_spark.functions.ngrams import (
-            segment_hashes,
-            word_ngram_hashes,
+            segment_hashes_frame,
+            word_ngram_hashes_frame,
         )
 
-        rows = [(i, " ".join(ws)) for i, (ws) in enumerate(word_lists)]
-        df = spark.createDataFrame(rows, "i long, text string")
-        got = {
-            r.i: (r.g, r.s)
-            for r in df.select(
-                "i",
-                word_ngram_hashes(F.col("text"), n).alias("g"),
-                segment_hashes(F.col("text"), n).alias("s"),
-            ).collect()
-        }
+        texts = [" ".join(ws) for ws in word_lists]
+        texts += [None, "", " ".join(["ab"] * (n - 1))]
+        df = spark.createDataFrame(
+            list(enumerate(texts)), "i long, text string"
+        )
+
+        def per_id(frame, col):
+            out: dict = {}
+            for r in frame.collect():
+                out.setdefault(r.i, []).append(r[col])
+            return out
+
+        grams = per_id(word_ngram_hashes_frame(df, ["i"], "text", n), "gram_h")
+        segs = per_id(segment_hashes_frame(df, ["i"], "text", n), "seg_h")
         md5 = lambda t: hashlib.md5(t.encode()).hexdigest()  # noqa: E731
-        for i, ws in enumerate(word_lists):
-            grams = [
-                md5(" ".join(ws[j : j + n]))
-                for j in range(len(ws) - n + 1)
-            ]
+        want_g, want_s = {}, {}
+        for i, text in enumerate(texts):
+            if text is None:
+                continue
+            ws = text.split(" ")
+            g = [md5(" ".join(ws[j : j + n])) for j in range(len(ws) - n + 1)]
+            if g:
+                want_g[i] = g
             nseg = -(-len(ws) // n)
-            segs = [
+            want_s[i] = [
                 md5(" ".join(ws[c * n : (c + 1) * n])) for c in range(nseg)
             ]
-            assert got[i] == (grams, segs), (i, ws, n)
+        assert grams == want_g
+        assert segs == want_s
+        # no id column: the same hash multiset
+        no_id = word_ngram_hashes_frame(df, [], "text", n)
+        assert no_id.columns == ["gram_h"]
+        assert sorted(r.gram_h for r in no_id.collect()) == sorted(
+            h for hs in want_g.values() for h in hs
+        )
+        no_id = segment_hashes_frame(df, [], "text", n)
+        assert sorted(r.seg_h for r in no_id.collect()) == sorted(
+            h for hs in want_s.values() for h in hs
+        )
 
 
 class TestPackManifestProperty:
@@ -667,8 +687,10 @@ class TestPackManifestProperty:
 class TestCdcSegmentProperty:
     """Random word streams (unicode, single chars, repeated words —
     repeats are the adversarial CDC case since boundary windows
-    collide) through cdc_segment_hashes vs a pure-Python hashlib
-    replay of the boundary rule and segment hashing."""
+    collide) through cdc_segment_hashes_frame vs a pure-Python hashlib
+    replay of the boundary rule and segment hashing; a null text and
+    the empty string ride along, and the kernel also runs with no id
+    column."""
 
     @given(
         words=st.lists(
@@ -682,32 +704,41 @@ class TestCdcSegmentProperty:
     def test_matches_hashlib_replay(self, spark, words, window):
         import hashlib
 
-        from pyspark.sql import functions as F
+        from bucketizers_spark.functions.ngrams import cdc_segment_hashes_frame
 
-        from bucketizers_spark.functions.ngrams import cdc_segment_hashes
+        def replay(words):
+            n = len(words)
+            bnd = [
+                i + 1
+                for i in range(n)
+                if i + 1 == n
+                or hashlib.md5(
+                    " ".join(words[max(0, i - (window - 1)) : i + 1]).encode()
+                ).hexdigest()[0]
+                == "0"
+            ]
+            want, prev = [], 0
+            for b in bnd:
+                want.append(
+                    hashlib.md5(" ".join(words[prev:b]).encode()).hexdigest()
+                )
+                prev = b
+            return want
 
-        text = " ".join(words)
-        df = spark.createDataFrame([(text,)], "text string")
-        got = df.select(
-            cdc_segment_hashes(F.col("text"), window=window).alias("h")
-        ).collect()[0].h
-        n = len(words)
-        bnd = [
-            i + 1
-            for i in range(n)
-            if i + 1 == n
-            or hashlib.md5(
-                " ".join(words[max(0, i - (window - 1)) : i + 1]).encode()
-            ).hexdigest()[0]
-            == "0"
-        ]
-        want, prev = [], 0
-        for b in bnd:
-            want.append(
-                hashlib.md5(" ".join(words[prev:b]).encode()).hexdigest()
-            )
-            prev = b
-        assert list(got) == want
+        df = spark.createDataFrame(
+            [(0, " ".join(words)), (1, None), (2, "")], "i long, text string"
+        )
+        got: dict = {}
+        for r in cdc_segment_hashes_frame(
+            df, ["i"], "text", window=window
+        ).collect():
+            got.setdefault(r.i, []).append(r.seg_h)
+        want = {0: replay(words), 2: replay([""])}
+        assert got == want
+        no_id = cdc_segment_hashes_frame(df, [], "text", window=window)
+        assert sorted(r.seg_h for r in no_id.collect()) == sorted(
+            want[0] + want[2]
+        )
 
 
 class TestResizeProperty:

@@ -64,12 +64,10 @@ def _read_stream(spark, chunk_dir):
 
 
 def _batch(spark, pdf):
-    from bucketizers_spark.functions.ngrams import segment_hashes
+    from bucketizers_spark.functions.ngrams import segment_hashes_frame
 
     df = spark.createDataFrame(pdf, _SCHEMA)
-    seg = df.select(
-        "doc_id", F.explode(segment_hashes(F.col("text"), 8)).alias("seg_h")
-    )
+    seg = segment_hashes_frame(df, ["doc_id"], "text", 8)
     return seg.groupBy("seg_h").agg(
         F.countDistinct("doc_id").alias("n_docs")
     )
@@ -134,10 +132,10 @@ class TestSegmentCountStream:
 
     def test_cdc_chunker_matches_batch_cdc(self, spark, workdir):
         """chunker="cdc": final counts must equal the batch
-        cdc_segment_hashes computation — the state op is chunking-
-        agnostic, so this pins the CDC expressions are byte-identical
-        between the streaming and batch paths."""
-        from bucketizers_spark.functions.ngrams import cdc_segment_hashes
+        cdc_segment_hashes_frame computation — the state op is
+        chunking-agnostic, so this pins the CDC segments are
+        byte-identical between the streaming and batch paths."""
+        from bucketizers_spark.functions.ngrams import cdc_segment_hashes_frame
         from bucketizers_spark.streaming.dedup_stream import (
             segment_count_stream,
         )
@@ -167,10 +165,7 @@ class TestSegmentCountStream:
             .collect()
         }
         df = spark.createDataFrame(pdf, _SCHEMA)
-        seg = df.select(
-            "doc_id",
-            F.explode(cdc_segment_hashes(F.col("text"))).alias("seg_h"),
-        )
+        seg = cdc_segment_hashes_frame(df, ["doc_id"], "text")
         want = {
             r.seg_h: r.n_docs
             for r in seg.groupBy("seg_h")
