@@ -24,6 +24,7 @@ Query inventory maps to SURVEY.md §2 + the training-data pipeline extras:
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 import warnings
@@ -53,10 +54,41 @@ _FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 _FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
+@functools.lru_cache(maxsize=256)
+def _scan_meta(path: str, size: int, mtime_ns: int):
+    """(Spark schema, footer row-group count or None if the probe failed)
+    of the parquet FILE ``path``, memoized per file version — ``size``
+    and ``mtime_ns`` are only the key. Schema inference is a Spark job
+    per read ("parquet at DataFrameReader.parquet"), and a query that
+    reads one table several times (dedup_cluster reads documents three
+    times) would otherwise start one each time."""
+    schema = SparkSession.active().read.parquet(path).schema
+    try:
+        import pyarrow.parquet as _pq
+
+        return schema, _pq.ParquetFile(path).metadata.num_row_groups
+    except Exception as exc:  # the probe is an optimization: keep going
+        # the default warning filter shows each (path, exception) once
+        warnings.warn(
+            f"_t: parquet footer probe failed for {path} ({exc!r}); "
+            "falling back to the split count, so a single-row-group "
+            "file may scan on one core",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+        return schema, None
+
+
 def _t(
     spark: SparkSession, sf_dir: str, name: str, *, barrier: bool = False
 ) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    meta = None
+    if os.path.isfile(path):
+        st = os.stat(path)
+        meta = _scan_meta(path, st.st_size, st.st_mtime_ns)
+    reader = spark.read if meta is None else spark.read.schema(meta[0])
+    df = reader.parquet(path)
     # Test-SF artifact mitigation: the fixture tables are single-row-group
     # parquet files, which scan as ONE split and serialize every narrow map
     # onto one core (maxPartitionBytes cannot split below a row group). A
@@ -84,21 +116,8 @@ def _t(
     # layouts, many files) skip the probe and keep split count.
     p = spark.sparkContext.defaultParallelism
     eff = df.rdd.getNumPartitions()
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isfile(path):
-        try:
-            import pyarrow.parquet as _pq
-
-            eff = min(eff, _pq.ParquetFile(path).metadata.num_row_groups)
-        except Exception as exc:  # the probe is an optimization: keep going
-            # the default warning filter shows each (path, exception) once
-            warnings.warn(
-                f"_t: parquet footer probe failed for {path} ({exc!r}); "
-                "falling back to the split count, so a single-row-group "
-                "file may scan on one core",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+    if meta is not None and meta[1] is not None:
+        eff = min(eff, meta[1])
     if eff < min(p, 8):
         df = df.repartition(p)
         if barrier:

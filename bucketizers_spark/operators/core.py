@@ -18,7 +18,7 @@ A columnar engine separates them into three typed DataFrames (FIXTURES.md F4):
 
 from __future__ import annotations
 
-from typing import Callable, Union
+from typing import Callable, Sequence, Union
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -91,8 +91,11 @@ def const_frame(spark, schema: T.StructType, row: tuple | None = None) -> DataFr
     plans as ``Scan ExistingRDD`` over a ``PythonRDD``
     (``applySchemaToPythonRDD`` → ``SerDeUtil``), with Arrow on or off, so
     executing it forks the PySpark daemon and its workers just to unpickle
-    the rows. Operators build these frames on every streaming micro-batch,
-    whose plans are otherwise all-JVM.
+    the rows. A pandas frame takes the same path when it is empty, or when
+    ``spark.sql.execution.arrow.pyspark.enabled`` is off; only a non-empty
+    one with Arrow on is sent as Arrow batches. Operators build these
+    frames on every streaming micro-batch, whose plans are otherwise
+    all-JVM. Data collected to the driver goes through ``arrow_frame``.
 
     A column given a non-None value is a literal and so non-nullable; a
     zero-row frame matches ``schema`` exactly (every field nullable). File
@@ -103,6 +106,22 @@ def const_frame(spark, schema: T.StructType, row: tuple | None = None) -> DataFr
             F.lit(v).cast(f.dataType).alias(f.name)
             for v, f in zip(values, schema.fields, strict=True)
         ]
+    )
+
+
+def arrow_frame(spark, schema: T.StructType, columns: Sequence[Sequence]) -> DataFrame:
+    """A frame of ``schema`` holding driver-side data, one sequence of
+    values per field in ``columns`` (all of one length, zero allowed).
+
+    The values travel as a ``pyarrow.Table``, which PySpark sends to the
+    JVM as Arrow batches and plans as a ``LocalTableScan`` — with or
+    without rows and whatever the session's Arrow setting — so, unlike a
+    list or pandas frame (see ``const_frame``), executing the frame starts
+    no Python worker."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(dict(zip(schema.names, columns, strict=True))), schema
     )
 
 

@@ -40,7 +40,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from bucketizers_spark.plans.materialize import cut_lineage
+from pyspark.sql import types as T
+
+from bucketizers_spark.operators.core import arrow_frame
+from bucketizers_spark.plans.materialize import cut_lineage, cut_lineage_counted
 
 
 #: Below this many distinct undirected edges the min-label rounds cost
@@ -77,15 +80,15 @@ def connected_components(
     e0 = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).transform(cut_lineage)
-    und = (
+    # the cut's own job counts the edges for the small-graph gate
+    und, n_edges = cut_lineage_counted(
         e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .transform(cut_lineage)
     )
     if small_graph_threshold is None:
         small_graph_threshold = SMALL_GRAPH_THRESHOLD
-    if small_graph_threshold and und.count() <= small_graph_threshold:
+    if small_graph_threshold and n_edges <= small_graph_threshold:
         # r7 small-graph fast path: the edge list is bounded by the gate
         # just checked, so a driver union-find is exact and replaces the
         # per-round join + groupBy + convergence-count jobs whose fixed
@@ -114,11 +117,14 @@ def connected_components(
             m = comp_min.get(r)
             if m is None or n < m:
                 comp_min[r] = n
-        spark = edges.sparkSession
-        node_type = und.schema["a"].dataType.simpleString()
-        labels = spark.createDataFrame(
-            [(n, comp_min[find(n)]) for n in parent],
-            f"{node_col} {node_type}, component {node_type}",
+        node_type = und.schema["a"].dataType
+        schema = T.StructType(
+            [T.StructField(c, node_type) for c in (node_col, "component")]
+        )
+        labels = arrow_frame(
+            edges.sparkSession,
+            schema,
+            [list(parent), [comp_min[find(n)] for n in parent]],
         )
         if nodes is not None:
             iso = nodes.select(F.col(node_col)).distinct().join(

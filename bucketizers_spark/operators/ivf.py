@@ -29,7 +29,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from bucketizers_spark.operators.core import arrow_frame
 
 
 def _cosine(a, b):
@@ -112,10 +115,15 @@ def kmeans_centroids(
                 if nrm > 1e-12:
                     C[j] = c / nrm
             # empty cell: keep the previous centroid (deterministic)
-    spark = SparkSession.getActiveSession()
-    return spark.createDataFrame(
-        [(j, [float(x) for x in C[j]]) for j in range(k)],
-        "c_id long, ce array<double>",
+    return arrow_frame(
+        SparkSession.getActiveSession(),
+        T.StructType(
+            [
+                T.StructField("c_id", T.LongType()),
+                T.StructField("ce", T.ArrayType(T.DoubleType())),
+            ]
+        ),
+        [list(range(k)), C.tolist()],
     )
 
 

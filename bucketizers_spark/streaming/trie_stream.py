@@ -21,8 +21,10 @@ Per-batch cost: the cascade emits each touched node's post-batch count
 as a narrow select over its level's lineage-cut frame, untouched nodes
 carry over through a broadcast anti-join, and the new version is written
 as one file straight from that plan — no persist, no count job. The
-literal root counter row and every empty frame are JVM constant frames
-(operators/core.const_frame), so a batch starts no Python process.
+previous version is read with its known schema, so no schema-inference
+job runs either. The literal root counter row and every empty frame are
+JVM constant frames (operators/core.const_frame), so a batch starts no
+Python process.
 
 Scale: the counters table holds one row per trie node ever created —
 O(members/page_size) worst case, read+broadcast whole per batch (hence
@@ -38,7 +40,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bucketizers_spark.operators.substring import substring_trie, token_prefix_trie
+from bucketizers_spark.operators.substring import (
+    COUNTER_SCHEMA,
+    substring_trie,
+    token_prefix_trie,
+)
 from bucketizers_spark.sinks.idempotent import IdempotentParquetSink
 
 
@@ -88,7 +94,8 @@ class TrieStreamJob:
         if not versions:
             return None
         path = os.path.join(self.state_dir, "counters", f"v={versions[-1]}")
-        return spark.read.parquet(path)
+        # the schema is known: no per-batch footer-inference job
+        return spark.read.schema(COUNTER_SCHEMA).parquet(path)
 
     def _write_counters(self, updates: DataFrame, batch_id: int):
         path = os.path.join(self.state_dir, "counters", f"v={batch_id}")

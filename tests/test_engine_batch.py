@@ -899,3 +899,46 @@ class TestScanProbe:
             df = _t(spark, d, "tbl")
         assert path in str(rec[0].message)
         assert sorted(r.id for r in df.collect()) == list(range(5))
+
+    def test_scan_meta_memoized_per_file_version(self, spark):
+        """``_t`` infers a file's schema and reads its footer once per
+        file version: a second read starts no Spark job and gets the
+        inferred schema; a rewritten file is probed again."""
+        import os
+        import shutil
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from bucketizers_spark.entry_queries import _scan_meta, _t
+
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        d = os.path.join(root, ".scratch", "t_memo")
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        path = f"{d}/tbl.parquet"
+        pq.write_table(pa.table({"id": list(range(5))}), path, row_group_size=2)
+        sc = spark.sparkContext
+
+        def jobs_of(fn):
+            group = f"t_memo_{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+        first, n_first = jobs_of(lambda: _t(spark, d, "tbl"))
+        again, n_again = jobs_of(lambda: _t(spark, d, "tbl"))
+        assert n_first >= 1 and n_again == 0
+        assert again.schema == first.schema == spark.read.parquet(path).schema
+        st = os.stat(path)
+        assert _scan_meta(path, st.st_size, st.st_mtime_ns)[1] == 3
+        assert sorted(r.id for r in again.collect()) == list(range(5))
+
+        pq.write_table(pa.table({"id": [7], "name": ["x"]}), path)
+        new = _t(spark, d, "tbl")
+        assert new.columns == ["id", "name"]
+        assert [tuple(r) for r in new.collect()] == [(7, "x")]
