@@ -32,6 +32,26 @@ from bucketizers_spark.plans.materialize import cut_lineage
 SINGLE_TASK_THRESHOLD = 2_000_000
 
 
+def _density_aggs(order_col: str) -> list:
+    """The density gate's one aggregate: row count, distinct non-null
+    keys, min and max."""
+    return [
+        F.count(F.lit(1)).alias("c"),
+        F.count_distinct(order_col).alias("cd"),
+        F.min(order_col).alias("mn"),
+        F.max(order_col).alias("mx"),
+    ]
+
+
+def _is_dense(row) -> bool:
+    """Keys are exactly min..max, each once. ``max - min + 1 == count``
+    alone accepts duplicates that fill a gap ({1, 1, 3}) and nulls that
+    do ({1, 3, null}); requiring every row to hold a distinct non-null
+    key rules both out."""
+    c = row["c"]
+    return bool(c) and row["cd"] == c and row["mx"] - row["mn"] + 1 == c
+
+
 def with_global_rank0(
     df: DataFrame,
     order_col: str,
@@ -62,12 +82,8 @@ def with_global_rank0(
     # and pay one pruned pass extra, which is why expensive upstreams
     # (subject first-seen aggregates) keep the cut-first default.
     if is_int and probe_uncut:
-        row = df.select(order_col).agg(
-            F.count(F.lit(1)).alias("c"),
-            F.min(order_col).alias("mn"),
-            F.max(order_col).alias("mx"),
-        ).first()
-        if row["c"] and row["mx"] - row["mn"] + 1 == row["c"]:
+        row = df.select(order_col).agg(*_density_aggs(order_col)).first()
+        if _is_dense(row):
             return df.withColumn(
                 out_col, (F.col(order_col) - F.lit(row["mn"])).cast("long")
             )
@@ -84,19 +100,15 @@ def with_global_rank0(
     # when these frames leak (observed: 45s plans after a dozen queries).
     mat = df.transform(cut_lineage)
     # r7: the gating pass now also reads min/max for integer keys. A
-    # DENSE unique key (max - min + 1 == count) fully determines the
-    # rank — rank0 = key - min as a narrow map, no sort at all (and
-    # ties cannot exist, so resolution is trivially identical). Same
-    # single job as the old bare count; source-stamped seqs (the
+    # DENSE unique key fully determines the rank — rank0 = key - min as a
+    # narrow map, no sort at all (and ties cannot exist, so resolution is
+    # trivially identical). One action, like the old bare count (the
+    # distinct count adds one shuffle to it); source-stamped seqs (the
     # fixture's event_id/doc_id) hit this path every time.
     if is_int:
-        row = mat.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.min(order_col).alias("mn"),
-            F.max(order_col).alias("mx"),
-        ).first()
+        row = mat.agg(*_density_aggs(order_col)).first()
         cnt = row["c"]
-        if cnt and row["mx"] - row["mn"] + 1 == cnt:
+        if _is_dense(row):
             return mat.withColumn(
                 out_col, (F.col(order_col) - F.lit(row["mn"])).cast("long")
             )

@@ -26,13 +26,35 @@ Settings rationale (100 TB design, local[N] testing — SURVEY.md §4.2):
   driver's working directory;
   ``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}``
   restores the stock daemon.
+- Codegen cache = CODEGEN_CACHE_MAX_ENTRIES (1000) classes. Spark keeps
+  the classes Janino compiles in a Guava cache of
+  ``spark.sql.codegen.cache.maxEntries`` entries (default 100), split
+  into 4 LRU segments of a quarter each. Its key is (context class
+  loader, code), and in local mode the driver's threads and the task
+  threads run under two different loaders, so a class compiled on both
+  sides (every whole-stage class: the driver compiles it once to check
+  it, the tasks to run it) takes two entries. Measured working sets
+  (local[4], cache uncapped, entries / distinct codes): ``stream_trie``
+  warm-up plus three reps 173 / 103, ``batch_queries`` 106 / 69, the 43
+  ``bench.py`` headline queries at sf0.01 626 / 397. At the default cap
+  the cache evicts classes the next execution needs, so Spark compiles
+  them again on every run. 1000 holds the 626-entry headline set: if
+  keys hash evenly, its fullest segment holds about 170 entries (190 at
+  the 99th percentile), under the segment's 250. The conf is static:
+  it is read when the JVM first generates code, and a session that
+  already exists keeps its own cap.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+#: ``spark.sql.codegen.cache.maxEntries``: room for the engine's compiled
+#: classes in Spark's codegen cache (see the settings rationale above)
+CODEGEN_CACHE_MAX_ENTRIES = 1000
 
 # the directory holding the bucketizers_spark package
 _PACKAGE_ROOT = os.path.dirname(
@@ -66,6 +88,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.python.daemon.module", "bucketizers_spark.plans.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -74,3 +97,12 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compile_count() -> int:
+    """Classes Janino has compiled in the running JVM so far (Spark's
+    ``CodegenMetrics``; a codegen cache hit compiles nothing). Needs a
+    started SparkContext."""
+    jvm = SparkContext._jvm
+    metric = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    return metric.getCount()

@@ -24,7 +24,11 @@ as one file straight from that plan — no persist, no count job. The
 previous version is read with its known schema, so no schema-inference
 job runs either. The literal root counter row and every empty frame are
 JVM constant frames (operators/core.const_frame), so a batch starts no
-Python process.
+Python process. A steady batch compiles no code either: the batch's
+generated classes (173 codegen-cache entries for the benchmark's
+stream over warm-up and three reps) fit the session's codegen cache
+(plans/session.py), where at Spark's default cap of 100 every 3-batch
+rep recompiled classes evicted since the last batch.
 
 Scale: the counters table holds one row per trie node ever created —
 O(members/page_size) worst case, read+broadcast whole per batch (hence

@@ -422,6 +422,29 @@ class TestGlobalRank:
         got2 = {r["key"]: r["rank0"] for r in slow.collect()}
         assert got2 == {k: i for i, k in enumerate(expect)}
 
+    @pytest.mark.parametrize("keys", [[1, 1, 3], [1, 3, None]])
+    @pytest.mark.parametrize("probe_uncut", [False, True])
+    def test_dense_gate_rejects_filled_gaps(self, spark, keys, probe_uncut):
+        """max - min + 1 == count holds for {1, 1, 3} and {1, 3, null}
+        though neither key set is dense: the duplicate (or the null) fills
+        the gap. Both the uncut probe and the cut gate must send them to
+        the general path, whose ranks they must equal."""
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
+        from bucketizers_spark.operators.rank import with_global_rank0
+
+        df = spark.createDataFrame([(k,) for k in keys], "key long")
+        general = df.withColumn(
+            "rank0", (F.row_number().over(Window.orderBy("key")) - 1).cast("long")
+        )
+        got = with_global_rank0(df, "key", probe_uncut=probe_uncut)
+
+        def ranked(frame):
+            return sorted((r["rank0"], r["key"]) for r in frame.collect())
+
+        assert ranked(got) == ranked(general)
+
     def test_threshold_selects_physical_path(self, spark):
         """Plan-shape pin (VERDICT r2 #5): above the threshold the rank
         must execute as the range-partitioned two-phase form — windows
