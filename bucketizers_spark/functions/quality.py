@@ -117,21 +117,6 @@ def quality_metrics_col(
     return F.struct(*fields)
 
 
-# -- thin single-metric views (each is still exactly one fold) ----------
-
-
-def n_words_col(text_col: Column) -> Column:
-    return quality_metrics_col(text_col)["n_words"]
-
-
-def stop_ratio_col(text_col: Column) -> Column:
-    return quality_metrics_col(text_col)["stop_ratio"]
-
-
-def lang_guess_col(text_col: Column) -> Column:
-    return quality_metrics_col(text_col)["pred_lang"]
-
-
 def gate_predicate(
     text_col: Column, lang_col: Column, *, min_words: int = 5
 ) -> Column:

@@ -20,9 +20,9 @@ Reference semantics
 Spark realization: coordinate extraction + integer tiling are pure JVM
 expressions (regexp_extract_all + integer math + a broadcast literal map
 for the y formula over the 179 integer latitudes); per-tile paging is the
-same rank-over-seq pattern as every other pager. The tile-y lookup map and
-bbox strings are tiny per-zoom literals computed driver-side — no UDF, no
-shuffle beyond the per-tile rank.
+same rank-over-seq pattern as every other pager. The tile-y lookup map is
+a tiny per-zoom literal computed driver-side; bbox strings come from one
+pandas UDF over the distinct tiles (``bbox_col``).
 """
 
 from __future__ import annotations
@@ -85,6 +85,25 @@ def tile_array_col(value_col: str, zoom: int) -> F.Column:
     return F.array_distinct(F.transform(pairs, tile_of))
 
 
+def bbox_col(leaf: F.Column) -> F.Column:
+    """WKT bbox of a ``z/x/y`` tile leaf — the one bbox derivation of
+    the batch, per-parent and streaming geo relations. The inverse-
+    mercator corners need trig plus Python float formatting byte-identical
+    to the oracle's tile_bbox_wkt, so they run in a vectorized pandas UDF,
+    distributed (never collected to the driver: O(4^zoom) tiles)."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("string")
+    def bbox_of(leaf: pd.Series) -> pd.Series:
+        def one(s: str) -> str:
+            zs, xs, ys = s.split("/")
+            return tile_bbox_wkt(int(xs), int(ys), int(zs))
+
+        return leaf.map(one)
+
+    return bbox_of(leaf)
+
+
 def geospatial_tiles(
     df: DataFrame,
     value_col: str,
@@ -125,28 +144,11 @@ def geospatial_tiles(
         "bucket_id", F.concat(F.col("_leaf"), F.lit("-"), F.col("_page"))
     ).drop("_t", "_tpos", "_leaf", "_page", "_tiles")
 
-    # bbox per tile: the inverse-mercator corners need trig plus Python
-    # float formatting byte-identical to the oracle's tile_bbox_wkt — so
-    # compute them DISTRIBUTED with a vectorized pandas UDF over the
-    # distinct-tile frame (r1 collected distinct tiles to the driver:
-    # bounded at zoom 4 but O(4^zoom) — a driver OOM at street zooms).
     def _relations() -> DataFrame:
-        from pyspark.sql.functions import pandas_udf
-
-        z = zoom
-
-        @pandas_udf("string")
-        def bbox_of(leaf: pd.Series) -> pd.Series:
-            def one(s: str) -> str:
-                _, xs, ys = s.split("/")
-                return tile_bbox_wkt(int(xs), int(ys), z)
-
-            return leaf.map(one)
-
         bbox_dim = (
             exploded.select("_leaf")
             .distinct()
-            .withColumn("bbox", bbox_of(F.col("_leaf")))
+            .withColumn("bbox", bbox_col(F.col("_leaf")))
             .withColumn(
                 "column", F.regexp_replace(F.col("_leaf"), r"/[^/]+$", "")
             )

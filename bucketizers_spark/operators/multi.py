@@ -376,10 +376,7 @@ def geo_within_parent(
     parent added to every partition key — one shuffle for the per-
     (parent, leaf) paging window, relation derivation over the distinct
     (parent, tile) frame."""
-    from bucketizers_spark.operators.geospatial import (
-        tile_array_col,
-        tile_bbox_wkt,
-    )
+    from bucketizers_spark.operators.geospatial import bbox_col, tile_array_col
 
     spark = df.sparkSession
     payload_cols = df.columns
@@ -424,22 +421,10 @@ def geo_within_parent(
     assignments = matched_assign.unionByName(fb_assign)
 
     def _relations() -> DataFrame:
-        from pyspark.sql.functions import pandas_udf
-
-        z = zoom
-
-        @pandas_udf("string")
-        def bbox_of(leaf: pd.Series) -> pd.Series:
-            def one(s: str) -> str:
-                _, xs, ys = s.split("/")
-                return tile_bbox_wkt(int(xs), int(ys), z)
-
-            return leaf.map(one)
-
         bbox_dim = (
             exploded.select("_leaf")
             .distinct()
-            .withColumn("bbox", bbox_of(F.col("_leaf")))
+            .withColumn("bbox", bbox_col(F.col("_leaf")))
             .withColumnRenamed("_leaf", "leaf")
         )
         page_firsts = (

@@ -21,6 +21,9 @@ manifest-gated foreachBatch contract with the data write swapped for a
 so the full call sequence runs in CI against a recorder even though the
 sandbox has no Iceberg jars (VERDICT r5 #7), and a real cluster passes
 ``spark.sql``.
+
+A stream whose batches also carry state (the trie counters, the geo
+emitted columns) keeps it in a ``VersionedTable`` next to the sink.
 """
 
 from __future__ import annotations
@@ -122,6 +125,41 @@ class IdempotentParquetSink:
         if not dirs:
             raise FileNotFoundError(f"no committed batches under {self.root}")
         return spark.read.option("basePath", self.root).parquet(*dirs)
+
+
+class VersionedTable:
+    """A small state table kept next to a stream's sink as one version
+    per micro-batch, ``<root>/v=<batch_id>/`` (the trie counters, the geo
+    emitted columns). Batch k reads the newest complete version below k
+    and writes version k BEFORE its sink commits: a crash in between
+    replays batch k, which recomputes from the same earlier version and
+    overwrites version k. A version without ``_SUCCESS`` (a torn write)
+    is never read."""
+
+    def __init__(self, root: str, schema):
+        self.root = root
+        self.schema = schema
+        os.makedirs(root, exist_ok=True)
+
+    def latest(self, spark, before_batch: int) -> DataFrame | None:
+        versions = [
+            int(os.path.basename(p)[len("v="):])
+            for p in _glob.glob(os.path.join(self.root, "v=*"))
+            if os.path.exists(os.path.join(p, "_SUCCESS"))
+        ]
+        versions = [v for v in versions if v < before_batch]
+        if not versions:
+            return None
+        # the schema is known: no per-batch footer-inference job
+        return spark.read.schema(self.schema).parquet(
+            os.path.join(self.root, f"v={max(versions)}")
+        )
+
+    def write(self, df: DataFrame, batch_id: int) -> None:
+        # one file per version: the next batch reads it whole
+        df.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(self.root, f"v={batch_id}")
+        )
 
 
 class IcebergMergeSink:

@@ -38,12 +38,19 @@ def stage_chunks(
         part = pdf.iloc[j * per : (j + 1) * per]
         if part.empty:
             continue
-        path = os.path.join(out_dir, f"chunk_{k:05d}.parquet")
+        name = f"chunk_{k:05d}.parquet"
+        path = os.path.join(out_dir, name)
+        # written under a hidden name, which the file source skips, and
+        # renamed only once its mtime is pinned: a stream listing the
+        # directory meanwhile never sees the chunk with the current time
+        # (its latest timestamp would jump to now, and every later
+        # chunk's pinned mtime would then fall outside maxFileAge)
+        tmp = os.path.join(out_dir, f".{name}.tmp")
         # pandas timestamps are ns-precision; Spark's vectorized parquet
         # reader wants us — coerce at write time
         pq.write_table(
             pa.Table.from_pandas(part, preserve_index=False),
-            path,
+            tmp,
             coerce_timestamps="us",
             allow_truncated_timestamps=True,
         )
@@ -52,7 +59,8 @@ def stage_chunks(
         # seq order (observed as a flaky incremental-vs-batch mismatch).
         # Pin strictly increasing mtimes keyed by the chunk index.
         t = 1_700_000_000 + k
-        os.utime(path, (t, t))
+        os.utime(tmp, (t, t))
+        os.replace(tmp, path)
         paths.append(path)
     return paths
 

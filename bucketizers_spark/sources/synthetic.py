@@ -80,8 +80,3 @@ def token_stream_pdf(
             "source": src,
         }
     )
-
-
-def token_stream_df(spark, n: int, **kwargs):
-    pdf = token_stream_pdf(n, **kwargs)
-    return spark.createDataFrame(pdf, TOKEN_STREAM_SCHEMA)

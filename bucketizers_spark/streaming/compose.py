@@ -17,15 +17,17 @@ SURVEY.md §9 documented the pattern; this module packages it as one API
 so the caller no longer hand-wires writers, schemas, and checkpoints:
 
 - **Deterministic staged files**: each micro-batch lands as
-  ``batch-{id:09d}.parquet`` via write-to-temp + atomic rename. A batch
+  ``batch-{id:09d}.parquet`` via write-to-temp + atomic rename
+  (``_stage_batch``, the one writer of stage, tee and job outputs). A batch
   replayed after a checkpoint resume finds its file already present and
   skips — the staged stream is exactly-once without a transactional sink
   (the local ``os.replace`` is the sandbox analog of an object-store
   committer; sinks/idempotent.py holds the production MERGE notes).
-- **Arrival order**: stage k+1 reads with ``maxFilesPerTrigger`` and
-  ``latestFirst=false``; batch-id file names are mod-time monotonic, so
-  downstream keyed state sees rows in the same order batch mode sorts
-  them (seq within batch, batches in order).
+- **Arrival order**: stage k+1 and every relation tee read with
+  ``maxFilesPerTrigger`` and ``latestFirst=false`` (``_read_staged``);
+  batch-id file names are mod-time monotonic, so downstream keyed state
+  sees rows in the same order batch mode sorts them (seq within batch,
+  batches in order).
 - **Resume safety**: every stage checkpoints under
   ``workdir/stage{k}/ckpt``. Rebuilding the same composition over the
   same workdir resumes each stage from its offsets; the kill/resume
@@ -46,23 +48,46 @@ import os
 import shutil
 from typing import Callable, Sequence
 
-import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _stage_batch(
+    data_dir: str, batch_id: int, build: Callable[[], DataFrame]
+) -> None:
+    """Stage one micro-batch as ``data_dir/batch-{id:09d}.parquet``: write
+    ``build()`` as one file to a temp dir, then rename it into place. A
+    batch whose file exists is a checkpoint replay after resume — it is
+    skipped before ``build`` runs."""
+    final = os.path.join(data_dir, f"batch-{batch_id:09d}.parquet")
+    if os.path.exists(final):
+        return
+    tmp = os.path.join(data_dir, f"_tmp-{batch_id}")
+    build().coalesce(1).write.mode("overwrite").parquet(tmp)
+    parts = glob.glob(os.path.join(tmp, "part-*"))
+    if parts:
+        os.replace(parts[0], final)
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _batch_writer(data_dir: str):
     def write(bdf, batch_id: int) -> None:
-        final = os.path.join(data_dir, f"batch-{batch_id:09d}.parquet")
-        if os.path.exists(final):
-            return  # checkpoint replay after resume — already staged
-        tmp = os.path.join(data_dir, f"_tmp-{batch_id}")
-        bdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-        parts = glob.glob(os.path.join(tmp, "part-*"))
-        if parts:
-            os.replace(parts[0], final)
-        shutil.rmtree(tmp, ignore_errors=True)
+        _stage_batch(data_dir, batch_id, lambda: bdf)
 
     return write
+
+
+def _read_staged(
+    spark: SparkSession, schema, data_dir: str, max_files_per_trigger: int
+) -> DataFrame:
+    """A file stream over a stage's staged batch files, in arrival order.
+    The schema is known before start, so the stream opens before any file
+    exists."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("latestFirst", "false")
+        .parquet(data_dir)
+    )
 
 
 class ComposedStreams:
@@ -118,36 +143,11 @@ class ComposedStreams:
             self._plans.append((out, handler, ckpt_dir))
             last_data_dir = data_dir
             if k < len(stages) - 1:
-                # schema is known before start, so the next stage's file
-                # source opens before any file exists
-                current = (
-                    self.spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", max_files_per_trigger)
-                    .option("latestFirst", "false")
-                    .parquet(data_dir)
+                current = _read_staged(
+                    self.spark, schema, data_dir, max_files_per_trigger
                 )
             rel = relations[k] if relations else None
-            if hasattr(rel, "make_rel_handler"):
-                # JOB REL TEE (GeoRelTee protocol): a foreachBatch
-                # consumer of this stage's staged files with its own
-                # versioned state — relations land incrementally in
-                # rels/, so read_relations() never rescans the stage's
-                # complete staged output
-                rel_in = (
-                    self.spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", max_files_per_trigger)
-                    .option("latestFirst", "false")
-                    .parquet(data_dir)
-                )
-                rel_dir = os.path.join(workdir, f"stage{k}", "rels")
-                rel_ckpt = os.path.join(workdir, f"stage{k}", "rels_ckpt")
-                rel_state = os.path.join(workdir, f"stage{k}", "rels_state")
-                os.makedirs(rel_dir, exist_ok=True)
-                self._plans.append(
-                    (rel_in, rel.make_rel_handler(rel_dir, rel_state), rel_ckpt)
-                )
-                self._rel_dirs.append(rel_dir)
-            elif isinstance(rel, BatchDerivedRelations):
+            if isinstance(rel, BatchDerivedRelations):
                 def _batch_rel_reader(spark, d=data_dir, r=rel):
                     if not glob.glob(os.path.join(d, "*.parquet")):
                         return None
@@ -163,17 +163,23 @@ class ComposedStreams:
                 # staged files (not the live stream) keeps the tee
                 # resume-safe and decoupled — it can lag or restart
                 # without touching the assignment path.
-                rel_in = (
-                    self.spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", max_files_per_trigger)
-                    .option("latestFirst", "false")
-                    .parquet(data_dir)
+                stage_dir = os.path.join(workdir, f"stage{k}")
+                rel_in = _read_staged(
+                    self.spark, schema, data_dir, max_files_per_trigger
                 )
-                rel_dir = os.path.join(workdir, f"stage{k}", "rels")
-                rel_ckpt = os.path.join(workdir, f"stage{k}", "rels_ckpt")
+                rel_dir = os.path.join(stage_dir, "rels")
                 os.makedirs(rel_dir, exist_ok=True)
+                if hasattr(rel, "make_rel_handler"):
+                    # job tee (GeoRelTee): a foreachBatch handler with its
+                    # own versioned state
+                    rel_out = rel_in
+                    handler = rel.make_rel_handler(
+                        rel_dir, os.path.join(stage_dir, "rels_state")
+                    )
+                else:
+                    rel_out, handler = rel(rel_in), _batch_writer(rel_dir)
                 self._plans.append(
-                    (rel(rel_in), _batch_writer(rel_dir), rel_ckpt)
+                    (rel_out, handler, os.path.join(stage_dir, "rels_ckpt"))
                 )
                 self._rel_dirs.append(rel_dir)
         self.output_dir = last_data_dir
@@ -241,168 +247,37 @@ class ComposedStreams:
 
 class GeoRelTee:
     """Incremental relation tee for composed geo stages (stage 0 or
-    child): consumes the stage's staged flags+leaf rows as a file stream
-    and emits the relation rows PER MICRO-BATCH instead of rescanning
-    the complete staged output at read time (the r4 BatchDerivedRelations
-    form — at 100 TB that read-time scan is a real per-listing cost).
-
-    Streamability: column → leaf-page and fallback links ride the
-    ``is_new_page`` flag (append-monotone — a page is new exactly once
-    across the stream, the keyed pager guarantees it); the root/parent →
-    column row is the only cross-batch fact, deduped with a VERSIONED
-    emitted-columns table exactly like the standalone GeoStreamJob
-    (geo_stream.py:206-237): state version v=batch_id is written BEFORE
-    the relation batch file, so a crash between the two is healed on
-    checkpoint replay — the recompute reads versions < batch_id and
-    overwrites its own state idempotently. Reference semantics:
-    GeospatialBucketizer.ts:153-184 (column → page per new page, root →
-    column once with the FIRST tile's bbox)."""
+    child): consumes the stage's staged pager rows as a file stream and
+    stages each micro-batch's ``geo_stream.batch_relations`` — the one
+    geo relation derivation, which the standalone GeoStreamJob runs too —
+    as a batch file in ``rels/``, so ``read_relations()`` never rescans
+    the stage's staged output. The emitted-columns state lives in
+    ``rels_state/columns`` and is written before the relation file, so a
+    crash between the two is healed on checkpoint replay."""
 
     def __init__(self, c, *, with_parent: bool):
         self.c = c
         self.with_parent = with_parent
 
-    def _parts(self, df):
-        """(column_rels, root_candidates, fallback_rels) for one
-        micro-batch of staged rows — same naming/bbox/seq construction
-        as the r4 read-time staged derive, but driven by the pager flags so each
-        part is exact without any cross-batch grouping (root candidates
-        still need the anti-join in the handler)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.functions import pandas_udf
-
-        from bucketizers_spark.operators.core import relation_row
-        from bucketizers_spark.operators.geospatial import tile_bbox_wkt
-
-        root = getattr(self.c, "root", "root") or "root"
-        pcols = ["_parent"] if self.with_parent else []
-
-        @pandas_udf("string")
-        def bbox_of(leaf: pd.Series) -> pd.Series:
-            def one(s: str) -> str:
-                zs, xs, ys = s.split("/")
-                return tile_bbox_wkt(int(xs), int(ys), int(zs))
-
-            return leaf.map(one)
-
-        matched = df.where(F.col("_leaf") != "bucketless")
-        fb = df.where(F.col("_leaf") == "bucketless")
-        raw_col = F.regexp_replace(F.col("_leaf"), r"/[^/]+$", "")
-        if self.with_parent:
-            column = F.concat(F.col("_parent"), F.lit("/"), raw_col)
-            page_bucket = F.concat(
-                F.col("_parent"), F.lit("/"), F.col("_leaf"),
-                F.lit("-"), F.col("_page"),
-            )
-            fb_from = F.col("_parent")
-            fb_to = F.concat(
-                F.col("_parent"), F.lit("/bucketless-"), F.col("_page")
-            )
-            root_from = F.col("_parent")
-        else:
-            column = raw_col
-            page_bucket = F.concat(
-                F.col("_leaf"), F.lit("-"), F.col("_page")
-            )
-            fb_from = F.lit(root)
-            fb_to = F.concat(F.lit("bucketless-"), F.col("_page"))
-            root_from = F.lit(root)
-        new_pages = matched.where(F.col("is_new_page")).withColumn(
-            "_bbox", bbox_of(F.col("_leaf"))
-        )
-        column_rels = new_pages.select(
-            *relation_row(
-                column,
-                "GeospatiallyContains",
-                page_bucket,
-                values=F.array(F.col("_bbox")),
-                seq=F.col("seq"),
-            )
-        )
-        root_cands = (
-            matched.where(F.col("is_new_tile"))
-            .withColumn("_column", column)
-            .groupBy(*pcols, "_column")
-            .agg(
-                F.min("seq").alias("created_at_seq"),
-                # (seq, _tpos): pair order breaks same-member seq ties
-                F.min_by(
-                    "_leaf", F.struct(F.col("seq"), F.col("_tpos"))
-                ).alias("_first_leaf"),
-            )
-            .withColumn("_bbox", bbox_of(F.col("_first_leaf")))
-            .select(
-                *relation_row(
-                    root_from,
-                    "GeospatiallyContains",
-                    F.col("_column"),
-                    values=F.array(F.col("_bbox")),
-                    seq=F.col("created_at_seq"),
-                )
-            )
-        )
-        fb_rels = fb.where(F.col("is_new_page")).select(
-            *relation_row(
-                fb_from, "Relation", fb_to, seq=F.col("seq")
-            )
-        )
-        return column_rels, root_cands, fb_rels
-
-    def _emitted(self, spark, state_dir: str, before_batch: int):
-        versions = sorted(
-            int(os.path.basename(p).split("=")[1])
-            for p in glob.glob(os.path.join(state_dir, "columns", "v=*"))
-            if os.path.exists(os.path.join(p, "_SUCCESS"))
-        )
-        versions = [v for v in versions if v < before_batch]
-        if not versions:
-            return None
-        return spark.read.parquet(
-            os.path.join(state_dir, "columns", f"v={versions[-1]}")
-        )
-
     def make_rel_handler(self, rel_dir: str, state_dir: str):
-        from pyspark.sql import functions as F
+        from bucketizers_spark.streaming.geo_stream import (
+            batch_relations,
+            emitted_columns,
+        )
 
-        os.makedirs(os.path.join(state_dir, "columns"), exist_ok=True)
+        columns = emitted_columns(state_dir)
+        root = getattr(self.c, "root", "root") or "root"
 
         def handler(bdf, batch_id: int) -> None:
-            final = os.path.join(rel_dir, f"batch-{batch_id:09d}.parquet")
-            if os.path.exists(final):
-                return  # checkpoint replay — already committed
-            spark = bdf.sparkSession
             bdf = bdf.persist()
-            column_rels, root_cands, fb_rels = self._parts(bdf)
-            emitted = self._emitted(spark, state_dir, batch_id)
-            if emitted is not None:
-                root_rels = root_cands.join(
-                    emitted.withColumnRenamed("column", "to_bucket"),
-                    "to_bucket",
-                    "left_anti",
-                )
-            else:
-                root_rels = root_cands
-            out = (
-                column_rels.unionByName(root_rels).unionByName(fb_rels)
-            ).persist()
-            new_cols = root_rels.select(F.col("to_bucket").alias("column"))
-            all_cols = (
-                new_cols
-                if emitted is None
-                else emitted.unionByName(new_cols).distinct()
+            _stage_batch(
+                rel_dir,
+                batch_id,
+                lambda: batch_relations(
+                    bdf, columns, batch_id, root=root,
+                    with_parent=self.with_parent,
+                ),
             )
-            # state BEFORE the relation file (cf. GeoStreamJob): a crash
-            # in between replays as a recompute from versions < batch_id
-            all_cols.write.mode("overwrite").parquet(
-                os.path.join(state_dir, "columns", f"v={batch_id}")
-            )
-            tmp = os.path.join(rel_dir, f"_tmp-{batch_id}")
-            out.coalesce(1).write.mode("overwrite").parquet(tmp)
-            parts = glob.glob(os.path.join(tmp, "part-*"))
-            if parts:
-                os.replace(parts[0], final)
-            shutil.rmtree(tmp, ignore_errors=True)
-            out.unpersist()
             bdf.unpersist()
 
         return handler
@@ -503,18 +378,13 @@ class TrieStage:
             if self.within_parent:
                 bdf = self._prep_child(bdf)
             job.process_batch(bdf, batch_id)
-            final = os.path.join(data_dir, f"batch-{batch_id:09d}.parquet")
-            if os.path.exists(final):
-                return
-            out = bdf.sparkSession.read.parquet(
-                os.path.join(job.sink.root, f"batch_id={batch_id}")
+            _stage_batch(
+                data_dir,
+                batch_id,
+                lambda: bdf.sparkSession.read.parquet(
+                    os.path.join(job.sink.root, f"batch_id={batch_id}")
+                ),
             )
-            tmp = os.path.join(data_dir, f"_tmp-{batch_id}")
-            out.coalesce(1).write.mode("overwrite").parquet(tmp)
-            parts = glob.glob(os.path.join(tmp, "part-*"))
-            if parts:
-                os.replace(parts[0], final)
-            shutil.rmtree(tmp, ignore_errors=True)
 
         return handler
 
@@ -539,74 +409,6 @@ class TrieStage:
         return read
 
 
-def _geo_stage(s: DataFrame, c, *, with_parent: bool) -> DataFrame:
-    """Geospatial compose stage — stage-0 (standalone tile naming) or
-    child (parent-prefixed, per-parent counters). Per-(parent?, tile)
-    page counters run in ONE stateful op: non-WKT/pole rows take a
-    'bucketless' sentinel leaf through the same keyed pager, which
-    reproduces the batch fallback naming (``bucketless-N`` standalone —
-    operators/basic.fallback_pager — or ``parent/bucketless-N`` —
-    operators/multi.geo_within_parent) without a second stateful
-    operator in the query."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from bucketizers_spark.operators.geospatial import tile_array_col
-    from bucketizers_spark.streaming.geo_stream import (
-        _PAGER_STATE,
-        _make_tile_pager_fn,
-    )
-
-    work = s.drop("_parent", "_wstart", "is_first")
-    if with_parent:
-        work = work.withColumnRenamed("bucket_id", "_parent")
-    work = work.withColumn("_tiles", tile_array_col(c.column, c.zoom))
-    bad = F.exists(F.col("_tiles"), lambda t: t["y"].isNull())
-    # null-safe (see operators/geospatial): NULL values must route
-    # to the bucketless sentinel, not vanish in three-valued logic
-    matched = F.coalesce((F.size("_tiles") > 0) & ~bad, F.lit(False))
-    payload = [col for col in work.columns if col != "_tiles"]
-    tiles = (
-        work.where(matched)
-        .select(*payload, F.posexplode("_tiles").alias("_tpos", "_t"))
-        .withColumn(
-            "_leaf",
-            F.concat_ws(
-                "/", F.lit(str(c.zoom)), F.col("_t.x"), F.col("_t.y")
-            ),
-        )
-        .drop("_t")
-    )
-    fb = (
-        work.where(~matched)
-        .drop("_tiles")
-        .withColumn("_tpos", F.lit(0))
-        .withColumn("_leaf", F.lit("bucketless"))
-    )
-    both = tiles.unionByName(fb)
-    out_schema = T.StructType(
-        list(both.schema.fields)
-        + [
-            T.StructField("_page", T.LongType()),
-            T.StructField("is_new_tile", T.BooleanType()),
-            T.StructField("is_new_page", T.BooleanType()),
-        ]
-    )
-    keys = ["_parent", "_leaf"] if with_parent else ["_leaf"]
-    flagged = both.groupBy(*keys).applyInPandasWithState(
-        _make_tile_pager_fn(c.page_size, "seq"),
-        outputStructType=out_schema,
-        stateStructType=_PAGER_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    bucket = F.concat(F.col("_leaf"), F.lit("-"), F.col("_page"))
-    if with_parent:
-        bucket = F.concat(F.col("_parent"), F.lit("/"), bucket)
-    return flagged.withColumn("bucket_id", bucket)
-
-
 def stages_from_spec(spec) -> list:
     """Map a validated multi JobSpec onto compose_streams stage
     transforms, where per-stage streaming forms exist:
@@ -617,9 +419,9 @@ def stages_from_spec(spec) -> list:
     (stateful.subject_page_stream); ``time`` (tumbling/sliding) —
     stateless window bucket map; ``substring`` — TrieStage (the
     versioned-counter trie cascade as a job stage); ``geospatial`` —
-    _geo_stage (per-tile pager with the bucketless sentinel fallback in
-    one stateful op; the standalone GeoStreamJob remains the form with
-    streaming geo RELATIONS).
+    geo_stream.tile_pager_stage (per-tile pager with the bucketless
+    sentinel fallback in one stateful op, the same stage GeoStreamJob
+    runs; its relations stream out through GeoRelTee).
 
     Children: ``basic`` (per-parent page-counter state), ``subject``
     (stateless map + first-seen tags), ``substring`` (TrieStage with
@@ -631,6 +433,7 @@ def stages_from_spec(spec) -> list:
     from pyspark.sql import functions as F
 
     from bucketizers_spark.config import JobSpec, spec_from_dict
+    from bucketizers_spark.streaming.geo_stream import tile_pager_stage
     from bucketizers_spark.streaming.stateful import (
         paged_stream,
         subject_page_stream,
@@ -715,13 +518,13 @@ def stages_from_spec(spec) -> list:
                     )
                 )
             elif sub.strategy == "geospatial":
-                # one stateful op incl. the bucketless sentinel fallback
-                # (see _geo_stage); relations stream incrementally from
-                # the staged flags (relations_from_spec → GeoRelTee,
-                # the same versioned root→column dedup the standalone
-                # GeoStreamJob runs per batch)
+                # one stateful op incl. the bucketless sentinel fallback;
+                # relations stream incrementally from the staged flags
+                # (relations_from_spec → GeoRelTee)
                 stages.append(
-                    lambda s, c=sub: _geo_stage(s, c, with_parent=False)
+                    lambda s, c=sub: tile_pager_stage(
+                        s, c.column, zoom=c.zoom, page_size=c.page_size
+                    )
                 )
             else:
                 raise NotImplementedError(
@@ -778,7 +581,10 @@ def stages_from_spec(spec) -> list:
                 stages.append(subj_child)
             elif sub.strategy == "geospatial":
                 stages.append(
-                    lambda s, c=sub: _geo_stage(s, c, with_parent=True)
+                    lambda s, c=sub: tile_pager_stage(
+                        s, c.column, zoom=c.zoom, page_size=c.page_size,
+                        with_parent=True,
+                    )
                 )
             elif sub.strategy == "substring":
                 # per-parent trie child as a job stage: the cascade with
@@ -830,11 +636,11 @@ def relations_from_spec(spec) -> list:
       staged output at read time (see BatchDerivedRelations for why it
       cannot stream).
     - ``geospatial`` (stage 0 or child): GeoRelTee — an incremental
-      foreachBatch tee over the staged flags+leaf columns: column →
-      leaf-page and bucketless links per is_new_page row, root/parent →
-      column deduped across batches with a versioned emitted-columns
-      table (the GeoStreamJob pattern), so relations stream out without
-      rescanning the staged output.
+      foreachBatch tee over the staged pager rows running
+      geo_stream.batch_relations (column → leaf-page and bucketless
+      links per is_new_page row, root/parent → column deduped across
+      batches with a versioned emitted-columns table), so relations
+      stream out without rescanning the staged output.
     - others: None (substring relations — stage 0 or child — live in
       TrieStage's job sink and surface via read_relations(); sliding
       children have no relations in batch either)."""

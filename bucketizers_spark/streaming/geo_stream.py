@@ -1,24 +1,29 @@
 """Streaming geospatial bucketizer (S4 streaming form).
 
-Reference
-(/root/reference/packages/bucketizer-geospatial/lib/GeospatialBucketizer.ts:58-114):
-per-tile page counters (``tilesMap``: tile → [page, counter]) filled in
-arrival order; a GeospatiallyContains relation per new page; root →
-column emitted once per column with the FIRST tile's bbox.
+Reference (GeospatialBucketizer.ts:58-114): per-tile page counters
+(``tilesMap``: tile → [page, counter]) filled in arrival order; a
+GeospatiallyContains relation per new page; root → column emitted once
+per column with the FIRST tile's bbox. Members the tiler cannot place
+(non-WKT, NULL, pole latitude) page through the bucketless fallback
+(BucketizerCore.ts:294-309, 383-393).
 
-Streaming realization:
-- stage 0 (stateless, JVM): WKT → distinct integer tiles
-  (operators/geospatial.tile_array_col) → posexplode; non-WKT / poles
-  route to the fallback side-output exactly like the batch op.
-- stage 1 (keyed state): ``applyInPandasWithState`` keyed by tile leaf;
-  state = lifetime member count. Page = idx // page_size is a pure
-  function of the count, so the kernel is one numpy arange per batch —
-  no per-row Python. Rows carry ``is_new_tile`` / ``is_new_page`` flags,
-  from which the relation events derive statelessly
-  (``relations_from_flags``): new-page rows are the column → leaf-page
-  relations; the first new-tile row per column is the root → column
-  relation (exactly once across the stream because a tile is new only
-  once, and the column's first tile is new in exactly one batch).
+Streaming realization, one path for the standalone ``GeoStreamJob`` and
+the composed geo stages (streaming/compose.py):
+
+- ``tile_pager_stage`` (the one stateful operator): WKT → distinct
+  integer tiles (operators/geospatial.tile_array_col) → posexplode;
+  unplaceable rows take the ``bucketless`` sentinel leaf. One
+  ``applyInPandasWithState`` keyed by (parent?, leaf) holds the lifetime
+  member count. Page = idx // page_size is a pure function of the count,
+  so the kernel is one numpy arange per batch — no per-row Python. Rows
+  carry ``is_new_tile`` / ``is_new_page`` flags; the sentinel leaf's
+  pages are ``bucketless-N``, the batch fallback pager's naming.
+- ``batch_relations``: one micro-batch's relation rows, derived from the
+  flags: column → leaf-page per new-page row, root → bucketless-N per new
+  fallback page, and root → column per column's first new-tile row. The
+  last is the only cross-batch fact (a column's second tile can be new in
+  a later batch), so it is deduped with a versioned emitted-columns table
+  (sinks/idempotent.VersionedTable, ``columns/v=<batch_id>/``).
 
 Like the other keyed-state kernels, tile state lives forever (the
 reference never evicts tilesMap); tile cardinality is bounded by 4^zoom.
@@ -26,6 +31,7 @@ reference never evicts tilesMap); tile cardinality is bounded by 4^zoom.
 
 from __future__ import annotations
 
+import os
 from typing import Iterable
 
 import numpy as np
@@ -35,19 +41,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from bucketizers_spark.operators.geospatial import tile_array_col, tile_bbox_wkt
+from bucketizers_spark.operators.geospatial import bbox_col, tile_array_col
+from bucketizers_spark.sinks.idempotent import IdempotentParquetSink, VersionedTable
 
 _PAGER_STATE = T.StructType([T.StructField("cnt", T.LongType())])
+_COLUMNS_SCHEMA = T.StructType([T.StructField("column", T.StringType())])
 
 
-def _make_tile_pager_fn(page_size: int, seq_col: str):
+def _make_tile_pager_fn(page_size: int):
     def fn(
         key, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
         cnt = state.get[0] if state.exists else 0
         pdf = pd.concat(list(pdfs), ignore_index=True)
         if len(pdf):
-            pdf = pdf.sort_values([seq_col, "_tpos"]).reset_index(drop=True)
+            pdf = pdf.sort_values(["seq", "_tpos"]).reset_index(drop=True)
             idx = cnt + np.arange(len(pdf), dtype=np.int64)
             pdf["_page"] = idx // page_size
             pdf["is_new_tile"] = idx == 0
@@ -59,249 +67,196 @@ def _make_tile_pager_fn(page_size: int, seq_col: str):
     return fn
 
 
-def geospatial_assign_stream(
+def tile_pager_stage(
     stream_df: DataFrame,
     value_col: str,
     *,
     zoom: int = 4,
     page_size: int = 50,
-    seq_col: str = "seq",
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (assignments, unmatched): the member stream with
-    ``bucket_id`` (= leaf-page) plus the new-tile/new-page flags, and the
-    fallback side-output stream (non-WKT / pole rows) for the caller to
-    route through the bucketless pager."""
-    payload_cols = stream_df.columns
-    work = stream_df.withColumn("_tiles", tile_array_col(value_col, zoom))
+    with_parent: bool = False,
+) -> DataFrame:
+    """The member stream with ``bucket_id`` (``z/x/y-page``, or
+    ``bucketless-page`` for rows the tiler cannot place) plus the pager's
+    ``_leaf``/``_page`` and flag columns. ``with_parent`` is the compose
+    child form: the incoming ``bucket_id`` becomes ``_parent``, counters
+    are per (parent, tile) and bucket ids are parent-prefixed
+    (operators/multi.geo_within_parent). Tiles and the sentinel page in
+    one stateful operator, so the stage composes like any other."""
+    work = stream_df.drop("_parent", "_wstart", "is_first")
+    if with_parent:
+        work = work.withColumnRenamed("bucket_id", "_parent")
+    work = work.withColumn("_tiles", tile_array_col(value_col, zoom))
     bad = F.exists(F.col("_tiles"), lambda t: t["y"].isNull())
     # null-safe (see operators/geospatial): NULL values must route
-    # to unmatched, not vanish in three-valued logic
-    is_matched = F.coalesce((F.size("_tiles") > 0) & ~bad, F.lit(False))
-    unmatched = work.where(~is_matched).drop("_tiles")
-    exploded = (
-        work.where(is_matched)
-        .select(*payload_cols, F.posexplode("_tiles").alias("_tpos", "_t"))
+    # to the bucketless sentinel, not vanish in three-valued logic
+    matched = F.coalesce((F.size("_tiles") > 0) & ~bad, F.lit(False))
+    payload = [col for col in work.columns if col != "_tiles"]
+    tiles = (
+        work.where(matched)
+        .select(*payload, F.posexplode("_tiles").alias("_tpos", "_t"))
         .withColumn(
             "_leaf",
             F.concat_ws("/", F.lit(str(zoom)), F.col("_t.x"), F.col("_t.y")),
         )
         .drop("_t")
     )
+    fb = (
+        work.where(~matched)
+        .drop("_tiles")
+        .withColumn("_tpos", F.lit(0))
+        .withColumn("_leaf", F.lit("bucketless"))
+    )
+    both = tiles.unionByName(fb)
     out_schema = T.StructType(
-        [f for f in exploded.schema.fields]
+        list(both.schema.fields)
         + [
             T.StructField("_page", T.LongType()),
             T.StructField("is_new_tile", T.BooleanType()),
             T.StructField("is_new_page", T.BooleanType()),
         ]
     )
-    flagged = exploded.groupBy("_leaf").applyInPandasWithState(
-        _make_tile_pager_fn(page_size, seq_col),
+    keys = ["_parent", "_leaf"] if with_parent else ["_leaf"]
+    flagged = both.groupBy(*keys).applyInPandasWithState(
+        _make_tile_pager_fn(page_size),
         outputStructType=out_schema,
         stateStructType=_PAGER_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    assignments = flagged.withColumn(
-        "bucket_id", F.concat(F.col("_leaf"), F.lit("-"), F.col("_page"))
-    )
-    return assignments, unmatched
+    bucket = F.concat(F.col("_leaf"), F.lit("-"), F.col("_page"))
+    if with_parent:
+        bucket = F.concat(F.col("_parent"), F.lit("/"), bucket)
+    return flagged.withColumn("bucket_id", bucket)
 
 
-def relations_from_flags(
-    flagged: DataFrame, *, root: str = "root", seq_col: str = "seq"
+def emitted_columns(state_dir: str) -> VersionedTable:
+    """The versioned emitted-columns table under ``state_dir``."""
+    return VersionedTable(os.path.join(state_dir, "columns"), _COLUMNS_SCHEMA)
+
+
+def batch_relations(
+    flagged: DataFrame,
+    columns: VersionedTable,
+    batch_id: int,
+    *,
+    root: str = "root",
+    with_parent: bool = False,
 ) -> DataFrame:
-    """Derive the relation events from the flagged assignment rows: one
-    column → leaf-page per is_new_page row; one root → column per column,
-    carried by its earliest new-tile row. The bbox zoom comes from the
-    leaf path itself ('z/x/y'). Exact over the WHOLE flagged set (batch
-    mode); per micro-batch the root → column rows need the cross-batch
-    dedup GeoStreamJob keeps (a column whose second tile is first seen in
-    a later batch would re-emit)."""
-    from pyspark.sql.functions import pandas_udf
-
+    """Relation rows (RELATIONS_SCHEMA) of one micro-batch of pager
+    output. New pages ride the ``is_new_page`` flag, which the keyed
+    pager sets exactly once per page across the stream. Root (or parent)
+    → column rows are anti-joined with the newest ``columns`` version
+    below ``batch_id``, and version ``batch_id`` is written here, BEFORE
+    the caller commits the returned rows: a replay recomputes from the
+    same earlier version and overwrites its own. ``flagged`` is read
+    several times; the caller persists it."""
     from bucketizers_spark.operators.core import relation_row
 
-    @pandas_udf("string")
-    def bbox_of(leaf: pd.Series) -> pd.Series:
-        def one(s: str) -> str:
-            _, xs, ys = s.split("/")
-            return tile_bbox_wkt(int(xs), int(ys), int(s.split("/")[0]))
-
-        return leaf.map(one)
-
-    column = F.regexp_replace(F.col("_leaf"), r"/[^/]+$", "")
-    pages = flagged.where(F.col("is_new_page")).withColumn(
-        "_bbox", bbox_of(F.col("_leaf"))
+    matched = flagged.where(F.col("_leaf") != "bucketless")
+    fb = flagged.where(F.col("_leaf") == "bucketless")
+    raw_col = F.regexp_replace(F.col("_leaf"), r"/[^/]+$", "")
+    if with_parent:
+        column = F.concat(F.col("_parent"), F.lit("/"), raw_col)
+        up = F.col("_parent")
+    else:
+        column = raw_col
+        up = F.lit(root)
+    new_pages = matched.where(F.col("is_new_page")).withColumn(
+        "_bbox", bbox_col(F.col("_leaf"))
     )
-    column_rels = pages.select(
+    column_rels = new_pages.select(
         *relation_row(
             column,
             "GeospatiallyContains",
-            F.concat(F.col("_leaf"), F.lit("-"), F.col("_page")),
+            F.col("bucket_id"),
             values=F.array(F.col("_bbox")),
-            seq=F.col(seq_col),
+            seq=F.col("seq"),
         )
     )
-    firsts = (
-        flagged.where(F.col("is_new_tile"))
-        .withColumn("_col", column)
-        .groupBy("_col")
+    root_rels = (
+        matched.where(F.col("is_new_tile"))
+        .withColumn("_column", column)
+        .groupBy(*(["_parent"] if with_parent else []), "_column")
         .agg(
-            F.min(seq_col).alias("created_at_seq"),
-            # (seq, _tpos): a member's tiles share seq — pair order
-            # breaks the tie like the reference's tilesMap walk
+            F.min("seq").alias("created_at_seq"),
+            # (seq, _tpos): pair order breaks same-member seq ties
             F.min_by(
-                "_leaf", F.struct(F.col(seq_col), F.col("_tpos"))
+                "_leaf", F.struct(F.col("seq"), F.col("_tpos"))
             ).alias("_first_leaf"),
         )
-        .withColumn("_bbox", bbox_of(F.col("_first_leaf")))
-    )
-    root_rels = firsts.select(
-        *relation_row(
-            F.lit(root),
-            "GeospatiallyContains",
-            F.col("_col"),
-            values=F.array(F.col("_bbox")),
-            seq=F.col("created_at_seq"),
+        .withColumn("_bbox", bbox_col(F.col("_first_leaf")))
+        .select(
+            *relation_row(
+                up,
+                "GeospatiallyContains",
+                F.col("_column"),
+                values=F.array(F.col("_bbox")),
+                seq=F.col("created_at_seq"),
+            )
         )
     )
-    return column_rels.unionByName(root_rels)
+    fb_rels = fb.where(F.col("is_new_page")).select(
+        *relation_row(up, "Relation", F.col("bucket_id"), seq=F.col("seq"))
+    )
+    emitted = columns.latest(flagged.sparkSession, batch_id)
+    if emitted is not None:
+        root_rels = root_rels.join(
+            emitted.withColumnRenamed("column", "to_bucket"),
+            "to_bucket",
+            "left_anti",
+        )
+    # new columns are distinct (one group each) and absent from `emitted`
+    new_cols = root_rels.select(F.col("to_bucket").alias("column"))
+    columns.write(
+        new_cols if emitted is None else emitted.unionByName(new_cols),
+        batch_id,
+    )
+    return column_rels.unionByName(root_rels).unionByName(fb_rels)
 
 
 class GeoStreamJob:
-    """foreachBatch shell around the flagged assignment stream: idempotent
-    assignment + relation sinks, with a versioned emitted-columns table
-    (same transactional pattern as TrieStreamJob: state version written
-    BEFORE the sink manifest commit; a replayed batch recomputes from the
-    previous version and overwrites its own idempotently) so the
-    root → column relation is emitted exactly once per column across the
-    stream's lifetime."""
+    """The standalone geo stream: ``start`` runs ``tile_pager_stage``
+    over the raw member stream into a foreachBatch shell that writes each
+    batch's ``batch_relations`` to ``<sink_root>/_relations`` and its
+    assignments — tile pages and bucketless-N fallback pages alike — to
+    ``<sink_root>``, both idempotent sinks (batch route_with_fallback
+    parity). The emitted-columns state lives in ``<state_dir>/columns``
+    and is written before either sink commits, so a replayed batch
+    recomputes and overwrites its own output (cf. TrieStreamJob)."""
 
     def __init__(self, sink_root: str, state_dir: str, *, zoom: int = 4,
-                 root: str = "root", seq_col: str = "seq"):
-        import os
-
-        from bucketizers_spark.sinks.idempotent import IdempotentParquetSink
-
+                 root: str = "root"):
         self.sink = IdempotentParquetSink(sink_root)
         self.rel_sink = IdempotentParquetSink(os.path.join(sink_root, "_relations"))
-        self.fb_sink = IdempotentParquetSink(os.path.join(sink_root, "_fallback"))
-        self.state_dir = state_dir
+        self.columns = emitted_columns(state_dir)
         self.zoom = zoom
         self.root = root
-        self.seq_col = seq_col
-        os.makedirs(os.path.join(state_dir, "columns"), exist_ok=True)
-
-    def _emitted_columns(self, spark, before_batch: int):
-        import glob
-        import os
-
-        versions = sorted(
-            int(os.path.basename(p).split("=")[1])
-            for p in glob.glob(os.path.join(self.state_dir, "columns", "v=*"))
-            if os.path.exists(os.path.join(p, "_SUCCESS"))
-        )
-        versions = [v for v in versions if v < before_batch]
-        if not versions:
-            return None
-        return spark.read.parquet(
-            os.path.join(self.state_dir, "columns", f"v={versions[-1]}")
-        )
 
     def process_batch(self, flagged: DataFrame, batch_id: int):
-        import os
-
-        spark = flagged.sparkSession
         if batch_id in self.sink.committed_batches():
             return
         flagged = flagged.persist()
-        rels = relations_from_flags(
-            flagged, root=self.root, seq_col=self.seq_col
+        rels = batch_relations(flagged, self.columns, batch_id, root=self.root)
+        self.rel_sink.write_batch(rels, batch_id)
+        self.sink.write_batch(
+            flagged.drop("_tpos", "is_new_tile", "is_new_page"), batch_id
         )
-        emitted = self._emitted_columns(spark, batch_id)
-        if emitted is not None:
-            root_rels = rels.where(F.col("from_bucket") == self.root).join(
-                emitted.withColumnRenamed("column", "to_bucket"),
-                "to_bucket",
-                "left_anti",
-            )
-        else:
-            root_rels = rels.where(F.col("from_bucket") == self.root)
-        rels_out = rels.where(F.col("from_bucket") != self.root).unionByName(
-            root_rels
-        ).persist()
-        new_cols = root_rels.select(F.col("to_bucket").alias("column"))
-        all_cols = (
-            new_cols
-            if emitted is None
-            else emitted.unionByName(new_cols).distinct()
-        )
-        # state BEFORE the sink manifest commit (cf. TrieStreamJob)
-        all_cols.write.mode("overwrite").parquet(
-            os.path.join(self.state_dir, "columns", f"v={batch_id}")
-        )
-        self.rel_sink.write_batch(rels_out, batch_id)
-        assignments = flagged.withColumn(
-            "bucket_id", F.concat(F.col("_leaf"), F.lit("-"), F.col("_page"))
-        ).drop("is_new_tile", "is_new_page", "_tpos")
-        self.sink.foreach_batch()(assignments, batch_id)
-        rels_out.unpersist()
         flagged.unpersist()
 
-    def start(self, flagged_stream: DataFrame, checkpoint_dir: str):
+    def start(
+        self,
+        stream_df: DataFrame,
+        value_col: str,
+        checkpoint_dir: str,
+        *,
+        page_size: int = 50,
+    ):
+        flagged = tile_pager_stage(
+            stream_df, value_col, zoom=self.zoom, page_size=page_size
+        )
         return (
-            flagged_stream.writeStream.foreachBatch(self.process_batch)
+            flagged.writeStream.foreachBatch(self.process_batch)
             .option("checkpointLocation", checkpoint_dir)
             .outputMode("append")
             .start()
         )
-
-    def start_with_fallback(
-        self,
-        stream_df: DataFrame,
-        value_col: str,
-        checkpoint_root: str,
-        *,
-        page_size: int = 50,
-    ):
-        """Front door matching the batch pipeline's automatic routing
-        (pipeline.route_with_fallback / _build_geospatial): splits the raw
-        member stream itself, runs the tile pager on matched rows and the
-        bucketless pager (stateful.fallback_stream) on the non-WKT / pole
-        side-output — streaming callers no longer hand-wire the unmatched
-        stream (reference behavior: BucketizerCore.ts:294-309 routes
-        bad-datatype members automatically). Returns the two queries;
-        combined output via read_assignments()."""
-        import os
-
-        from bucketizers_spark.streaming.stateful import fallback_stream
-
-        flagged, unmatched = geospatial_assign_stream(
-            stream_df, value_col, zoom=self.zoom,
-            page_size=page_size, seq_col=self.seq_col,
-        )
-        q_main = self.start(flagged, os.path.join(checkpoint_root, "geo"))
-        fb = fallback_stream(
-            unmatched, page_size=page_size, seq_col=self.seq_col
-        )
-        q_fb = (
-            fb.writeStream.foreachBatch(self.fb_sink.foreach_batch())
-            .option(
-                "checkpointLocation", os.path.join(checkpoint_root, "fallback")
-            )
-            .outputMode("append")
-            .start()
-        )
-        return q_main, q_fb
-
-    def read_assignments(self, spark):
-        """All assignment rows — tile pages plus bucketless fallback pages
-        (the batch route_with_fallback union)."""
-        main = self.sink.read_all(spark)
-        try:
-            fb = self.fb_sink.read_all(spark)
-        except FileNotFoundError:  # no unmatched rows ever arrived
-            return main
-        common = [c for c in main.columns if c in set(fb.columns)]
-        return main.select(common).unionByName(fb.select(common))

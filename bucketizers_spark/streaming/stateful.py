@@ -258,49 +258,6 @@ def paged_stream(
     )
 
 
-def fallback_stream(
-    stream_df: DataFrame,
-    *,
-    page_size: int = 50,
-    seq_col: str = "seq",
-) -> DataFrame:
-    """Streaming bucketless pager for the no-match side-output
-    (``bucketless-N``, BucketizerCore.ts:294-309 + the dedicated
-    bucketlessPageMemberCounter :383-393). One page counter in keyed
-    state under a single constant key: the fallback stream is the
-    error/no-match slice — small by construction; matched members never
-    pass through it, so the single key is not a throughput bound."""
-    fields = [f for f in stream_df.schema.fields if f.name != "bucket_id"]
-    out_schema = T.StructType(
-        fields + [T.StructField("bucket_id", T.StringType())]
-    )
-    names = [f.name for f in fields]
-
-    def fn(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        cnt = state.get[0] if state.exists else 0
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf):
-            pdf = pdf.sort_values(seq_col).reset_index(drop=True)
-            pages = (cnt + np.arange(len(pdf))) // page_size
-            yield pdf[names].assign(
-                bucket_id=[f"bucketless-{p}" for p in pages]
-            )
-            cnt += len(pdf)
-        state.update((int(cnt),))
-
-    return (
-        stream_df.withColumn("_fbk", F.lit(0))
-        .groupBy("_fbk")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=_PAGER_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def first_seen_tag(stream_df: DataFrame, key_col: str = "bucket_id") -> DataFrame:
     """Tag each ``key_col`` group's first arrival (by seq) with
     ``is_first`` via keyed boolean state — the reusable half of

@@ -11,11 +11,12 @@ exactly-once replay (a replayed batch recomputes from the *pre-batch*
 counter snapshot, versioned per batch id).
 
 Counter-table layout: ``<state_dir>/counters/v=<batch_id>/`` holds one
-parquet file of (node, cnt). Batch k reads the latest committed version
-< k, runs the state-aware cascade (operators/substring.py), writes version
-k. Replay of batch k rereads version k-1 → identical output. Chunked
-seq-ordered input (sources/stream.py) makes the result byte-equal to the
-batch cascade over the concatenated stream — pytest-pinned.
+parquet file of (node, cnt) (sinks/idempotent.VersionedTable). Batch k
+reads the latest committed version < k, runs the state-aware cascade
+(operators/substring.py), writes version k. Replay of batch k rereads
+version k-1 → identical output. Chunked seq-ordered input
+(sources/stream.py) makes the result byte-equal to the batch cascade over
+the concatenated stream — pytest-pinned.
 
 Per-batch cost: the cascade emits each touched node's post-batch count
 as a narrow select over its level's lineage-cut frame, untouched nodes
@@ -38,10 +39,9 @@ join instead of a broadcast.
 
 from __future__ import annotations
 
-import glob
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bucketizers_spark.operators.substring import (
@@ -49,7 +49,7 @@ from bucketizers_spark.operators.substring import (
     substring_trie,
     token_prefix_trie,
 )
-from bucketizers_spark.sinks.idempotent import IdempotentParquetSink
+from bucketizers_spark.sinks.idempotent import IdempotentParquetSink, VersionedTable
 
 
 class TrieStreamJob:
@@ -69,7 +69,6 @@ class TrieStreamJob:
     ):
         self.sink = IdempotentParquetSink(sink_root)
         self.rel_sink = IdempotentParquetSink(os.path.join(sink_root, "_relations"))
-        self.state_dir = state_dir
         self.mode = mode
         self.value_col = value_col
         self.page_size = page_size
@@ -85,25 +84,9 @@ class TrieStreamJob:
         # at which the grouped walk finishes the batch — same as batch
         self.salt_buckets = salt_buckets
         self.tail_threshold = tail_threshold
-        os.makedirs(os.path.join(state_dir, "counters"), exist_ok=True)
-
-    # -- counter versions ---------------------------------------------------
-    def _latest_counters(self, spark: SparkSession, before_batch: int):
-        versions = sorted(
-            int(os.path.basename(p).split("=")[1])
-            for p in glob.glob(os.path.join(self.state_dir, "counters", "v=*"))
-            if os.path.exists(os.path.join(p, "_SUCCESS"))
+        self.counters = VersionedTable(
+            os.path.join(state_dir, "counters"), COUNTER_SCHEMA
         )
-        versions = [v for v in versions if v < before_batch]
-        if not versions:
-            return None
-        path = os.path.join(self.state_dir, "counters", f"v={versions[-1]}")
-        # the schema is known: no per-batch footer-inference job
-        return spark.read.schema(COUNTER_SCHEMA).parquet(path)
-
-    def _write_counters(self, updates: DataFrame, batch_id: int):
-        path = os.path.join(self.state_dir, "counters", f"v={batch_id}")
-        updates.coalesce(1).write.mode("overwrite").parquet(path)
 
     # -- the micro-batch handler --------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int):
@@ -114,7 +97,7 @@ class TrieStreamJob:
         # counter writes); without caching, each one re-scans the batch
         # source (observed 8x input re-reads via StreamingQueryProgress)
         batch_df = batch_df.persist()
-        state = self._latest_counters(spark, batch_id)
+        state = self.counters.latest(spark, batch_id)
         if self.parent_col is not None:
             from bucketizers_spark.operators.multi import trie_within_parent
 
@@ -161,10 +144,10 @@ class TrieStreamJob:
         # would otherwise leave the batch permanently committed (replay
         # returns early at committed_batches) while batch_id+1 still reads
         # v=batch_id-1 state — over-filling trie nodes on recovery. Writing
-        # counters first is safe because _latest_counters only reads
+        # counters first is safe because counters.latest only reads
         # versions < batch_id, so a replayed batch recomputes from v-1 and
         # overwrites v=batch_id idempotently.
-        self._write_counters(updates, batch_id)
+        self.counters.write(updates, batch_id)
         self.rel_sink.write_batch(res.relations, batch_id)
         self.sink.write_batch(res.assignments, batch_id)
         batch_df.unpersist()

@@ -87,7 +87,6 @@ def steady_trie(spark, workdir):
     batch and the listener's progress records."""
     root = os.path.join(workdir, "trie")
     chunks = os.path.join(root, "chunks")
-    staging = os.path.join(root, "staging")
     pdf = token_stream_pdf(1200, seed=42)
     listener = QueryMetricsListener(os.path.join(root, "metrics"))
 
@@ -103,14 +102,9 @@ def steady_trie(spark, workdir):
         }
 
     def run_batch(k):
-        # stage_chunks pins the file's mtime after writing it; a listing in
-        # between would see the current time, and the source would then
-        # skip every later chunk as older than maxFileAge. Move the file in
-        # whole, with its final mtime (rename keeps it).
-        (path,) = stage_chunks(
-            pdf.iloc[400 * k : 400 * (k + 1)], staging, n_chunks=1, start_index=k
+        stage_chunks(
+            pdf.iloc[400 * k : 400 * (k + 1)], chunks, n_chunks=1, start_index=k
         )
-        os.rename(path, os.path.join(chunks, os.path.basename(path)))
         # processAllAvailable can return before a trigger lists the new
         # file (a trigger that found nothing may finish after the call),
         # so call it until the batch's progress reaches the listener

@@ -1495,10 +1495,7 @@ class TestGeospatialStream:
         import pandas as pd
 
         from bucketizers_spark.operators.geospatial import geospatial_tiles
-        from bucketizers_spark.streaming.geo_stream import (
-            GeoStreamJob,
-            geospatial_assign_stream,
-        )
+        from bucketizers_spark.streaming.geo_stream import GeoStreamJob
 
         import random
 
@@ -1523,13 +1520,10 @@ class TestGeospatialStream:
             .option("latestFirst", "false")
             .parquet(chunk_dir)
         )
-        flagged, _unmatched = geospatial_assign_stream(
-            stream, "value", zoom=4, page_size=7
-        )
         job = GeoStreamJob(
             os.path.join(workdir, "sink"), os.path.join(workdir, "state"), zoom=4
         )
-        q = job.start(flagged, os.path.join(workdir, "ckpt"))
+        q = job.start(stream, "value", os.path.join(workdir, "ckpt"), page_size=7)
         q.processAllAvailable()
         q.stop()
 
@@ -1558,15 +1552,12 @@ class TestGeospatialStream:
         roots = [r for r in got_rels if r[0] == "root"]
         assert len(roots) == len({r[2] for r in roots})
 
-    def test_fallback_autoroute_matches_batch(self, spark, workdir):
-        """start_with_fallback must route non-WKT rows into bucketless-N
-        pages automatically (streaming == batch route_with_fallback;
-        reference auto-fallback: BucketizerCore.ts:294-309,
-        GeospatialBucketizer.test.ts:140-158)."""
+    @staticmethod
+    def _run_with_non_wkt(spark, workdir):
+        """The rng-29 stream (every fifth row non-WKT) through a
+        GeoStreamJob at page size 7; returns (job, input pdf)."""
         import pandas as pd
 
-        from bucketizers_spark.operators.basic import fallback_pager
-        from bucketizers_spark.operators.geospatial import geospatial_tiles
         from bucketizers_spark.streaming.geo_stream import GeoStreamJob
 
         import random
@@ -1592,17 +1583,23 @@ class TestGeospatialStream:
         job = GeoStreamJob(
             os.path.join(workdir, "sink"), os.path.join(workdir, "state"), zoom=4
         )
-        q_main, q_fb = job.start_with_fallback(
-            stream, "value", os.path.join(workdir, "ckpt"), page_size=7
-        )
-        q_main.processAllAvailable()
-        q_fb.processAllAvailable()
-        q_main.stop()
-        q_fb.stop()
+        q = job.start(stream, "value", os.path.join(workdir, "ckpt"), page_size=7)
+        q.processAllAvailable()
+        q.stop()
+        return job, pdf
 
+    def test_fallback_autoroute_matches_batch(self, spark, workdir):
+        """The job must route non-WKT rows into bucketless-N pages
+        automatically (streaming == batch route_with_fallback; reference
+        auto-fallback: BucketizerCore.ts:294-309,
+        GeospatialBucketizer.test.ts:140-158)."""
+        from bucketizers_spark.operators.basic import fallback_pager
+        from bucketizers_spark.operators.geospatial import geospatial_tiles
+
+        job, pdf = self._run_with_non_wkt(spark, workdir)
         got = {
             (r.seq, r.bucket_id)
-            for r in job.read_assignments(spark).select("seq", "bucket_id").collect()
+            for r in job.sink.read_all(spark).select("seq", "bucket_id").collect()
         }
         batch_df = spark.createDataFrame(pdf, "seq long, value string")
         res = geospatial_tiles(batch_df, "value", zoom=4, page_size=7)
@@ -1614,13 +1611,44 @@ class TestGeospatialStream:
         # the unmatched slice really landed in bucketless pages
         assert any(b.startswith("bucketless-") for _, b in got)
 
+    def test_fallback_relations_match_batch(self, spark, workdir):
+        """The job's relations over a stream with non-WKT rows equal
+        batch route_with_fallback's, root → bucketless-N included
+        (BucketizerCore.ts:383-393: every new bucketless page gets a
+        Relation from the root)."""
+        from bucketizers_spark.pipeline import route_with_fallback
+
+        job, pdf = self._run_with_non_wkt(spark, workdir)
+
+        def key(r):
+            return (
+                r["from_bucket"],
+                r["relation_type"],
+                r["to_bucket"],
+                tuple(r["values"] or []),
+                r["created_at_seq"],
+            )
+
+        got_list = [key(r) for r in job.rel_sink.read_all(spark).collect()]
+        batch_df = spark.createDataFrame(pdf, "seq long, value string")
+        spec = {
+            "strategy": "geospatial",
+            "column": "value",
+            "zoom": 4,
+            "page_size": 7,
+        }
+        want = {key(r) for r in route_with_fallback(batch_df, spec).relations.collect()}
+        assert set(got_list) == want
+        assert len(got_list) == len(want)
+        assert any(
+            f == "root" and t == "Relation" and to.startswith("bucketless-")
+            for f, t, to, *_ in want
+        )
+
     def test_replay_is_idempotent(self, spark, workdir):
         import pandas as pd
 
-        from bucketizers_spark.streaming.geo_stream import (
-            GeoStreamJob,
-            geospatial_assign_stream,
-        )
+        from bucketizers_spark.streaming.geo_stream import GeoStreamJob
 
         pdf = pd.DataFrame(
             [(i, f"POINT ({(i % 3) * 40 - 40} 10)") for i in range(60)],
@@ -1682,6 +1710,10 @@ class TestGeospatialStream:
                 df.withColumn("_page", (F.col("idx") / 7).cast("long"))
                 .withColumn("is_new_tile", F.col("idx") == 0)
                 .withColumn("is_new_page", F.col("idx") % 7 == 0)
+                .withColumn(
+                    "bucket_id",
+                    F.concat(F.col("_leaf"), F.lit("-"), F.col("_page")),
+                )
                 .drop("idx")
             )
 
@@ -1695,3 +1727,89 @@ class TestGeospatialStream:
         job.process_batch(flagged(rn1), 1)  # replay
         assert job.sink.read_all(spark).count() == once
         assert job.rel_sink.read_all(spark).count() == once_rels
+
+
+class TestStageChunks:
+    def test_mtime_pinned_before_chunk_is_visible(self, workdir, monkeypatch):
+        """A file stream listing the directory while chunks are staged
+        must never see a chunk before its mtime is pinned: every
+        ``os.utime`` runs on a hidden name while the final name is absent,
+        and the rename keeps the pinned mtime."""
+        import pandas as pd
+
+        out = os.path.join(workdir, "chunks")
+        seen = []
+        real_utime = os.utime
+
+        def spy(path, times):
+            visible = sorted(glob.glob(os.path.join(out, "chunk_*.parquet")))
+            seen.append(
+                (os.path.basename(path), [os.path.basename(p) for p in visible])
+            )
+            real_utime(path, times)
+
+        monkeypatch.setattr(os, "utime", spy)
+        pdf = pd.DataFrame({"seq": range(30), "value": ["x"] * 30})
+        paths = stage_chunks(pdf, out, n_chunks=3, start_index=4)
+
+        names = [f"chunk_{k:05d}.parquet" for k in (4, 5, 6)]
+        assert [os.path.basename(p) for p in paths] == names
+        for j, (pinned, visible) in enumerate(seen):
+            assert visible == names[:j]  # chunk j not published yet
+            assert pinned.startswith(".") and names[j] in pinned
+        assert len(seen) == 3
+        for k, p in zip((4, 5, 6), paths):
+            assert int(os.path.getmtime(p)) == 1_700_000_000 + k
+        assert sorted(os.listdir(out)) == names
+
+
+class TestVersionedTable:
+    def test_latest_skips_torn_and_later_versions(self, spark, workdir):
+        """``latest`` reads the newest version below the batch id that
+        has ``_SUCCESS``: a torn version (crash mid-write) and versions at
+        or above the batch id are skipped, so a replayed batch recomputes
+        from the previous version and rewrites its own as one file."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from bucketizers_spark.operators.substring import COUNTER_SCHEMA
+        from bucketizers_spark.sinks.idempotent import VersionedTable
+
+        table = VersionedTable(os.path.join(workdir, "counters"), COUNTER_SCHEMA)
+
+        def write(cnt, batch_id):
+            table.write(
+                spark.range(1).select(
+                    F.lit("root").alias("node"), F.lit(cnt).cast("long").alias("cnt")
+                ),
+                batch_id,
+            )
+
+        def read(before):
+            df = table.latest(spark, before)
+            return None if df is None else [tuple(r) for r in df.collect()]
+
+        assert read(5) is None
+        write(10, 0)
+        write(11, 1)
+        # batch 2 crashed mid-write: a data file, no _SUCCESS marker
+        torn = os.path.join(table.root, "v=2")
+        os.makedirs(torn)
+        pq.write_table(
+            pa.table({"node": ["root"], "cnt": pa.array([99], pa.int64())}),
+            os.path.join(torn, "part-00000.parquet"),
+        )
+        write(13, 3)
+
+        assert read(0) is None
+        assert read(1) == [("root", 10)]
+        assert read(2) == [("root", 11)]
+        assert read(3) == [("root", 11)]  # torn v=2 skipped
+        assert read(4) == [("root", 13)]
+
+        # batch 3 replayed: its own v=3 is at the batch id, so it
+        # recomputes from v=1 and overwrites v=3
+        prev = table.latest(spark, 3)
+        table.write(prev.withColumn("cnt", F.col("cnt") + 1), 3)
+        assert len(glob.glob(os.path.join(table.root, "v=3", "*.parquet"))) == 1
+        assert read(4) == [("root", 12)]
