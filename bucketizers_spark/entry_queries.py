@@ -3636,9 +3636,10 @@ def q_token_prefix_trie(spark, sf_dir):
 def q_multi_source_trie(spark, sf_dir):
     """Multi composition with a NON-basic child (S5): parent = the source
     column (a pre-assigned stage-1 bucket), child = a dedicated substring
-    trie per parent (operators/multi.trie_within_parent — exact reference
-    walk per parent group in one applyInPandas shuffle). Child buckets are
-    parent-prefixed; the child root collapses onto the parent."""
+    trie per parent (operators/multi.trie_within_parent — the trie cascade
+    keyed by parent; an input this size is walked from the parent roots in
+    one grouped applyInPandas shuffle). Child buckets are parent-prefixed;
+    the child root collapses onto the parent."""
     docs = _t(spark, sf_dir, "documents")
     # parent is pre-assigned (source column): no stage-1 shuffle needed
     out = trie_within_parent(
@@ -3653,21 +3654,21 @@ SQL_SUBSTRING_TRIE_RELATIONS = _trie_sql("char", _TRIE_PS, _TRIE_DEPTH, "relatio
 SQL_TOKEN_PREFIX_TRIE = _trie_sql("token", _TOK_PS, _TOK_DEPTH, "assignments")
 def q_multi_giant_parent_trie(spark, sf_dir):
     """S5 at the giant-parent scale point: same child-trie-per-parent
-    semantics as multi_source_trie, but forced onto the DISTRIBUTED
-    cascade keyed by (parent, node)
-    (operators/substring._run_cascade ``parent_col`` path) — the plan a
-    3-distinct-value parent column over 10^12 rows needs, where the
-    per-parent walk would put a whole parent's subtree in one Python task
-    (MultiBucketizer.ts:94-96 has no parent-size bound). Token mode
-    exercises the north-star payload (radix trie over leading token
-    n-grams); salt_buckets defuses the hot root-adjacent prefixes. Hash-
-    checked against the same level-unrolled per-parent oracle shape as
-    the walk path, so walk == cascade == oracle.
+    semantics as multi_source_trie over a 3-distinct-value parent column
+    (MultiBucketizer.ts:94-96 has no parent-size bound). Above
+    ``tail_threshold`` non-empty members the cascade's salted per-parent
+    root and distributed (parent, node) levels engage, so no task holds a
+    whole parent (tests/test_multi.py pins that path with
+    ``tail_threshold=0``); an input this size is walked from the parent
+    roots in one grouped shuffle. Token mode exercises the north-star
+    payload (radix trie over leading token n-grams); salt_buckets sets
+    the salts of the distributed levels. Hash-checked against the level-
+    unrolled per-parent oracle.
 
     The parent is DERIVED 3-valued (source id mod 3) and the token
     alphabet is 8 symbols with a tiny page size, so the fixture actually
     stresses the giant-parent regime: per-parent roots overflow at page 4
-    and the cascade runs multiple hot levels deep to the valve."""
+    and the trie runs multiple hot levels deep to the valve."""
     docs = _t(spark, sf_dir, "documents").withColumn(
         "parent3",
         F.concat(
@@ -3685,8 +3686,7 @@ def q_multi_giant_parent_trie(spark, sf_dir):
     )
     out = trie_within_parent(
         docs, "parent3", "tokens", mode="token",
-        page_size=4, max_depth=_TOK_DEPTH, seq_col="doc_id",
-        strategy="cascade", salt_buckets=8,
+        page_size=4, max_depth=_TOK_DEPTH, seq_col="doc_id", salt_buckets=8,
     )
     return out.assignments.select("doc_id", "bucket_id")
 

@@ -23,16 +23,16 @@ Child-stage catalogue:
   current root maps onto the parent bucket itself (mapTerm isRoot,
   ts:123-141), rotated roots become ``parent/root-N``.
 - ``trie_within_parent``: per-parent substring/token-prefix trie — the
-  exact per-member reference walk per parent group in one applyInPandas
-  shuffle (chain prep stays JVM-side); child node names become
-  ``parent/node`` and the child root maps onto the parent.
+  trie cascade keyed by parent (small inputs walked from the parent roots
+  in one grouped shuffle, large ones distributed by (parent, node)); child
+  node names become ``parent/node`` and the child root maps onto the
+  parent.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -42,7 +42,6 @@ from bucketizers_spark.operators.core import (
     empty_seals,
     relation_row,
 )
-from bucketizers_spark.plans.materialize import cut_lineage
 
 
 def paged_within_parent(
@@ -193,8 +192,6 @@ def trie_within_parent(
     seq_col: str = "seq",
     ascii_fast: bool = True,
     out_col: str = "bucket_id",
-    strategy: str = "auto",  # "auto" | "walk" | "cascade"
-    walk_rows_threshold: int = 250_000,
     salt_buckets: int = 0,
     tail_threshold: int = 100_000,
     node_state: DataFrame | None = None,
@@ -204,154 +201,41 @@ def trie_within_parent(
     instance per parent bucket, MultiBucketizer.ts:94-96). Child node names
     are prefixed ``parent/``; the child's root collapses onto the parent.
 
-    Two physical strategies, same semantics:
-
-    - ``walk``: the exact reference walk (operators/substring._walk incl.
-      the root-capacity phase) per parent group in ONE applyInPandas
-      shuffle. Chain preparation (normalize, candidate positions) stays
-      JVM-side on the slim working set; group size is the parent bucket's
-      member count. Right when parents are capacity-bounded stage-1
-      buckets (pager pages, subject pages).
-    - ``cascade``: the distributed level cascade keyed by (parent, node)
-      (operators/substring._run_cascade with ``parent_col``). No single
-      task ever holds a whole parent — the scale path for giant
-      low-cardinality parents (e.g. a 3-value blocking column over 10^12
-      rows), where the walk would put one parent's entire subtree in one
-      Python task.
-
-    ``auto`` picks per input: cascade when any parent exceeds
-    ``walk_rows_threshold`` members (one map-side-combined groupBy count on
-    the slim parent column — cheap next to either strategy's own work)."""
+    This is the trie cascade keyed by parent
+    (operators/substring._run_cascade with ``parent_col``): at most
+    ``tail_threshold`` non-empty members in all are walked from the
+    parent roots in one grouped shuffle; above it the salted per-parent
+    root and the (parent, node) levels run distributed until the rest
+    fits the walk, so no single task ever holds a whole giant parent.
+    ``node_state`` / ``emit_counter_updates`` carry the streaming
+    counters (see ``_run_cascade``)."""
     from bucketizers_spark.operators.substring import (
         _char_chain,
         _run_cascade,
         _token_chain,
-        _walk,
     )
 
-    spark = df.sparkSession
-    if node_state is not None or emit_counter_updates:
-        # carried counters (the streaming per-parent TrieStage) run on
-        # the cascade — its state plumbing is keyed parent\x1fnode (_PSEP); the
-        # plain walk path below has no state seam
-        strategy = "cascade"
-    if strategy == "auto":
-        mx_row = (
-            df.groupBy(parent_col)
-            .count()
-            .agg(F.max("count").alias("mx"))
-            .collect()
-        )
-        mx = mx_row[0]["mx"] or 0
-        strategy = "cascade" if mx > walk_rows_threshold else "walk"
-    if strategy == "cascade":
-        chain = (
-            _char_chain(value_col, ascii_fast, max_depth)
-            if mode == "char"
-            else _token_chain(value_col, max_depth)
-        )
-        res = _run_cascade(
-            df,
-            chain,
-            page_size=page_size,
-            root="",  # unused: the per-parent root is the parent itself
-            seq_col=seq_col,
-            max_depth=max_depth,
-            salt_buckets=salt_buckets,
-            tail_threshold=tail_threshold,
-            parent_col=parent_col,
-            node_state=node_state,
-            emit_counter_updates=emit_counter_updates,
-        )
-        assignments = res.assignments
-        if out_col != "bucket_id":
-            assignments = assignments.withColumnRenamed("bucket_id", out_col)
-        out = BucketizeResult(assignments, res.relations, res.seals)
-        if emit_counter_updates:
-            out.counter_updates = res.counter_updates
-        return out
     chain = (
         _char_chain(value_col, ascii_fast, max_depth)
         if mode == "char"
         else _token_chain(value_col, max_depth)
     )
-    slim_in = df.select(seq_col, parent_col, *chain.input_cols)
-    work = chain.slim(chain.prepare(slim_in))
-    py_nodes, sep = chain.py_nodes, chain.sep
-
-    # sentinel root name for the per-parent walk: root-collapse onto the
-    # parent is detected by comparing a relation's from_bucket with the
-    # root name, so the name must be impossible as a trie node ('\x00' can
-    # never appear in a normalized value or a dash-joined token key —
-    # a parent bucket literally named like a node, e.g. basic page "0"
-    # under token values, must NOT capture that node's subtree)
-    _ROOT = "\x00root"
-
-    def walk_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent = str(pdf[parent_col].iloc[0])
-        records = pdf.sort_values(seq_col).to_dict("records")
-        counters: dict[str, int] = {}
-        buckets: list[str | None] = []
-        relations: list[tuple] = []
-        # root-capacity phase (bucketCounterMap root seeded 0,
-        # SubstringBucketizer.ts:30-31): first page_size arrivals land in
-        # the child root = THE PARENT BUCKET; empties behave per ts:80-86
-        head: list[dict] = []
-        tail: list[dict] = []
-        root_cnt = 0
-        for r in records:
-            if int(r["_m"]) == 0:
-                # empty single-word child value → child bucket '' →
-                # mapped 'parent/'; multi-word separator-only → NO bucket
-                head.append(r)
-                buckets.append(None if bool(r["_multi"]) else f"{parent}/")
-            elif root_cnt < page_size:
-                root_cnt += 1
-                head.append(r)
-                buckets.append(parent)
-            else:
-                tail.append(r)
-        tail_buckets, tail_rels, _ = _walk(
-            tail, py_nodes, sep, 1, page_size, _ROOT, seq_col, max_depth,
-            counters,
-        )
-        # interleave: emit (seq, bucket) for all rows; prefix child nodes
-        out_rows = []
-        for r, b in zip(head, buckets):
-            out_rows.append((r[seq_col], b, "a", None, None))
-        for r, b in zip(tail, tail_buckets):
-            mapped = None if b is None else f"{parent}/{b}"
-            out_rows.append((r[seq_col], mapped, "a", None, None))
-        for frm, _typ, to, vals, _path, seq in tail_rels:
-            mapped_from = parent if frm == _ROOT else f"{parent}/{frm}"
-            out_rows.append((seq, f"{parent}/{to}", "r", mapped_from, list(vals)))
-        return pd.DataFrame(
-            out_rows, columns=[seq_col, "bucket_id", "kind", "from_bucket", "vals"]
-        )
-
-    out_schema = (
-        f"{seq_col} long, bucket_id string, kind string, "
-        "from_bucket string, vals array<string>"
+    res = _run_cascade(
+        df,
+        chain,
+        page_size=page_size,
+        root="",  # unused: the per-parent root is the parent itself
+        seq_col=seq_col,
+        max_depth=max_depth,
+        salt_buckets=salt_buckets,
+        tail_threshold=tail_threshold,
+        parent_col=parent_col,
+        node_state=node_state,
+        emit_counter_updates=emit_counter_updates,
     )
-    walked = (
-        work.groupBy(parent_col).applyInPandas(walk_group, out_schema)
-    ).transform(cut_lineage)
-    bucket_map = walked.where(F.col("kind") == "a").select(seq_col, "bucket_id")
-    assignments = df.join(bucket_map, seq_col, "inner").withColumnRenamed(
-        "bucket_id", out_col
-    )
-    relations = walked.where(F.col("kind") == "r").select(
-        *relation_row(
-            F.col("from_bucket"),
-            "Substring",
-            F.col("bucket_id"),
-            values=F.col("vals"),  # the walk's exact node split (a node
-            # name may itself contain '/', so re-deriving from bucket_id
-            # would be lossy)
-            seq=F.col(seq_col),
-        )
-    )
-    return BucketizeResult(assignments, relations, empty_seals(spark))
+    if out_col != "bucket_id":
+        res.assignments = res.assignments.withColumnRenamed("bucket_id", out_col)
+    return res
 
 
 def geo_within_parent(

@@ -44,6 +44,12 @@ Scale notes:
   whole residual trie finishes in ONE applyInPandas shuffle (grouped
   subtrie walk — no driver-side collect anywhere in the hot path);
   streaming counters are cogrouped into their subtrie groups.
+- Per parent (``parent_col``) the same rule applies one level earlier:
+  when the non-empty input itself is at most tail_threshold rows, the
+  salted per-parent root is skipped and one grouped walk keyed by the
+  parent alone runs each child trie from its seeded root (level 0),
+  carried parent-root counters included. The global trie keeps its
+  driver-side root threshold.
 - Hot-node skew: capacity placement only needs each node's (cap)-th
   smallest seq, so every distributed level is a salted two-phase
   threshold aggregate — per-(node, salt) top-cap candidate lists merged
@@ -278,11 +284,19 @@ def _walk(
 ):
     """The exact per-member arrival walk of the reference, starting at chain
     index ``level`` with ``counters`` seeded (mutated in place). Returns
-    (buckets, relations, touched-node set). ``records`` must be seq-sorted."""
+    (buckets, relations, touched-node set). ``records`` must be seq-sorted
+    and non-empty-valued. At ``level`` 0 the seeded root (counter
+    ``root``, SubstringBucketizer.ts:30-31) takes arrivals while it has
+    room; it never creates and never emits a relation."""
     buckets: list[str | None] = []
     relations: list[tuple] = []
     touched: set[str] = set()
     for row in records:
+        if level == 0 and counters.get(root, 0) < page_size:
+            counters[root] = counters.get(root, 0) + 1
+            touched.add(root)
+            buckets.append(root)
+            continue
         nodes = py_nodes(row)
         # TRUE chain length, not len(nodes): slim() caps the node list at
         # max_depth, and a member deeper than the cap must take the safety
@@ -291,7 +305,7 @@ def _walk(
         m = int(row["_m"])
         multi = bool(row["_multi"])
         seq = int(row[seq_col])
-        j = level
+        j = max(level, 1)
         bucket: str | None = None
         while True:
             if j > max_depth:
@@ -322,6 +336,15 @@ def _walk(
     return buckets, relations, touched
 
 
+# name of the seeded root inside a grouped walk: mapped back to the trie's
+# root (per parent: the bare parent id) before any row leaves the group,
+# so it never crosses the Arrow transfer, and it can never equal a node
+# ('\x00' never appears in a normalized value or a dash-joined token key;
+# a parent named like a node, e.g. basic page "0" over token values, must
+# not capture that node's subtree)
+_WALK_ROOT = "\x00root"
+
+
 def _grouped_walk(
     remaining: DataFrame,
     chain: _Chain,
@@ -336,22 +359,26 @@ def _grouped_walk(
 ) -> DataFrame:
     """Grouped exact walk: key the still-unplaced rows by their level-L
     candidate node and run the sequential reference walk per group in
-    applyInPandas. With ``parent_col`` the group key is (parent, node) —
-    one dedicated child-trie subtree per parent bucket
-    (MultiBucketizer.ts:94-96) — and emitted names are mapped
-    ``parent/node`` with the child root collapsing onto the parent. Correct because ALL capacity interactions at chain
+    applyInPandas. Correct because ALL capacity interactions at chain
     levels >= L happen strictly within the subtrie under each level-L
     node (a node's arrivals all share its level-L prefix), and arrivals
     at the level-L nodes themselves are exactly these rows. One shuffle
-    for the entire remaining trie. Returns a kinds frame
-    (kind 'a' assignment / 'r' relation / 'c' counter), lineage-truncated.
+    for the entire remaining trie. Returns a kinds frame (kind 'a'
+    assignment / 'r' relation / 'c' counter), lineage-truncated.
+
+    With ``parent_col`` the key is (parent, level-L node) — one dedicated
+    child-trie subtree per parent bucket (MultiBucketizer.ts:94-96) — and
+    emitted names are mapped ``parent/node`` with the child root
+    collapsing onto the parent; counter rows are keyed ``parent\x1fnode``
+    (_PSEP) and the parent root's own counter by the bare parent id. At
+    ``level`` 0 (per parent only) the key is the parent alone and each
+    group walks its whole child trie from the seeded root.
 
     With ``state`` (streaming: carried node counters ``_st_node/_st_cnt``),
-    each counter row is routed to its level-L ancestor group via a cogroup —
-    the per-group walk starts from the carried counts, so existing nodes
-    never re-create and their remaining capacity is page_size - cnt. State
-    nodes shallower than L are never consulted by a walk that starts at
-    chain index L (the root's own counter is handled at level 0).
+    each counter row is cogrouped into the group whose walk consults it —
+    a node at chain level >= L into its level-L ancestor's group, a root
+    counter only into a walk that starts at the root — so existing nodes
+    never re-create and their remaining capacity is page_size - cnt.
 
     The per-group walk is the reference's inherently sequential semantics;
     the heavy lifting (normalize, chain prep, payload movement) stays
@@ -360,165 +387,80 @@ def _grouped_walk(
     salted before the handoff."""
     import pandas as pd
 
-    sep = chain.sep
-    py_nodes = chain.py_nodes
-
-    def walk_with_counters(
-        pdf: pd.DataFrame, counters: dict, walk_root: str = root
-    ) -> pd.DataFrame:
-        records = pdf.sort_values(seq_col).to_dict("records")
-        buckets, relations, touched = _walk(
-            records, py_nodes, sep, level, page_size, walk_root, seq_col,
-            max_depth, counters,
-        )
-        rows = [
-            {
-                seq_col: r[seq_col],
-                "bucket_id": b,
-                "kind": "a",
-                "from_bucket": None,
-                "vals": None,
-                "cnt": None,
-            }
-            for r, b in zip(records, buckets)
-        ]
-        rows += [
-            {
-                seq_col: rel[5],
-                "bucket_id": rel[2],
-                "kind": "r",
-                "from_bucket": rel[0],
-                "vals": rel[3],
-                "cnt": None,
-            }
-            for rel in relations
-        ]
-        rows += [
-            {
-                seq_col: None,
-                "bucket_id": n,
-                "kind": "c",
-                "from_bucket": None,
-                "vals": None,
-                "cnt": counters[n],
-            }
-            for n in touched
-        ]
-        return pd.DataFrame(
-            rows,
-            columns=[seq_col, "bucket_id", "kind", "from_bucket", "vals", "cnt"],
-        )
-
+    cols = [seq_col, "bucket_id", "kind", "from_bucket", "vals", "cnt"]
     out_schema = (
         f"{seq_col} long, bucket_id string, kind string, "
         "from_bucket string, vals array<string>, cnt long"
     )
-    if parent_col is not None:
-        # sentinel root: root-collapse is detected by name comparison, so
-        # the name must be impossible as a trie node ('\x00' never appears
-        # in a normalized value or dash-joined token key)
-        sentinel = "\x00root"
+    pcols = [parent_col] if parent_col else []
 
-        def walk_parent_with(pdf: pd.DataFrame, counters: dict) -> pd.DataFrame:
-            parent = str(pdf[parent_col].iloc[0])
-            out = walk_with_counters(pdf, counters, walk_root=sentinel)
-            is_c = out["kind"] == "c"
-            # assignments/relations map to parent/name; counter rows use
-            # the unambiguous \x1f (_PSEP) key (parent ids may themselves contain
-            # '/', so 'parent/node' cannot be split back — see _PSEP)
-            named = out["bucket_id"].notna() & ~is_c
-            out.loc[named, "bucket_id"] = parent + "/" + out.loc[named, "bucket_id"]
-            out.loc[is_c, "bucket_id"] = parent + _PSEP + out.loc[is_c, "bucket_id"]
-            isrel = out["kind"] == "r"
-            out.loc[isrel, "from_bucket"] = [
-                parent if f == sentinel else f"{parent}/{f}"
-                for f in out.loc[isrel, "from_bucket"]
-            ]
-            return out
-
-        if state is None:
-
-            def walk_parent(pdf: pd.DataFrame) -> pd.DataFrame:
-                return walk_parent_with(pdf, {})
-
-            return (
-                remaining.groupBy(parent_col, chain.node(level).alias("_g"))
-                .applyInPandas(walk_parent, out_schema)
-                .transform(cut_lineage)
-            )
-
-        # streaming per-parent: carried counters are parent\x1fnode (_PSEP)
-        # keys; split the key and route the node part to its level-L subtrie
-        # group under its parent (parent-root rows — no _PSEP — are level-0
-        # bookkeeping and never consulted by a walk starting at level L)
-        st = (
-            state.where(F.col("_st_node").contains(_PSEP))
-            .select(
-                F.substring_index("_st_node", _PSEP, 1).alias(parent_col),
-                F.substring_index("_st_node", _PSEP, -1).alias("_np"),
-                "_st_cnt",
-            )
-            .where(chain.node_level_of(F.col("_np")) >= level)
-            .select(
-                parent_col,
-                chain.node_prefix_of(F.col("_np"), level).alias("_g"),
-                F.col("_np").alias("_st_node"),
-                "_st_cnt",
-            )
+    def walk_frame(pdf: pd.DataFrame, counters: dict) -> pd.DataFrame:
+        if not len(pdf):
+            return pd.DataFrame(columns=cols)
+        records = pdf.sort_values(seq_col).to_dict("records")
+        buckets, relations, touched = _walk(
+            records, chain.py_nodes, chain.sep, level, page_size, _WALK_ROOT,
+            seq_col, max_depth, counters,
         )
+        parent = str(records[0][parent_col]) if parent_col else None
 
-        def walk_parent_cogroup(
-            rows_pdf: pd.DataFrame, st_pdf: pd.DataFrame
-        ) -> pd.DataFrame:
-            if not len(rows_pdf):
-                return pd.DataFrame(
-                    columns=[
-                        seq_col, "bucket_id", "kind", "from_bucket",
-                        "vals", "cnt",
-                    ]
-                )
-            counters = dict(
-                zip(st_pdf["_st_node"], (int(c) for c in st_pdf["_st_cnt"]))
-            )
-            return walk_parent_with(rows_pdf, counters)
+        def name(n, sep="/"):
+            # per parent, nodes are prefixed parent/ — counter keys use the
+            # split-safe _PSEP, as parent ids may themselves contain '/'
+            if n == _WALK_ROOT:
+                return root if parent is None else parent
+            return n if parent is None else f"{parent}{sep}{n}"
 
-        return (
-            remaining.groupBy(parent_col, chain.node(level).alias("_g"))
-            .cogroup(st.groupBy(parent_col, "_g"))
-            .applyInPandas(walk_parent_cogroup, out_schema)
-            .transform(cut_lineage)
-        )
+        rows = [
+            (r[seq_col], None if b is None else name(b), "a", None, None, None)
+            for r, b in zip(records, buckets)
+        ]
+        rows += [
+            (seq, name(to), "r", name(frm), vals, None)
+            for frm, _typ, to, vals, _path, seq in relations
+        ]
+        rows += [
+            (None, name(n, _PSEP), "c", None, None, counters[n]) for n in touched
+        ]
+        return pd.DataFrame(rows, columns=cols)
 
-    keyed = remaining.groupBy(chain.node(level).alias("_g"))
+    keyed = remaining.groupBy(
+        *pcols, *([chain.node(level).alias("_g")] if level else [])
+    )
     if state is None:
 
         def walk_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            return walk_with_counters(pdf, {})
+            return walk_frame(pdf, {})
 
         return keyed.applyInPandas(walk_group, out_schema).transform(cut_lineage)
 
-    # streaming: route carried counters (nodes at chain level >= L only;
-    # the literal root row is level-0 bookkeeping) to their subtrie group
-    st = (
-        state.where(F.col("_st_node") != root)
-        .where(chain.node_level_of(F.col("_st_node")) >= level)
-        .select(
-            chain.node_prefix_of(F.col("_st_node"), level).alias("_g"),
-            "_st_node",
+    # carried counters: a root counter (the literal root row; per parent,
+    # a bare parent id) becomes a NULL node, every other row its node name
+    # (per parent split off its parent\x1fnode key)
+    node = F.col("_st_node")
+    if parent_col is None:
+        st = state.select(F.when(node != root, node).alias("_st_node"), "_st_cnt")
+    else:
+        owned = node.contains(_PSEP)
+        st = state.select(
+            F.substring_index(node, _PSEP, 1).alias(parent_col),
+            F.when(owned, F.substring_index(node, _PSEP, -1)).alias("_st_node"),
             "_st_cnt",
         )
-    )
+    if level:
+        st = st.where(
+            node.isNotNull() & (chain.node_level_of(node) >= level)
+        ).withColumn("_g", chain.node_prefix_of(node, level))
 
     def walk_cogroup(rows_pdf: pd.DataFrame, st_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(rows_pdf):
-            return pd.DataFrame(
-                columns=[seq_col, "bucket_id", "kind", "from_bucket", "vals", "cnt"]
-            )
-        counters = dict(zip(st_pdf["_st_node"], (int(c) for c in st_pdf["_st_cnt"])))
-        return walk_with_counters(rows_pdf, counters)
+        counters = {
+            _WALK_ROOT if pd.isna(n) else n: int(c)
+            for n, c in zip(st_pdf["_st_node"], st_pdf["_st_cnt"])
+        }
+        return walk_frame(rows_pdf, counters)
 
     return (
-        keyed.cogroup(st.groupBy("_g"))
+        keyed.cogroup(st.groupBy(*pcols, *(["_g"] if level else [])))
         .applyInPandas(walk_cogroup, out_schema)
         .transform(cut_lineage)
     )
@@ -552,15 +494,16 @@ def _run_cascade(
     the placement). Once at most ``tail_threshold`` rows remain, one
     grouped walk shuffle finishes the trie (``tail_threshold=0`` keeps
     every level distributed; the default hands small inputs to the walk
-    from level 1).
+    from level 1, per parent from the parent roots).
 
     With ``parent_col`` every level is keyed by (parent, node): a dedicated
     child-trie instance per parent bucket (MultiBucketizer.ts:94-96) whose
     root collapses onto the parent itself and whose node names map to
-    ``parent/node`` (mapTerm, ts:123-141). This is the scale path for
-    giant low-cardinality parents — no single task ever holds a whole
-    parent; the hot (parent, node) pairs are defused by the same salted
-    two-phase placement as the standalone trie. Carried node state
+    ``parent/node`` (mapTerm, ts:123-141). Above ``tail_threshold``
+    members this is the scale path for giant low-cardinality parents —
+    no single task ever holds a whole parent; the hot (parent, node)
+    pairs are defused by the same salted two-phase placement as the
+    standalone trie. Carried node state
     composes with ``parent_col`` for the streaming per-parent child
     (TrieStage under compose_streams): state keys are ``parent\\x1fnode``
     (parent ids may contain '/', so the prefixed display name is not
@@ -613,7 +556,13 @@ def _run_cascade(
         )
     )
 
-    if parent_col is not None:
+    if parent_col is not None and total_work <= tail_threshold:
+        # ---- the handoff rule below, one level earlier: with at most
+        # tail_threshold members in all, one grouped walk keyed by the
+        # parent alone runs every child trie from its seeded root (the
+        # loop's first pass is level 0)
+        remaining, remaining_cnt, level = work, total_work, -1
+    elif parent_col is not None:
         # ---- level 0 per parent: each parent bucket is its own seeded
         # child root with page_size capacity. Per-parent top-K by seq via
         # the salted two-phase threshold (each (parent, salt) group

@@ -118,7 +118,7 @@ def _build_multi(df: DataFrame, spec: JobSpec) -> BucketizeResult:
     (MultiBucketizer.ts:46-162): every child strategy the reference
     factory composes is supported (BucketizerFactories.ts:15-72) — basic
     (per-parent pager), subject (per-parent first-seen + rotation),
-    substring (per-parent trie, walk or distributed cascade), geospatial
+    substring (per-parent trie: the cascade keyed by parent), geospatial
     (per-parent tile pager incl. its own bucketless fallback) — plus the
     engine's time-window extension (tumbling/sliding children; session is
     an aggregate shape that doesn't compose as member assignments). Child

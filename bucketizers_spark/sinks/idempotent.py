@@ -230,13 +230,14 @@ class IcebergMergeSink:
             if batch_id in self.committed_batches():
                 return
             out = transform(batch_df) if transform else batch_df
-            cnt = out.count()
-            lineage = {"rows": cnt}
-            if "seq" in out.columns and cnt:
-                rng = out.agg(
-                    F.min("seq").alias("lo"), F.max("seq").alias("hi")
-                ).collect()[0]
-                lineage.update(seq_min=rng["lo"], seq_max=rng["hi"])
+            # the manifest lineage (row count, seq range) from ONE job
+            seq_aggs = (
+                [F.min("seq").alias("seq_min"), F.max("seq").alias("seq_max")]
+                if "seq" in out.columns
+                else []
+            )
+            row = out.agg(F.count(F.lit(1)).alias("rows"), *seq_aggs).collect()[0]
+            lineage = row.asDict() if row["rows"] else {"rows": 0}
             self.write_batch(out, batch_id, lineage)
 
         return fn

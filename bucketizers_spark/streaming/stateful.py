@@ -170,17 +170,7 @@ def subject_page_stream(
             F.concat(last_segment, F.lit("-" + salt)), ascii_fast=ascii_fast
         ),
     ).withColumn("subject_value", raw)
-
-    out_schema = T.StructType(
-        with_bucket.schema.fields + [T.StructField("is_first", T.BooleanType())]
-    )
-    return with_bucket.groupBy("bucket_id").applyInPandasWithState(
-        _first_seen_fn,
-        outputStructType=out_schema,
-        stateStructType=_FIRST_SEEN_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return first_seen_tag(with_bucket)
 
 
 _PAGER_STATE = T.StructType([T.StructField("cnt", T.LongType())])

@@ -923,13 +923,12 @@ class TestScanProbe:
         assert path in str(rec[0].message)
         assert sorted(r.id for r in df.collect()) == list(range(5))
 
-    def test_scan_meta_memoized_per_file_version(self, spark):
+    def test_scan_meta_memoized_per_file_version(self, spark, jobs_of):
         """``_t`` infers a file's schema and reads its footer once per
         file version: a second read starts no Spark job and gets the
         inferred schema; a rewritten file is probed again."""
         import os
         import shutil
-        import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -942,17 +941,6 @@ class TestScanProbe:
         os.makedirs(d)
         path = f"{d}/tbl.parquet"
         pq.write_table(pa.table({"id": list(range(5))}), path, row_group_size=2)
-        sc = spark.sparkContext
-
-        def jobs_of(fn):
-            group = f"t_memo_{uuid.uuid4().hex}"
-            sc.setJobGroup(group, group)
-            try:
-                out = fn()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
         first, n_first = jobs_of(lambda: _t(spark, d, "tbl"))
         again, n_again = jobs_of(lambda: _t(spark, d, "tbl"))
         assert n_first >= 1 and n_again == 0

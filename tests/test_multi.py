@@ -16,6 +16,10 @@ from bucketizers_spark.operators.subject_page import subject_page
 from bucketizers_spark.operators.substring import substring_trie
 from bucketizers_spark.pipeline import build
 
+# jobs a per-parent trie over the ``parented`` fixture starts, built and
+# collected (TestTrieWithinParent::test_starts_pinned_jobs)
+PER_PARENT_TRIE_JOBS = 7
+
 
 @pytest.fixture(scope="module")
 def parented(spark):
@@ -91,40 +95,29 @@ class TestSubjectWithinParent:
         assert got_seals == want_seals
 
 
+def _per_parent_trie(parented, **kw):
+    """The reference per-parent child trie: ``substring_trie`` run on each
+    parent's members alone, ids mapped ``parent/node`` and the child root
+    collapsed onto the parent."""
+    want_assign, want_rels = set(), set()
+    for parent in ["P0", "P1"]:
+        sub = parented.where(F.col("parent") == parent)
+        base = substring_trie(sub, "name", seq_col="seq", **kw)
+        for r in base.assignments.collect():
+            b = None if r.bucket_id is None else _map_root(parent, r.bucket_id)
+            want_assign.add((r.seq, b))
+        for r in base.relations.collect():
+            want_rels.add(
+                (
+                    _map_root(parent, r.from_bucket),
+                    f"{parent}/{r.to_bucket}",
+                    r.created_at_seq,
+                )
+            )
+    return want_assign, want_rels
+
+
 class TestTrieWithinParent:
-    def test_matches_per_parent_base_operator(self, spark, parented):
-        res = trie_within_parent(
-            parented, "parent", "name", page_size=2, max_depth=16, seq_col="seq"
-        )
-        got_assign = {(r.seq, r.bucket_id) for r in res.assignments.collect()}
-        got_rels = {
-            (r.from_bucket, r.to_bucket, r.created_at_seq)
-            for r in res.relations.collect()
-        }
-
-        want_assign, want_rels = set(), set()
-        for parent in ["P0", "P1"]:
-            sub = parented.where(F.col("parent") == parent)
-            base = substring_trie(sub, "name", page_size=2, max_depth=16,
-                                  seq_col="seq")
-            for r in base.assignments.collect():
-                b = (
-                    None
-                    if r.bucket_id is None
-                    else _map_root(parent, r.bucket_id)
-                )
-                want_assign.add((r.seq, b))
-            for r in base.relations.collect():
-                want_rels.add(
-                    (
-                        _map_root(parent, r.from_bucket),
-                        f"{parent}/{r.to_bucket}",
-                        r.created_at_seq,
-                    )
-                )
-        assert got_assign == want_assign
-        assert got_rels == want_rels
-
     @staticmethod
     def _collect(res):
         assign = {(r.seq, r.bucket_id) for r in res.assignments.collect()}
@@ -134,29 +127,52 @@ class TestTrieWithinParent:
         }
         return assign, rels
 
-    @pytest.mark.parametrize("salt_buckets,tail", [(0, 100_000), (4, 0), (4, 30)])
-    def test_cascade_equals_walk(self, spark, parented, salt_buckets, tail):
-        """The distributed (parent, node)-keyed cascade is semantically
-        identical to the per-parent reference walk — default and explicit
-        salt counts, and the grouped finisher handoff all covered."""
-        walk = trie_within_parent(
-            parented, "parent", "name", page_size=2, max_depth=16,
-            seq_col="seq", strategy="walk",
+    def test_matches_per_parent_base_operator(self, spark, parented):
+        res = trie_within_parent(
+            parented, "parent", "name", page_size=2, max_depth=16, seq_col="seq"
         )
+        assert self._collect(res) == _per_parent_trie(
+            parented, page_size=2, max_depth=16
+        )
+
+    @pytest.mark.parametrize("salt_buckets,tail", [(0, 100_000), (4, 0), (4, 30)])
+    def test_cascade_equals_walk(
+        self, spark, parented, salt_buckets, tail, monkeypatch
+    ):
+        """The per-parent cascade equals the per-parent base operator with
+        every level distributed (tail 0), with the grouped walk taking over
+        after the salted per-parent root (tail 30 of 120 rows), and with
+        the whole input walked from the parent roots (tail >= rows)."""
+        from bucketizers_spark.operators import substring as sub_mod
+
+        levels = []
+        walk = sub_mod._grouped_walk
+
+        def spy(remaining, chain, **kw):
+            levels.append(kw["level"])
+            return walk(remaining, chain, **kw)
+
+        monkeypatch.setattr(sub_mod, "_grouped_walk", spy)
         casc = trie_within_parent(
             parented, "parent", "name", page_size=2, max_depth=16,
-            seq_col="seq", strategy="cascade",
-            salt_buckets=salt_buckets, tail_threshold=tail,
+            seq_col="seq", salt_buckets=salt_buckets, tail_threshold=tail,
         )
-        assert self._collect(casc) == self._collect(walk)
+        got = self._collect(casc)
+        want_levels = {100_000: [0], 0: []}.get(tail)
+        if want_levels is None:
+            assert len(levels) == 1 and levels[0] >= 1, levels
+        else:
+            assert levels == want_levels
+        monkeypatch.undo()
+        assert got == _per_parent_trie(parented, page_size=2, max_depth=16)
 
     def test_cascade_never_walks_a_parent_in_one_task(
         self, spark, parented, monkeypatch
     ):
         """Giant-parent scale pin: with the finisher disabled the cascade
         must place every row through JVM salted-aggregate levels — no pandas
-        group ever receives a parent's subtree (the walk path's failure
-        mode for a low-cardinality parent column over 10^12 rows)."""
+        group ever receives a parent's subtree (what a per-parent walk
+        would do to a low-cardinality parent column over 10^12 rows)."""
         from bucketizers_spark.operators import substring as sub_mod
 
         def boom(*a, **k):  # pragma: no cover - failure path
@@ -165,22 +181,23 @@ class TestTrieWithinParent:
         monkeypatch.setattr(sub_mod, "_grouped_walk", boom)
         res = trie_within_parent(
             parented, "parent", "name", page_size=2, max_depth=16,
-            seq_col="seq", strategy="cascade", tail_threshold=0,
+            seq_col="seq", tail_threshold=0,
         )
         assert res.assignments.count() == 120
 
-    def test_auto_routes_giant_parents_to_cascade(self, spark, parented):
-        """auto must switch to the cascade once any parent exceeds the walk
-        threshold, with identical output."""
-        walk = trie_within_parent(
-            parented, "parent", "name", page_size=2, max_depth=16,
-            seq_col="seq", strategy="walk",
+    def test_starts_pinned_jobs(self, spark, parented, jobs_of):
+        """Building the per-parent trie over the fixture and collecting its
+        assignments starts a pinned number of jobs: the working set's
+        counted cut, the level-0 walk's cut and the action. An eager
+        per-parent size probe before the trie would add jobs."""
+        rows, n = jobs_of(
+            lambda: trie_within_parent(
+                parented, "parent", "name", page_size=2, max_depth=16,
+                seq_col="seq",
+            ).assignments.collect()
         )
-        auto = trie_within_parent(
-            parented, "parent", "name", page_size=2, max_depth=16,
-            seq_col="seq", strategy="auto", walk_rows_threshold=10,
-        )
-        assert self._collect(auto) == self._collect(walk)
+        assert len(rows) == 120
+        assert n == PER_PARENT_TRIE_JOBS, n
 
 
 class TestFactoryMulti:

@@ -1,14 +1,13 @@
 """Property-based equivalence (hypothesis): random member values and
-page sizes, Spark engine vs the sequential reference oracle, and the
-trie's two physical strategies (walk vs salted cascade) against each
-other. Alphabet deliberately stresses the normalizer (unicode,
+page sizes, Spark engine vs the sequential reference oracle, the
+per-parent trie included (one oracle per parent). Alphabet deliberately stresses the normalizer (unicode,
 combining marks, '#', separators), empties, and multi-word splits —
 the class of inputs the ADVICE r3 salt-capped-threshold boundary bug
 lived in (small page_size × small salt_buckets × small groups), which
 this suite would have caught.
 
 Each example is a full Spark job, so example counts are small and each
-example packs 10-40 members; the point is adversarial input SHAPES, not
+example packs 8-60 members; the point is adversarial input SHAPES, not
 volume (the SF-scale checks live in check_parity and the engine tests).
 """
 
@@ -143,37 +142,59 @@ class TestSubstringProperty:
 class TestTrieStrategiesProperty:
     @_SET
     @given(
-        values=st.lists(st.text(_ALPHA, max_size=8), min_size=8, max_size=30),
+        values=st.lists(st.text(_ALPHA, max_size=8), min_size=8, max_size=60),
         page_size=st.integers(1, 4),
         salt=st.integers(2, 5),
         nparents=st.integers(1, 3),
+        tail=st.sampled_from([0, 30, 10**6]),
     )
     def test_walk_equals_salted_cascade_per_parent(
-        self, spark, values, page_size, salt, nparents
+        self, spark, values, page_size, salt, nparents, tail
     ):
-        """walk vs cascade with SMALL page_size × SMALL salt_buckets —
-        the exact regime of the r3 salt-capped-threshold boundary."""
+        """The per-parent trie equals a per-parent reference oracle with
+        SMALL page_size × SMALL salt_buckets — the exact regime of the r3
+        salt-capped-threshold boundary — with every level distributed
+        (tail 0), a mid handoff to the grouped walk or a walk from the
+        parent roots (tail 30, by input size), and a walk from the parent
+        roots (tail >= rows)."""
         from bucketizers_spark.operators.multi import trie_within_parent
 
         rows = [
             (i, f"p{i % nparents}", v) for i, v in enumerate(values)
         ]
         df = spark.createDataFrame(rows, "seq long, _parent string, value string")
-        walk = trie_within_parent(
-            df, "_parent", "value", page_size=page_size, strategy="walk"
-        )
-        casc = trie_within_parent(
+        res = trie_within_parent(
             df,
             "_parent",
             "value",
             page_size=page_size,
-            strategy="cascade",
+            ascii_fast=False,  # real NFKD: the alphabet is not ASCII
             salt_buckets=salt,
+            tail_threshold=tail,
         )
-        wa = {(r.seq, r.bucket_id) for r in walk.assignments.collect()}
-        ca = {(r.seq, r.bucket_id) for r in casc.assignments.collect()}
-        assert wa == ca
-        assert _rel_set(walk.relations) == _rel_set(casc.relations)
+        # one oracle per parent; its root (a name no value normalizes to)
+        # collapses onto the parent, every other bucket is parent/bucket
+        want_assign, want_rels = set(), set()
+        for p in range(nparents):
+            parent = f"p{p}"
+            oracle = SubstringOracle(page_size=page_size, root="\x00")
+
+            def shown(b):
+                return parent if b == "\x00" else f"{parent}/{b}"
+
+            for i in range(p, len(values), nparents):
+                out = oracle.bucketize([values[i]], f"m{i}")
+                want_assign |= {(i, shown(b)) for b in out.buckets}
+                if not out.buckets:
+                    want_assign.add((i, None))
+                want_rels |= {
+                    (shown(r.from_bucket), r.relation_type, shown(r.to_bucket),
+                     tuple(r.values))
+                    for r in out.relations
+                }
+        got_assign = {(r.seq, r.bucket_id) for r in res.assignments.collect()}
+        assert got_assign == want_assign
+        assert _rel_set(res.relations) == want_rels
 
 
 def _fmt_coord(v: float) -> str:

@@ -180,6 +180,28 @@ class TestIcebergMergeSink:
         assert len(stmts) == 2 and "_merge_src_1" in stmts[1]
         assert sink.committed_batches() == {0, 1}
 
+    def test_manifest_lineage_from_one_job(self, spark, workdir, jobs_of):
+        """The manifest carries the row count and, for rows with ``seq``,
+        the seq range; the lineage costs one aggregate: its shuffle stage
+        and its result are the only jobs (the recorder executor starts
+        none; a count() before a second aggregate would double them)."""
+        import json
+
+        sink = self._sink(workdir, lambda sql: None)
+        fn = sink.foreach_batch()
+        schema = "seq long, bucket_id string, doc_id string"
+        full = spark.createDataFrame([(4, "b-0", "d1"), (9, "b-0", "d2")], schema)
+        _, n = jobs_of(lambda: fn(full, 0))
+        assert n == 2, n
+        fn(spark.createDataFrame([], schema), 1)
+
+        def manifest(batch_id):
+            with open(os.path.join(sink.manifest_dir, f"{batch_id}.json")) as fh:
+                return json.load(fh)
+
+        assert manifest(0) == {"batch_id": 0, "rows": 2, "seq_min": 4, "seq_max": 9}
+        assert manifest(1) == {"batch_id": 1, "rows": 0}
+
     def test_failed_merge_leaves_batch_uncommitted(self, spark, workdir):
         calls = []
 

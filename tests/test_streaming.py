@@ -173,17 +173,27 @@ class TestTrieStreamCounters:
     anti-join together, on fresh and carried state."""
 
     @pytest.mark.parametrize(
-        "mode,salt,parent",
+        "mode,salt,parent,tail",
         [
-            ("token", 0, None),
-            ("token", 4, None),
-            ("token", 0, "_parent"),
-            ("token", 4, "_parent"),
-            ("char", 0, None),
-            ("char", 4, "_parent"),
+            pytest.param("token", 0, None, 0, id="token-0-None"),
+            pytest.param("token", 4, None, 0, id="token-4-None"),
+            pytest.param("token", 0, "_parent", 0, id="token-0-_parent"),
+            pytest.param("token", 4, "_parent", 0, id="token-4-_parent"),
+            pytest.param("char", 0, None, 0, id="char-0-None"),
+            pytest.param("char", 4, "_parent", 0, id="char-4-_parent"),
+            # the default tail_threshold walks every batch from the parent
+            # roots: carried part-filled root counters feed the walk
+            pytest.param(
+                "token", 0, "_parent", None, id="token-0-_parent-default_tail"
+            ),
+            pytest.param(
+                "char", 4, "_parent", None, id="char-4-_parent-default_tail"
+            ),
         ],
     )
-    def test_versions_equal_walk_oracle(self, spark, workdir, mode, salt, parent):
+    def test_versions_equal_walk_oracle(
+        self, spark, workdir, mode, salt, parent, tail
+    ):
         import numpy as np
 
         from bucketizers_spark.operators.substring import _char_chain, _token_chain
@@ -229,7 +239,7 @@ class TestTrieStreamCounters:
             max_depth=max_depth,
             parent_col=parent,
             salt_buckets=salt,
-            tail_threshold=0,
+            **({} if tail is None else {"tail_threshold": tail}),
         )
         for b, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
             job.process_batch(df.where(f"seq >= {lo} AND seq < {hi}"), b)

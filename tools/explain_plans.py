@@ -8,10 +8,14 @@ Usage:
 
 ``--sf`` is the scale-factor directory of parquet tables (default
 ``$SPARK_GRAFT_SF_DIR``). Without ``--out`` each plan is printed with its
-signal counts. With ``--out DIR --suffix S`` each plan is written to
+signal counts. With ``--out DIR --suffix S`` each query is written to
 ``DIR/<query>_<S>.txt`` instead (a query that fails to plan writes its
-error); the engine imported is this script's own checkout, so running the
-same command from two checkouts gives before/after dumps to diff.
+error): the plan of every frame the query lineage-cuts while it is built
+(``plans.materialize.cut_lineage`` / ``cut_lineage_counted``), in cut
+order, then the final plan, with expression ids, ``plan_id=`` numbers and
+UUIDs renumbered by first appearance. The engine imported is this
+script's own checkout, so running the same command from two checkouts
+gives before/after dumps that diff clean unless a plan changed.
 """
 
 from __future__ import annotations
@@ -19,8 +23,9 @@ from __future__ import annotations
 import argparse
 import io
 import os
+import re
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)  # this checkout's engine, wherever it lives
@@ -53,6 +58,67 @@ def signals(plan: str) -> dict:
     }
 
 
+def formatted(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+_VOLATILE = (
+    (r"#(\d+)", "#{}"),
+    (r"plan_id=(\d+)", "plan_id={}"),
+    (r"\b([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})\b", "uuid{}"),
+)
+
+
+def normalize(plan: str) -> str:
+    """Renumber the per-session ids of a plan dump by first appearance, so
+    the same plan dumped by two sessions reads the same."""
+    for pattern, placeholder in _VOLATILE:
+        seen: dict[str, int] = {}
+        plan = re.sub(
+            pattern,
+            lambda m: placeholder.format(seen.setdefault(m.group(1), len(seen))),
+            plan,
+        )
+    return plan
+
+
+@contextmanager
+def capturing_cuts():
+    """Yield a list that collects the formatted plan of every frame cut
+    while the block runs: ``cut_lineage`` cuts with ``localCheckpoint`` or
+    ``checkpoint``, so both are wrapped for the duration."""
+    # the classic (non-Connect) DataFrame class implements the cuts
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    cuts: list[str] = []
+    saved = {n: getattr(DataFrame, n) for n in ("localCheckpoint", "checkpoint")}
+
+    def recording(cut):
+        def wrapper(self, *a, **kw):
+            cuts.append(formatted(self))
+            return cut(self, *a, **kw)
+
+        return wrapper
+
+    for name, cut in saved.items():
+        setattr(DataFrame, name, recording(cut))
+    try:
+        yield cuts
+    finally:
+        for name, cut in saved.items():
+            setattr(DataFrame, name, cut)
+
+
+def dump(final: str, cuts: list[str]) -> str:
+    """One normalized file: each cut input's plan in cut order, then the
+    final plan."""
+    parts = [f"== cut {k} ==\n{plan}" for k, plan in enumerate(cuts, 1)]
+    return normalize("\n".join([*parts, f"== final ==\n{final}"]))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("queries", nargs="*", default=DEFAULT_QUERIES)
@@ -73,19 +139,17 @@ def main() -> None:
     if args.out:
         os.makedirs(args.out, exist_ok=True)
     for name in args.queries:
-        buf = io.StringIO()
         try:
-            df = QUERIES[name](spark, args.sf)
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
+            with capturing_cuts() as cuts:
+                df = QUERIES[name](spark, args.sf)
+            plan = formatted(df)
         except Exception as exc:
             if not args.out:
                 raise
-            plan = f"ERROR: {exc}\n"
+            plan, cuts = f"ERROR: {exc}\n", []
         if args.out:
             with open(os.path.join(args.out, f"{name}_{args.suffix}.txt"), "w") as fh:
-                fh.write(plan)
+                fh.write(dump(plan, cuts))
             print(f"# {name}_{args.suffix}", file=sys.stderr)
         else:
             print(f"\n================ {name} ================")
