@@ -46,7 +46,7 @@ from bucketizers_spark.operators.multi import (
     paged_within_parent,
     trie_within_parent,
 )
-from bucketizers_spark.operators.ivf import _cosine, pair_cos_r4
+from bucketizers_spark.operators.ivf import pair_cos_r4
 from bucketizers_spark.operators.substring import token_prefix_trie
 from bucketizers_spark.plans.materialize import cut_lineage
 
@@ -1378,9 +1378,19 @@ _PQ_K = 16  # codes per subspace (codebook = first K vectors' subvectors)
 _PQ_D = 8  # dims per subspace
 
 
-def _pq_sq(x, y):
-    d = x.cast("double") - y.cast("double")
-    return d * d
+def _l2_r4(a, b):
+    """Exact squared L2 distance of two vector columns as a left-to-right
+    JVM fold over float→double differences, rounded to 4 places — the
+    rescore of ann_pq_rescore and ann_ivfpq."""
+
+    def sq(x, y):
+        d = x.cast("double") - y.cast("double")
+        return d * d
+
+    return F.round(
+        F.aggregate(F.zip_with(a, b, sq), F.lit(0.0), lambda acc, v: acc + v),
+        4,
+    )
 
 
 def q_ann_pq(spark, sf_dir):
@@ -1438,17 +1448,10 @@ def q_ann_pq_rescore(spark, sf_dir):
     )
     emb = _t(spark, sf_dir, "embeddings")
     cand = F.broadcast(short).join(emb, "vec_id")
-    l2 = F.aggregate(
-        F.zip_with(
-            F.col("qe"),
-            F.col("embedding"),
-            lambda x, y: _pq_sq(x, y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     rescored = cand.select(
-        "query_id", "vec_id", F.round(l2, 4).alias("l2_r4")
+        "query_id",
+        "vec_id",
+        _l2_r4(F.col("qe"), F.col("embedding")).alias("l2_r4"),
     )
     w = Window.partitionBy("query_id").orderBy("l2_r4", "vec_id")
     return (
@@ -1468,55 +1471,44 @@ def q_ann_ivfpq(spark, sf_dir):
     2011), non-residual variant so the codebook is shared verbatim with
     ann_pq and the DuckDB oracle replays every stage.
 
-    Stages: (1) corpus → nearest-of-16 lowest-id centroids (one
-    broadcast argmax, operators/ivf.assign_cells) and → 8-byte PQ codes
+    Stages: (1) corpus → nearest-of-16 lowest-id centroids (narrow
+    Arrow pass, operators/ivf.assign_cells_vec) and → 8-byte PQ codes
     (narrow JVM map, shared _pq_encoded); (2) each query probes its 4
-    nearest cells; (3) ADC scores ONLY vectors in probed cells — the
-    cell equijoin replaces ann_pq's full-corpus scan, cutting scanned
-    codes to ~nprobe/K of the corpus on top of PQ's 32x byte shrink;
+    nearest cells (operators/ivf.probe_cells, the ann_ivf probe kernel:
+    no crossJoin, no window); (3) ADC scores ONLY vectors in probed
+    cells — the cell equijoin replaces ann_pq's full-corpus scan,
+    cutting scanned codes to ~nprobe/K of the corpus on top of PQ's 32x
+    byte shrink;
     (4) ADC shortlist-50 per query, exact L2 rescore of only the
     shortlist (broadcast equijoin), top-10 by exact distance.
 
-    Scale shape: centroids and codebook broadcast (O(K·dim) each);
-    cells+codes persist at production (operators/ivf_index.py pattern);
-    the probe is an equijoin on cell — never all-pairs; the only wide
-    ops are the per-query top-k windows over cell-bounded candidate
-    sets. Every vector lives in exactly one cell, so no multi-probe
+    Scale shape: centroids (collected, K rows) and codebook broadcast
+    (O(K·dim) each); cells+codes persist at production
+    (operators/ivf_index.py pattern); candidates are an equijoin on
+    cell — never all-pairs; the only wide ops are the per-query top-k
+    windows over cell-bounded candidate sets. Every vector lives in exactly one cell, so no multi-probe
     dedup is needed."""
     from bucketizers_spark.operators.ivf import (
         assign_cells_vec,
         collect_centroid_rows,
         lowest_id_centroids,
+        probe_cells,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     CB = _pq_cb_np(emb)
     enc = _pq_encoded(emb, CB)
-    cents = lowest_id_centroids(emb, _IVF_K)
-    # r7: vectorized Arrow cell assignment (no crossJoin exchange, no
-    # interpreted HOF cosine per (vector, centroid)) — bit-identical to
-    # assign_cells; embedding column dropped before the joins below.
-    cells = assign_cells_vec(emb, collect_centroid_rows(cents)).select(
-        "vec_id", "cell"
-    )
-
+    cent_rows = collect_centroid_rows(lowest_id_centroids(emb, _IVF_K))
+    # vectorized Arrow cell assignment and query probe (operators/ivf,
+    # the kernels ann_ivf runs); embedding column dropped before the
+    # joins below
+    cells = assign_cells_vec(
+        emb.select("vec_id", "embedding"), cent_rows
+    ).select("vec_id", "cell")
     q = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    qscored = q.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "qe",
-        F.col("c_id").alias("cell"),
-        F.round(_cosine(F.col("qe"), F.col("ce")), 4).alias("_cs"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_cs").desc(), F.col("cell")
-    )
-    probes = (
-        qscored.withColumn("_pr", F.row_number().over(wq))
-        .where(F.col("_pr") <= _IVF_NPROBE)
-        .select("query_id", "qe", "cell")
-    )
+    probes = probe_cells(q, cent_rows, _IVF_NPROBE, emb_col="qe")
 
     # ADC over probed cells only: codes ⋈ cells on vec_id (both slim),
     # then the cell equijoin against the broadcast probe frame; the ADC
@@ -1533,15 +1525,10 @@ def q_ann_ivfpq(spark, sf_dir):
         .where(F.col("_c") <= 50)
         .select("query_id", "vec_id", "qe")
     )
-    l2 = F.aggregate(
-        F.zip_with(
-            F.col("qe"), F.col("embedding"), lambda x, y: _pq_sq(x, y)
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     rescored = F.broadcast(short).join(emb, "vec_id").select(
-        "query_id", "vec_id", F.round(l2, 4).alias("l2_r4")
+        "query_id",
+        "vec_id",
+        _l2_r4(F.col("qe"), F.col("embedding")).alias("l2_r4"),
     )
     w = Window.partitionBy("query_id").orderBy("l2_r4", "vec_id")
     return (
@@ -1850,23 +1837,29 @@ def q_ann_lsh_recall(spark, sf_dir):
     is dominated by the 0.25-0.5 regime where 16-bit bands are
     near-blind by design (see cos_band grouping comment below).
 
-    Scale shape: the query sample broadcasts (no big-side shuffle for the
-    truth scan); the hit check is a band+bucket equijoin on the bucket
+    Scale shape: the query sample is collected into the scoring kernel
+    (no big-side shuffle for the truth scan); the hit check is a band+bucket equijoin on the bucket
     frame — never all-pairs. Measured recall + parameter justification:
     BENCH/PLANS.md."""
+    from bucketizers_spark.operators.ivf import bcast_cos_scored
+
     emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") % 40 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
-    )
-    pairs = emb.crossJoin(F.broadcast(qs)).where(
-        F.col("vec_id") != F.col("q_id")
-    )
+    # the bounded 1-in-40 query sample is collected and scored against
+    # the corpus in one narrow Arrow pass (see q_ann_topk)
+    q_rows = [
+        (r["vec_id"], r["embedding"])
+        for r in emb.where(F.col("vec_id") % 40 == 0)
+        .select("vec_id", "embedding")
+        .collect()
+    ]
+    scored_pairs = bcast_cos_scored(
+        emb, "vec_id", "embedding", q_rows, sim_col="_c"
+    ).withColumnRenamed("query_id", "q_id")
     w = Window.partitionBy("q_id").orderBy(
         F.col("_c").desc(), F.col("vec_id")
     )
     truth = (
-        pairs.withColumn("_c", F.round(_cosine(F.col("qe"), F.col("embedding")), 4))
-        .withColumn("_rn", F.row_number().over(w))
+        scored_pairs.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= 10)
         .select("q_id", "vec_id", "_c")
     )

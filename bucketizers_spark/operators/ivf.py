@@ -11,11 +11,11 @@ embeddings — the HARD case for IVF, no cluster structure to exploit):
 tools/ivf_recall_sweep.py → BENCH/PLANS.md.
 
 Scale shape (100 TB): centroids are O(K·dim) — always broadcast; cell
-assignment is one broadcast-join + map-side-combined argmax (n slim rows
-shuffled once, or zero shuffles if consumers accept the map output);
-probing is an equijoin on cell id. Never an all-pairs product. K should
-grow with sqrt(n) (FAISS guidance) so cells stay bounded; nprobe is the
-linear recall knob, exactly like LSH bands.
+assignment and query probing are narrow Arrow passes over the vectorized
+cosine kernel (no shuffle); the rescore cogroups probes and members on
+cell id. Never an all-pairs product. K should grow with sqrt(n) (FAISS
+guidance) so cells stay bounded; nprobe is the linear recall knob,
+exactly like LSH bands.
 
 Centroid training: ``kmeans_centroids`` runs seeded spherical Lloyd
 iterations driver-side over a DETERMINISTIC hash-ordered sample
@@ -33,30 +33,6 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from bucketizers_spark.operators.core import arrow_frame
-
-
-def _cosine(a, b):
-    """Cosine as a JVM higher-order fold, bit-identical on Spark and
-    DuckDB: elementwise float→double products summed left-to-right, then
-    dot / (sqrt(na) * sqrt(nb)). The one interpreted cosine; the entry
-    queries and the IVF operators share it, and pair_cos_r4 is its
-    vectorized kernel."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    nb = F.aggregate(
-        F.transform(b, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return dot / (F.sqrt(na) * F.sqrt(nb))
 
 
 def lowest_id_centroids(
@@ -127,53 +103,6 @@ def kmeans_centroids(
     )
 
 
-def assign_cells(
-    emb: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """(id, cell): nearest-centroid assignment. One broadcast crossJoin
-    (K rows) + map-side-combined argmax groupBy; ties go to the smallest
-    c_id. Similarities are rounded to 4 places first so Spark and the
-    SQL oracle agree on tie sets."""
-    scored = emb.crossJoin(F.broadcast(centroids)).select(
-        id_col,
-        "c_id",
-        F.round(_cosine(F.col(emb_col), F.col("ce")), 4).alias("_sim"),
-    )
-    best = F.max(F.struct(F.col("_sim"), (-F.col("c_id")).alias("_nc")))
-    return scored.groupBy(id_col).agg(
-        (-best.getField("_nc")).cast("long").alias("cell")
-    )
-
-
-def stateless_cell_expr(cent_rows, emb_col: str = "embedding"):
-    """Nearest-centroid cell as ONE column expression over literal
-    centroid arrays — no crossJoin, no groupBy, no state. ``cent_rows``
-    is the collected (c_id, ce) list (K is bounded by design, so
-    literalizing it is free). Bit-identical tie behavior to
-    assign_cells: array_max over (rounded cosine, -c_id) structs =
-    max similarity, then smallest c_id. This is both the streaming
-    form (an argmax groupBy would be an illegal second stateful op
-    under a keyed-state kernel) and the cheap batch form when the
-    assignment feeds a narrow pipeline (semdedup: no shuffle until
-    the per-cell kernel)."""
-    sims = F.array(
-        *[
-            F.struct(
-                F.round(
-                    _cosine(F.col(emb_col), F.lit(list(ce))), 4
-                ).alias("s"),
-                F.lit(-int(cid)).alias("nc"),
-            )
-            for cid, ce in cent_rows
-        ]
-    )
-    return (-F.array_max(sims)["nc"]).cast("long")
-
-
 def _np_lr_sq(M):
     import numpy as np
 
@@ -192,14 +121,23 @@ def _np_half_up4(x):
     )
 
 
+def _np_matrix(col):
+    """Stack a pandas column of embedding arrays into a float64 matrix."""
+    import numpy as np
+
+    return np.stack([np.asarray(e, dtype=np.float64) for e in col])
+
+
 def _np_cos_r4(A, B):
     """Rounded cosine matrix (|A| × |B|) with the engine's exact
     arithmetic: per-pair dot and both norms accumulated
     DIMENSION-AT-A-TIME so the summation order is the left-to-right
-    IEEE fold of the JVM ``_cosine`` higher-order aggregate (and the
-    oracle's list_sum), then HALF_UP 4-place rounding — bit-identical
-    values, vectorized (the HOF fold is CodegenFallback: interpreted
-    per element, it was the whole cost of ann_ivf at sf1.0)."""
+    IEEE fold of the oracle's list_sum, then HALF_UP 4-place rounding —
+    bit-identical values, vectorized. This kernel family (with the
+    row-paired ``pair_cos_r4``) is the engine's only cosine: the
+    interpreted JVM higher-order fold it replaced is CodegenFallback,
+    evaluated per element, and was the whole cost of ann_ivf at
+    sf1.0."""
     import numpy as np
 
     dots = np.zeros((A.shape[0], B.shape[0]))
@@ -219,11 +157,10 @@ def pair_cos_r4(
     out_col: str = "cos_r4",
 ) -> DataFrame:
     """Row-wise rounded cosine between two embedding columns of a pair
-    frame, as one vectorized Arrow pass (``keys`` + ``out_col`` out).
-    Bit-identical to F.round(_cosine(a, b), 4): per-row dot and norms
+    frame, as one vectorized Arrow pass (``keys`` + ``out_col`` out):
+    the row-paired form of ``_np_cos_r4`` — per-row dot and norms
     accumulated dimension-at-a-time (left-to-right IEEE fold), HALF_UP
-    rounding — only the execution engine changed (the JVM HOF fold is
-    CodegenFallback, interpreted per element)."""
+    rounding."""
     import numpy as np
 
     keys = list(keys)
@@ -233,12 +170,8 @@ def pair_cos_r4(
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf[a_col]]
-            )
-            B = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf[b_col]]
-            )
+            A = _np_matrix(pdf[a_col])
+            B = _np_matrix(pdf[b_col])
             dot = np.zeros(len(pdf))
             for d in range(A.shape[1]):  # left-to-right fold order
                 dot += A[:, d] * B[:, d]
@@ -265,8 +198,9 @@ def bcast_cos_scored(
     one narrow Arrow pass with the self-pair excluded — replaces the
     broadcast crossJoin + per-pair cosine shape, which duplicated the
     query embedding onto every candidate row (r7; the brute-force
-    ann_topk/knn/int8 family). Same fold order, same HALF_UP rounding,
-    same `id != query_id` exclusion — identical rows."""
+    ann_topk/knn/int8 family and the ann_lsh_recall truth set). Same
+    fold order, same HALF_UP rounding, same `id != query_id` exclusion
+    — identical rows."""
     import numpy as np
 
     qids = np.array([q[0] for q in q_rows])
@@ -279,10 +213,7 @@ def bcast_cos_scored(
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf[emb_col]]
-            )
-            sims = _np_cos_r4(M, Q)
+            sims = _np_cos_r4(_np_matrix(pdf[emb_col]), Q)
             vids = pdf[id_col].to_numpy()
             n, k = sims.shape
             out_v = np.repeat(vids, k)
@@ -311,40 +242,122 @@ def collect_centroid_rows(centroids: DataFrame):
     )
 
 
-def assign_cells_vec(
-    emb: DataFrame,
-    cent_rows,
-    *,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
+def probe_cells(
+    df: DataFrame, cent_rows, nprobe: int, *, emb_col: str = "embedding"
 ) -> DataFrame:
-    """(id, emb, cell): vectorized nearest-centroid assignment — one
-    narrow Arrow pass over the scan's own splits, NO crossJoin/groupBy
-    (assign_cells costs one exchange + an interpreted HOF cosine per
-    (vector, centroid); this kernel is bit-identical — same fold order,
-    same HALF_UP rounding, ties to the smallest c_id via np.argmax
-    taking the first max — and keeps the embedding column so consumers
-    skip the join-back)."""
+    """Every row of ``df`` once per each of its ``nprobe`` nearest
+    centroids, with that centroid's id appended as ``cell`` — one narrow
+    Arrow pass, no crossJoin and no window. Order: rounded cosine desc,
+    then c_id asc (``cent_rows`` is sorted by c_id and the sort is
+    stable, so ties go to the smallest c_id). Works unchanged on a
+    streaming frame, where an argmax groupBy could not sit under a
+    keyed-state operator."""
     import numpy as np
 
     C = np.array([ce for _cid, ce in cent_rows], dtype=np.float64)
     cids = np.array([cid for cid, _ in cent_rows], dtype="int64")
+    k = min(nprobe, len(cids))
 
     def kernel(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf[emb_col]]
-            )
-            sims = _np_cos_r4(M, C)
-            out = pdf[[id_col, emb_col]].copy()
-            out["cell"] = cids[np.argmax(sims, axis=1)]
+            sims = _np_cos_r4(_np_matrix(pdf[emb_col]), C)
+            # NaN (a zero-norm vector or centroid) ranks largest, as in
+            # np.argmax and in Spark's and DuckDB's orderings
+            sims[np.isnan(sims)] = np.inf
+            order = np.argsort(-sims, axis=1, kind="stable")[:, :k]
+            out = pdf.iloc[np.repeat(np.arange(len(pdf)), k)]
+            out = out.reset_index(drop=True)
+            out["cell"] = cids[order].ravel()
             yield out
 
-    t = dict(emb.select(id_col, emb_col).dtypes)
-    return emb.select(id_col, emb_col).mapInPandas(
-        kernel, f"{id_col} {t[id_col]}, {emb_col} {t[emb_col]}, cell long"
+    cell = T.StructField("cell", T.LongType())
+    return df.mapInPandas(kernel, T.StructType(df.schema.fields + [cell]))
+
+
+def assign_cells_vec(
+    emb: DataFrame, cent_rows, *, emb_col: str = "embedding"
+) -> DataFrame:
+    """``emb`` with its nearest centroid appended as ``cell`` (ties to
+    the smallest c_id): the one-probe case of ``probe_cells``. Callers
+    select the columns they carry — (id, cell) for an index table,
+    (id, embedding) for the pairwise kernels, the stream's ``seq``
+    too."""
+    return probe_cells(emb, cent_rows, 1, emb_col=emb_col)
+
+
+def rescore_cells(
+    probes: DataFrame,
+    members: DataFrame,
+    *,
+    topk: int = 10,
+    id_col: str = "vec_id",
+    emb_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_emb_col: str = "qe",
+) -> DataFrame:
+    """Exact top-k per query over the members of its probed cells:
+    (query_id, id, sim_r4, rk). ``probes`` is (query id, query vector,
+    cell) — ``probe_cells`` output — and ``members`` any frame with
+    (id, embedding, cell). The rescore cogroups probes × members BY
+    CELL, so each embedding crosses the shuffle once (never copied per
+    query), and the kernel emits only each (query, cell) top-k, which
+    contains the global top-k (the global order restricted to a cell is
+    the cell order; a vector lives in exactly one cell, so no
+    multi-probe dedup is needed). The final window ranks
+    n_q · nprobe · topk slim rows.
+
+    Self-match exclusion compares the two id columns as numpy values:
+    one numeric id space compares after numeric widening (a ``double``
+    query id 7.0 is corpus id 7, so a query never appears in its own
+    top-k), while incomparable families (string queries over numeric
+    corpus ids) never match, so every candidate is kept."""
+    import numpy as np
+
+    def rescore(qpdf, mpdf):
+        import pandas as pd
+
+        if not len(qpdf) or not len(mpdf):
+            return pd.DataFrame(
+                {query_id_col: [], id_col: [], "sim_r4": []}
+            )
+        sims = _np_cos_r4(
+            _np_matrix(qpdf[query_emb_col]), _np_matrix(mpdf[emb_col])
+        )
+        vids = mpdf[id_col].to_numpy()
+        qids = qpdf[query_id_col].to_numpy()
+        out_q, out_v, out_s = [], [], []
+        for i in range(len(qids)):
+            mask = vids != qids[i]  # self-match exclusion
+            vv, ss = vids[mask], sims[i][mask]
+            order = np.lexsort((vv, -ss))[:topk]
+            out_q.append(np.full(len(order), qids[i]))
+            out_v.append(vv[order])
+            out_s.append(ss[order])
+        return pd.DataFrame(
+            {
+                query_id_col: np.concatenate(out_q),
+                id_col: np.concatenate(out_v),
+                "sim_r4": np.concatenate(out_s),
+            }
+        )
+
+    qt = dict(probes.dtypes)[query_id_col]
+    et = dict(members.dtypes)[id_col]
+    scored = (
+        probes.select(query_id_col, query_emb_col, "cell")
+        .groupBy("cell")
+        .cogroup(members.select(id_col, emb_col, "cell").groupBy("cell"))
+        .applyInPandas(
+            rescore, f"{query_id_col} {qt}, {id_col} {et}, sim_r4 double"
+        )
+    )
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("sim_r4").desc(), F.col(id_col)
+    )
+    return scored.withColumn("rk", F.row_number().over(w)).where(
+        F.col("rk") <= topk
     )
 
 
@@ -364,110 +377,29 @@ def ivf_topk(
     cells. Output (query_id, vec_id, sim_r4, rk) matches the brute-force
     ann_topk shape so recall is directly comparable.
 
-    r7 restructure (same results, plan-verified): the r6 form computed
-    every cosine with the interpreted JVM HOF fold — O(n·K) for the
-    assignment plus O(n_q · nprobe · n/K) for the rescore, 23.7s at
-    sf1.0 and quadratic in n (queries AND cell size both grow with n).
-    Now every cosine runs through the vectorized `_np_cos_r4` kernel:
-    (1) corpus → cells via one narrow Arrow pass (no crossJoin
-    exchange); (2) each query picks its nprobe cells inside the same
-    kind of pass (no window over n_q·K rows); (3) the rescore cogroups
-    probes × members BY CELL — each embedding crosses the shuffle once
-    (never copied per query, unlike the old probes⋈members equijoin)
-    and the kernel emits only the per-(query, cell) top-k, which
-    provably contains the global top-k (the global order restricted to
-    a cell is the cell order; a vector lives in exactly one cell, so
-    the old multi-probe max-dedup was already a no-op). The final
-    window ranks n_q · nprobe · topk slim rows instead of the whole
-    candidate set."""
-    import numpy as np
-
+    Every cosine runs through the vectorized `_np_cos_r4` kernel:
+    (1) corpus → cells via one narrow Arrow pass (``assign_cells_vec``,
+    no crossJoin exchange); (2) each query picks its nprobe cells in the
+    same kind of pass (``probe_cells``, no window over n_q·K rows);
+    (3) ``rescore_cells`` cogroups probes × members by cell.
+    ``IvfIndex.search`` runs (2) and (3) over its persisted cell
+    table."""
     cent_rows = collect_centroid_rows(centroids)
-    C = np.array([ce for _cid, ce in cent_rows], dtype=np.float64)
-    cids = np.array([cid for cid, _ in cent_rows], dtype="int64")
-
     members = assign_cells_vec(
-        emb, cent_rows, id_col=id_col, emb_col=emb_col
+        emb.select(id_col, emb_col), cent_rows, emb_col=emb_col
     )
-
-    def probe_kernel(batches):
-        # nprobe nearest cells per query: order (sim desc, c_id asc) —
-        # identical to the old row_number window (lexsort: last key is
-        # the primary). cids is ascending, so index order == c_id order.
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack(
-                [
-                    np.asarray(e, dtype=np.float64)
-                    for e in pdf[query_emb_col]
-                ]
-            )
-            sims = _np_cos_r4(Q, C)
-            k = min(nprobe, len(cids))
-            rows = []
-            for i in range(len(pdf)):
-                order = np.lexsort((cids, -sims[i]))[:k]
-                rows.append(cids[order])
-            out = pdf.loc[
-                pdf.index.repeat(k), [query_id_col, query_emb_col]
-            ].reset_index(drop=True)
-            out["cell"] = np.concatenate(rows)
-            yield out
-
-    qt = dict(queries.select(query_id_col, query_emb_col).dtypes)
-    probes = queries.select(query_id_col, query_emb_col).mapInPandas(
-        probe_kernel,
-        f"{query_id_col} {qt[query_id_col]}, "
-        f"{query_emb_col} {qt[query_emb_col]}, cell long",
+    probes = probe_cells(
+        queries.select(query_id_col, query_emb_col),
+        cent_rows,
+        nprobe,
+        emb_col=query_emb_col,
     )
-
-    et = dict(emb.select(id_col, emb_col).dtypes)
-
-    def rescore(qpdf, mpdf):
-        import pandas as pd
-
-        if not len(qpdf) or not len(mpdf):
-            return pd.DataFrame(
-                {query_id_col: [], id_col: [], "sim_r4": []}
-            )
-        Q = np.stack(
-            [np.asarray(e, dtype=np.float64) for e in qpdf[query_emb_col]]
-        )
-        M = np.stack(
-            [np.asarray(e, dtype=np.float64) for e in mpdf[emb_col]]
-        )
-        sims = _np_cos_r4(Q, M)
-        vids = mpdf[id_col].to_numpy()
-        qids = qpdf[query_id_col].to_numpy()
-        out_q, out_v, out_s = [], [], []
-        for i in range(len(qids)):
-            mask = vids != qids[i]  # self-match exclusion
-            vv, ss = vids[mask], sims[i][mask]
-            order = np.lexsort((vv, -ss))[:topk]
-            out_q.append(np.full(len(order), qids[i]))
-            out_v.append(vv[order])
-            out_s.append(ss[order])
-        return pd.DataFrame(
-            {
-                query_id_col: np.concatenate(out_q),
-                id_col: np.concatenate(out_v),
-                "sim_r4": np.concatenate(out_s),
-            }
-        )
-
-    scored2 = (
-        probes.groupBy("cell")
-        .cogroup(members.groupBy("cell"))
-        .applyInPandas(
-            lambda q, m: rescore(q, m),
-            f"{query_id_col} {qt[query_id_col]}, {id_col} {et[id_col]}, "
-            "sim_r4 double",
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim_r4").desc(), F.col(id_col)
-    )
-    return scored2.withColumn("rk", F.row_number().over(w)).where(
-        F.col("rk") <= topk
+    return rescore_cells(
+        probes,
+        members,
+        topk=topk,
+        id_col=id_col,
+        emb_col=emb_col,
+        query_id_col=query_id_col,
+        query_emb_col=query_emb_col,
     )

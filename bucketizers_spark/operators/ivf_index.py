@@ -11,13 +11,14 @@ serves ANN (e.g. a "vector index" in table format):
 - ``cells``: n rows (vec_id, cell) — every vector's nearest-centroid
   assignment. This is the table whose recompute costs a full corpus
   pass per query batch; persisted it costs one pass EVER (plus
-  incremental appends for new vectors — assign_cells over the new rows
-  only, an append-only maintenance job).
+  incremental appends for new vectors — assign_cells_vec over the new
+  rows only, an append-only maintenance job).
 
-Query path reads both tables, probes nprobe cells, and rescores
-exactly inside them — identical math to ivf_topk (the pytest pins
-results equal), but the corpus-sized work at query time is one equijoin
-on the cell id against pruned parquet.
+Query path reads both tables and runs ivf_topk's own probe and rescore
+(operators/ivf.probe_cells, rescore_cells) over them — the same code,
+so results are equal (the pytest pins it), but the corpus-sized work at
+query time is one equijoin of the cell table with the vectors instead of
+a corpus-wide assignment.
 
 Scale notes: ``cells`` is written partitioned by cell bucket (cell %
 n_files) so a probe's equijoin prunes files (partition pruning on the
@@ -33,10 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bucketizers_spark.operators.ivf import (
-    assign_cells,
-    ivf_topk,
+    assign_cells_vec,
+    collect_centroid_rows,
     kmeans_centroids,
     lowest_id_centroids,
+    probe_cells,
+    rescore_cells,
 )
 
 
@@ -80,14 +83,11 @@ class IvfIndex:
         cents.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(path, "centroids")
         )
-        cells = assign_cells(emb, cents, id_col=id_col, emb_col=emb_col)
-        (
-            cells.withColumn("cell_bucket", F.col("cell") % cell_buckets)
-            .write.mode("overwrite")
-            .partitionBy("cell_bucket")
-            .parquet(os.path.join(path, "cells"))
+        index = cls(path)
+        index._write_cells(
+            emb, cents, "overwrite", id_col, emb_col, cell_buckets
         )
-        return cls(path)
+        return index
 
     def centroids(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self._centroids_path)
@@ -111,72 +111,21 @@ class IvfIndex:
         corpus-wide assignment at query time. ``emb`` supplies the
         vectors for exact rescoring (the index stores ids, not
         payloads, like every inverted index)."""
-        from pyspark.sql.window import Window
-
         spark = emb.sparkSession
-        cents = self.centroids(spark)
-        cells = self.cells(spark)
-        from bucketizers_spark.operators.ivf import _cosine
-
-        qscored = queries.crossJoin(F.broadcast(cents)).select(
-            query_id_col,
-            query_emb_col,
-            F.col("c_id").alias("cell"),
-            F.round(
-                _cosine(F.col(query_emb_col), F.col("ce")), 4
-            ).alias("_cs"),
+        probes = probe_cells(
+            queries.select(query_id_col, query_emb_col),
+            collect_centroid_rows(self.centroids(spark)),
+            nprobe,
+            emb_col=query_emb_col,
         )
-        wq = Window.partitionBy(query_id_col).orderBy(
-            F.col("_cs").desc(), F.col("cell")
-        )
-        probes = (
-            qscored.withColumn("_pr", F.row_number().over(wq))
-            .where(F.col("_pr") <= nprobe)
-            .select(query_id_col, query_emb_col, "cell")
-        )
-        members = cells.join(emb.select(id_col, emb_col), id_col)
-        # self-match exclusion only applies when the corpus-id and
-        # query-id columns share a type — i.e. the ids live in one id
-        # space where a query CAN be its own corpus row. With different
-        # types the spaces are disjoint by construction and the old
-        # unconditional != either silently discarded every candidate
-        # (cast → NULL) or threw under ANSI casting (ADVICE r5); the
-        # plan-time type check sidesteps both. Null-safe negation so a
-        # NULL corpus id is kept as an ordinary non-self candidate.
-        cand = probes.join(members, "cell")
-        id_t = emb.schema[id_col].dataType
-        q_t = queries.schema[query_id_col].dataType
-        numeric = ("byte", "short", "integer", "long", "float", "double")
-
-        def _is_num(t):
-            return t.typeName() in numeric
-
-        if id_t == q_t:
-            cand = cand.where(
-                ~F.col(id_col).eqNullSafe(F.col(query_id_col))
-            )
-        elif _is_num(id_t) and _is_num(q_t):
-            # ADVICE r6: ids in one numeric id space previously compared
-            # via numeric widening — only skip the exclusion for
-            # INCOMPARABLE type families (e.g. string vs numeric), and
-            # compare numerics on a common widened cast so a query never
-            # silently appears in its own top-k.
-            cand = cand.where(
-                ~F.col(id_col)
-                .cast("double")
-                .eqNullSafe(F.col(query_id_col).cast("double"))
-            )
-        sim = F.round(_cosine(F.col(query_emb_col), F.col(emb_col)), 4)
-        scored = (
-            cand.select(query_id_col, id_col, sim.alias("sim_r4"))
-            .groupBy(query_id_col, id_col)
-            .agg(F.max("sim_r4").alias("sim_r4"))
-        )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("sim_r4").desc(), F.col(id_col)
-        )
-        return scored.withColumn("rk", F.row_number().over(w)).where(
-            F.col("rk") <= topk
+        return rescore_cells(
+            probes,
+            self.cells(spark).join(emb.select(id_col, emb_col), id_col),
+            topk=topk,
+            id_col=id_col,
+            emb_col=emb_col,
+            query_id_col=query_id_col,
+            query_emb_col=query_emb_col,
         )
 
     def append(
@@ -191,14 +140,23 @@ class IvfIndex:
         the frozen centroids and append their cell rows — the constant
         small job that keeps the index current between (rare) retrain
         rebuilds."""
-        spark = new_emb.sparkSession
-        cents = self.centroids(spark)
-        cells = assign_cells(
-            new_emb, cents, id_col=id_col, emb_col=emb_col
+        cents = self.centroids(new_emb.sparkSession)
+        self._write_cells(
+            new_emb, cents, "append", id_col, emb_col, cell_buckets
+        )
+
+    def _write_cells(self, emb, cents, mode, id_col, emb_col, cell_buckets):
+        """Assign ``emb`` to its nearest centroid and write the (id, cell)
+        rows partitioned on the cell bucket."""
+        cells = assign_cells_vec(
+            emb.select(id_col, emb_col),
+            collect_centroid_rows(cents),
+            emb_col=emb_col,
         )
         (
-            cells.withColumn("cell_bucket", F.col("cell") % cell_buckets)
-            .write.mode("append")
+            cells.select(id_col, "cell")
+            .withColumn("cell_bucket", F.col("cell") % cell_buckets)
+            .write.mode(mode)
             .partitionBy("cell_bucket")
             .parquet(self._cells_path)
         )

@@ -5,20 +5,20 @@ clustering bounds the quadratic pairwise step to cell populations,
 which is the published trick that makes embedding-level dedup
 tractable at corpus scale (K grows with n, holding cell size roughly
 constant). One definition serves the driver query
-(entry_queries.q_semdedup), the pipeline stage
-(llm_pipeline.semantic_dedup), and — via the shared
-stateless_cell_expr assignment — the streaming mirror
-(streaming/dedup_stream.semdedup_candidates_stream).
+(entry_queries.q_semdedup) and the pipeline stage
+(llm_pipeline.semantic_dedup); the streaming mirror
+(streaming/dedup_stream.semdedup_candidates_stream) shares its cell
+assignment (operators/ivf.assign_cells_vec) and its cosine kernel.
 
 Kernel design (hash-pinned against the DuckDB oracle): both the
-nearest-centroid assignment and the within-cell pairwise cosines are
-vectorized Arrow kernels (per-pair JVM higher-order-function folds are
-CodegenFallback — measured 7.1s vs 0.4s at sf0.1 cell populations),
-with every dot/norm accumulated dimension-at-a-time so the summation
-order is LEFT TO RIGHT in IEEE double exactly like the engine's
-_cosine fold and the oracle's list_sum — bit-identical rounded
-values, not just close — and HALF_UP rounding replicated in numpy
-(whose own round is half-even).
+nearest-centroid assignment and the within-cell pairwise cosines run
+the vectorized operators/ivf kernel ``_np_cos_r4`` in Arrow passes
+(per-pair JVM higher-order-function folds are CodegenFallback —
+measured 7.1s vs 0.4s at sf0.1 cell populations), with every dot/norm
+accumulated dimension-at-a-time so the summation order is LEFT TO RIGHT
+in IEEE double exactly like the oracle's list_sum — bit-identical
+rounded values, not just close — and HALF_UP rounding replicated in
+numpy (whose own round is half-even).
 """
 
 from __future__ import annotations
@@ -28,26 +28,6 @@ from pyspark.sql import DataFrame
 
 DEFAULT_K = 8
 DEFAULT_TAU = 0.35
-
-
-def _lr_sq(M):
-    import numpy as np
-
-    out = np.zeros(M.shape[0])
-    for d in range(M.shape[1]):  # left-to-right fold order
-        out += M[:, d] * M[:, d]
-    return out
-
-
-def _half_up4(x):
-    import numpy as np
-
-    return (
-        np.where(
-            x >= 0, np.floor(x * 1e4 + 0.5), np.ceil(x * 1e4 - 0.5)
-        )
-        / 1e4
-    )
 
 
 def semdedup_flags(
@@ -71,46 +51,19 @@ def semdedup_flags(
     every member with its flag directly — no join-back."""
     import numpy as np
 
-    from bucketizers_spark.operators.ivf import kmeans_centroids
-
-    cent_rows = sorted(
-        (
-            (int(r["c_id"]), list(r["ce"]))
-            for r in kmeans_centroids(
-                emb, k, id_col=id_col, emb_col=emb_col
-            ).collect()
-        ),
-        key=lambda t: t[0],
+    from bucketizers_spark.operators.ivf import (
+        _np_cos_r4,
+        _np_matrix,
+        assign_cells_vec,
+        collect_centroid_rows,
+        kmeans_centroids,
     )
-    C = np.array([ce for _cid, ce in cent_rows], dtype=np.float64)
-    cids = np.array([cid for cid, _ in cent_rows], dtype="int64")
 
-    def assign_kernel(batches):
-        # bit-identical to assign_cells / stateless_cell_expr: left-to-
-        # right dim accumulation, HALF_UP 4-place rounding, ties to the
-        # smallest c_id (np.argmax takes the first max)
-        cn = np.sqrt(_lr_sq(C))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf[emb_col]]
-            )
-            dots = np.zeros((M.shape[0], C.shape[0]))
-            for d in range(M.shape[1]):
-                dots += M[:, d : d + 1] * C[np.newaxis, :, d]
-            sims = _half_up4(
-                dots / (np.sqrt(_lr_sq(M))[:, np.newaxis] * cn)
-            )
-            out = pdf[[id_col, emb_col]].copy()
-            out["cell"] = cids[np.argmax(sims, axis=1)]
-            yield out
-
-    emb_t = dict(emb.select(id_col, emb_col).dtypes)
-    cells = emb.select(id_col, emb_col).mapInPandas(
-        assign_kernel,
-        f"{id_col} {emb_t[id_col]}, {emb_col} {emb_t[emb_col]}, "
-        "cell long",
+    cent_rows = collect_centroid_rows(
+        kmeans_centroids(emb, k, id_col=id_col, emb_col=emb_col)
+    )
+    cells = assign_cells_vec(
+        emb.select(id_col, emb_col), cent_rows, emb_col=emb_col
     )
 
     def cell_flags(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -120,19 +73,14 @@ def semdedup_flags(
         # executor-OOM hazard on a hot cell. This form walks the strict
         # lower triangle in (row-block × col-block) tiles, so peak memory
         # is O(block²) regardless of cell size and nothing is gathered.
-        # Arithmetic is bit-identical: each pair's dot is still
-        # accumulated dimension-at-a-time left-to-right (a*b per dim is
-        # the same IEEE multiply — only the loop blocking changed), the
-        # norm product and HALF_UP rounding are unchanged, and a row j is
-        # dropped iff SOME i<j reaches tau — same rule, same flags.
+        # Each tile is one _np_cos_r4 call (the engine's cosine: per-pair
+        # dot and norms folded dimension-at-a-time left-to-right, HALF_UP
+        # rounding), and a row j is dropped iff SOME i<j reaches tau.
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
         n = len(pdf)
         kept = np.ones(n, dtype=bool)
         if n >= 2:
-            M = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf[emb_col]]
-            )
-            nrm = np.sqrt(_lr_sq(M))
+            M = _np_matrix(pdf[emb_col])
             jb, ib = 1024, 8192
             for s in range(1, n, jb):
                 e = min(s + jb, n)
@@ -143,13 +91,7 @@ def semdedup_flags(
                     if not alive.any():
                         break  # every row in this block already dropped
                     u = min(t + ib, e)
-                    dot = np.zeros((e - s, u - t))
-                    for d in range(M.shape[1]):  # left-to-right fold
-                        dot += MJ[:, d : d + 1] * M[np.newaxis, t:u, d]
-                    r4 = _half_up4(
-                        dot
-                        / (nrm[s:e, np.newaxis] * nrm[np.newaxis, t:u])
-                    )
+                    r4 = _np_cos_r4(MJ, M[t:u])
                     dup = (r4 >= tau) & (
                         np.arange(t, u)[np.newaxis, :] < col_j
                     )
@@ -163,6 +105,7 @@ def semdedup_flags(
             }
         )
 
+    id_t = dict(emb.dtypes)[id_col]
     return cells.groupBy("cell").applyInPandas(
-        cell_flags, f"{id_col} {emb_t[id_col]}, cell long, kept boolean"
+        cell_flags, f"{id_col} {id_t}, cell long, kept boolean"
     )

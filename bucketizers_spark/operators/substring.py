@@ -90,6 +90,12 @@ from bucketizers_spark.plans.materialize import cut_lineage, cut_lineage_counted
 # NUL does not (applyInPandas silently drops \x00 from returned strings).
 _PSEP = "\x1f"
 
+# the global trie root's key in the streaming node-counter table: _PSEP
+# alone, which no node name contains (keyed by the root's name, the default
+# root "root" shares its row with the node "root" a value like "rooted"
+# creates)
+ROOT_COUNTER_KEY = _PSEP
+
 # salts per distributed trie level (and per-parent root) when the caller
 # passes salt_buckets=0
 DEFAULT_SALT_BUCKETS = 32
@@ -434,12 +440,14 @@ def _grouped_walk(
 
         return keyed.applyInPandas(walk_group, out_schema).transform(cut_lineage)
 
-    # carried counters: a root counter (the literal root row; per parent,
+    # carried counters: a root counter (the ROOT_COUNTER_KEY row; per parent,
     # a bare parent id) becomes a NULL node, every other row its node name
     # (per parent split off its parent\x1fnode key)
     node = F.col("_st_node")
     if parent_col is None:
-        st = state.select(F.when(node != root, node).alias("_st_node"), "_st_cnt")
+        st = state.select(
+            F.when(node != ROOT_COUNTER_KEY, node).alias("_st_node"), "_st_cnt"
+        )
     else:
         owned = node.contains(_PSEP)
         st = state.select(
@@ -486,7 +494,8 @@ def _run_cascade(
     capacity is page_size - cnt, and chain-exhausted multi-word members get
     no bucket even as first in-batch arrivals). With
     ``emit_counter_updates`` the result carries a ``counter_updates``
-    DataFrame (node, cnt) of post-batch totals for all touched nodes.
+    DataFrame (node, cnt) of post-batch totals for all touched nodes; the
+    global root's row is keyed ``ROOT_COUNTER_KEY``, never its name.
 
     Each distributed level places members with the salted two-phase
     threshold (``salt_buckets`` salts, ``DEFAULT_SALT_BUCKETS`` when 0 —
@@ -650,7 +659,7 @@ def _run_cascade(
         # so the root never "creates" and never emits a relation.
         root_cnt = 0
         if state is not None:
-            row = state.where(F.col("_st_node") == root).collect()
+            row = state.where(F.col("_st_node") == ROOT_COUNTER_KEY).collect()
             root_cnt = row[0]["_st_cnt"] if row else 0
         root_cap = max(page_size - root_cnt, 0)
         thr = None
@@ -675,7 +684,9 @@ def _run_cascade(
         root_placed = min(root_cap, total_work)
         if emit_counter_updates and root_cnt + root_placed:
             counter_parts.append(
-                const_frame(spark, COUNTER_SCHEMA, (root, root_cnt + root_placed))
+                const_frame(
+                    spark, COUNTER_SCHEMA, (ROOT_COUNTER_KEY, root_cnt + root_placed)
+                )
             )
         level = 0
         remaining_cnt = total_work - root_placed

@@ -10,19 +10,20 @@ micro-batch carries it — exactly decon_stream's stateless shape:
 
 - no keyed state, no watermark (append-pure);
 - foreachBatch runs the EXACT batch search operator
-  (``IvfIndex.search`` — probe cells via broadcast centroids, candidate
-  equijoin on the persisted cell table, exact rescore; no semantic
-  drift between batch and stream is possible because they are the same
-  code);
+  (``IvfIndex.search`` — ivf_topk's probe kernel over the stored
+  centroids, then its cell-cogrouped exact rescore over the persisted
+  cell table joined with the vectors; no semantic drift between batch
+  and stream is possible because they are the same code);
 - results commit through the manifest-gated ``IdempotentParquetSink``,
   so kill/resume correctness rides entirely on source offsets + the
   idempotent sink (replayed micro-batches are skipped, not re-served).
 
-Scale shape per micro-batch: centroids broadcast (K rows), probe
-selection is a per-query window over K×|batch| rows (batch-bounded),
-the candidate join shuffles only the probed cells' id lists, and the
-exact rescore touches ~nprobe/K of the corpus vectors per query — the
-batch operator's documented fraction, now amortized per micro-batch.
+Scale shape per micro-batch: the K centroid rows are collected and
+each query picks its nprobe cells in one narrow Arrow pass (no window),
+the rescore cogroups the batch's probes with the cell members by cell
+(one shuffle of the corpus's (id, embedding, cell) rows per
+micro-batch), and the exact rescore touches ~nprobe/K of the corpus
+vectors per query — the batch operator's documented fraction.
 """
 
 from __future__ import annotations

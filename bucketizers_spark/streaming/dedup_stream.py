@@ -370,15 +370,15 @@ def _make_cell_pairs_fn(tau: float, max_reps: int | None):
     cell caps at max_reps embeddings instead of holding the whole
     cell); each arriving vector emits one candidate pair per
     representative with rounded cosine >= tau, then joins the
-    representative set if there is room. ADVICE r6: cosines reuse the
-    BATCH kernel's exact arithmetic — dimension-at-a-time left-to-right
-    dot/norm folds over the raw vectors and HALF_UP rounding
-    (operators/semdedup._lr_sq/_half_up4) — instead of a BLAS dot over
-    pre-normalized copies with Python's half-even round(), so boundary
-    cosines cross tau identically to the batch operator."""
+    representative set if there is room. ADVICE r6: cosines run the
+    BATCH kernel (operators/ivf._np_cos_r4: dimension-at-a-time
+    left-to-right dot/norm folds over the raw vectors, HALF_UP
+    rounding) instead of a BLAS dot over pre-normalized copies with
+    Python's half-even round(), so boundary cosines cross tau
+    identically to the batch operator."""
     import numpy as np
 
-    from bucketizers_spark.operators.semdedup import _half_up4, _lr_sq
+    from bucketizers_spark.operators.ivf import _np_cos_r4
 
     def fn(
         key, pdfs: Iterable[pd.DataFrame], state: GroupState
@@ -399,14 +399,9 @@ def _make_cell_pairs_fn(tau: float, max_reps: int | None):
                 pdf["vec_id"], pdf["seq"], pdf["embedding"]
             ):
                 v = np.asarray(emb, dtype=np.float64)
-                nv = np.sqrt(_lr_sq(v[np.newaxis, :]))[0]
                 vid = str(vid)
                 if ids:
-                    R = np.stack(embs)
-                    dot = np.zeros(len(ids))
-                    for d in range(R.shape[1]):  # left-to-right fold
-                        dot += R[:, d] * v[d]
-                    cs = _half_up4(dot / (np.sqrt(_lr_sq(R)) * nv))
+                    cs = _np_cos_r4(v[np.newaxis], np.stack(embs))[0]
                     for rid, c in zip(ids, cs):
                         if c >= tau:
                             rows.append(
@@ -454,24 +449,23 @@ def semdedup_candidates_stream(
     documented in _make_bucket_pairs_fn); state stays
     O(max_reps * dim) per cell instead of O(cell).
 
-    Streaming plan note: the batch assign_cells is an argmax GROUPBY —
-    a second stateful op a streaming query cannot stack under the
-    keyed-state kernel. K is bounded, so the assignment collapses to
-    the STATELESS literal-argmax expression shared with the batch
-    query (operators/ivf.stateless_cell_expr) — bit-identical tie
-    behavior to assign_cells, zero extra state."""
-    from bucketizers_spark.operators.ivf import stateless_cell_expr
-
-    cent_rows = sorted(
-        ((int(r["c_id"]), list(r["ce"])) for r in centroids.collect()),
-        key=lambda t: t[0],
+    Streaming plan note: the cell column is the batch query's own
+    assignment kernel (operators/ivf.assign_cells_vec), a narrow
+    mapInPandas pass that runs unchanged on a streaming frame ahead of
+    the keyed-state kernel — no argmax groupBy (a second stateful op a
+    streaming query cannot stack under it), zero extra state."""
+    from bucketizers_spark.operators.ivf import (
+        assign_cells_vec,
+        collect_centroid_rows,
     )
-    cell = stateless_cell_expr(cent_rows, emb_col=emb_col)
-    keyed = stream_df.select(
-        F.col(id_col).cast("string").alias("vec_id"),
-        F.col(seq_col).alias("seq"),
-        cell.alias("cell"),
-        F.col(emb_col).cast("array<double>").alias("embedding"),
+
+    keyed = assign_cells_vec(
+        stream_df.select(
+            F.col(id_col).cast("string").alias("vec_id"),
+            F.col(seq_col).alias("seq"),
+            F.col(emb_col).cast("array<double>").alias("embedding"),
+        ),
+        collect_centroid_rows(centroids),
     )
     return keyed.groupBy("cell").applyInPandasWithState(
         _make_cell_pairs_fn(tau, max_reps),

@@ -33,7 +33,11 @@ from bucketizers_spark.operators.core import (
     empty_relations,
     empty_seals,
 )
-from bucketizers_spark.operators.substring import COUNTER_SCHEMA, token_prefix_trie
+from bucketizers_spark.operators.substring import (
+    COUNTER_SCHEMA,
+    ROOT_COUNTER_KEY,
+    token_prefix_trie,
+)
 from bucketizers_spark.sources.stream import stage_chunks
 from bucketizers_spark.sources.synthetic import token_stream_pdf
 
@@ -112,7 +116,8 @@ class TestTrieCounterUpdatesPlan:
         )
 
         def root_cnt(updates):
-            return {r.node: r.cnt for r in updates.collect()}.get("root")
+            counters = {r.node: r.cnt for r in updates.collect()}
+            return counters.get(ROOT_COUNTER_KEY)
 
         fresh = token_prefix_trie(df.where("seq < 10"), **kw).counter_updates
         assert "PythonRDD" not in _lineage(fresh)

@@ -464,11 +464,9 @@ class TestSemdedupStream:
         batch kept rule is exactly 'never a b_id'."""
         import numpy as np
 
-        from bucketizers_spark.operators.ivf import (
-            _cosine,
-            assign_cells,
-            kmeans_centroids,
-        )
+        import duckdb
+
+        from bucketizers_spark.operators.ivf import kmeans_centroids
         from bucketizers_spark.streaming.dedup_stream import (
             semdedup_candidates_stream,
         )
@@ -510,29 +508,47 @@ class TestSemdedupStream:
         got_rows = spark.read.parquet(out_dir).collect()
         got = {(r.cell, *sorted((r.a_id, r.b_id))) for r in got_rows}
 
-        # batch drop-edge set: within-cell pairs a<b at rounded cos>=tau
-        cells = assign_cells(bdf, cents).join(
-            bdf.select("vec_id", "embedding"), "vec_id"
-        )
-        a, b = cells.alias("a"), cells.alias("b")
-        sim = F.round(
-            _cosine(F.col("a.embedding"), F.col("b.embedding")), 4
-        )
-        want_rows = (
-            a.join(
-                b,
-                (F.col("a.cell") == F.col("b.cell"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
+        # batch drop-edge set: within-cell pairs a<b at rounded cos>=tau,
+        # each vector in its nearest centroid's cell (ties to the smallest
+        # c_id), computed by DuckDB with the oracle's list_sum cosine fold
+        # — a reference that shares no code with the engine's kernel
+        def cos_r4(a, b):
+            return (
+                f"round(list_sum(list_transform(range(1, len({a}) + 1), "
+                f"i -> {a}[i] * {b}[i])) / (sqrt(list_sum(list_transform("
+                f"{a}, x -> x * x))) * sqrt(list_sum(list_transform("
+                f"{b}, x -> x * x)))), 4)"
             )
-            .where(sim >= tau)
-            .select(
-                F.col("a.cell").alias("cell"),
-                F.col("a.vec_id").alias("x"),
-                F.col("b.vec_id").alias("y"),
-            )
-            .collect()
+
+        cent_pdf = pd.DataFrame(
+            [(int(r.c_id), list(r.ce)) for r in cents.collect()],
+            columns=["c_id", "ce"],
         )
-        want = {(r.cell, *sorted((r.x, r.y))) for r in want_rows}
+        con = duckdb.connect()
+        con.register("emb", pdf)
+        con.register("cents", cent_pdf)
+        want_rows = con.execute(
+            f"""
+            WITH s AS (
+              SELECT e.vec_id, c.c_id, {cos_r4("e.embedding", "c.ce")} AS sim
+              FROM emb e, cents c
+            ),
+            cells AS (
+              SELECT vec_id, c_id AS cell FROM (
+                SELECT *, row_number() OVER (
+                  PARTITION BY vec_id ORDER BY sim DESC, c_id) AS rn
+                FROM s
+              ) WHERE rn = 1
+            )
+            SELECT a.cell, a.vec_id, b.vec_id
+            FROM cells a
+            JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
+            JOIN emb ea ON ea.vec_id = a.vec_id
+            JOIN emb eb ON eb.vec_id = b.vec_id
+            WHERE {cos_r4("ea.embedding", "eb.embedding")} >= {tau}
+            """
+        ).fetchall()
+        want = {(cell, *sorted((x, y))) for cell, x, y in want_rows}
         assert got == want
         # twins guarantee the sets are non-trivial and span the restart
         assert len(got) >= 10

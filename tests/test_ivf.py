@@ -17,7 +17,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from bucketizers_spark.operators.ivf import (
-    assign_cells,
+    assign_cells_vec,
+    collect_centroid_rows,
     ivf_topk,
     kmeans_centroids,
     lowest_id_centroids,
@@ -51,7 +52,7 @@ class TestKmeansCentroids:
     def test_recovers_cluster_structure(self, spark):
         emb = _clustered_emb(spark)
         cents = kmeans_centroids(emb, 4, iters=10)
-        cells = assign_cells(emb, cents)
+        cells = assign_cells_vec(emb, collect_centroid_rows(cents))
         # members of the same true cluster land in the same cell
         got = (
             cells.withColumn("true_c", (F.col("vec_id") / 25).cast("int"))
@@ -72,7 +73,9 @@ class TestKmeansCentroids:
 class TestAssignCells:
     def test_every_vector_exactly_one_cell(self, spark):
         emb = _clustered_emb(spark)
-        cells = assign_cells(emb, lowest_id_centroids(emb, 8))
+        cells = assign_cells_vec(
+            emb, collect_centroid_rows(lowest_id_centroids(emb, 8))
+        )
         assert cells.count() == 100
         assert cells.select("vec_id").distinct().count() == 100
 

@@ -68,7 +68,10 @@ class TestIvfIndex:
         assert len(buckets) > 1
 
     def test_append_assigns_only_new_vectors(self, spark, idx_dir):
-        from bucketizers_spark.operators.ivf import assign_cells
+        from bucketizers_spark.operators.ivf import (
+            assign_cells_vec,
+            collect_centroid_rows,
+        )
         from bucketizers_spark.operators.ivf_index import IvfIndex
 
         emb = _emb(spark)
@@ -88,7 +91,9 @@ class TestIvfIndex:
         }
         want = {
             (r.vec_id, r.cell)
-            for r in assign_cells(new, idx.centroids(spark)).collect()
+            for r in assign_cells_vec(
+                new, collect_centroid_rows(idx.centroids(spark))
+            ).collect()
         }
         assert got == want and len(got) == 100
 
@@ -96,7 +101,8 @@ class TestIvfIndex:
     def test_incomparable_query_id_type_keeps_candidates(self, spark, idx_dir):
         """ADVICE r5: string query ids vs long corpus ids used to NULL
         out the self-match exclusion and silently return ZERO rows;
-        the null-safe exclusion keeps every candidate instead."""
+        ids of incomparable types never match, so every candidate is
+        kept."""
         from bucketizers_spark.operators.ivf_index import IvfIndex
 
         emb = _emb(spark)
@@ -109,3 +115,18 @@ class TestIvfIndex:
         got = index.search(emb, q, nprobe=2, topk=5)
         n_q = q.count()
         assert got.count() == n_q * 5
+
+    def test_widened_numeric_query_ids_exclude_self(self, spark, idx_dir):
+        """ADVICE r6: double query ids over long corpus ids share one
+        numeric id space — they compare after widening, so no query
+        appears in its own top-k (and every query still gets k rows)."""
+        from bucketizers_spark.operators.ivf_index import IvfIndex
+
+        emb = _emb(spark)
+        index = IvfIndex.build(emb, idx_dir, k=8)
+        q = _queries(emb).select(
+            F.col("query_id").cast("double").alias("query_id"), "qe"
+        )
+        rows = index.search(emb, q, nprobe=2, topk=5).collect()
+        assert len(rows) == q.count() * 5
+        assert all(float(r.vec_id) != r.query_id for r in rows)

@@ -27,6 +27,9 @@ SUBSET = [
     "dedup_simhash",
     "dedup_cluster",
     "ann_topk",
+    "ann_lsh",
+    "ann_lsh_recall",
+    "emb_near_dup",
     "ann_int8",
     "ann_pq",
     "ann_pq_rescore",

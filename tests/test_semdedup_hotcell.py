@@ -16,16 +16,16 @@ import pytest
 
 
 def _reference_flags(M: np.ndarray, tau: float) -> np.ndarray:
-    from bucketizers_spark.operators.semdedup import _half_up4, _lr_sq
+    from bucketizers_spark.operators.ivf import _np_half_up4, _np_lr_sq
 
     n = M.shape[0]
-    nrm = np.sqrt(_lr_sq(M))
+    nrm = np.sqrt(_np_lr_sq(M))
     kept = np.ones(n, dtype=bool)
     for j in range(1, n):
         dot = np.zeros(j)
         for d in range(M.shape[1]):  # left-to-right fold order
             dot += M[:j, d] * M[j, d]
-        r4 = _half_up4(dot / (nrm[:j] * nrm[j]))
+        r4 = _np_half_up4(dot / (nrm[:j] * nrm[j]))
         if (r4 >= tau).any():
             kept[j] = False
     return kept

@@ -146,7 +146,11 @@ def _oracle_counters(records, chain, page_size, max_depth, parent_col):
     prepared, seq-sorted) member by member: per trie (one per parent with
     ``parent_col``), the seeded root takes the first page_size non-empty
     arrivals and ``_walk`` places the rest."""
-    from bucketizers_spark.operators.substring import _PSEP, _walk
+    from bucketizers_spark.operators.substring import (
+        _PSEP,
+        ROOT_COUNTER_KEY,
+        _walk,
+    )
 
     tries: dict = {}
     for r in records:
@@ -158,7 +162,7 @@ def _oracle_counters(records, chain, page_size, max_depth, parent_col):
         _walk(rows[page_size:], chain.py_nodes, chain.sep, 1, page_size, "root",
               "seq", max_depth, counters)
         if parent_col is None:
-            out["root"] = min(len(rows), page_size)
+            out[ROOT_COUNTER_KEY] = min(len(rows), page_size)
             out.update(counters)
         else:
             out[parent] = min(len(rows), page_size)
@@ -245,6 +249,35 @@ class TestTrieStreamCounters:
             job.process_batch(df.where(f"seq >= {lo} AND seq < {hi}"), b)
             want = _oracle_counters(records[:hi], chain, page_size, max_depth, parent)
             assert _counter_version(state_dir, b) == want, b
+
+    def test_node_named_like_root_keeps_its_own_count(self, spark, workdir):
+        """The value "rooted" creates a char-mode node named "root", the
+        default root's name. The root's counter has its own key, so the
+        node's count is never read as the root's (or the reverse), and
+        the stream places every row where batch substring_trie does."""
+        from bucketizers_spark.operators.substring import substring_trie
+
+        values = ["a"] + ["rooted"] * 12 + ["b"] * 3 + ["rooted"] * 6
+        df = spark.createDataFrame(
+            list(enumerate(values)), "seq long, value string"
+        )
+        job = TrieStreamJob(
+            os.path.join(workdir, "sink"),
+            os.path.join(workdir, "state"),
+            mode="char",
+            value_col="value",
+            page_size=1,
+            max_depth=8,
+        )
+        job.process_batch(df.where("seq < 11"), 0)
+        job.process_batch(df.where("seq >= 11"), 1)
+        got = assignments_map(job.sink.read_all(spark))
+        want = assignments_map(
+            substring_trie(df, "value", page_size=1, max_depth=8).assignments
+        )
+        assert got == want
+        # one row in the root and one in the node named "root"
+        assert sum(b == "root" for b in want.values()) == 2
 
 
 class TestTrieStreamJobBudget:
