@@ -42,10 +42,6 @@ from bucketizers_spark.operators import (
     substring_trie,
     tumbling_bucketizer,
 )
-from bucketizers_spark.operators.multi import (
-    paged_within_parent,
-    trie_within_parent,
-)
 from bucketizers_spark.operators.ivf import pair_cos_r4
 from bucketizers_spark.operators.substring import token_prefix_trie
 from bucketizers_spark.plans.materialize import cut_lineage
@@ -416,7 +412,9 @@ def q_multi_subject_basic(spark, sf_dir):
     staged = subject_page(
         df, "subject", salt="s0", seq_col="event_id"
     ).assignments.withColumnRenamed("bucket_id", "parent")
-    res = paged_within_parent(staged, "parent", page_size=20, seq_col="event_id")
+    res = basic_pager(
+        staged, page_size=20, seq_col="event_id", parent_col="parent"
+    )
     return res.assignments.select("event_id", "bucket_id")
 
 
@@ -432,13 +430,11 @@ def q_multi_subject_rotation(spark, sf_dir):
     """Multi composition with a subject child (S5): parent = event_type (a
     pre-assigned stage-1 bucket), child = a dedicated subject-page index
     per parent — its own first-seen map and root rotation, the child root
-    collapsing onto the parent (operators/multi.subject_within_parent)."""
-    from bucketizers_spark.operators.multi import subject_within_parent
-
+    collapsing onto the parent (``subject_page`` keyed by the parent)."""
     ev = _events_with_subject(spark, sf_dir)
-    res = subject_within_parent(
-        ev, "event_type", "subject", salt="s0", max_relations=5,
-        seq_col="event_id",
+    res = subject_page(
+        ev, "subject", salt="s0", max_relations=5, seq_col="event_id",
+        parent_col="event_type",
     )
     return res.relations.select(
         "from_bucket",
@@ -553,7 +549,8 @@ SQL_GEO_TILE = _sql_geo_tile()
 
 
 def q_multi_geo_pager(spark, sf_dir):
-    """S5 with a GEOSPATIAL child (operators/multi.geo_within_parent):
+    """S5 with a GEOSPATIAL child (``geospatial_tiles`` plus
+    ``fallback_pager`` keyed by the parent, as the pipeline's geo child):
     parent = a derived 3-value stage-1 bucket, child = a dedicated slippy
     tile pager per parent — page counters key on (parent, tile), bucket =
     parent/z/x/y-page, and non-WKT members land in the child's own
@@ -562,7 +559,7 @@ def q_multi_geo_pager(spark, sf_dir):
     BucketizerCore.ts:294-309). WKT built in-query from the events table
     so the full parse → tile → page path runs with a SQL-expressible
     oracle; every 7th event is a non-geometry to exercise the fallback."""
-    from bucketizers_spark.operators.multi import geo_within_parent
+    from bucketizers_spark.operators.geospatial import geospatial_tiles
 
     ev = _t(spark, sf_dir, "events")
     lon = (F.col("value") * 7919).cast("long") % 360 - 180
@@ -578,10 +575,12 @@ def q_multi_geo_pager(spark, sf_dir):
     df = ev.select(
         "event_id", parent.alias("tparent"), wkt.alias("geom")
     )
-    out = geo_within_parent(
-        df, "tparent", "geom", zoom=_GEO_Z, page_size=15, seq_col="event_id"
+    kw = dict(page_size=15, seq_col="event_id", parent_col="tparent")
+    tiles = geospatial_tiles(df, "geom", zoom=_GEO_Z, **kw)
+    fb = fallback_pager(tiles.unmatched, **kw)
+    return tiles.assignments.unionByName(fb.assignments).select(
+        "event_id", "bucket_id"
     )
-    return out.assignments.select("event_id", "bucket_id")
 
 
 def _sql_multi_geo_pager() -> str:
@@ -621,19 +620,17 @@ SQL_MULTI_GEO_PAGER = _sql_multi_geo_pager()
 
 
 def q_multi_time_window(spark, sf_dir):
-    """S5 with a TIME child (operators/multi.time_within_parent — engine
-    extension composing the north_rule's tumbling windows under a parent
-    stage): bucket = parent/window-start, a stateless narrow map (the
-    window is a pure function of the timestamp; no shuffle for
+    """S5 with a TIME child (``tumbling_bucketizer`` keyed by the parent —
+    engine extension composing the north_rule's tumbling windows under a
+    parent stage): bucket = parent/window-start, a stateless narrow map
+    (the window is a pure function of the timestamp; no shuffle for
     assignments)."""
-    from bucketizers_spark.operators.multi import time_within_parent
-
     ev = _t(spark, sf_dir, "events")
     parent = F.concat(
         F.lit("e"), F.pmod(F.col("user_id"), F.lit(4)).cast("string")
     )
     df = ev.select("event_id", parent.alias("wparent"), "ts")
-    out = time_within_parent(df, "wparent", "ts", duration="1 hour")
+    out = tumbling_bucketizer(df, "ts", "1 hour", parent_col="wparent")
     return out.assignments.select("event_id", "bucket_id")
 
 
@@ -2445,47 +2442,11 @@ def q_pack_materialize(spark, sf_dir):
     groupBy(chunk_id) whose per-chunk payload is bounded by the chunk
     length L (collect of ≤L tokens of text per group, order restored
     by sort_array over (off_in_chunk, seg) structs — deterministic, no
-    collect_list ordering hazard)."""
-    from bucketizers_spark.operators.rank import with_global_prefix_sum
+    collect_list ordering hazard). The one definition is
+    ``llm_pipeline.pack_chunks``."""
+    from bucketizers_spark.llm_pipeline import pack_chunks
 
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id", F.size(F.split(F.col("text"), " ")).alias("n_tok")
-    )
-    o = with_global_prefix_sum(d, "doc_id", "n_tok", out_col="off")
-    man = _pack_manifest(o, _PACK_L)
-    j = man.join(docs.select("doc_id", "text"), "doc_id")
-    seg = F.concat_ws(
-        " ",
-        F.slice(
-            F.split(F.col("text"), " "),
-            (F.col("doc_off") + 1).cast("int"),
-            F.col("n_from_doc").cast("int"),
-        ),
-    )
-    pieces = j.select(
-        "chunk_id",
-        "n_from_doc",
-        F.struct(F.col("off_in_chunk").alias("o"), seg.alias("s")).alias(
-            "p"
-        ),
-    )
-    return (
-        pieces.groupBy("chunk_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_from_doc").alias("n_tok"),
-            F.md5(
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.sort_array(F.collect_list("p")), lambda x: x["s"]
-                    ),
-                )
-            ).alias("content_md5"),
-        )
-        .select("chunk_id", "n_docs", "n_tok", "content_md5")
-    )
+    return pack_chunks(_t(spark, sf_dir, "documents"), chunk_len=_PACK_L)
 
 
 SQL_PACK_MATERIALIZE = f"""
@@ -3629,15 +3590,15 @@ def q_token_prefix_trie(spark, sf_dir):
 def q_multi_source_trie(spark, sf_dir):
     """Multi composition with a NON-basic child (S5): parent = the source
     column (a pre-assigned stage-1 bucket), child = a dedicated substring
-    trie per parent (operators/multi.trie_within_parent — the trie cascade
-    keyed by parent; an input this size is walked from the parent roots in
+    trie per parent (``substring_trie`` keyed by the parent — the trie
+    cascade keyed by parent; an input this size is walked from the parent roots in
     one grouped applyInPandas shuffle). Child buckets are parent-prefixed;
     the child root collapses onto the parent."""
     docs = _t(spark, sf_dir, "documents")
     # parent is pre-assigned (source column): no stage-1 shuffle needed
-    out = trie_within_parent(
-        docs, "source", "text",
-        page_size=_TRIE_PS, max_depth=_TRIE_DEPTH, seq_col="doc_id",
+    out = substring_trie(
+        docs, "text", page_size=_TRIE_PS, max_depth=_TRIE_DEPTH,
+        seq_col="doc_id", parent_col="source",
     )
     return out.assignments.select("doc_id", "bucket_id")
 
@@ -3677,9 +3638,9 @@ def q_multi_giant_parent_trie(spark, sf_dir):
             lambda w: F.pmod(F.ascii(w) * 7 + F.length(w) * 13, F.lit(8)),
         ),
     )
-    out = trie_within_parent(
-        docs, "parent3", "tokens", mode="token",
-        page_size=4, max_depth=_TOK_DEPTH, seq_col="doc_id", salt_buckets=8,
+    out = token_prefix_trie(
+        docs, "tokens", page_size=4, max_depth=_TOK_DEPTH, seq_col="doc_id",
+        salt_buckets=8, parent_col="parent3",
     )
     return out.assignments.select("doc_id", "bucket_id")
 

@@ -24,42 +24,61 @@ from pyspark.sql import functions as F
 
 from bucketizers_spark.operators.core import (
     BucketizeResult,
+    child_id,
     empty_seals,
     relation_row,
+    root_id,
 )
-from bucketizers_spark.operators.rank import with_global_rank0
+from bucketizers_spark.operators.rank import with_rank0
 
 
-def _with_rank0(df: DataFrame, seq_col: str, dense_seq: bool) -> DataFrame:
-    """Add a 0-based arrival rank as ``_rank0``. With a dense source-stamped
-    seq this is a free narrow map (the production path); otherwise the
-    two-phase range-partitioned rank (operators/rank.py) — distributed,
-    never a single-task sort."""
-    if dense_seq:
+def _with_rank0(
+    df: DataFrame, seq_col: str, dense_seq: bool, parent_col: str | None
+) -> DataFrame:
+    """Add a 0-based arrival rank as ``_rank0``. Keyed by ``parent_col``
+    the rank counts within each parent (operators/rank.with_rank0). With
+    a dense source-stamped seq the global rank is a free narrow map (the
+    production path); otherwise the two-phase range-partitioned rank
+    (operators/rank.py) — distributed, never a single-task sort."""
+    if dense_seq and not parent_col:
         return df.withColumn("_rank0", F.col(seq_col).cast("long"))
     # probe_uncut: the pager's input is the caller's raw frame (scan-
     # cheap), so the dense probe runs column-pruned with no checkpoint
-    return with_global_rank0(df, seq_col, out_col="_rank0", probe_uncut=True)
+    return with_rank0(
+        df, seq_col, parent_col=parent_col, out_col="_rank0", probe_uncut=True
+    )
 
 
-def _boundary_relations(
-    assignments: DataFrame,
-    bucket_expr,
-    from_expr,
-    rel_type: str = "Relation",
-):
-    """One relation per page boundary: emitted with the first member of each
-    new page (BasicBucketizer.ts:54-60). Derived from the assignment frame
-    with a groupBy on the (already computed) bucket — a tiny aggregate."""
+def _paged(
+    df: DataFrame,
+    page_size: int,
+    seq_col: str,
+    dense_seq: bool,
+    parent_col: str | None,
+    page_id,
+) -> DataFrame:
     return (
-        assignments.where(F.col("_page") >= 1)
-        .groupBy("_page")
+        _with_rank0(df, seq_col, dense_seq, parent_col)
+        .withColumn("_page", F.floor(F.col("_rank0") / F.lit(page_size)))
+        .withColumn("_seq_for_rel", F.col(seq_col))
+        .withColumn("bucket_id", page_id(F.col("_page")))
+    )
+
+
+def _page_relations(
+    assigned: DataFrame, parent_col: str | None, from_expr, to_expr
+) -> DataFrame:
+    """One relation per page, emitted with the page's first member
+    (BasicBucketizer.ts:54-60) — a tiny aggregate over the (already
+    computed) page of the assignment frame."""
+    return (
+        assigned.groupBy(*([parent_col] if parent_col else []), "_page")
         .agg(F.min(F.col("_seq_for_rel")).alias("created_at_seq"))
         .select(
             *relation_row(
                 from_expr(F.col("_page")),
-                rel_type,
-                bucket_expr(F.col("_page")),
+                "Relation",
+                to_expr(F.col("_page")),
                 seq=F.col("created_at_seq"),
             )
         )
@@ -72,19 +91,25 @@ def basic_pager(
     page_size: int = 50,
     seq_col: str = "seq",
     dense_seq: bool = False,
+    parent_col: str | None = None,
 ) -> BucketizeResult:
-    """Page members by arrival order: bucket = str(floor(rank / page_size))."""
+    """Page members by arrival order: bucket = str(floor(rank / page_size)).
+    Keyed by ``parent_col`` every parent bucket pages its own members
+    (one child instance per parent, MultiBucketizer.ts:94-96): bucket =
+    ``parent/page``, ranks count within the parent, page links stay
+    within it."""
     spark = df.sparkSession
-    assigned = (
-        _with_rank0(df, seq_col, dense_seq)
-        .withColumn("_page", F.floor(F.col("_rank0") / F.lit(page_size)))
-        .withColumn("_seq_for_rel", F.col(seq_col))
-        .withColumn("bucket_id", F.col("_page").cast("string"))
-    )
-    relations = _boundary_relations(
-        assigned,
-        bucket_expr=lambda p: p,
-        from_expr=lambda p: (p - 1).cast("string"),
+
+    def page_id(p):
+        return child_id(p.cast("string"), parent_col)
+
+    assigned = _paged(df, page_size, seq_col, dense_seq, parent_col, page_id)
+    # page p's first member links p-1 → p; page 0 opens no link
+    relations = _page_relations(
+        assigned.where(F.col("_page") >= 1),
+        parent_col,
+        from_expr=lambda p: page_id(p - 1),
+        to_expr=page_id,
     )
     assignments = assigned.drop("_page", "_seq_for_rel", "_rank0")
     return BucketizeResult(assignments, relations, empty_seals(spark))
@@ -97,6 +122,7 @@ def fallback_pager(
     root: str = "root",
     seq_col: str = "seq",
     dense_seq: bool = False,
+    parent_col: str | None = None,
 ) -> BucketizeResult:
     """Bucketless pager for members with no property match.
 
@@ -105,27 +131,22 @@ def fallback_pager(
     arrival rank *within that subset* drives the paging, exactly like the
     reference's dedicated ``bucketlessPageMemberCounter``.
     ``dense_seq`` only applies if the subset itself is densely numbered.
+    Keyed by ``parent_col`` each parent keeps its own counter: buckets are
+    ``parent/bucketless-N`` and their relations start at the parent.
     """
     spark = df.sparkSession
-    assigned = (
-        _with_rank0(df, seq_col, dense_seq)
-        .withColumn("_page", F.floor(F.col("_rank0") / F.lit(page_size)))
-        .withColumn("_seq_for_rel", F.col(seq_col))
-        .withColumn("bucket_id", F.concat(F.lit("bucketless-"), F.col("_page")))
-    )
+
+    def page_id(p):
+        return child_id(F.concat(F.lit("bucketless-"), p), parent_col)
+
+    assigned = _paged(df, page_size, seq_col, dense_seq, parent_col, page_id)
     # every new page gets one Relation from the root (BucketizerCore.ts:383-393),
     # including page 0 (unlike basic, whose page 0 is the root itself)
-    relations = (
-        assigned.groupBy("_page")
-        .agg(F.min("_seq_for_rel").alias("created_at_seq"))
-        .select(
-            *relation_row(
-                F.lit(root),
-                "Relation",
-                F.concat(F.lit("bucketless-"), F.col("_page")),
-                seq=F.col("created_at_seq"),
-            )
-        )
+    relations = _page_relations(
+        assigned,
+        parent_col,
+        from_expr=lambda p: root_id(root, parent_col),
+        to_expr=page_id,
     )
     assignments = assigned.drop("_page", "_seq_for_rel", "_rank0")
     return BucketizeResult(assignments, relations, empty_seals(spark))

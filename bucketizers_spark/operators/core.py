@@ -133,6 +133,21 @@ def empty_seals(spark) -> DataFrame:
     return const_frame(spark, SEALS_SCHEMA)
 
 
+def child_id(name: F.Column, parent_col: str | None) -> F.Column:
+    """A bucket id under an optional parent stage: ``parent/name`` when
+    the operator is keyed by ``parent_col`` (a multi child; mapTerm's
+    ``'/'`` join, MultiBucketizer.ts:123-141), ``name`` itself otherwise.
+    ``concat_ws`` skips a NULL parent, leaving the name unprefixed."""
+    return F.concat_ws("/", F.col(parent_col), name) if parent_col else name
+
+
+def root_id(root: str, parent_col: str | None) -> F.Column:
+    """The strategy root's id: under a parent stage the child root
+    collapses onto the parent bucket itself (MultiBucketizer.ts:124-127),
+    otherwise it is the configured ``root``."""
+    return F.col(parent_col) if parent_col else F.lit(root)
+
+
 def relation_row(from_b, rel_type: str, to_b, values=None, path=None, seq=None):
     """Build a relations-schema select list from Column expressions."""
     return [

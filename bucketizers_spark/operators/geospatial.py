@@ -36,8 +36,10 @@ from pyspark.sql import functions as F
 
 from bucketizers_spark.operators.core import (
     BucketizeResult,
+    child_id,
     empty_seals,
     relation_row,
+    root_id,
 )
 from bucketizers_spark.oracle.reference import tile_bbox_wkt
 
@@ -112,9 +114,17 @@ def geospatial_tiles(
     page_size: int = 50,
     root: str = "root",
     seq_col: str = "seq",
+    parent_col: str | None = None,
 ) -> BucketizeResult:
+    """Keyed by ``parent_col`` every parent bucket keeps its own tilesMap
+    (one child instance per parent, MultiBucketizer.ts:94-96): page
+    counters key on (parent, tile), ids are ``parent/z/x/y-page`` and
+    ``parent/z/x``, and the root → column relations start at the parent.
+    The caller pages ``unmatched`` through ``fallback_pager`` with the
+    same ``parent_col``."""
     spark = df.sparkSession
     payload_cols = df.columns
+    pcols = [parent_col] if parent_col else []
 
     tiles = tile_array_col(value_col, zoom)
     # a pair whose latitude has no finite tile-y (lat == -90 after
@@ -136,13 +146,20 @@ def geospatial_tiles(
         "_leaf",
         F.concat_ws("/", F.lit(str(zoom)), F.col("_t.x"), F.col("_t.y")),
     )
-    w = Window.partitionBy("_leaf").orderBy(F.col(seq_col), F.col("_tpos"))
+    w = Window.partitionBy(*pcols, "_leaf").orderBy(
+        F.col(seq_col), F.col("_tpos")
+    )
     paged = exploded.withColumn(
         "_page", F.floor((F.row_number().over(w) - 1) / F.lit(page_size))
     )
-    assignments = paged.withColumn(
-        "bucket_id", F.concat(F.col("_leaf"), F.lit("-"), F.col("_page"))
-    ).drop("_t", "_tpos", "_leaf", "_page", "_tiles")
+
+    def page_id():
+        leaf_page = F.concat(F.col("_leaf"), F.lit("-"), F.col("_page"))
+        return child_id(leaf_page, parent_col)
+
+    assignments = paged.withColumn("bucket_id", page_id()).drop(
+        "_t", "_tpos", "_leaf", "_page", "_tiles"
+    )
 
     def _relations() -> DataFrame:
         bbox_dim = (
@@ -155,7 +172,7 @@ def geospatial_tiles(
             .withColumnRenamed("_leaf", "leaf")
         )
         page_firsts = (
-            paged.groupBy("_leaf", "_page")
+            paged.groupBy(*pcols, "_leaf", "_page")
             .agg(
                 F.min(seq_col).alias("created_at_seq"),
                 # (seq, _tpos) — one member's tiles share seq, so the
@@ -167,25 +184,26 @@ def geospatial_tiles(
         )
         column_rels = page_firsts.select(
             *relation_row(
-                F.col("column"),
+                child_id(F.col("column"), parent_col),
                 "GeospatiallyContains",
-                F.concat(F.col("_leaf"), F.lit("-"), F.col("_page")),
+                page_id(),
                 values=F.array(F.col("bbox")),
                 seq=F.col("created_at_seq"),
             )
         )
-        # root → column once, carrying the bbox of the column's FIRST tile
+        # root → column once (per parent), carrying the bbox of the
+        # column's FIRST tile
         root_rels = (
-            page_firsts.groupBy("column")
+            page_firsts.groupBy(*pcols, "column")
             .agg(
                 F.min("created_at_seq").alias("created_at_seq"),
                 F.min_by("bbox", F.col("_ord")).alias("bbox"),
             )
             .select(
                 *relation_row(
-                    F.lit(root),
+                    root_id(root, parent_col),
                     "GeospatiallyContains",
-                    F.col("column"),
+                    child_id(F.col("column"), parent_col),
                     values=F.array(F.col("bbox")),
                     seq=F.col("created_at_seq"),
                 )

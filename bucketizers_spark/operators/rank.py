@@ -143,6 +143,25 @@ def with_global_rank0(
     ).drop("_pid")
 
 
+def with_rank0(
+    df: DataFrame,
+    order_col: str,
+    *,
+    parent_col: str | None = None,
+    out_col: str = "rank0",
+    **global_kw,
+) -> DataFrame:
+    """0-based rank of ``order_col``. Keyed by ``parent_col`` it is a
+    per-parent ``row_number`` window (one child instance per parent
+    bucket: the parent partitions the window, each parent's rows sort in
+    one task); otherwise the global two-phase rank (``with_global_rank0``,
+    which takes ``global_kw``)."""
+    if parent_col:
+        w = Window.partitionBy(parent_col).orderBy(order_col)
+        return df.withColumn(out_col, F.row_number().over(w) - 1)
+    return with_global_rank0(df, order_col, out_col=out_col, **global_kw)
+
+
 def with_global_prefix_sum(
     df: DataFrame,
     order_col: str,

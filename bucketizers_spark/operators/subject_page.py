@@ -32,16 +32,12 @@ from pyspark.sql import functions as F
 
 from bucketizers_spark.operators.core import (
     BucketizeResult,
+    child_id,
     relation_row,
+    root_id,
 )
-from bucketizers_spark.operators.rank import with_global_rank0
+from bucketizers_spark.operators.rank import with_rank0
 from bucketizers_spark.functions.normalize import normalize_subject_col
-
-
-def _root_name(root: str, idx_col):
-    return F.when(idx_col == 0, F.lit(root)).otherwise(
-        F.concat(F.lit(root + "-"), idx_col.cast("string"))
-    )
 
 
 def subject_page(
@@ -54,14 +50,24 @@ def subject_page(
     seq_col: str = "seq",
     property_path: str | None = None,
     ascii_fast: bool = True,
+    parent_col: str | None = None,
 ) -> BucketizeResult:
-    spark = df.sparkSession
+    """Keyed by ``parent_col`` every parent bucket runs its own first-seen
+    map and root rotation (one child instance per parent,
+    MultiBucketizer.ts:94-96): buckets are ``parent/name``, root index 0
+    is the parent itself and rotated roots are ``parent/root-N``."""
     raw_value = F.col(value_col).cast("string")
     last_segment = F.element_at(F.split(raw_value, "/"), -1)
     bucket = normalize_subject_col(
         F.concat(last_segment, F.lit("-" + salt)), ascii_fast=ascii_fast
     )
-    assignments = df.withColumn("bucket_id", bucket)
+    assignments = df.withColumn("bucket_id", child_id(bucket, parent_col))
+    pcols = [parent_col] if parent_col else []
+
+    def _root_name(idx_col):
+        return F.when(idx_col == 0, root_id(root, parent_col)).otherwise(
+            child_id(F.concat(F.lit(root + "-"), idx_col.cast("string")), parent_col)
+        )
 
     # The relation/seal derivation needs the first-seen rank, whose
     # two-phase form runs EAGER work (materialize + offset collect) — so it
@@ -74,16 +80,17 @@ def subject_page(
         # first sighting per bucket, in arrival order
         # (hypermediaControlsMap.has, ts:82-90): groupBy keeps the earliest
         # seq and that row's raw value
-        first_seen = assignments.groupBy("bucket_id").agg(
+        first_seen = assignments.groupBy(*pcols, "bucket_id").agg(
             F.min(F.col(seq_col)).alias("first_seq"),
             F.min_by(raw_value, F.col(seq_col)).alias("value"),
         )
         # two-phase range-partitioned rank: the distinct-bucket frame is
         # ~10^7-10^10 rows at 10^12 members — a bare Window.orderBy would
-        # sort it in ONE task (r1 VERDICT scale-killer #5)
-        ranked = with_global_rank0(first_seen, "first_seq").withColumn(
-            "root_idx", F.floor(F.col("rank0") / F.lit(max_relations))
-        )
+        # sort it in ONE task (r1 VERDICT scale-killer #5); per parent the
+        # parents partition the window
+        ranked = with_rank0(
+            first_seen, "first_seq", parent_col=parent_col
+        ).withColumn("root_idx", F.floor(F.col("rank0") / F.lit(max_relations)))
         state["ranked"] = ranked
         return ranked
 
@@ -94,7 +101,7 @@ def subject_page(
             state["turnovers"] = (
                 _ranked()
                 .where(F.col("root_idx") >= 1)
-                .groupBy("root_idx")
+                .groupBy(*pcols, "root_idx")
                 .agg(F.min("first_seq").alias("created_at_seq"))
             )
         return state["turnovers"]
@@ -102,7 +109,7 @@ def subject_page(
     def _relations() -> DataFrame:
         equal_rels = _ranked().select(
             *relation_row(
-                _root_name(root, F.col("root_idx")),
+                _root_name(F.col("root_idx")),
                 "EqualThan",
                 F.col("bucket_id"),
                 values=F.array(F.col("value")),
@@ -112,9 +119,9 @@ def subject_page(
         )
         rotation_rels = _turnovers().select(
             *relation_row(
-                _root_name(root, F.col("root_idx") - 1),
+                _root_name(F.col("root_idx") - 1),
                 "Relation",
-                _root_name(root, F.col("root_idx")),
+                _root_name(F.col("root_idx")),
                 seq=F.col("created_at_seq"),
             )
         )
@@ -122,7 +129,7 @@ def subject_page(
 
     def _seals() -> DataFrame:
         return _turnovers().select(
-            _root_name(root, F.col("root_idx") - 1).alias("bucket_id"),
+            _root_name(F.col("root_idx") - 1).alias("bucket_id"),
             F.col("created_at_seq").alias("sealed_at_seq"),
         )
 

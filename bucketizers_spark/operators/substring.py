@@ -74,10 +74,12 @@ from pyspark.sql import types as T
 
 from bucketizers_spark.operators.core import (
     BucketizeResult,
+    child_id,
     const_frame,
     empty_relations,
     empty_seals,
     relation_row,
+    root_id,
 )
 from bucketizers_spark.functions.normalize import normalize_substring_col
 from bucketizers_spark.plans.materialize import cut_lineage, cut_lineage_counted
@@ -166,9 +168,11 @@ def _char_chain(value_col: str, ascii_fast: bool, max_depth: int) -> _Chain:
         )
 
     def parent_of(node_col: Column) -> Column:
-        # drop the last char; a trailing '+' is never a node → drop it too
+        # drop the last char; a trailing '+' is never a node → drop every
+        # trailing '+' too ('++0' — a value whose first word normalizes
+        # to nothing — hangs off the root, not off '+')
         trimmed = node_col.substr(F.lit(1), F.length(node_col) - 1)
-        return F.regexp_replace(trimmed, r"\+$", "")
+        return F.regexp_replace(trimmed, r"\++$", "")
 
     def py_nodes(row: dict) -> list[str]:
         v = row["_v"]
@@ -697,9 +701,7 @@ def _run_cascade(
         if level > max_depth:
             # safety valve (engine knob; the reference has no cap): force-
             # assign whatever is left to its current node, uncounted
-            valve_node = chain.node(level - 1)
-            if parent_col:
-                valve_node = F.concat_ws("/", F.col(parent_col), valve_node)
+            valve_node = child_id(chain.node(level - 1), parent_col)
             assignment_parts.append(
                 remaining.withColumn("bucket_id", valve_node)
                 .select(seq_col, "bucket_id")
@@ -838,16 +840,9 @@ def _run_cascade(
         )
         is_first = F.col(seq_col) == F.col("_min_seq")
         raw_parent = chain.parent_of(F.col("_node"))
-        if parent_col:
-            relation_parent = F.when(
-                raw_parent == "", F.col(parent_col)
-            ).otherwise(
-                F.concat_ws("/", F.col(parent_col), raw_parent)
-            )
-        else:
-            relation_parent = F.when(
-                raw_parent == "", F.lit(root)
-            ).otherwise(raw_parent)
+        relation_parent = F.when(
+            raw_parent == "", root_id(root, parent_col)
+        ).otherwise(child_id(raw_parent, parent_col))
 
         # the eager cut truncates the per-level lineage — without it the
         # level-over-level plan (esp. the salted level's self-join) grows
@@ -866,11 +861,7 @@ def _run_cascade(
             )
         )
         term_null = F.col("_terminal") & ~term_assigned
-        bucket_name = (
-            F.concat_ws("/", F.col(parent_col), F.col("_node"))
-            if parent_col
-            else F.col("_node")
-        )
+        bucket_name = child_id(F.col("_node"), parent_col)
         leaving = step.where(placed_nt | F.col("_terminal"))
         assignment_parts.append(
             leaving.select(
@@ -946,11 +937,15 @@ def substring_trie(
     emit_counter_updates: bool = False,
     salt_buckets: int = 0,
     tail_threshold: int = 100_000,
+    parent_col: str | None = None,
 ) -> BucketizeResult:
     """Character-mode substring trie (reference-exact). Salted levels run
     until at most ``tail_threshold`` rows remain, then one grouped walk
     shuffle finishes the trie; with ``node_state`` the walk cogroups the
-    carried counters into their subtrie groups (streaming)."""
+    carried counters into their subtrie groups (streaming). With
+    ``parent_col`` one dedicated trie per parent bucket (see
+    ``_run_cascade``); the parent is then the root and ``root`` is
+    unused."""
     return _run_cascade(
         df,
         _char_chain(value_col, ascii_fast, max_depth),
@@ -962,6 +957,7 @@ def substring_trie(
         emit_counter_updates=emit_counter_updates,
         salt_buckets=salt_buckets,
         tail_threshold=tail_threshold,
+        parent_col=parent_col,
     )
 
 
@@ -977,10 +973,12 @@ def token_prefix_trie(
     emit_counter_updates: bool = False,
     salt_buckets: int = 0,
     tail_threshold: int = 100_000,
+    parent_col: str | None = None,
 ) -> BucketizeResult:
     """Token-mode radix trie over leading n-grams (the north-star payload:
     pre-tokenized sequences). Same cascade, chain keys are dash-joined
-    token prefixes, capped at ``max_depth`` n-grams."""
+    token prefixes, capped at ``max_depth`` n-grams; ``parent_col`` as
+    in ``substring_trie``."""
     return _run_cascade(
         df,
         _token_chain(tokens_col, max_depth),
@@ -992,4 +990,5 @@ def token_prefix_trie(
         emit_counter_updates=emit_counter_updates,
         salt_buckets=salt_buckets,
         tail_threshold=tail_threshold,
+        parent_col=parent_col,
     )

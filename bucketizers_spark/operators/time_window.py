@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from bucketizers_spark.operators.core import (
     BucketizeResult,
+    child_id,
     empty_relations,
     empty_seals,
     relation_row,
@@ -44,8 +45,16 @@ from bucketizers_spark.operators.core import (
 _FMT = "yyyy-MM-dd HH:mm:ss"
 
 
-def _bucket_id(window_col) -> F.Column:
-    return F.date_format(window_col["start"], _FMT)
+def _window_id(start: F.Column, parent_col: str | None) -> F.Column:
+    """The bucket id of the window starting at ``start``: the formatted
+    start, under a parent stage ``parent/start``."""
+    return child_id(F.date_format(start, _FMT), parent_col)
+
+
+def _assigned(df: DataFrame, win, parent_col: str | None) -> DataFrame:
+    return df.withColumn("_w", win).withColumn(
+        "bucket_id", _window_id(F.col("_w")["start"], parent_col)
+    )
 
 
 def tumbling_bucketizer(
@@ -53,40 +62,47 @@ def tumbling_bucketizer(
     time_col: str,
     duration: str,
     *,
-    seal: bool = True,
+    parent_col: str | None = None,
 ) -> BucketizeResult:
-    spark = df.sparkSession
-    win = F.window(F.col(time_col), duration)
-    assignments = df.withColumn("_w", win).withColumn(
-        "bucket_id", _bucket_id(F.col("_w"))
-    )
-    # boundary relations between consecutive *non-empty* windows, in
-    # window order (page p → p+1 analog over event time)
-    wins = (
-        assignments.groupBy(F.col("_w")).agg(F.count(F.lit(1)).alias("n"))
-        .select(
+    """Keyed by ``parent_col`` every parent bucket chains its own
+    observed windows: ids are ``parent/start`` and the boundary links run
+    within each parent. Relations and seals are built on first access, so
+    a streaming caller that reads only ``assignments`` never plans their
+    (non-time) window."""
+    pcols = [parent_col] if parent_col else []
+    assigned = _assigned(df, F.window(F.col(time_col), duration), parent_col)
+
+    def _wins() -> DataFrame:
+        return assigned.groupBy(*pcols, F.col("_w")).agg(
+            F.count(F.lit(1)).alias("n")
+        ).select(
+            *pcols,
             F.col("_w")["start"].alias("ws"),
             F.col("_w")["end"].alias("we"),
         )
-    )
-    nxt = F.lead("ws").over(Window.orderBy("ws"))
-    rel_src = wins.withColumn("next_ws", nxt).where(F.col("next_ws").isNotNull())
-    relations = rel_src.select(
-        *relation_row(
-            F.date_format("ws", _FMT),
-            "Relation",
-            F.date_format("next_ws", _FMT),
+
+    def _relations() -> DataFrame:
+        # boundary relations between consecutive *non-empty* windows, in
+        # window order (page p → p+1 analog over event time)
+        nxt = F.lead("ws").over(Window.partitionBy(*pcols).orderBy("ws"))
+        rel_src = _wins().withColumn("next_ws", nxt).where(
+            F.col("next_ws").isNotNull()
         )
-    )
-    seals_df = (
-        wins.select(
-            F.date_format("ws", _FMT).alias("bucket_id"),
+        return rel_src.select(
+            *relation_row(
+                _window_id(F.col("ws"), parent_col),
+                "Relation",
+                _window_id(F.col("next_ws"), parent_col),
+            )
+        )
+
+    def _seals() -> DataFrame:
+        return _wins().select(
+            _window_id(F.col("ws"), parent_col).alias("bucket_id"),
             F.lit(None).cast("long").alias("sealed_at_seq"),
         )
-        if seal
-        else empty_seals(spark)
-    )
-    return BucketizeResult(assignments.drop("_w"), relations, seals_df)
+
+    return BucketizeResult(assigned.drop("_w"), _relations, _seals)
 
 
 def sliding_bucketizer(
@@ -94,12 +110,14 @@ def sliding_bucketizer(
     time_col: str,
     duration: str,
     slide: str,
+    *,
+    parent_col: str | None = None,
 ) -> BucketizeResult:
+    """Every window containing the event; keyed by ``parent_col`` the ids
+    are ``parent/start``. No relations or seals."""
     spark = df.sparkSession
     win = F.window(F.col(time_col), duration, slide)
-    assignments = df.withColumn("_w", win).withColumn(
-        "bucket_id", _bucket_id(F.col("_w"))
-    ).drop("_w")
+    assignments = _assigned(df, win, parent_col).drop("_w")
     return BucketizeResult(assignments, empty_relations(spark), empty_seals(spark))
 
 

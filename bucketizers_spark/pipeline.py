@@ -9,11 +9,12 @@ Reference analogs:
 - Turtle/file config loading (bucketizers.ts:19-24) maps to the JSON/dict
   spec (config.spec_from_dict); SHACL validation is config.validate_spec.
 
-Each builder takes (DataFrame, JobSpec) → BucketizeResult. The ``multi``
-strategy chains stages with parent-prefixed bucket ids
-(MultiBucketizer.ts:123-141), restricted here to compositions whose child
-stages are per-parent pagers (the general chained-strategy case runs via
-streaming stage chaining).
+Each builder takes (DataFrame, JobSpec, parent_col) → BucketizeResult.
+``parent_col`` keys the strategy's operator by a parent bucket: the
+``multi`` strategy chains stages by running each child spec through the
+same builder as stage 0, one child instance per parent bucket
+(MultiBucketizer.ts:94-96), with parent-prefixed ids
+(MultiBucketizer.ts:123-141).
 """
 
 from __future__ import annotations
@@ -36,35 +37,39 @@ from bucketizers_spark.operators.core import (
     empty_relations,
     empty_seals,
 )
-from bucketizers_spark.operators.multi import paged_within_parent
 from bucketizers_spark.operators.substring import token_prefix_trie
 
 
-def _build_basic(df: DataFrame, spec: JobSpec) -> BucketizeResult:
-    return basic_pager(df, page_size=spec.page_size, dense_seq=spec.dense_seq)
+def _build_basic(
+    df: DataFrame, spec: JobSpec, parent_col: str | None
+) -> BucketizeResult:
+    return basic_pager(
+        df, page_size=spec.page_size, dense_seq=spec.dense_seq, parent_col=parent_col
+    )
 
 
-def _build_substring(df: DataFrame, spec: JobSpec) -> BucketizeResult:
-    if spec.token_mode:
-        return token_prefix_trie(
-            df,
-            spec.column or "tokens",
-            page_size=spec.page_size,
-            root=spec.root,
-            max_depth=spec.max_depth,
-            salt_buckets=spec.salt_buckets,
-        )
-    return substring_trie(
+def _build_substring(
+    df: DataFrame, spec: JobSpec, parent_col: str | None
+) -> BucketizeResult:
+    trie, col = (
+        (token_prefix_trie, spec.column or "tokens")
+        if spec.token_mode
+        else (substring_trie, spec.column)
+    )
+    return trie(
         df,
-        spec.column,
+        col,
         page_size=spec.page_size,
         root=spec.root,
         max_depth=spec.max_depth,
         salt_buckets=spec.salt_buckets,
+        parent_col=parent_col,
     )
 
 
-def _build_subject(df: DataFrame, spec: JobSpec) -> BucketizeResult:
+def _build_subject(
+    df: DataFrame, spec: JobSpec, parent_col: str | None
+) -> BucketizeResult:
     return subject_page(
         df,
         spec.column,
@@ -72,16 +77,28 @@ def _build_subject(df: DataFrame, spec: JobSpec) -> BucketizeResult:
         max_relations=spec.max_relations,
         root=spec.root,
         property_path=spec.property_path,
+        parent_col=parent_col,
     )
 
 
-def _build_time(df: DataFrame, spec: JobSpec) -> BucketizeResult:
+def _build_time(
+    df: DataFrame, spec: JobSpec, parent_col: str | None
+) -> BucketizeResult:
     win = spec.window
     col = spec.column or "event_time"
     if win.kind == "tumbling":
-        return tumbling_bucketizer(df, col, win.duration)
+        return tumbling_bucketizer(df, col, win.duration, parent_col=parent_col)
     if win.kind == "sliding":
-        return sliding_bucketizer(df, col, win.duration, win.slide or win.duration)
+        return sliding_bucketizer(
+            df, col, win.duration, win.slide or win.duration, parent_col=parent_col
+        )
+    if parent_col:
+        raise NotImplementedError(
+            "session-window children aggregate members into "
+            "per-(key, session) rows — not a per-member bucket "
+            "assignment, so it cannot chain under multi; use "
+            "tumbling or sliding"
+        )
     # session windows return an aggregate frame; wrap as assignments-like
     agg = session_bucketizer(df, col, win.gap)
     res = BucketizeResult(
@@ -92,7 +109,9 @@ def _build_time(df: DataFrame, spec: JobSpec) -> BucketizeResult:
     return res
 
 
-def _build_geospatial(df: DataFrame, spec: JobSpec) -> BucketizeResult:
+def _build_geospatial(
+    df: DataFrame, spec: JobSpec, parent_col: str | None
+) -> BucketizeResult:
     from bucketizers_spark.operators.geospatial import geospatial_tiles
 
     res = geospatial_tiles(
@@ -101,11 +120,14 @@ def _build_geospatial(df: DataFrame, spec: JobSpec) -> BucketizeResult:
         zoom=spec.zoom,
         page_size=spec.page_size,
         root=spec.root,
+        parent_col=parent_col,
     )
     # non-WKT values throw in the reference ⇒ fallback pager
     # (SlippyMaps.ts:44-49 + BucketizerCore.ts:301-309); the operator
     # surfaces them as `unmatched`
-    fb = fallback_pager(res.unmatched, page_size=spec.page_size, root=spec.root)
+    fb = fallback_pager(
+        res.unmatched, page_size=spec.page_size, root=spec.root, parent_col=parent_col
+    )
     return BucketizeResult(
         res.assignments.unionByName(fb.assignments),
         lambda r=res, f=fb: r.relations.unionByName(f.relations),
@@ -113,76 +135,22 @@ def _build_geospatial(df: DataFrame, spec: JobSpec) -> BucketizeResult:
     )
 
 
-def _build_multi(df: DataFrame, spec: JobSpec) -> BucketizeResult:
+def _build_multi(
+    df: DataFrame, spec: JobSpec, parent_col: str | None
+) -> BucketizeResult:
     """Chained stages, one child instance per parent bucket
-    (MultiBucketizer.ts:46-162): every child strategy the reference
-    factory composes is supported (BucketizerFactories.ts:15-72) — basic
-    (per-parent pager), subject (per-parent first-seen + rotation),
-    substring (per-parent trie: the cascade keyed by parent), geospatial
-    (per-parent tile pager incl. its own bucketless fallback) — plus the
-    engine's time-window extension (tumbling/sliding children; session is
-    an aggregate shape that doesn't compose as member assignments). Child
-    bucket ids are parent-prefixed; child roots collapse onto the parent
+    (MultiBucketizer.ts:46-162): stage k>0 is its spec's stage-0 builder
+    keyed by the stage-(k-1) bucket, so every strategy the reference
+    factory composes (BucketizerFactories.ts:15-72) chains, plus the
+    engine's tumbling/sliding time windows (a session window is an
+    aggregate, not a member assignment, and is rejected). Child bucket
+    ids are parent-prefixed; child roots collapse onto the parent
     bucket."""
-    from bucketizers_spark.operators.multi import (
-        geo_within_parent,
-        subject_within_parent,
-        time_within_parent,
-        trie_within_parent,
-    )
-
     head, *rest = spec.configs
-    result = build(df, head)
+    result = build(df, head, parent_col=parent_col)
     for k, sub in enumerate(rest):
         staged = result.assignments.withColumnRenamed("bucket_id", f"_p{k}")
-        if sub.strategy == "basic":
-            nxt = paged_within_parent(staged, f"_p{k}", page_size=sub.page_size)
-        elif sub.strategy == "subject":
-            nxt = subject_within_parent(
-                staged,
-                f"_p{k}",
-                sub.column,
-                salt=sub.salt,
-                max_relations=sub.max_relations,
-                property_path=sub.property_path,
-            )
-        elif sub.strategy == "substring":
-            nxt = trie_within_parent(
-                staged,
-                f"_p{k}",
-                sub.column or "tokens",
-                mode="token" if sub.token_mode else "char",
-                page_size=sub.page_size,
-                max_depth=sub.max_depth,
-            )
-        elif sub.strategy == "geospatial":
-            nxt = geo_within_parent(
-                staged,
-                f"_p{k}",
-                sub.column,
-                zoom=sub.zoom,
-                page_size=sub.page_size,
-            )
-        elif sub.strategy == "time":
-            win = sub.window
-            if win.kind == "session":
-                raise NotImplementedError(
-                    "session-window children aggregate members into "
-                    "per-(key, session) rows — not a per-member bucket "
-                    "assignment, so it cannot chain under multi; use "
-                    "tumbling or sliding"
-                )
-            nxt = time_within_parent(
-                staged,
-                f"_p{k}",
-                sub.column or "event_time",
-                duration=win.duration,
-                slide=win.slide if win.kind == "sliding" else None,
-            )
-        else:
-            raise NotImplementedError(
-                f"multi child strategy {sub.strategy!r}"
-            )
+        nxt = build(staged, sub, parent_col=f"_p{k}")
         # capture the result OBJECTS, not their .relations/.seals — the
         # property access would force the lazy factories at build time
         result = BucketizeResult(
@@ -203,15 +171,19 @@ BUCKETIZERS = {
 }
 
 
-def build(df: DataFrame, spec: JobSpec | dict) -> BucketizeResult:
-    """The createBucketizer front door: dispatch on validated strategy."""
+def build(
+    df: DataFrame, spec: JobSpec | dict, *, parent_col: str | None = None
+) -> BucketizeResult:
+    """The createBucketizer front door: dispatch on validated strategy.
+    With ``parent_col`` the strategy runs as a multi child keyed by that
+    parent bucket column."""
     if isinstance(spec, dict):
         spec = spec_from_dict(spec)
     try:
         builder = BUCKETIZERS[spec.strategy]
-    except KeyError:  # geospatial batch op ships as geo_tile query for now
+    except KeyError:
         raise NotImplementedError(f"strategy {spec.strategy!r}")
-    return builder(df, spec)
+    return builder(df, spec, parent_col)
 
 
 def route_with_fallback(

@@ -312,7 +312,7 @@ class TrieStage:
     and staging is healed on replay by re-staging from the sink."""
 
     # stage-0 artifact columns a child stage replaces with its own
-    _CHILD_DROPS = ("_parent", "_wstart", "is_first")
+    _CHILD_DROPS = ("_parent", "is_first")
 
     def __init__(
         self,
@@ -416,23 +416,27 @@ def stages_from_spec(spec) -> list:
     Stage-0 forms (every strategy): ``basic`` — stateless
     floor(seq/pageSize) under the dense source-stamped seq;
     ``subject`` — stateless bucket + keyed first-seen state
-    (stateful.subject_page_stream); ``time`` (tumbling/sliding) —
-    stateless window bucket map; ``substring`` — TrieStage (the
-    versioned-counter trie cascade as a job stage); ``geospatial`` —
-    geo_stream.tile_pager_stage (per-tile pager with the bucketless
+    (stateful.subject_page_stream); ``time`` (tumbling/sliding) — the
+    batch time operator's stateless window bucket map; ``substring`` —
+    TrieStage (the versioned-counter trie cascade as a job stage);
+    ``geospatial`` — geo_stream.tile_pager_stage (per-tile pager with the bucketless
     sentinel fallback in one stateful op, the same stage GeoStreamJob
     runs; its relations stream out through GeoRelTee).
 
-    Children: ``basic`` (per-parent page-counter state), ``subject``
-    (stateless map + first-seen tags), ``substring`` (TrieStage with
+    Children — the batch child is the stage-0 operator keyed by the
+    parent bucket (``parent_col``): ``basic`` (per-parent page-counter
+    state), ``subject`` (``subject_page``'s stateless map keyed by the
+    parent + first-seen tags), ``substring`` (TrieStage with
     ``within_parent`` — the per-parent cascade with versioned
-    parent\\x1fnode (_PSEP) counters; cross-key coordination per level is why
-    this is a job stage, not keyed state), ``geospatial`` (per-(parent,
-    tile) pager incl. sentinel fallback), ``time`` (stateless
-    ``parent/window-start`` map)."""
+    parent\\x1fnode (_PSEP) counters; cross-key coordination per level is
+    why this is a job stage, not keyed state), ``geospatial``
+    (per-(parent, tile) pager incl. sentinel fallback), ``time`` (the
+    time operator's stateless ``parent/window-start`` map)."""
     from pyspark.sql import functions as F
 
     from bucketizers_spark.config import JobSpec, spec_from_dict
+    from bucketizers_spark.operators.subject_page import subject_page
+    from bucketizers_spark.pipeline import build
     from bucketizers_spark.streaming.geo_stream import tile_pager_stage
     from bucketizers_spark.streaming.stateful import (
         paged_stream,
@@ -450,35 +454,12 @@ def stages_from_spec(spec) -> list:
     validate_spec(spec, streaming=True)
 
     def time_bucket(s, sub: JobSpec, parent: str | None):
-        win = sub.window
-        col = sub.column or "event_time"
-        w = (
-            F.window(F.col(col), win.duration, win.slide)
-            if win.kind == "sliding"
-            else F.window(F.col(col), win.duration)
-        )
+        # the batch time operator's assignments; a child keeps _parent,
+        # from which relations_from_spec re-derives the per-parent
+        # boundary chain at read time (BatchDerivedRelations)
         if parent:
-            # keep _parent/_wstart: the tumbling child's boundary-chain
-            # relations are lead-links over OBSERVED windows per parent —
-            # not append-monotone, so relations_from_spec derives them at
-            # read time from the staged output (BatchDerivedRelations),
-            # which needs these columns un-parsed
-            return (
-                s.drop("_parent", "_wstart")
-                .withColumnRenamed("bucket_id", parent)
-                .withColumn("_wstart", w["start"])
-                .withColumn(
-                    "bucket_id",
-                    F.concat(
-                        F.col(parent),
-                        F.lit("/"),
-                        F.date_format("_wstart", "yyyy-MM-dd HH:mm:ss"),
-                    ),
-                )
-            )
-        return s.withColumn(
-            "bucket_id", F.date_format(w["start"], "yyyy-MM-dd HH:mm:ss")
-        )
+            s = s.drop(parent).withColumnRenamed("bucket_id", parent)
+        return build(s, sub, parent_col=parent).assignments
 
     stages = []
     for k, sub in enumerate(spec.configs):
@@ -545,38 +526,31 @@ def stages_from_spec(spec) -> list:
             ):
                 stages.append(lambda s, c=sub: time_bucket(s, c, "_parent"))
             elif sub.strategy == "subject":
-                # the subject child's ASSIGNMENT is a stateless
-                # parent/normalized-child map (operators/multi.
-                # subject_within_parent builds the same expression);
-                # keyed first-seen tagging rides along so the per-parent
-                # rotation tee (relations_from_spec) is a single further
-                # stateful step
+                # the subject child's ASSIGNMENT is the stateless
+                # parent/normalized-child map of subject_page keyed by
+                # the parent; keyed first-seen tagging rides along so the
+                # per-parent rotation tee (relations_from_spec) is a
+                # single further stateful step
                 def subj_child(s, c=sub):
-                    from bucketizers_spark.functions.normalize import (
-                        normalize_subject_col,
-                    )
                     from bucketizers_spark.streaming.stateful import (
                         first_seen_tag,
                     )
 
-                    raw = F.col(c.column).cast("string")
-                    last = F.element_at(F.split(raw, "/"), -1)
-                    child = normalize_subject_col(
-                        F.concat(last, F.lit("-" + c.salt))
-                    )
-                    tagged = (
-                        # a subject stage-0 upstream leaves its own
-                        # is_first/_parent columns — this stage's tags
-                        # replace them
+                    # a subject stage-0 upstream leaves its own
+                    # is_first/_parent columns — this stage's tags
+                    # replace them
+                    parented = (
                         s.drop("is_first", "_parent")
                         .withColumnRenamed("bucket_id", "_parent")
-                        .withColumn("subject_value", raw)
                         .withColumn(
-                            "bucket_id",
-                            F.concat_ws("/", F.col("_parent"), child),
+                            "subject_value", F.col(c.column).cast("string")
                         )
                     )
-                    return first_seen_tag(tagged)
+                    return first_seen_tag(
+                        subject_page(
+                            parented, c.column, salt=c.salt, parent_col="_parent"
+                        ).assignments
+                    )
 
                 stages.append(subj_child)
             elif sub.strategy == "geospatial":
@@ -621,20 +595,18 @@ def relations_from_spec(spec) -> list:
       columns.
     - stage 0 ``basic``: stateless boundary tee (page and first row are
       pure functions of the dense seq).
-    - stage 0 ``time`` (tumbling): BatchDerivedRelations over the
-      staged output (bucket ids sort chronologically).
     - child ``basic``: a STATELESS filter — paged_stream stamps
       ``is_page_first``/``rel_from`` on the assignment stream, so the
-      per-parent page link (operators/multi.paged_within_parent
+      per-parent page link (``basic_pager`` with ``parent_col``
       semantics) needs no further state.
     - child ``subject``: a per-PARENT rotation (rotation_stream with
       ``parent_col`` — dedicated counter state per parent, root names
-      collapsing onto the parent like operators/multi.
-      subject_within_parent).
-    - child ``time`` (tumbling): BatchDerivedRelations — the boundary
-      chain between observed windows per parent, computed over the
-      staged output at read time (see BatchDerivedRelations for why it
-      cannot stream).
+      collapsing onto the parent like ``subject_page`` with
+      ``parent_col``).
+    - ``time`` (tumbling, stage 0 or child): BatchDerivedRelations —
+      ``tumbling_bucketizer``'s boundary chain between observed windows
+      (per parent for a child), computed over the staged output at read
+      time (see BatchDerivedRelations for why it cannot stream).
     - ``geospatial`` (stage 0 or child): GeoRelTee — an incremental
       foreachBatch tee over the staged pager rows running
       geo_stream.batch_relations (column → leaf-page and bucketless
@@ -648,6 +620,7 @@ def relations_from_spec(spec) -> list:
 
     from bucketizers_spark.config import spec_from_dict
     from bucketizers_spark.operators.core import relation_row
+    from bucketizers_spark.pipeline import build
     from bucketizers_spark.streaming.stateful import rotation_stream
 
     if isinstance(spec, dict):
@@ -700,35 +673,10 @@ def relations_from_spec(spec) -> list:
             )
         )
 
-    def time_child_rels(df):
-        from pyspark.sql import Window
-
-        fmt = "yyyy-MM-dd HH:mm:ss"
-        wins = df.groupBy("_parent", "_wstart").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        nxt = F.lead("_wstart").over(
-            Window.partitionBy("_parent").orderBy("_wstart")
-        )
-        rel_src = wins.withColumn("_next", nxt).where(
-            F.col("_next").isNotNull()
-        )
-        return rel_src.select(
-            *relation_row(
-                F.concat(
-                    F.col("_parent"), F.lit("/"), F.date_format("_wstart", fmt)
-                ),
-                "Relation",
-                F.concat(
-                    F.col("_parent"), F.lit("/"), F.date_format("_next", fmt)
-                ),
-            )
-        )
-
     def basic_stage0_rels(s, c):
         # boundary relation with each page's first member (page >= 1):
         # stateless under dense seq — the page and its first row are
-        # pure functions of seq (operators/basic._boundary_relations)
+        # pure functions of seq (operators/basic._page_relations)
         page = F.floor(F.col("seq") / F.lit(c.page_size))
         return s.where(
             (F.col("seq") % c.page_size == 0) & (page >= 1)
@@ -741,49 +689,29 @@ def relations_from_spec(spec) -> list:
             )
         )
 
-    def time_stage0_rels(df):
-        # boundary chain between observed windows: bucket_id IS
-        # date_format(start, "yyyy-MM-dd HH:mm:ss"), which sorts
-        # lexicographically == chronologically, so the chain derives
-        # from the staged output alone (operators/time_window.
-        # tumbling_bucketizer relations; batch-derived for the same
-        # late-window retraction reason as the time child)
-        from pyspark.sql import Window
-
-        wins = df.select("bucket_id").distinct()
-        nxt = F.lead("bucket_id").over(Window.orderBy("bucket_id"))
-        rel_src = wins.withColumn("_next", nxt).where(
-            F.col("_next").isNotNull()
-        )
-        return rel_src.select(
-            *relation_row(F.col("bucket_id"), "Relation", F.col("_next"))
-        )
-
     rels: list = []
     for k, sub in enumerate(spec.configs):
         if k == 0 and sub.strategy == "basic":
             rels.append(lambda s, c=sub: basic_stage0_rels(s, c))
         elif k == 0 and sub.strategy == "subject":
             rels.append(lambda s, c=sub: subject_rels(s, c))
-        elif (
-            k == 0
-            and sub.strategy == "time"
-            and sub.window.kind == "tumbling"
-        ):
-            rels.append(BatchDerivedRelations(time_stage0_rels))
         elif k > 0 and sub.strategy == "basic":
             rels.append(lambda s, c=sub: basic_rels(s, c))
         elif k > 0 and sub.strategy == "subject":
             rels.append(lambda s, c=sub: subject_child_rels(s, c))
-        elif (
-            k > 0
-            and sub.strategy == "time"
-            and sub.window.kind == "tumbling"
-        ):
-            # operators/multi.time_within_parent boundary chain; batch-
-            # derived because lead-links over observed windows retract
-            # when a late window lands between two linked ones
-            rels.append(BatchDerivedRelations(time_child_rels))
+        elif sub.strategy == "time" and sub.window.kind == "tumbling":
+            # the tumbling operator's relations over the staged output,
+            # which carries the time column (and a child's _parent);
+            # batch-derived because lead-links over observed windows
+            # retract when a late window lands between two linked ones
+            parent = "_parent" if k else None
+            rels.append(
+                BatchDerivedRelations(
+                    lambda df, c=sub, p=parent: build(
+                        df.drop("bucket_id"), c, parent_col=p
+                    ).relations
+                )
+            )
         elif sub.strategy == "geospatial":
             # composed geo stages: INCREMENTAL relation tee driven by
             # the pager flags with versioned root→column dedup (GeoRelTee

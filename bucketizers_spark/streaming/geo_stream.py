@@ -79,10 +79,11 @@ def tile_pager_stage(
     ``bucketless-page`` for rows the tiler cannot place) plus the pager's
     ``_leaf``/``_page`` and flag columns. ``with_parent`` is the compose
     child form: the incoming ``bucket_id`` becomes ``_parent``, counters
-    are per (parent, tile) and bucket ids are parent-prefixed
-    (operators/multi.geo_within_parent). Tiles and the sentinel page in
-    one stateful operator, so the stage composes like any other."""
-    work = stream_df.drop("_parent", "_wstart", "is_first")
+    are per (parent, tile) and bucket ids are parent-prefixed (the batch
+    geo child: ``geospatial_tiles`` + ``fallback_pager`` with
+    ``parent_col``). Tiles and the sentinel page in one stateful
+    operator, so the stage composes like any other."""
+    work = stream_df.drop("_parent", "is_first")
     if with_parent:
         work = work.withColumnRenamed("bucket_id", "_parent")
     work = work.withColumn("_tiles", tile_array_col(value_col, zoom))

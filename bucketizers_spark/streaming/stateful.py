@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from bucketizers_spark.functions.normalize import normalize_subject_col
+from bucketizers_spark.operators.subject_page import subject_page
 
 _FIRST_SEEN_STATE = T.StructType([T.StructField("seen", T.BooleanType())])
 
@@ -78,8 +78,8 @@ def _make_rotation_fn(max_relations: int, root: str, parent_mode: bool = False):
 
     ``parent_mode``: the group key is a stage-1 PARENT bucket and the
     child root collapses onto it — root index 0 is the parent itself,
-    rotated roots are ``parent/root-N`` (operators/multi.
-    subject_within_parent naming, MultiBucketizer.ts:123-141)."""
+    rotated roots are ``parent/root-N`` (``subject_page`` with
+    ``parent_col`` names them the same, MultiBucketizer.ts:123-141)."""
 
     cols = ["from_bucket", "relation_type", "to_bucket", "value", "seq", "seal"]
 
@@ -159,17 +159,13 @@ def subject_page_stream(
     salt: str = "s0",
     ascii_fast: bool = True,
 ) -> DataFrame:
-    """Stage 1 of streaming subject-page: stateless bucket id + keyed
-    first-seen tagging. Returns the member stream with ``bucket_id`` and
-    ``is_first`` columns (append mode)."""
-    raw = F.col(value_col).cast("string")
-    last_segment = F.element_at(F.split(raw, "/"), -1)
-    with_bucket = stream_df.withColumn(
-        "bucket_id",
-        normalize_subject_col(
-            F.concat(last_segment, F.lit("-" + salt)), ascii_fast=ascii_fast
-        ),
-    ).withColumn("subject_value", raw)
+    """Stage 1 of streaming subject-page: stateless bucket id (the batch
+    operator's assignments) + keyed first-seen tagging. Returns the
+    member stream with ``bucket_id`` and ``is_first`` columns (append
+    mode)."""
+    with_bucket = subject_page(
+        stream_df, value_col, salt=salt, ascii_fast=ascii_fast
+    ).assignments.withColumn("subject_value", F.col(value_col).cast("string"))
     return first_seen_tag(with_bucket)
 
 
@@ -199,9 +195,9 @@ def paged_stream(
     ``emit_page_first=True`` adds two columns for downstream RELATION
     derivation (streaming/compose.relations_from_spec): ``is_page_first``
     marks each page's first arrival, ``rel_from`` carries the previous
-    page's bucket id (NULL on page 0, whose root collapses onto the
-    parent — operators/multi.paged_within_parent semantics). The page
-    link is then a stateless filter over this stream's staged output."""
+    page's bucket id (NULL on page 0, which opens no link — the
+    ``basic_pager`` with ``parent_col`` semantics). The page link is then
+    a stateless filter over this stream's staged output."""
     fields = [f for f in stream_df.schema.fields if f.name != out_col]
     extra = (
         [

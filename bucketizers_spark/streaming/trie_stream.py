@@ -98,37 +98,20 @@ class TrieStreamJob:
         # source (observed 8x input re-reads via StreamingQueryProgress)
         batch_df = batch_df.persist()
         state = self.counters.latest(spark, batch_id)
-        if self.parent_col is not None:
-            from bucketizers_spark.operators.multi import trie_within_parent
-
-            res = trie_within_parent(
-                batch_df,
-                self.parent_col,
-                self.value_col,
-                mode=self.mode,
-                page_size=self.page_size,
-                max_depth=self.max_depth,
-                seq_col="seq",
-                node_state=state,
-                emit_counter_updates=True,
-                salt_buckets=self.salt_buckets,
-                tail_threshold=self.tail_threshold,
-            )
-        else:
-            kwargs = dict(
-                page_size=self.page_size,
-                root=self.root,
-                seq_col="seq",
-                max_depth=self.max_depth,
-                node_state=state,
-                emit_counter_updates=True,
-                salt_buckets=self.salt_buckets,
-                tail_threshold=self.tail_threshold,
-            )
-            if self.mode == "token":
-                res = token_prefix_trie(batch_df, self.value_col, **kwargs)
-            else:
-                res = substring_trie(batch_df, self.value_col, **kwargs)
+        trie = token_prefix_trie if self.mode == "token" else substring_trie
+        res = trie(
+            batch_df,
+            self.value_col,
+            page_size=self.page_size,
+            root=self.root,
+            seq_col="seq",
+            max_depth=self.max_depth,
+            node_state=state,
+            emit_counter_updates=True,
+            salt_buckets=self.salt_buckets,
+            tail_threshold=self.tail_threshold,
+            parent_col=self.parent_col,
+        )
 
         # merge updates over prior state (touched nodes carry new totals;
         # untouched nodes carry over)

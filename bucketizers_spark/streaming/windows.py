@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bucketizers_spark.operators.time_window import tumbling_bucketizer
+
 _FMT = "yyyy-MM-dd HH:mm:ss"
 
 
@@ -23,13 +25,10 @@ def tumbling_assign_stream(
 ) -> DataFrame:
     """Member stream + bucket_id (stateless append). The watermark is
     attached so a downstream stateful op / sink can drop late rows
-    consistently with the seal stream."""
-    return (
-        stream_df.withWatermark(time_col, watermark)
-        .withColumn("_w", F.window(F.col(time_col), duration))
-        .withColumn("bucket_id", F.date_format(F.col("_w")["start"], _FMT))
-        .drop("_w")
-    )
+    consistently with the seal stream. The bucket is the batch
+    operator's (``tumbling_bucketizer`` assignments)."""
+    watermarked = stream_df.withWatermark(time_col, watermark)
+    return tumbling_bucketizer(watermarked, time_col, duration).assignments
 
 
 def tumbling_seal_stream(

@@ -15,7 +15,6 @@ from bucketizers_spark.functions.multimodal import (
     image_features,
     sample_frames,
 )
-from bucketizers_spark.operators.multi import paged_within_parent
 from bucketizers_spark.operators.time_window import (
     session_bucketizer,
     tumbling_bucketizer,
@@ -1095,10 +1094,12 @@ class TestTimeWindows:
 
 
 class TestComposition:
-    def test_paged_within_parent(self, spark):
+    def test_basic_pager_with_parent(self, spark):
+        from bucketizers_spark.operators.basic import basic_pager
+
         rows = [(i, "A" if i % 2 == 0 else "B") for i in range(10)]
         df = spark.createDataFrame(rows, "seq long, parent string")
-        res = paged_within_parent(df, "parent", page_size=2)
+        res = basic_pager(df, page_size=2, parent_col="parent")
         got = {r.seq: r.bucket_id for r in res.assignments.collect()}
         assert got[0] == "A/0" and got[2] == "A/0" and got[4] == "A/1"
         assert got[1] == "B/0" and got[5] == "B/1"

@@ -1,6 +1,6 @@
 """End-to-end training-data pipeline vs the standalone green queries:
-with the filter off the chunk table must equal q_pack_materialize
-EXACTLY; with stages on, each stage must agree with its verified query
+with the filter off the chunk table must equal the pack_materialize
+oracle EXACTLY; with stages on, each stage must agree with its verified query
 (corpus_filter ids, mix_temperature ids) and the final shard table must
 satisfy the loader contract."""
 
@@ -18,19 +18,22 @@ def _docs(spark):
 
 class TestLlmPipeline:
     def test_pack_stage_equals_green_query(self, spark):
-        from bucketizers_spark.entry_queries import (
-            _PACK_L,
-            q_pack_materialize,
-        )
+        """pack_chunks (which q_pack_materialize runs) equals the
+        pack_materialize DuckDB oracle over the same tables."""
+        import duckdb
+
+        from bucketizers_spark.entry_queries import _PACK_L, SQL_PACK_MATERIALIZE
         from bucketizers_spark.llm_pipeline import pack_chunks
 
         got = sorted(
             tuple(r)
             for r in pack_chunks(_docs(spark), chunk_len=_PACK_L).collect()
         )
-        want = sorted(
-            tuple(r) for r in q_pack_materialize(spark, SF_DIR).collect()
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
         )
+        want = sorted(con.sql(SQL_PACK_MATERIALIZE).fetchall())
         assert got == want and len(got) > 0
 
     def test_filter_and_mix_stages_equal_green_queries(self, spark):

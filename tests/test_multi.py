@@ -1,17 +1,13 @@
-"""Multi-composition children (S5): per-parent child instances must equal
-running the base operator independently on each parent's members, with
-child ids parent-prefixed and child roots collapsed onto the parent
-(MultiBucketizer.ts:46-162, mapTerm :123-141)."""
+"""Multi-composition children (S5): an operator keyed by ``parent_col``
+must equal running the base operator independently on each parent's
+members, with child ids parent-prefixed and child roots collapsed onto
+the parent (MultiBucketizer.ts:46-162, mapTerm :123-141)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from bucketizers_spark.operators.multi import (
-    subject_within_parent,
-    trie_within_parent,
-)
 from bucketizers_spark.operators.subject_page import subject_page
 from bucketizers_spark.operators.substring import substring_trie
 from bucketizers_spark.pipeline import build
@@ -50,8 +46,8 @@ def _map_root(parent: str, b: str) -> str:
 
 class TestSubjectWithinParent:
     def test_matches_per_parent_base_operator(self, spark, parented):
-        res = subject_within_parent(
-            parented, "parent", "subj", salt="s0", max_relations=2
+        res = subject_page(
+            parented, "subj", salt="s0", max_relations=2, parent_col="parent"
         )
         got_assign = {
             (r.seq, r.bucket_id) for r in res.assignments.collect()
@@ -128,8 +124,9 @@ class TestTrieWithinParent:
         return assign, rels
 
     def test_matches_per_parent_base_operator(self, spark, parented):
-        res = trie_within_parent(
-            parented, "parent", "name", page_size=2, max_depth=16, seq_col="seq"
+        res = substring_trie(
+            parented, "name", page_size=2, max_depth=16, seq_col="seq",
+            parent_col="parent",
         )
         assert self._collect(res) == _per_parent_trie(
             parented, page_size=2, max_depth=16
@@ -153,9 +150,9 @@ class TestTrieWithinParent:
             return walk(remaining, chain, **kw)
 
         monkeypatch.setattr(sub_mod, "_grouped_walk", spy)
-        casc = trie_within_parent(
-            parented, "parent", "name", page_size=2, max_depth=16,
-            seq_col="seq", salt_buckets=salt_buckets, tail_threshold=tail,
+        casc = substring_trie(
+            parented, "name", page_size=2, max_depth=16, seq_col="seq",
+            salt_buckets=salt_buckets, tail_threshold=tail, parent_col="parent",
         )
         got = self._collect(casc)
         want_levels = {100_000: [0], 0: []}.get(tail)
@@ -179,9 +176,9 @@ class TestTrieWithinParent:
             raise AssertionError("grouped walk invoked on the cascade path")
 
         monkeypatch.setattr(sub_mod, "_grouped_walk", boom)
-        res = trie_within_parent(
-            parented, "parent", "name", page_size=2, max_depth=16,
-            seq_col="seq", tail_threshold=0,
+        res = substring_trie(
+            parented, "name", page_size=2, max_depth=16, seq_col="seq",
+            tail_threshold=0, parent_col="parent",
         )
         assert res.assignments.count() == 120
 
@@ -191,9 +188,9 @@ class TestTrieWithinParent:
         counted cut, the level-0 walk's cut and the action. An eager
         per-parent size probe before the trie would add jobs."""
         rows, n = jobs_of(
-            lambda: trie_within_parent(
-                parented, "parent", "name", page_size=2, max_depth=16,
-                seq_col="seq",
+            lambda: substring_trie(
+                parented, "name", page_size=2, max_depth=16, seq_col="seq",
+                parent_col="parent",
             ).assignments.collect()
         )
         assert len(rows) == 120
@@ -237,6 +234,38 @@ class TestFactoryMulti:
         prefixes = {r.bucket_id.split("/", 1)[0] for r in rows if r.bucket_id}
         assert prefixes == {"0", "1"}
 
+    def test_substring_child_honours_salt_buckets(
+        self, spark, parented, monkeypatch
+    ):
+        """A child spec reaches its operator whole: the substring child's
+        ``salt_buckets`` is passed to the cascade keyed by the parent."""
+        from bucketizers_spark.operators import substring as sub_mod
+
+        calls = []
+        cascade = sub_mod._run_cascade
+
+        def spy(df, chain, **kw):
+            calls.append(kw)
+            return cascade(df, chain, **kw)
+
+        monkeypatch.setattr(sub_mod, "_run_cascade", spy)
+        spec = {
+            "strategy": "multi",
+            "configs": [
+                {"strategy": "basic", "page_size": 60},
+                {
+                    "strategy": "substring",
+                    "column": "name",
+                    "page_size": 3,
+                    "salt_buckets": 4,
+                },
+            ],
+        }
+        build(parented, spec)
+        assert [(kw["parent_col"], kw["salt_buckets"]) for kw in calls] == [
+            ("_p0", 4)
+        ]
+
 
 @pytest.fixture(scope="module")
 def geo_parented(spark):
@@ -264,10 +293,12 @@ class TestGeoWithinParent:
     def test_matches_per_parent_base_operator(self, spark, geo_parented):
         from bucketizers_spark.operators.basic import fallback_pager
         from bucketizers_spark.operators.geospatial import geospatial_tiles
-        from bucketizers_spark.operators.multi import geo_within_parent
-
-        res = geo_within_parent(
-            geo_parented, "parent", "geom", zoom=4, page_size=5
+        # the geo child is the stage-0 geo builder keyed by the parent:
+        # geospatial_tiles plus fallback_pager over its unmatched rows
+        res = build(
+            geo_parented,
+            {"strategy": "geospatial", "column": "geom", "zoom": 4, "page_size": 5},
+            parent_col="parent",
         )
         got_assign = {(r.seq, r.bucket_id) for r in res.assignments.collect()}
         got_rels = {
@@ -330,10 +361,9 @@ class TestGeoWithinParent:
 
 class TestTimeWithinParent:
     def test_matches_per_parent_base_operator(self, spark, geo_parented):
-        from bucketizers_spark.operators.multi import time_within_parent
         from bucketizers_spark.operators.time_window import tumbling_bucketizer
 
-        res = time_within_parent(geo_parented, "parent", "ts", duration="1 hour")
+        res = tumbling_bucketizer(geo_parented, "ts", "1 hour", parent_col="parent")
         got_assign = {(r.seq, r.bucket_id) for r in res.assignments.collect()}
         got_rels = {
             (r.from_bucket, r.to_bucket) for r in res.relations.collect()
@@ -358,6 +388,54 @@ class TestTimeWithinParent:
         assert got_rels == want_rels
         assert got_seals == want_seals
 
+    def test_sliding_matches_per_parent_base_operator(self, spark, geo_parented):
+        from bucketizers_spark.operators.time_window import sliding_bucketizer
+
+        res = sliding_bucketizer(
+            geo_parented, "ts", "2 hours", "1 hour", parent_col="parent"
+        )
+        got = {(r.seq, r.bucket_id) for r in res.assignments.collect()}
+
+        want = set()
+        for parent in ["G0", "G1"]:
+            sub = geo_parented.where(F.col("parent") == parent)
+            base = sliding_bucketizer(sub, "ts", "2 hours", "1 hour")
+            want |= {
+                (r.seq, f"{parent}/{r.bucket_id}")
+                for r in base.assignments.collect()
+            }
+        assert got == want
+        # every member lies in duration/slide = 2 windows
+        assert len(got) == 2 * geo_parented.count()
+        assert res.relations.count() == 0
+        assert res.seals.count() == 0
+
+    def test_factory_sliding_child_without_slide_has_no_relations(
+        self, spark, geo_parented
+    ):
+        """A sliding child with no ``slide`` behaves like a sliding stage
+        0: assignments only — no boundary chain, no seals."""
+        basic = {"strategy": "basic", "page_size": 80}
+        spec = {
+            "strategy": "multi",
+            "configs": [
+                basic,
+                {
+                    "strategy": "time",
+                    "column": "ts",
+                    "window": {"kind": "sliding", "duration": "1 hour"},
+                },
+            ],
+        }
+        res = build(geo_parented, spec)
+        assert res.assignments.count() == 150
+
+        def rels(r):
+            return sorted(tuple(x) for x in r.relations.collect())
+
+        assert rels(res) == rels(build(geo_parented, basic))
+        assert res.seals.count() == 0
+
     def test_factory_session_child_rejected(self, spark, geo_parented):
         spec = {
             "strategy": "multi",
@@ -372,3 +450,34 @@ class TestTimeWithinParent:
         }
         with pytest.raises(NotImplementedError, match="session"):
             build(geo_parented, spec).assignments.count()
+
+
+def _formatted_plan(df) -> str:
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+@pytest.mark.parametrize(
+    "name,exchanges,windows",
+    [
+        ("multi_subject_basic", 2, 1),
+        ("multi_subject_rotation", 6, 2),
+        ("multi_geo_pager", 4, 2),
+        ("multi_time_window", 1, 0),
+    ],
+)
+def test_multi_query_plan_shape(spark, name, exchanges, windows):
+    """Plan-shape pin of the multi queries' final plans at sf0.001: their
+    Exchange nodes (a BroadcastExchange counts, as tools/explain_plans.py
+    counts them) and Window nodes. A child keyed by its parent must not
+    shuffle or window more than the query's composition needs."""
+    from bucketizers_spark.entry_queries import QUERIES
+
+    plan = _formatted_plan(QUERIES[name](spark, "/root/testdata/sf0.001"))
+    got = (plan.count("Exchange ("), plan.count("Window ("))
+    assert got == (exchanges, windows), plan

@@ -331,13 +331,13 @@ class TestComposeStreams:
 
     @staticmethod
     def _batch_want(spark, stream_pdf):
-        from bucketizers_spark.operators.multi import paged_within_parent
+        from bucketizers_spark.operators.basic import basic_pager
 
         batch_df = spark.createDataFrame(stream_pdf, TOKEN_STREAM_SCHEMA)
         s1 = subject_page(batch_df, "doc_id", salt="s0").assignments
         s1 = s1.withColumnRenamed("bucket_id", "_parent")
         return assignments_map(
-            paged_within_parent(s1, "_parent", page_size=5).assignments
+            basic_pager(s1, page_size=5, parent_col="_parent").assignments
         )
 
     @staticmethod
@@ -783,7 +783,7 @@ class TestComposeStreams:
 
         # stage-0 geo relations (read-time derive) + basic child page
         # links must equal the batch union (geospatial_tiles +
-        # fallback_pager + paged_within_parent)
+        # fallback_pager + basic_pager keyed by the parent)
         def key(r):
             return (
                 r["from_bucket"],
