@@ -40,6 +40,17 @@ from bucketizers_spark.operators.rank import with_rank0
 from bucketizers_spark.functions.normalize import normalize_subject_col
 
 
+def root_name(idx_col: F.Column, root: str, parent_col: str | None) -> F.Column:
+    """The id of root index ``idx_col`` (getCurrentStart, ts:55-72): index
+    0 is the strategy root, index N the rotated ``root-N``; under a parent
+    stage the root is the parent itself and ``root-N`` is parent-prefixed.
+    The batch operator and the streaming rotation (streaming/stateful.py)
+    both name roots here."""
+    return F.when(idx_col == 0, root_id(root, parent_col)).otherwise(
+        child_id(F.concat(F.lit(root + "-"), idx_col.cast("string")), parent_col)
+    )
+
+
 def subject_page(
     df: DataFrame,
     value_col: str,
@@ -63,11 +74,6 @@ def subject_page(
     )
     assignments = df.withColumn("bucket_id", child_id(bucket, parent_col))
     pcols = [parent_col] if parent_col else []
-
-    def _root_name(idx_col):
-        return F.when(idx_col == 0, root_id(root, parent_col)).otherwise(
-            child_id(F.concat(F.lit(root + "-"), idx_col.cast("string")), parent_col)
-        )
 
     # The relation/seal derivation needs the first-seen rank, whose
     # two-phase form runs EAGER work (materialize + offset collect) — so it
@@ -109,7 +115,7 @@ def subject_page(
     def _relations() -> DataFrame:
         equal_rels = _ranked().select(
             *relation_row(
-                _root_name(F.col("root_idx")),
+                root_name(F.col("root_idx"), root, parent_col),
                 "EqualThan",
                 F.col("bucket_id"),
                 values=F.array(F.col("value")),
@@ -119,9 +125,9 @@ def subject_page(
         )
         rotation_rels = _turnovers().select(
             *relation_row(
-                _root_name(F.col("root_idx") - 1),
+                root_name(F.col("root_idx") - 1, root, parent_col),
                 "Relation",
-                _root_name(F.col("root_idx")),
+                root_name(F.col("root_idx"), root, parent_col),
                 seq=F.col("created_at_seq"),
             )
         )
@@ -129,7 +135,7 @@ def subject_page(
 
     def _seals() -> DataFrame:
         return _turnovers().select(
-            _root_name(F.col("root_idx") - 1).alias("bucket_id"),
+            root_name(F.col("root_idx") - 1, root, parent_col).alias("bucket_id"),
             F.col("created_at_seq").alias("sealed_at_seq"),
         )
 

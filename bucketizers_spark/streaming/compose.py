@@ -49,20 +49,53 @@ import shutil
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from bucketizers_spark.config import spec_from_dict, validate_spec
+from bucketizers_spark.operators.basic import basic_pager
+from bucketizers_spark.operators.core import empty_relations, relation_row
+from bucketizers_spark.pipeline import build
+from bucketizers_spark.sinks.idempotent import IdempotentParquetSink
+from bucketizers_spark.streaming.geo_stream import (
+    batch_relations,
+    emitted_columns,
+    tile_pager_stage,
+)
+from bucketizers_spark.streaming.stateful import (
+    paged_stream,
+    rotation_stream,
+    subject_page_stream,
+)
+from bucketizers_spark.streaming.trie_stream import TrieStreamJob
+
+# columns a stage adds beside ``bucket_id``; the re-key drops them before
+# the next stage runs
+_STAGE_HELPERS = (
+    "_parent", "is_first", "subject_value", "rel_from",
+    "_tpos", "_leaf", "_page", "is_new_tile", "is_new_page",
+)
+
+
+def _rekey(stream: DataFrame) -> DataFrame:
+    """Stage k>0's input: stage k-1's output without its helper columns,
+    its ``bucket_id`` renamed to ``_parent`` — the column every child
+    stage is keyed by."""
+    return stream.drop(*_STAGE_HELPERS).withColumnRenamed("bucket_id", "_parent")
 
 
 def _stage_batch(
-    data_dir: str, batch_id: int, build: Callable[[], DataFrame]
+    data_dir: str, batch_id: int, frame: Callable[[], DataFrame]
 ) -> None:
     """Stage one micro-batch as ``data_dir/batch-{id:09d}.parquet``: write
-    ``build()`` as one file to a temp dir, then rename it into place. A
+    ``frame()`` as one file to a temp dir, then rename it into place. A
     batch whose file exists is a checkpoint replay after resume — it is
-    skipped before ``build`` runs."""
+    skipped before ``frame`` runs."""
     final = os.path.join(data_dir, f"batch-{batch_id:09d}.parquet")
     if os.path.exists(final):
         return
     tmp = os.path.join(data_dir, f"_tmp-{batch_id}")
-    build().coalesce(1).write.mode("overwrite").parquet(tmp)
+    frame().coalesce(1).write.mode("overwrite").parquet(tmp)
     parts = glob.glob(os.path.join(tmp, "part-*"))
     if parts:
         os.replace(parts[0], final)
@@ -95,9 +128,12 @@ class ComposedStreams:
 
     ``stages[k]`` is a transform ``streaming DataFrame -> streaming
     DataFrame`` (e.g. ``subject_page_stream`` / ``paged_stream``
-    partials). Stage 0 consumes ``input_stream``; stage k>0 consumes the
-    previous stage's staged files. The last stage's staged files are the
-    composition's output (``read_output``)."""
+    partials) or a job stage (``TrieStage``); ``stages_from_spec`` builds
+    them from a multi spec. Stage 0 consumes ``input_stream``; stage k>0
+    consumes the previous stage's staged files re-keyed (``_rekey``: the
+    helper columns dropped, ``bucket_id`` renamed ``_parent``), so a
+    child stage is keyed by ``_parent``. The last stage's staged files
+    are the composition's output (``read_output``)."""
 
     def __init__(
         self,
@@ -143,8 +179,10 @@ class ComposedStreams:
             self._plans.append((out, handler, ckpt_dir))
             last_data_dir = data_dir
             if k < len(stages) - 1:
-                current = _read_staged(
-                    self.spark, schema, data_dir, max_files_per_trigger
+                current = _rekey(
+                    _read_staged(
+                        self.spark, schema, data_dir, max_files_per_trigger
+                    )
                 )
             rel = relations[k] if relations else None
             if isinstance(rel, BatchDerivedRelations):
@@ -236,8 +274,6 @@ class ComposedStreams:
             if part is not None:
                 parts.append(part)
         if not parts:
-            from bucketizers_spark.operators.core import empty_relations
-
             return empty_relations(self.spark)
         out = parts[0]
         for part in parts[1:]:
@@ -255,18 +291,12 @@ class GeoRelTee:
     ``rels_state/columns`` and is written before the relation file, so a
     crash between the two is healed on checkpoint replay."""
 
-    def __init__(self, c, *, with_parent: bool):
+    def __init__(self, c, parent_col: str | None):
         self.c = c
-        self.with_parent = with_parent
+        self.parent_col = parent_col
 
     def make_rel_handler(self, rel_dir: str, state_dir: str):
-        from bucketizers_spark.streaming.geo_stream import (
-            batch_relations,
-            emitted_columns,
-        )
-
         columns = emitted_columns(state_dir)
-        root = getattr(self.c, "root", "root") or "root"
 
         def handler(bdf, batch_id: int) -> None:
             bdf = bdf.persist()
@@ -274,8 +304,8 @@ class GeoRelTee:
                 rel_dir,
                 batch_id,
                 lambda: batch_relations(
-                    bdf, columns, batch_id, root=root,
-                    with_parent=self.with_parent,
+                    bdf, columns, batch_id, root=self.c.root,
+                    parent_col=self.parent_col,
                 ),
             )
             bdf.unpersist()
@@ -306,13 +336,14 @@ class TrieStage:
     checkpoint, then stages each committed batch's assignments as the
     atomic batch file the next stage's file source consumes.
 
+    Keyed by ``parent_col`` (a child stage) it runs one dedicated trie per
+    parent bucket: node names ``parent/node``, per-(parent, node) versioned
+    counters (``_run_cascade`` with ``parent_col`` + ``node_state``).
+
     Exactly-once across resume: ``process_batch`` is replay-idempotent
     (sink manifest + versioned counters); the staging step is skipped
     when the batch file already exists, and a crash between sink commit
     and staging is healed on replay by re-staging from the sink."""
-
-    # stage-0 artifact columns a child stage replaces with its own
-    _CHILD_DROPS = ("_parent", "is_first")
 
     def __init__(
         self,
@@ -322,46 +353,22 @@ class TrieStage:
         page_size: int = 50,
         max_depth: int = 8,
         root: str = "root",
-        within_parent: bool = False,
+        parent_col: str | None = None,
     ):
         self.mode = mode
         self.value_col = value_col
         self.page_size = page_size
         self.max_depth = max_depth
         self.root = root
-        # child mode (stage k>0): the incoming bucket_id is the parent;
-        # one dedicated trie per parent bucket, node names parent/node,
-        # per-(parent, node) versioned counters (_run_cascade parent_col
-        # + node_state — the TrieStage cross-key shape VERDICT r3 #1)
-        self.within_parent = within_parent
-
-    def _prep_child(self, bdf):
-        drops = [c for c in self._CHILD_DROPS if c in bdf.columns]
-        return bdf.drop(*drops).withColumnRenamed("bucket_id", "_parent")
+        self.parent_col = parent_col
 
     def output_schema(self, input_schema):
-        from pyspark.sql import types as T
-
-        if self.within_parent:
-            fields = []
-            for f in input_schema.fields:
-                if f.name in self._CHILD_DROPS:
-                    continue
-                if f.name == "bucket_id":
-                    fields.append(T.StructField("_parent", f.dataType))
-                else:
-                    fields.append(f)
-            return T.StructType(
-                fields + [T.StructField("bucket_id", T.StringType())]
-            )
         return T.StructType(
             list(input_schema.fields)
             + [T.StructField("bucket_id", T.StringType())]
         )
 
     def make_handler(self, data_dir: str):
-        from bucketizers_spark.streaming.trie_stream import TrieStreamJob
-
         stage_root = os.path.dirname(data_dir)
         job = TrieStreamJob(
             os.path.join(stage_root, "sink"),
@@ -371,12 +378,10 @@ class TrieStage:
             page_size=self.page_size,
             max_depth=self.max_depth,
             root=self.root,
-            parent_col="_parent" if self.within_parent else None,
+            parent_col=self.parent_col,
         )
 
         def handler(bdf, batch_id: int) -> None:
-            if self.within_parent:
-                bdf = self._prep_child(bdf)
             job.process_batch(bdf, batch_id)
             _stage_batch(
                 data_dir,
@@ -393,8 +398,6 @@ class TrieStage:
         ComposedStreams.read_relations() — the trie's relations are
         produced inside process_batch and land in the job's own
         idempotent sink, so no separate tee query is needed."""
-        from bucketizers_spark.sinks.idempotent import IdempotentParquetSink
-
         stage_root = os.path.dirname(data_dir)
         sink = IdempotentParquetSink(
             os.path.join(stage_root, "sink", "_relations")
@@ -409,318 +412,173 @@ class TrieStage:
         return read
 
 
-def stages_from_spec(spec) -> list:
-    """Map a validated multi JobSpec onto compose_streams stage
-    transforms, where per-stage streaming forms exist:
+# Per strategy, the streaming stage and its relation tee, each built from
+# (sub spec, parent_col): stage 0 is the call with parent_col=None, a child
+# stage the call keyed by the re-keyed parent bucket "_parent" — the
+# streaming twin of pipeline.BUCKETIZERS. Every bucket and relation id
+# comes from the batch operator's own id expressions
+# (operators/core.child_id / root_id).
 
-    Stage-0 forms (every strategy): ``basic`` — stateless
-    floor(seq/pageSize) under the dense source-stamped seq;
-    ``subject`` — stateless bucket + keyed first-seen state
-    (stateful.subject_page_stream); ``time`` (tumbling/sliding) — the
-    batch time operator's stateless window bucket map; ``substring`` —
-    TrieStage (the versioned-counter trie cascade as a job stage);
-    ``geospatial`` — geo_stream.tile_pager_stage (per-tile pager with the bucketless
-    sentinel fallback in one stateful op, the same stage GeoStreamJob
-    runs; its relations stream out through GeoRelTee).
 
-    Children — the batch child is the stage-0 operator keyed by the
-    parent bucket (``parent_col``): ``basic`` (per-parent page-counter
-    state), ``subject`` (``subject_page``'s stateless map keyed by the
-    parent + first-seen tags), ``substring`` (TrieStage with
-    ``within_parent`` — the per-parent cascade with versioned
-    parent\\x1fnode (_PSEP) counters; cross-key coordination per level is
-    why this is a job stage, not keyed state), ``geospatial``
-    (per-(parent, tile) pager incl. sentinel fallback), ``time`` (the
-    time operator's stateless ``parent/window-start`` map)."""
-    from pyspark.sql import functions as F
+def _basic_stage(c, parent_col):
+    # with no parent and a source-stamped dense seq paging is a stateless
+    # map (the batch operator itself); a per-parent arrival rank needs
+    # keyed state (paged_stream)
+    if parent_col:
+        return lambda s: paged_stream(s, parent_col, page_size=c.page_size)
+    return lambda s: basic_pager(
+        s, page_size=c.page_size, dense_seq=True
+    ).assignments
 
-    from bucketizers_spark.config import JobSpec, spec_from_dict
-    from bucketizers_spark.operators.subject_page import subject_page
-    from bucketizers_spark.pipeline import build
-    from bucketizers_spark.streaming.geo_stream import tile_pager_stage
-    from bucketizers_spark.streaming.stateful import (
-        paged_stream,
-        subject_page_stream,
+
+def _basic_tee(c, parent_col):
+    # page p's first member links page p-1 → p; page 0 opens no link. The
+    # keyed pager flags that member and carries the previous page's id;
+    # under stage 0's dense seq it is the member whose seq is a multiple
+    # of the page size
+    if parent_col:
+        first = F.col("is_new_page") & F.col("rel_from").isNotNull()
+        prev = F.col("rel_from")
+    else:
+        first = (F.col("seq") % c.page_size == 0) & (F.col("bucket_id") != "0")
+        prev = (F.col("bucket_id").cast("long") - 1).cast("string")
+    return lambda s: s.where(first).select(
+        *relation_row(prev, "Relation", F.col("bucket_id"), seq=F.col("seq"))
     )
 
-    if isinstance(spec, dict):
-        spec = spec_from_dict(spec)
-    if spec.strategy != "multi":
-        raise ValueError("stages_from_spec takes a multi spec")
-    # fail bad streaming specs at configuration time (ConfigError with
-    # the session-window rationale), not when the stream starts
-    from bucketizers_spark.config import validate_spec
 
-    validate_spec(spec, streaming=True)
-
-    def time_bucket(s, sub: JobSpec, parent: str | None):
-        # the batch time operator's assignments; a child keeps _parent,
-        # from which relations_from_spec re-derives the per-parent
-        # boundary chain at read time (BatchDerivedRelations)
-        if parent:
-            s = s.drop(parent).withColumnRenamed("bucket_id", parent)
-        return build(s, sub, parent_col=parent).assignments
-
-    stages = []
-    for k, sub in enumerate(spec.configs):
-        if k == 0:
-            if sub.strategy == "basic":
-                # with seq stamped densely at the source the global pager
-                # is the stateless map floor(seq/pageSize) — the
-                # production path (operators/basic._with_rank0 dense_seq;
-                # paged_stream's docstring explains why no keyed-state
-                # form exists)
-                stages.append(
-                    lambda s, c=sub: s.withColumn(
-                        "bucket_id",
-                        F.floor(F.col("seq") / F.lit(c.page_size)).cast(
-                            "string"
-                        ),
-                    )
-                )
-            elif sub.strategy == "subject":
-                stages.append(
-                    lambda s, c=sub: subject_page_stream(
-                        s, c.column, salt=c.salt
-                    )
-                )
-            elif sub.strategy == "time" and sub.window.kind in (
-                "tumbling", "sliding",
-            ):
-                stages.append(lambda s, c=sub: time_bucket(s, c, None))
-            elif sub.strategy == "substring":
-                stages.append(
-                    TrieStage(
-                        mode="token" if sub.token_mode else "char",
-                        value_col=sub.column or "tokens",
-                        page_size=sub.page_size,
-                        max_depth=sub.max_depth,
-                        root=sub.root,
-                    )
-                )
-            elif sub.strategy == "geospatial":
-                # one stateful op incl. the bucketless sentinel fallback;
-                # relations stream incrementally from the staged flags
-                # (relations_from_spec → GeoRelTee)
-                stages.append(
-                    lambda s, c=sub: tile_pager_stage(
-                        s, c.column, zoom=c.zoom, page_size=c.page_size
-                    )
-                )
-            else:
-                raise NotImplementedError(
-                    f"streaming stage-1 form for {sub.strategy!r}"
-                )
-        else:
-            if sub.strategy == "basic":
-                stages.append(
-                    lambda s, c=sub: paged_stream(
-                        s,
-                        "bucket_id",
-                        page_size=c.page_size,
-                        emit_page_first=True,
-                    )
-                )
-            elif sub.strategy == "time" and sub.window.kind in (
-                "tumbling", "sliding",
-            ):
-                stages.append(lambda s, c=sub: time_bucket(s, c, "_parent"))
-            elif sub.strategy == "subject":
-                # the subject child's ASSIGNMENT is the stateless
-                # parent/normalized-child map of subject_page keyed by
-                # the parent; keyed first-seen tagging rides along so the
-                # per-parent rotation tee (relations_from_spec) is a
-                # single further stateful step
-                def subj_child(s, c=sub):
-                    from bucketizers_spark.streaming.stateful import (
-                        first_seen_tag,
-                    )
-
-                    # a subject stage-0 upstream leaves its own
-                    # is_first/_parent columns — this stage's tags
-                    # replace them
-                    parented = (
-                        s.drop("is_first", "_parent")
-                        .withColumnRenamed("bucket_id", "_parent")
-                        .withColumn(
-                            "subject_value", F.col(c.column).cast("string")
-                        )
-                    )
-                    return first_seen_tag(
-                        subject_page(
-                            parented, c.column, salt=c.salt, parent_col="_parent"
-                        ).assignments
-                    )
-
-                stages.append(subj_child)
-            elif sub.strategy == "geospatial":
-                stages.append(
-                    lambda s, c=sub: tile_pager_stage(
-                        s, c.column, zoom=c.zoom, page_size=c.page_size,
-                        with_parent=True,
-                    )
-                )
-            elif sub.strategy == "substring":
-                # per-parent trie child as a job stage: the cascade with
-                # parent_col + versioned parent\x1fnode (_PSEP) counters — the
-                # cross-key state shape keyed state cannot express
-                stages.append(
-                    TrieStage(
-                        mode="token" if sub.token_mode else "char",
-                        value_col=sub.column or "tokens",
-                        page_size=sub.page_size,
-                        max_depth=sub.max_depth,
-                        within_parent=True,
-                    )
-                )
-            else:
-                raise NotImplementedError(
-                    f"streaming child form for {sub.strategy!r} (batch "
-                    "multi supports it; streaming children currently: "
-                    "basic, subject, substring, geospatial, time)"
-                )
-    return stages
+def _subject_stage(c, parent_col):
+    return lambda s: subject_page_stream(
+        s, c.column, salt=c.salt, parent_col=parent_col
+    )
 
 
-def relations_from_spec(spec) -> list:
-    """Per-stage relation-tee transforms aligned 1:1 with
-    ``stages_from_spec`` (pass both to ``compose_streams``). Each tee
-    consumes its stage's staged output as a file stream and emits rows
-    in RELATIONS_SCHEMA:
+def _subject_tee(c, parent_col):
+    # the rotation (one per parent under a parent stage, reference
+    # SubjectPageBucketizer.ts:55-72) as relation rows; batch relation_row
+    # stamps property_path on EqualThan rows only
+    equal = F.col("relation_type") == "EqualThan"
+    path = F.when(equal, F.lit(c.property_path)) if c.property_path else F.lit(None)
 
-    - stage 0 ``subject``: the single-key rotation state
-      (stateful.rotation_stream — EqualThan per first-seen bucket,
-      Relation per root rotation, reference
-      SubjectPageBucketizer.ts:55-72), mapped onto the batch relation
-      columns.
-    - stage 0 ``basic``: stateless boundary tee (page and first row are
-      pure functions of the dense seq).
-    - child ``basic``: a STATELESS filter — paged_stream stamps
-      ``is_page_first``/``rel_from`` on the assignment stream, so the
-      per-parent page link (``basic_pager`` with ``parent_col``
-      semantics) needs no further state.
-    - child ``subject``: a per-PARENT rotation (rotation_stream with
-      ``parent_col`` — dedicated counter state per parent, root names
-      collapsing onto the parent like ``subject_page`` with
-      ``parent_col``).
-    - ``time`` (tumbling, stage 0 or child): BatchDerivedRelations —
-      ``tumbling_bucketizer``'s boundary chain between observed windows
-      (per parent for a child), computed over the staged output at read
-      time (see BatchDerivedRelations for why it cannot stream).
-    - ``geospatial`` (stage 0 or child): GeoRelTee — an incremental
-      foreachBatch tee over the staged pager rows running
-      geo_stream.batch_relations (column → leaf-page and bucketless
-      links per is_new_page row, root/parent → column deduped across
-      batches with a versioned emitted-columns table), so relations
-      stream out without rescanning the staged output.
-    - others: None (substring relations — stage 0 or child — live in
-      TrieStage's job sink and surface via read_relations(); sliding
-      children have no relations in batch either)."""
-    from pyspark.sql import functions as F
-
-    from bucketizers_spark.config import spec_from_dict
-    from bucketizers_spark.operators.core import relation_row
-    from bucketizers_spark.pipeline import build
-    from bucketizers_spark.streaming.stateful import rotation_stream
-
-    if isinstance(spec, dict):
-        spec = spec_from_dict(spec)
-    if spec.strategy != "multi":
-        raise ValueError("relations_from_spec takes a multi spec")
-
-    def _map_rot(rot, c):
-        # batch relation_row stamps property_path on EqualThan rows only
-        # (rotation Relations carry NULL path)
-        pp = getattr(c, "property_path", None)
-        path = (
-            F.when(F.col("relation_type") == "EqualThan", F.lit(pp))
-            if pp
-            else F.lit(None)
+    def tee(s):
+        rot = rotation_stream(
+            s, max_relations=c.max_relations, root=c.root, parent_col=parent_col
         )
         return rot.select(
-            F.col("from_bucket"),
-            F.col("relation_type"),
-            F.col("to_bucket"),
-            F.when(
-                F.col("value").isNotNull(), F.array(F.col("value"))
-            ).alias("values"),
+            "from_bucket",
+            "relation_type",
+            "to_bucket",
+            F.when(F.col("value").isNotNull(), F.array("value")).alias("values"),
             path.cast("string").alias("path"),
             F.col("seq").alias("created_at_seq"),
         )
 
-    def subject_rels(s, c):
-        return _map_rot(
-            rotation_stream(s, max_relations=c.max_relations, root=c.root), c
-        )
+    return tee
 
-    def subject_child_rels(s, c):
-        return _map_rot(
-            rotation_stream(
-                s, max_relations=c.max_relations, parent_col="_parent"
-            ),
-            c,
-        )
 
-    def basic_rels(s, c):
-        return s.where(
-            F.col("is_page_first") & F.col("rel_from").isNotNull()
-        ).select(
-            *relation_row(
-                F.col("rel_from"),
-                "Relation",
-                F.col("bucket_id"),
-                seq=F.col("seq"),
-            )
-        )
+def _time_stage(c, parent_col):
+    return lambda s: build(s, c, parent_col=parent_col).assignments
 
-    def basic_stage0_rels(s, c):
-        # boundary relation with each page's first member (page >= 1):
-        # stateless under dense seq — the page and its first row are
-        # pure functions of seq (operators/basic._page_relations)
-        page = F.floor(F.col("seq") / F.lit(c.page_size))
-        return s.where(
-            (F.col("seq") % c.page_size == 0) & (page >= 1)
-        ).select(
-            *relation_row(
-                (page - 1).cast("string"),
-                "Relation",
-                page.cast("string"),
-                seq=F.col("seq"),
-            )
-        )
 
-    rels: list = []
-    for k, sub in enumerate(spec.configs):
-        if k == 0 and sub.strategy == "basic":
-            rels.append(lambda s, c=sub: basic_stage0_rels(s, c))
-        elif k == 0 and sub.strategy == "subject":
-            rels.append(lambda s, c=sub: subject_rels(s, c))
-        elif k > 0 and sub.strategy == "basic":
-            rels.append(lambda s, c=sub: basic_rels(s, c))
-        elif k > 0 and sub.strategy == "subject":
-            rels.append(lambda s, c=sub: subject_child_rels(s, c))
-        elif sub.strategy == "time" and sub.window.kind == "tumbling":
-            # the tumbling operator's relations over the staged output,
-            # which carries the time column (and a child's _parent);
-            # batch-derived because lead-links over observed windows
-            # retract when a late window lands between two linked ones
-            parent = "_parent" if k else None
-            rels.append(
-                BatchDerivedRelations(
-                    lambda df, c=sub, p=parent: build(
-                        df.drop("bucket_id"), c, parent_col=p
-                    ).relations
-                )
-            )
-        elif sub.strategy == "geospatial":
-            # composed geo stages: INCREMENTAL relation tee driven by
-            # the pager flags with versioned root→column dedup (GeoRelTee
-            # — r4 VERDICT #3; the previous BatchDerivedRelations form
-            # rescanned the complete staged output per listing)
-            rels.append(GeoRelTee(sub, with_parent=(k > 0)))
-        else:
-            rels.append(None)
-    return rels
+def _time_tee(c, parent_col):
+    # the tumbling chain links observed windows, so a late window
+    # retracts a link: derived at read time from the staged output, which
+    # keeps the time column (and a child's _parent). Sliding windows have
+    # no relations in batch either.
+    if c.window.kind != "tumbling":
+        return None
+    return BatchDerivedRelations(
+        lambda df: build(df.drop("bucket_id"), c, parent_col=parent_col).relations
+    )
+
+
+def _geo_stage(c, parent_col):
+    return lambda s: tile_pager_stage(
+        s, c.column, zoom=c.zoom, page_size=c.page_size, parent_col=parent_col
+    )
+
+
+def _trie_stage(c, parent_col):
+    return TrieStage(
+        mode="token" if c.token_mode else "char",
+        value_col=c.column or "tokens",
+        page_size=c.page_size,
+        max_depth=c.max_depth,
+        root=c.root,
+        parent_col=parent_col,
+    )
+
+
+STREAM_STAGES = {
+    "basic": (_basic_stage, _basic_tee),
+    "subject": (_subject_stage, _subject_tee),
+    "time": (_time_stage, _time_tee),
+    "geospatial": (_geo_stage, GeoRelTee),
+    # the trie's relations land in its job sink (TrieStage.relations_reader)
+    "substring": (_trie_stage, lambda c, parent_col: None),
+}
+
+
+def _per_stage(spec, which: int) -> list:
+    if isinstance(spec, dict):
+        spec = spec_from_dict(spec)
+    if spec.strategy != "multi":
+        raise ValueError(
+            f"streaming composition takes a multi spec, not {spec.strategy!r}"
+        )
+    # fail bad streaming specs at configuration time (ConfigError with
+    # the session-window rationale), not when the stream starts
+    validate_spec(spec, streaming=True)
+    return [
+        STREAM_STAGES[sub.strategy][which](sub, "_parent" if k else None)
+        for k, sub in enumerate(spec.configs)
+    ]
+
+
+def stages_from_spec(spec) -> list:
+    """Map a validated multi JobSpec onto ``compose_streams`` stages, one
+    per config, each built by its strategy's ``STREAM_STAGES`` entry:
+    stage 0 unkeyed, stage k>0 keyed by ``_parent`` (the re-keyed
+    stage-(k-1) bucket), as batch ``build`` keys a multi child by
+    ``parent_col``:
+
+    - ``basic``: stage 0 is ``basic_pager`` under the dense
+      source-stamped seq (a stateless map); a child pages per parent with
+      keyed counter state (stateful.paged_stream).
+    - ``subject``: ``subject_page``'s stateless bucket map + keyed
+      first-seen tags (stateful.subject_page_stream).
+    - ``time`` (tumbling/sliding): the batch time operator's stateless
+      window map.
+    - ``substring``: TrieStage, the versioned-counter trie cascade as a
+      job stage (cross-key coordination per level is why it is not keyed
+      state); a child keeps versioned parent\x1fnode (_PSEP) counters.
+    - ``geospatial``: geo_stream.tile_pager_stage, the per-(parent?,
+      tile) pager with the bucketless sentinel fallback in one stateful
+      op (the stage GeoStreamJob runs)."""
+    return _per_stage(spec, 0)
+
+
+def relations_from_spec(spec) -> list:
+    """Per-stage relation tees aligned 1:1 with ``stages_from_spec``
+    (pass both to ``compose_streams``), each from its strategy's
+    ``STREAM_STAGES`` entry. A tee consumes its stage's staged output as
+    a file stream and emits rows in RELATIONS_SCHEMA:
+
+    - ``basic``: a stateless filter on each page's first member (the
+      child pager flags it with ``is_new_page`` and ``rel_from``).
+    - ``subject``: the rotation state (stateful.rotation_stream, one
+      rotation per parent for a child) — EqualThan per first-seen
+      bucket, Relation per root rotation (SubjectPageBucketizer.ts:55-72).
+    - ``time`` (tumbling): BatchDerivedRelations — ``tumbling_bucketizer``'s
+      boundary chain between observed windows, computed over the staged
+      output at read time (see BatchDerivedRelations for why it cannot
+      stream); sliding windows have none.
+    - ``geospatial``: GeoRelTee — an incremental foreachBatch tee
+      running geo_stream.batch_relations over the staged pager rows, so
+      relations stream out without rescanning the staged output.
+    - ``substring``: None — the trie's relations live in TrieStage's job
+      sink and surface via read_relations()."""
+    return _per_stage(spec, 1)
 
 
 def compose_streams(

@@ -12,12 +12,11 @@ the composed geo stages (streaming/compose.py):
 
 - ``tile_pager_stage`` (the one stateful operator): WKT → distinct
   integer tiles (operators/geospatial.tile_array_col) → posexplode;
-  unplaceable rows take the ``bucketless`` sentinel leaf. One
-  ``applyInPandasWithState`` keyed by (parent?, leaf) holds the lifetime
-  member count. Page = idx // page_size is a pure function of the count,
-  so the kernel is one numpy arange per batch — no per-row Python. Rows
-  carry ``is_new_tile`` / ``is_new_page`` flags; the sentinel leaf's
-  pages are ``bucketless-N``, the batch fallback pager's naming.
+  unplaceable rows take the ``bucketless`` sentinel leaf. The lifetime
+  page counter (stateful.keyed_pager) keyed by (parent?, leaf) pages the
+  rows in (seq, tile position) order and flags ``is_new_tile`` /
+  ``is_new_page``; the sentinel leaf's pages are ``bucketless-N``, the
+  batch fallback pager's naming.
 - ``batch_relations``: one micro-batch's relation rows, derived from the
   flags: column → leaf-page per new-page row, root → bucketless-N per new
   fallback page, and root → column per column's first new-tile row. The
@@ -32,39 +31,17 @@ reference never evicts tilesMap); tile cardinality is bounded by 4^zoom.
 from __future__ import annotations
 
 import os
-from typing import Iterable
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from bucketizers_spark.operators.core import child_id, relation_row, root_id
 from bucketizers_spark.operators.geospatial import bbox_col, tile_array_col
 from bucketizers_spark.sinks.idempotent import IdempotentParquetSink, VersionedTable
+from bucketizers_spark.streaming.stateful import keyed_pager
 
-_PAGER_STATE = T.StructType([T.StructField("cnt", T.LongType())])
 _COLUMNS_SCHEMA = T.StructType([T.StructField("column", T.StringType())])
-
-
-def _make_tile_pager_fn(page_size: int):
-    def fn(
-        key, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        cnt = state.get[0] if state.exists else 0
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if len(pdf):
-            pdf = pdf.sort_values(["seq", "_tpos"]).reset_index(drop=True)
-            idx = cnt + np.arange(len(pdf), dtype=np.int64)
-            pdf["_page"] = idx // page_size
-            pdf["is_new_tile"] = idx == 0
-            pdf["is_new_page"] = idx % page_size == 0
-            cnt = int(cnt + len(pdf))
-            yield pdf
-        state.update((cnt,))
-
-    return fn
 
 
 def tile_pager_stage(
@@ -73,20 +50,17 @@ def tile_pager_stage(
     *,
     zoom: int = 4,
     page_size: int = 50,
-    with_parent: bool = False,
+    parent_col: str | None = None,
 ) -> DataFrame:
     """The member stream with ``bucket_id`` (``z/x/y-page``, or
     ``bucketless-page`` for rows the tiler cannot place) plus the pager's
-    ``_leaf``/``_page`` and flag columns. ``with_parent`` is the compose
-    child form: the incoming ``bucket_id`` becomes ``_parent``, counters
-    are per (parent, tile) and bucket ids are parent-prefixed (the batch
-    geo child: ``geospatial_tiles`` + ``fallback_pager`` with
-    ``parent_col``). Tiles and the sentinel page in one stateful
-    operator, so the stage composes like any other."""
-    work = stream_df.drop("_parent", "is_first")
-    if with_parent:
-        work = work.withColumnRenamed("bucket_id", "_parent")
-    work = work.withColumn("_tiles", tile_array_col(value_col, zoom))
+    ``_leaf``/``_page`` and flag columns. Keyed by ``parent_col`` (a
+    compose child) counters are per (parent, tile) and bucket ids are
+    parent-prefixed, with the batch geo child's ``child_id``
+    (``geospatial_tiles`` + ``fallback_pager`` with ``parent_col``).
+    Tiles and the sentinel page in one stateful operator
+    (``stateful.keyed_pager``), so the stage composes like any other."""
+    work = stream_df.withColumn("_tiles", tile_array_col(value_col, zoom))
     bad = F.exists(F.col("_tiles"), lambda t: t["y"].isNull())
     # null-safe (see operators/geospatial): NULL values must route
     # to the bucketless sentinel, not vanish in three-valued logic
@@ -107,27 +81,12 @@ def tile_pager_stage(
         .withColumn("_tpos", F.lit(0))
         .withColumn("_leaf", F.lit("bucketless"))
     )
-    both = tiles.unionByName(fb)
-    out_schema = T.StructType(
-        list(both.schema.fields)
-        + [
-            T.StructField("_page", T.LongType()),
-            T.StructField("is_new_tile", T.BooleanType()),
-            T.StructField("is_new_page", T.BooleanType()),
-        ]
+    keys = [*([parent_col] if parent_col else []), "_leaf"]
+    flagged = keyed_pager(
+        tiles.unionByName(fb), keys, page_size, order=("seq", "_tpos")
     )
-    keys = ["_parent", "_leaf"] if with_parent else ["_leaf"]
-    flagged = both.groupBy(*keys).applyInPandasWithState(
-        _make_tile_pager_fn(page_size),
-        outputStructType=out_schema,
-        stateStructType=_PAGER_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    bucket = F.concat(F.col("_leaf"), F.lit("-"), F.col("_page"))
-    if with_parent:
-        bucket = F.concat(F.col("_parent"), F.lit("/"), bucket)
-    return flagged.withColumn("bucket_id", bucket)
+    page = F.concat(F.col("_leaf"), F.lit("-"), F.col("_page"))
+    return flagged.withColumn("bucket_id", child_id(page, parent_col))
 
 
 def emitted_columns(state_dir: str) -> VersionedTable:
@@ -141,7 +100,7 @@ def batch_relations(
     batch_id: int,
     *,
     root: str = "root",
-    with_parent: bool = False,
+    parent_col: str | None = None,
 ) -> DataFrame:
     """Relation rows (RELATIONS_SCHEMA) of one micro-batch of pager
     output. New pages ride the ``is_new_page`` flag, which the keyed
@@ -150,18 +109,14 @@ def batch_relations(
     below ``batch_id``, and version ``batch_id`` is written here, BEFORE
     the caller commits the returned rows: a replay recomputes from the
     same earlier version and overwrites its own. ``flagged`` is read
-    several times; the caller persists it."""
-    from bucketizers_spark.operators.core import relation_row
-
+    several times; the caller persists it. Column and root ids are the
+    batch operator's ``child_id`` / ``root_id``."""
     matched = flagged.where(F.col("_leaf") != "bucketless")
     fb = flagged.where(F.col("_leaf") == "bucketless")
-    raw_col = F.regexp_replace(F.col("_leaf"), r"/[^/]+$", "")
-    if with_parent:
-        column = F.concat(F.col("_parent"), F.lit("/"), raw_col)
-        up = F.col("_parent")
-    else:
-        column = raw_col
-        up = F.lit(root)
+    column = child_id(
+        F.regexp_replace(F.col("_leaf"), r"/[^/]+$", ""), parent_col
+    )
+    up = root_id(root, parent_col)
     new_pages = matched.where(F.col("is_new_page")).withColumn(
         "_bbox", bbox_col(F.col("_leaf"))
     )
@@ -177,7 +132,7 @@ def batch_relations(
     root_rels = (
         matched.where(F.col("is_new_tile"))
         .withColumn("_column", column)
-        .groupBy(*(["_parent"] if with_parent else []), "_column")
+        .groupBy(*([parent_col] if parent_col else []), "_column")
         .agg(
             F.min("seq").alias("created_at_seq"),
             # (seq, _tpos): pair order breaks same-member seq ties

@@ -8,16 +8,19 @@ Two kernels compose the streaming subject-page bucketizer (S3):
    Emits every member row tagged ``is_first`` for exactly one row per
    bucket across the stream's lifetime (the hypermediaControlsMap.has()
    check, SubjectPageBucketizer.ts:82-90, as distributed keyed state).
-2. ``_rotation_fn``: the small stream of first-seen rows keyed to a single
-   constant key; state = (root_relation_count, root_count). Reproduces
-   getCurrentStart (ts:55-72): assigns each new bucket its root, emits
-   rotation relations + seals. The per-key volume here is one row per NEW
-   bucket — tiny relative to member volume, so the single key is not a
-   throughput bottleneck (members never pass through it).
+2. ``_make_rotation_fn``: the small stream of first-seen rows keyed to a
+   single constant key (or to the parent bucket under a multi parent);
+   state = (root_relation_count, root_count). Reproduces getCurrentStart
+   (ts:55-72): assigns each new bucket its root index, emits rotation
+   relations + seals. The per-key volume here is one row per NEW bucket —
+   tiny relative to member volume, so the single key is not a throughput
+   bottleneck (members never pass through it).
 
-The basic pager (S1) needs no keyed state in this engine: with ``seq``
-stamped at the source its bucket is the stateless map floor(seq/pageSize)
-(SURVEY.md §7); the substring trie's cross-key cascade runs incrementally in
+A third, ``keyed_pager``, is the one lifetime page counter: the per-parent
+basic pager and the geospatial tile pager both run it. The global basic
+pager (S1) needs no keyed state: with ``seq`` stamped at the source its
+bucket is the stateless map of ``basic_pager(dense_seq=True)`` (SURVEY.md
+§7); the substring trie's cross-key cascade runs incrementally in
 ``foreachBatch`` with a counters table (see streaming/trie_stream.py).
 
 State schemas use explicit StructTypes; timeouts are NoTimeout — bucket
@@ -36,7 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from bucketizers_spark.operators.subject_page import subject_page
+from bucketizers_spark.operators.core import child_id
+from bucketizers_spark.operators.subject_page import root_name, subject_page
 
 _FIRST_SEEN_STATE = T.StructType([T.StructField("seen", T.BooleanType())])
 
@@ -46,6 +50,8 @@ _ROTATION_STATE = T.StructType(
         T.StructField("root_count", T.LongType()),
     ]
 )
+
+_PAGER_STATE = T.StructType([T.StructField("cnt", T.LongType())])
 
 
 def _first_seen_fn(
@@ -69,35 +75,19 @@ def _first_seen_fn(
     state.update((bool(seen),))
 
 
-def _make_rotation_fn(max_relations: int, root: str, parent_mode: bool = False):
+def _make_rotation_fn(max_relations: int, key_col: str):
     """Vectorized getCurrentStart (SubjectPageBucketizer.ts:55-72): the k-th
-    new bucket overall (0-based rank r) relates from root index
-    r // max_relations; a rotation (+seal of the previous root) fires with
-    every bucket whose r is a positive multiple of max_relations. The keyed
-    state carries only the running total of new buckets.
+    new bucket of a ``key_col`` group (0-based rank r) relates from root
+    index r // max_relations; a rotation (+seal of the previous root) fires
+    with every bucket whose r is a positive multiple of max_relations. The
+    kernel emits root INDICES (``from_idx``) and ``rotation_stream`` names
+    them; the keyed state carries only the running total of new buckets."""
 
-    ``parent_mode``: the group key is a stage-1 PARENT bucket and the
-    child root collapses onto it — root index 0 is the parent itself,
-    rotated roots are ``parent/root-N`` (``subject_page`` with
-    ``parent_col`` names them the same, MultiBucketizer.ts:123-141)."""
-
-    cols = ["from_bucket", "relation_type", "to_bucket", "value", "seq", "seal"]
+    cols = [key_col, "relation_type", "from_idx", "to_bucket", "value", "seq"]
 
     def fn(
         key, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
-        if parent_mode:
-            parent = str(key[0])
-            zero_name, prefix = parent, parent + "/root-"
-        else:
-            zero_name, prefix = root, root + "-"
-
-        def root_names(idx: "np.ndarray") -> pd.Series:
-            s = pd.Series(idx).astype(str)
-            return pd.Series(
-                np.where(idx == 0, zero_name, prefix + s), dtype=object
-            )
-
         rel_count, root_count = (
             (state.get[0], state.get[1]) if state.exists else (0, 0)
         )
@@ -112,23 +102,23 @@ def _make_rotation_fn(max_relations: int, root: str, parent_mode: bool = False):
             root_idx = r // max_relations
             eq = pd.DataFrame(
                 {
-                    "from_bucket": root_names(root_idx),
+                    key_col: pdf[key_col],
                     "relation_type": "EqualThan",
+                    "from_idx": root_idx,
                     "to_bucket": pdf["bucket_id"],
                     "value": pdf["subject_value"],
                     "seq": pdf["seq"],
-                    "seal": None,
                 }
             )
             rot_mask = (r % max_relations == 0) & (r > 0)
             rot = pd.DataFrame(
                 {
-                    "from_bucket": root_names(root_idx[rot_mask] - 1),
+                    key_col: pdf.loc[rot_mask, key_col].to_numpy(),
                     "relation_type": "Relation",
-                    "to_bucket": root_names(root_idx[rot_mask]),
+                    "from_idx": root_idx[rot_mask] - 1,
+                    "to_bucket": None,
                     "value": None,
                     "seq": pdf.loc[rot_mask, "seq"].to_numpy(),
-                    "seal": root_names(root_idx[rot_mask] - 1),
                 }
             )
             total += n
@@ -140,16 +130,13 @@ def _make_rotation_fn(max_relations: int, root: str, parent_mode: bool = False):
     return fn
 
 
-_ROTATION_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("from_bucket", T.StringType()),
-        T.StructField("relation_type", T.StringType()),
-        T.StructField("to_bucket", T.StringType()),
-        T.StructField("value", T.StringType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("seal", T.StringType()),
-    ]
-)
+_ROTATION_FIELDS = [
+    T.StructField("relation_type", T.StringType()),
+    T.StructField("from_idx", T.LongType()),
+    T.StructField("to_bucket", T.StringType()),
+    T.StructField("value", T.StringType()),
+    T.StructField("seq", T.LongType()),
+]
 
 
 def subject_page_stream(
@@ -157,85 +144,62 @@ def subject_page_stream(
     value_col: str,
     *,
     salt: str = "s0",
-    ascii_fast: bool = True,
+    parent_col: str | None = None,
 ) -> DataFrame:
-    """Stage 1 of streaming subject-page: stateless bucket id (the batch
-    operator's assignments) + keyed first-seen tagging. Returns the
-    member stream with ``bucket_id`` and ``is_first`` columns (append
-    mode)."""
+    """Streaming subject page: the batch operator's stateless bucket map
+    (``subject_page`` keyed by ``parent_col`` for a multi child) plus
+    keyed first-seen tagging. Returns the member stream with
+    ``bucket_id``, ``subject_value`` and ``is_first`` columns (append
+    mode), the input of ``rotation_stream``."""
     with_bucket = subject_page(
-        stream_df, value_col, salt=salt, ascii_fast=ascii_fast
+        stream_df, value_col, salt=salt, parent_col=parent_col
     ).assignments.withColumn("subject_value", F.col(value_col).cast("string"))
-    return first_seen_tag(with_bucket)
-
-
-_PAGER_STATE = T.StructType([T.StructField("cnt", T.LongType())])
-
-
-def paged_stream(
-    stream_df: DataFrame,
-    parent_col: str,
-    *,
-    page_size: int = 50,
-    seq_col: str = "seq",
-    out_col: str = "bucket_id",
-    emit_page_first: bool = False,
-) -> DataFrame:
-    """Streaming per-parent arrival-order pager: keyed page-counter state
-    per parent bucket (the multi composition's child-instance-per-parent,
-    MultiBucketizer.ts:94-96, as applyInPandasWithState keyed state).
-    Emits ``out_col = parent/page``; parallelism = number of distinct
-    parents, counters are one long per parent.
-
-    The GLOBAL basic pager deliberately has no streaming-state form: with
-    ``seq`` stamped at the source its page is the stateless map
-    floor(seq/pageSize) (see module docstring) — routing every member
-    through one state key would serialize the stream.
-
-    ``emit_page_first=True`` adds two columns for downstream RELATION
-    derivation (streaming/compose.relations_from_spec): ``is_page_first``
-    marks each page's first arrival, ``rel_from`` carries the previous
-    page's bucket id (NULL on page 0, which opens no link — the
-    ``basic_pager`` with ``parent_col`` semantics). The page link is then
-    a stateless filter over this stream's staged output."""
-    fields = [f for f in stream_df.schema.fields if f.name != out_col]
-    extra = (
-        [
-            T.StructField("is_page_first", T.BooleanType()),
-            T.StructField("rel_from", T.StringType()),
-        ]
-        if emit_page_first
-        else []
-    )
     out_schema = T.StructType(
-        fields + [T.StructField(out_col, T.StringType())] + extra
+        with_bucket.schema.fields + [T.StructField("is_first", T.BooleanType())]
     )
-    names = [f.name for f in fields]
+    return with_bucket.groupBy("bucket_id").applyInPandasWithState(
+        _first_seen_fn,
+        outputStructType=out_schema,
+        stateStructType=_FIRST_SEEN_STATE,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def keyed_pager(
+    df: DataFrame, keys: list[str], page_size: int, order=("seq",)
+) -> DataFrame:
+    """Lifetime page counter per ``keys`` group (keyed state: one long per
+    group, never evicted, like the reference's page counters). Each
+    micro-batch's rows, in ``order``, get the page of their group's running
+    member count as ``_page``, plus ``is_new_tile`` (the group's first
+    member) and ``is_new_page`` (a page's first member). The basic child
+    (``paged_stream``) and the geo tile pager
+    (``geo_stream.tile_pager_stage``) both page here and build their
+    bucket ids from ``_page`` JVM-side."""
+    out_schema = T.StructType(
+        df.schema.fields
+        + [
+            T.StructField("_page", T.LongType()),
+            T.StructField("is_new_tile", T.BooleanType()),
+            T.StructField("is_new_page", T.BooleanType()),
+        ]
+    )
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         cnt = state.get[0] if state.exists else 0
         pdf = pd.concat(list(pdfs), ignore_index=True)
         if len(pdf):
-            pdf = pdf.sort_values(seq_col).reset_index(drop=True)
-            offs = cnt + np.arange(len(pdf))
-            pages = offs // page_size
-            parent = str(key[0])
-            out = pdf[names].assign(
-                **{out_col: [f"{parent}/{p}" for p in pages]}
-            )
-            if emit_page_first:
-                out = out.assign(
-                    is_page_first=(offs % page_size == 0),
-                    rel_from=[
-                        f"{parent}/{p - 1}" if p >= 1 else None
-                        for p in pages
-                    ],
-                )
-            yield out
+            pdf = pdf.sort_values(list(order)).reset_index(drop=True)
+            idx = cnt + np.arange(len(pdf), dtype=np.int64)
+            pdf["_page"] = idx // page_size
+            pdf["is_new_tile"] = idx == 0
+            pdf["is_new_page"] = idx % page_size == 0
             cnt += len(pdf)
+            yield pdf
         state.update((int(cnt),))
 
-    return stream_df.groupBy(parent_col).applyInPandasWithState(
+    return df.groupBy(*keys).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=_PAGER_STATE,
@@ -244,19 +208,30 @@ def paged_stream(
     )
 
 
-def first_seen_tag(stream_df: DataFrame, key_col: str = "bucket_id") -> DataFrame:
-    """Tag each ``key_col`` group's first arrival (by seq) with
-    ``is_first`` via keyed boolean state — the reusable half of
-    subject_page_stream, also used by the multi subject-child stage."""
-    out_schema = T.StructType(
-        stream_df.schema.fields + [T.StructField("is_first", T.BooleanType())]
-    )
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        _first_seen_fn,
-        outputStructType=out_schema,
-        stateStructType=_FIRST_SEEN_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def paged_stream(
+    stream_df: DataFrame, parent_col: str, *, page_size: int = 50
+) -> DataFrame:
+    """Streaming per-parent arrival-order pager, the multi basic child:
+    ``keyed_pager`` per parent bucket (one child instance per parent,
+    MultiBucketizer.ts:94-96). ``bucket_id`` is ``parent/page``, built
+    like ``basic_pager`` with ``parent_col``; ``rel_from`` carries the
+    previous page's id (NULL on page 0, which opens no link), so the page
+    link is a stateless filter on ``is_new_page`` over this stream's
+    output.
+
+    The GLOBAL basic pager has no keyed form: with ``seq`` stamped at the
+    source its page is the stateless map of ``basic_pager(dense_seq=True)``
+    — routing every member through one state key would serialize the
+    stream."""
+
+    def page_id(p):
+        return child_id(p.cast("string"), parent_col)
+
+    page = F.col("_page")
+    return (
+        keyed_pager(stream_df, [parent_col], page_size)
+        .withColumn("bucket_id", page_id(page))
+        .withColumn("rel_from", F.when(page >= 1, page_id(page - 1)))
     )
 
 
@@ -271,18 +246,32 @@ def rotation_stream(
     EqualThan relations, rotation Relations, and seal marks (rows with
     ``seal`` set). Single-key by default (the global subject pager);
     with ``parent_col`` a DEDICATED rotation per parent bucket (the
-    multi subject-child form: parallelism = distinct parents, root
-    names collapse onto each parent)."""
+    multi subject child: parallelism = distinct parents). Roots are
+    named by ``subject_page``'s own ``root_name``."""
     keyed = first_seen_df.where(F.col("is_first"))
+    key_col = parent_col or "_k"
     if parent_col is None:
         keyed = keyed.withColumn("_k", F.lit(0))
-        group_col = "_k"
-    else:
-        group_col = parent_col
-    return keyed.groupBy(group_col).applyInPandasWithState(
-        _make_rotation_fn(max_relations, root, parent_mode=parent_col is not None),
-        outputStructType=_ROTATION_OUT_SCHEMA,
+    rot = keyed.groupBy(key_col).applyInPandasWithState(
+        _make_rotation_fn(max_relations, key_col),
+        outputStructType=T.StructType([keyed.schema[key_col], *_ROTATION_FIELDS]),
         stateStructType=_ROTATION_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+    def name(idx):
+        return root_name(idx, root, parent_col)
+
+    from_root = name(F.col("from_idx"))
+    is_rotation = F.col("relation_type") == "Relation"
+    return rot.select(
+        from_root.alias("from_bucket"),
+        "relation_type",
+        F.when(is_rotation, name(F.col("from_idx") + 1))
+        .otherwise(F.col("to_bucket"))
+        .alias("to_bucket"),
+        "value",
+        "seq",
+        F.when(is_rotation, from_root).alias("seal"),
     )

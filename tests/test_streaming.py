@@ -350,7 +350,7 @@ class TestComposeStreams:
             stream,
             [
                 lambda s: subject_page_stream(s, "doc_id", salt="s0"),
-                lambda s: paged_stream(s, "bucket_id", page_size=5),
+                lambda s: paged_stream(s, "_parent", page_size=5),
             ],
             os.path.join(workdir, "compose"),
         )
@@ -447,8 +447,8 @@ class TestComposeStreams:
         assert got == want and len(got) > 10
 
     def test_substring_child_matches_batch(self, spark, workdir, stream_pdf):
-        """Streaming SUBSTRING child (TrieStage within_parent — the
-        per-parent cascade with versioned parent\\x00node counters) ==
+        """Streaming SUBSTRING child (TrieStage with parent_col — the
+        per-parent cascade with versioned parent\\x1fnode counters) ==
         batch multi [subject, substring], assignments AND relations,
         across a mid-stream kill/resume (VERDICT r3 #1; reference
         MultiBucketizer.test.ts composes any child type per parent,
@@ -1176,6 +1176,165 @@ class TestComposeStreams:
         batch_df = spark.createDataFrame(stream_pdf, TOKEN_STREAM_SCHEMA)
         want = build(batch_df, spec).assignments
         assert assignments_map(out) == assignments_map(want)
+
+    @staticmethod
+    def _with_cols(df):
+        """Adds ``ab`` (constant "a b": a char trie with page size 1
+        leaves the exhausted multi-word members with a NULL bucket) and
+        ``wkt`` (one point per member, every 13th non-WKT)."""
+        lon = (F.col("seq") * 37 % 360) - 180 + F.lit(0.5)
+        lat = ((F.col("seq") * 7) % 170) - 85 + F.lit(0.5)
+        wkt = F.concat(F.lit("POINT("), lon, F.lit(" "), lat, F.lit(")"))
+        return df.withColumn("ab", F.lit("a b")).withColumn(
+            "wkt", F.when(F.col("seq") % 13 == 0, F.lit("oops")).otherwise(wkt)
+        )
+
+    def _assert_stream_equals_build(self, spark, workdir, pdf, configs):
+        """Streams ``pdf`` through stages_from_spec / relations_from_spec
+        of the multi spec over ``configs`` and asserts that assignments
+        (seq → bucket ids, with multiplicity) and relations (with
+        multiplicity) equal batch ``build`` over the same rows. Returns
+        (assignment map, relation counter)."""
+        from collections import Counter
+
+        from bucketizers_spark.pipeline import build
+        from bucketizers_spark.streaming.compose import (
+            compose_streams,
+            relations_from_spec,
+            stages_from_spec,
+        )
+
+        spec = {"strategy": "multi", "configs": configs}
+        chunk_dir = os.path.join(workdir, "chunks")
+        stage_chunks(pdf, chunk_dir, n_chunks=2)
+        stream = self._with_cols(
+            read_token_stream(spark, chunk_dir, max_files_per_trigger=1)
+        )
+        comp = compose_streams(
+            stream,
+            stages_from_spec(spec),
+            os.path.join(workdir, "compose"),
+            relations=relations_from_spec(spec),
+        )
+        out = comp.run_until_drained()
+        res = build(
+            self._with_cols(spark.createDataFrame(pdf, TOKEN_STREAM_SCHEMA)), spec
+        )
+
+        def amap(df):
+            m = {}
+            for r in df.select("seq", "bucket_id").collect():
+                m.setdefault(r.seq, Counter())[r.bucket_id] += 1
+            return m
+
+        def rels(df):
+            return Counter(
+                (
+                    r["from_bucket"],
+                    r["relation_type"],
+                    r["to_bucket"],
+                    tuple(r["values"] or []),
+                    r["path"],
+                    r["created_at_seq"],
+                )
+                for r in df.collect()
+            )
+
+        got = amap(out)
+        assert got == amap(res.assignments)
+        got_rels = rels(comp.read_relations())
+        assert got_rels == rels(res.relations)
+        return got, got_rels
+
+    _AB_TRIE = {"strategy": "substring", "column": "ab", "page_size": 1}
+
+    def test_basic_child_under_null_parent_matches_batch(
+        self, spark, workdir, stream_pdf
+    ):
+        """A basic child under the NULL bucket of exhausted trie members
+        pages them as plain ``N`` (child_id skips a NULL parent), not
+        ``None/N``."""
+        got, _ = self._assert_stream_equals_build(
+            spark, workdir, stream_pdf.iloc[:40],
+            [self._AB_TRIE, {"strategy": "basic", "page_size": 5}],
+        )
+        assert "0" in {b for bs in got.values() for b in bs}
+
+    def test_geo_child_under_null_parent_matches_batch(
+        self, spark, workdir, stream_pdf
+    ):
+        """A geospatial child under a NULL parent: tile pages and
+        ``bucketless-N`` unprefixed, as in batch, not NULL."""
+        got, _ = self._assert_stream_equals_build(
+            spark, workdir, stream_pdf.iloc[:40],
+            [
+                self._AB_TRIE,
+                {"strategy": "geospatial", "column": "wkt", "zoom": 1, "page_size": 3},
+            ],
+        )
+        ids = {b for bs in got.values() for b in bs}
+        assert None not in ids and "bucketless-0" in ids
+
+    def test_subject_child_under_null_parent_matches_batch(
+        self, spark, workdir, stream_pdf
+    ):
+        """A subject child under a NULL parent: its root is NULL and its
+        rotated roots ``root-N``, as in batch (not ``None``/``None/root-N``)."""
+        _, rels = self._assert_stream_equals_build(
+            spark, workdir, stream_pdf.iloc[:40],
+            [
+                self._AB_TRIE,
+                {"strategy": "subject", "column": "doc_id", "max_relations": 3},
+            ],
+        )
+        assert any(k[2] == "root-1" and k[1] == "Relation" for k in rels)
+
+    def test_subject_child_root_name_matches_batch(
+        self, spark, workdir, stream_pdf
+    ):
+        """A subject child's rotated roots use the configured root name:
+        ``parent/r-N``."""
+        _, rels = self._assert_stream_equals_build(
+            spark, workdir, stream_pdf.iloc[:60],
+            [
+                {"strategy": "basic", "page_size": 20, "dense_seq": True},
+                {
+                    "strategy": "subject",
+                    "column": "doc_id",
+                    "root": "r",
+                    "max_relations": 3,
+                },
+            ],
+        )
+        assert any(k[2] == "0/r-1" for k in rels)
+
+    def test_three_basic_stages_match_batch(self, spark, workdir, stream_pdf):
+        """Two children of one kind: each re-keys the previous stage's
+        output, so their helper columns never collide."""
+        _, rels = self._assert_stream_equals_build(
+            spark, workdir, stream_pdf.iloc[:60],
+            [
+                {"strategy": "basic", "page_size": 12, "dense_seq": True},
+                {"strategy": "basic", "page_size": 4},
+                {"strategy": "basic", "page_size": 2},
+            ],
+        )
+        assert sum(rels.values()) > 20
+
+    def test_basic_then_two_geo_stages_match_batch(
+        self, spark, workdir, stream_pdf
+    ):
+        """[basic, geospatial, geospatial] over WKT points: the second geo
+        stage pages per (first geo bucket, tile)."""
+        _, rels = self._assert_stream_equals_build(
+            spark, workdir, stream_pdf.iloc[:60],
+            [
+                {"strategy": "basic", "page_size": 30, "dense_seq": True},
+                {"strategy": "geospatial", "column": "wkt", "zoom": 1, "page_size": 4},
+                {"strategy": "geospatial", "column": "wkt", "zoom": 2, "page_size": 2},
+            ],
+        )
+        assert sum(rels.values()) > 20
 
 
 class TestSubjectPageStream:
